@@ -8,8 +8,8 @@ funneling — the honest number for scan->shuffle->agg pipelines).
 
 HEADLINE is GENERATED from the suite registry (window order first, then
 registration order) minus the documented EXCLUDE list, so a newly
-registered entry cannot silently skip the bench. Two streaming
-measurements (file-source micro-batches over the same SF events data,
+registered entry cannot silently skip the bench. Four streaming
+drains (file-source micro-batches over the same SF events data,
 availableNow trigger) ride along under ``stream_*`` keys so the
 Structured Streaming surface has throughput regression signal too.
 """
@@ -87,55 +87,40 @@ def _headline() -> list[str]:
     return names
 
 
-def _progress_detail(q) -> dict:
-    """Per-micro-batch decomposition from the query's progress events:
-    wall per batch (triggerExecution), rows, and state-store commit
-    time — so a slow drain is attributable to machinery (many batches,
-    fixed commit cost) vs data (few big batches) from the bench record
-    alone."""
-    batches = []
-    commit_ms = 0
-    rows = 0
-    for p in q.recentProgress:
-        dur = p.get("durationMs") or {}
-        batches.append(int(dur.get("triggerExecution", 0)))
-        rows += int(p.get("numInputRows", 0))
-        for so in p.get("stateOperators") or []:
-            commit_ms += int(so.get("commitTimeMs", 0))
-    return {
-        "n_batches": len(batches),
-        "batch_ms": batches,
-        "state_commit_ms": commit_ms,
-        "input_rows": rows,
-    }
-
-
 def _stream_benchmarks(spark, sf_dir: str) -> tuple[dict[str, float], dict]:
     """Structured Streaming throughput: the SF events table replayed as
-    a multi-file landing directory through availableNow micro-batches.
+    an 8-file landing directory through availableNow micro-batches of
+    2 files each, every drain run by ``streaming.drain.drain`` into the
+    noop sink (RocksDB state store, state partitions sized to the
+    replay, session config restored even when a drain fails).
 
+    - stream_passthrough_floor: no operator state — the machinery floor.
     - stream_sliding_agg: watermark + overlapping event-time windows
-      (streaming/windows.py) — the windowed-state path.
+      (streaming/windows.py) — the windowed-state path. It runs 4 or
+      5 batches on the same code. The 5th reads 0 rows: the engine
+      adds it when the last data batch raised the max event time, so
+      the 2-hour watermark moved past windows still held in state, and
+      it emits those windows (append mode) — part of the result, so
+      it keeps running. Whether the last batch holds the latest event
+      depends on which landing files it gets; files replay in write
+      mtime order, which varies from run to run.
     - stream_stateful_ewma: applyInPandasWithState running EWMA
       (streaming/stateful.py) — the arbitrary-state path.
+    - stream_stream_join: watermarked interval inner join — the
+      stream-stream state path.
 
-    Landing-dir write is ingest, excluded from the timing; each query
-    is timed start->drain over the same ~8 micro-batch replay.
+    Landing-dir write is ingest, excluded from the timing; each drain
+    is timed start->drain over the same 4-batch replay, and its
+    per-batch walls and input rows go to the record.
     """
     from pyspark.sql import functions as F
 
     from boostdb_spark.session import load_tables
+    from boostdb_spark.streaming.drain import drain, landing_schema
     from boostdb_spark.streaming.stateful import streaming_ewma
     from boostdb_spark.streaming.windows import sliding_agg
 
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from boostdb_spark.functions.scalar import ns_to_timestamp
-
-        ev = ev.withColumn("ts", ns_to_timestamp("ts"))
-    # watermarks require TIMESTAMP (with zone); the fixture ships NTZ
-    ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    ev = suite._ts_events(load_tables(spark, sf_dir))
     work = tempfile.mkdtemp(prefix="boost_bench_stream_")
     landing = os.path.join(work, "landing")
     (
@@ -144,89 +129,33 @@ def _stream_benchmarks(spark, sf_dir: str) -> tuple[dict[str, float], dict]:
         .write.mode("overwrite")
         .parquet(landing)
     )
-    schema = spark.read.parquet(landing).schema
+    schema = landing_schema(spark, landing)
     times: dict[str, float] = {}
     detail: dict[str, dict] = {}
 
-    # Streaming state partitioning is fixed at first checkpoint write
-    # (no AQE for state stores), and EVERY micro-batch commits EVERY
-    # state partition — the r3 decomposition showed 32 partitions x 8
-    # batches x commit cost dwarfing the actual data work at bench SF.
-    # Sizing state partitions to the load is the production knob
-    # (Spark's own structured-streaming guidance); the batch suite
-    # keeps its own shuffle setting. r14: sized from the replay volume
-    # (suite._state_partitions — the same scale-adaptive rule the
-    # suite's drains use: ~64 MB input per state partition, floor 2,
-    # env-overridable) instead of the old fixed 8 — the r14 open
-    # calibration measured per-commit cost as pure fixed IO, so
-    # partitions beyond the data's need multiply commit overhead.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    _parts = suite._state_partitions(
-        landing, cores=spark.sparkContext.defaultParallelism
-    )
-    if _parts is not None:  # None = leave the session posture (see helper)
-        spark.conf.set("spark.sql.shuffle.partitions", _parts)
-    # the restore MUST survive a failed drain (try/finally below) — a
-    # leaked 8-partition setting would silently skew every batch entry
-    # timed after the streaming section in the same process.
-    # RocksDB state store + changelog checkpointing (same knobs the
-    # suite's _drain_conf sets around the join drains): the default
-    # HDFS-backed provider's many small fsync-ing snapshot writes were
-    # the r8 stream_detail hotspot (16.6 s state_commit_ms on the
-    # stream-stream join under driver FS pressure); RocksDB commits a
-    # per-batch changelog delta instead
-    _ss_keys = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
-    }
-    _ss_old = {}
-    for _k, _v in _ss_keys.items():
-        try:
-            _ss_old[_k] = spark.conf.get(_k)
-        except Exception:
-            _ss_old[_k] = None
-        spark.conf.set(_k, _v)
-
-    def run(name: str, build, output_mode: str, no_data_batches=True):
+    def stream():
         # trigger sized to ~2 landing files per micro-batch: an
         # availableNow catch-up IS supposed to batch up — 1-file
         # triggers measured 8x the per-batch machinery (source listing
         # + every state partition committing every batch) on the same
-        # data; the per-batch decomposition below keeps the machinery
+        # data; the per-batch decomposition keeps the machinery
         # attributable either way
-        src = (
+        return (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 2)
             .parquet(landing)
         )
-        # r15: drains whose output cannot depend on the trailing
-        # watermark-only micro-batch (inner join: emits on match) skip
-        # it — same knob as the suite's _drain_conf(no_data_batches=
-        # False); restored right after the drain
-        if not no_data_batches:
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-            )
-        q = (
-            build(src)
-            .writeStream.format("noop")
-            .outputMode(output_mode)
-            .option("checkpointLocation", os.path.join(work, f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
+
+    def run(name: str, build, output_mode: str, no_data_batches=True):
+        detail[name] = drain(
+            build(stream()),
+            os.path.join(work, f"ckpt_{name}"),
+            fmt="noop",
+            output_mode=output_mode,
+            landing=landing,
+            no_data_batches=no_data_batches,
         )
-        t0 = time.perf_counter()
-        q.awaitTermination()
-        if not no_data_batches:
-            spark.conf.unset(
-                "spark.sql.streaming.noDataMicroBatches.enabled"
-            )
-        times[name] = round(time.perf_counter() - t0, 3)
-        detail[name] = _progress_detail(q)
+        times[name] = detail[name]["wall_s"]
         print(
             f"  {name}: {times[name]}s {detail[name]}",
             file=sys.stderr,
@@ -235,16 +164,12 @@ def _stream_benchmarks(spark, sf_dir: str) -> tuple[dict[str, float], dict]:
 
     def stream_stream_join(src):
         # watermarked interval join: purchases enriched with the errors
-        # that follow within 1h — the stream-stream state path
+        # that follow within 1h
         purchases = src.filter(F.col("event_type") == "purchase").select(
             "user_id", F.col("ts").alias("p_ts"), F.col("value").alias("p_value")
         )
-        errors = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(landing)
-            .filter(F.col("event_type") == "error")
-            .select(F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts"))
+        errors = stream().filter(F.col("event_type") == "error").select(
+            F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts")
         )
         cond = (
             (F.col("user_id") == F.col("e_user"))
@@ -292,12 +217,6 @@ def _stream_benchmarks(spark, sf_dir: str) -> tuple[dict[str, float], dict]:
             no_data_batches=False,  # inner join: trailing batch emits 0 rows
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        for _k, _v in _ss_old.items():
-            if _v is None:
-                spark.conf.unset(_k)
-            else:
-                spark.conf.set(_k, _v)
         shutil.rmtree(work, ignore_errors=True)
     return times, detail
 

@@ -339,7 +339,13 @@ def keep_best(
     shuffle+sort: the old single left-join+window shape sorted the
     ENTIRE corpus by group_id to rank groups of size 1, which at 100 TB
     is a full-corpus exchange for zero decisions. Results are
-    row-identical: a singleton group's row_number is always 1."""
+    row-identical: a singleton group's row_number is always 1.
+
+    NULL ids: a row whose ``id_col`` is NULL matches no group (a NULL
+    key never joins), so each one is treated as unmatched and kept —
+    (NULL, NULL, true) per row, never collapsed into one NULL group.
+    No up-front check enforces non-NULL ids: it would cost a Spark
+    job on every call; clean ids first if NULL rows must be dropped."""
     from pyspark.sql import Window
 
     groups = no_broadcast(dedup_groups(pairs))

@@ -384,12 +384,12 @@ def streaming_ewma_tws(
     the parity entry certifies (same oracle as stream_ewma_parity).
 
     Requires the RocksDB state-store provider (a transformWithState
-    constraint — the suite's ``_drain_conf`` sets it around every
-    drain) AND the ``protobuf`` package (the API's Python<->JVM state
-    server speaks protobuf; PySpark does not declare it a hard
-    dependency). Environments without protobuf get a LOUD refusal up
-    front pointing at :func:`streaming_ewma` — never a mid-stream
-    worker crash — so the certified arbitrary-state path stays the
+    constraint — :func:`boostdb_spark.streaming.drain.drain_conf` sets
+    it around every drain) AND the ``protobuf`` package (the API's
+    Python<->JVM state server speaks protobuf; PySpark does not
+    declare it a hard dependency). Environments without protobuf get a
+    LOUD refusal up front pointing at :func:`streaming_ewma` — never a
+    mid-stream worker crash — so the certified arbitrary-state path stays the
     applyInPandasWithState twin wherever protobuf is absent (this
     repo's container is one such environment; the parity suite
     therefore certifies the twin, and this function's plumbing is

@@ -33,6 +33,39 @@ def _with_watermark(df: DataFrame, ts_col: str, watermark: str | None) -> DataFr
     return df
 
 
+def _agg_name(c: Column) -> str:
+    """Resolve the output name of an aliased aggregate column."""
+    # Column string form is like "sum(value) AS total"; require an alias
+    s = str(c)
+    if " AS " in s:
+        return s.split(" AS ")[-1].strip("'`>")
+    raise ValueError(f"aggregate columns must be aliased: {s}")
+
+
+def _window_agg(
+    df: DataFrame,
+    window_col: Column,
+    keys: Sequence[str],
+    aggs: Sequence[Column],
+    ts_col: str,
+    watermark: str | None,
+) -> DataFrame:
+    """The shared body: watermark, group by (``window_col``, keys),
+    flatten the window struct. Output: win_start, win_end, *keys,
+    *aggs."""
+    return (
+        _with_watermark(df, ts_col, watermark)
+        .groupBy(window_col.alias("_w"), *keys)
+        .agg(*aggs)
+        .select(
+            F.col("_w.start").alias("win_start"),
+            F.col("_w.end").alias("win_end"),
+            *keys,
+            *[F.col(_agg_name(a)) for a in aggs],
+        )
+    )
+
+
 def tumbling_agg(
     df: DataFrame,
     duration: str,
@@ -45,27 +78,9 @@ def tumbling_agg(
 
     Output columns: win_start, win_end, *keys, *aggs.
     """
-    wdf = _with_watermark(df, ts_col, watermark)
-    w = F.window(F.col(ts_col), duration)
-    return (
-        wdf.groupBy(w.alias("_w"), *keys)
-        .agg(*aggs)
-        .select(
-            F.col("_w.start").alias("win_start"),
-            F.col("_w.end").alias("win_end"),
-            *keys,
-            *[F.col(_agg_name(a)) for a in aggs],
-        )
+    return _window_agg(
+        df, F.window(F.col(ts_col), duration), keys, aggs, ts_col, watermark
     )
-
-
-def _agg_name(c: Column) -> str:
-    """Resolve the output name of an aliased aggregate column."""
-    # Column string form is like "sum(value) AS total"; require an alias
-    s = str(c)
-    if " AS " in s:
-        return s.split(" AS ")[-1].strip("'`>")
-    raise ValueError(f"aggregate columns must be aliased: {s}")
 
 
 def sliding_agg(
@@ -80,17 +95,9 @@ def sliding_agg(
     """Overlapping windows of ``duration`` advancing every ``slide`` —
     each row contributes to duration/slide windows. Output:
     win_start, win_end, *keys, *aggs."""
-    wdf = _with_watermark(df, ts_col, watermark)
-    w = F.window(F.col(ts_col), duration, slide)
-    return (
-        wdf.groupBy(w.alias("_w"), *keys)
-        .agg(*aggs)
-        .select(
-            F.col("_w.start").alias("win_start"),
-            F.col("_w.end").alias("win_end"),
-            *keys,
-            *[F.col(_agg_name(a)) for a in aggs],
-        )
+    return _window_agg(
+        df, F.window(F.col(ts_col), duration, slide), keys, aggs, ts_col,
+        watermark,
     )
 
 
@@ -105,15 +112,6 @@ def session_agg(
     """Session windows: per key, rows closer than ``gap`` merge into one
     session (dynamic-length window). Output: win_start, win_end, *keys,
     *aggs. On streaming, requires a watermark (state eviction)."""
-    wdf = _with_watermark(df, ts_col, watermark)
-    w = F.session_window(F.col(ts_col), gap)
-    return (
-        wdf.groupBy(w.alias("_w"), *keys)
-        .agg(*aggs)
-        .select(
-            F.col("_w.start").alias("win_start"),
-            F.col("_w.end").alias("win_end"),
-            *keys,
-            *[F.col(_agg_name(a)) for a in aggs],
-        )
+    return _window_agg(
+        df, F.session_window(F.col(ts_col), gap), keys, aggs, ts_col, watermark
     )

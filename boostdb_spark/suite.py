@@ -51,6 +51,12 @@ from boostdb_spark.operators import timeseries as ts_ops
 from boostdb_spark.plans.sugar import SeriesFamilyBinding
 from boostdb_spark.plans import sugar
 from boostdb_spark.session import load_tables
+from boostdb_spark.streaming.drain import (
+    drain,
+    drain_conf,
+    landing_schema,
+    progress_detail,
+)
 
 
 def _ns_events(t) -> DataFrame:
@@ -91,6 +97,13 @@ def _ts_t(df, col: str = "ts"):
         return ns_to_timestamp(col)
     return F.col(col)
 
+
+def _ts_events(t) -> DataFrame:
+    """events with ts as a µs TIMESTAMP from either representation —
+    the type event-time watermarks require."""
+    ev = t["events"]
+    return ev.withColumn("ts", _ts_t(ev).cast("timestamp"))
+
 # Implicit time range for the flagship query: [2024-01-05, 2024-01-20) UTC,
 # in nanoseconds — the reference passes start/end programmatically, never
 # in SQL (query/executor/executor.go:145-147).
@@ -130,24 +143,18 @@ def _q(name: str, oracle: str | None):
 # agg_approx_count_distinct / agg_approx_quantiles are oracle-less
 # (approx by design) with driver-green history — below the fold.
 _WINDOW: tuple[str, ...] = (
-    # ROUND-15 window (r14-verdict ask #1): CHANGED CODE FIRST — the
-    # r14 mid-round optimizations (theilsen numpy UDF, knn/range/PQ/LSH
-    # §4.4 fixes, ANN certificate checkpoints, the state-partition
-    # drains outside the r14 window) could not enter the window rotated
-    # at r14 open, so they lead now, together with everything THIS
-    # round touches (keep_best/groups restructure, frame-exclude
-    # buffer dedup, streaming drain changes); then the standing
-    # canaries and the stalest re-cert vintage (the r8 remainder from
-    # the r14 rotation-prep queue).
-    # --- r14-changed code paths, never re-certified since the change ---
-    "ts_theilsen_trend",        # numpy median-slope UDF (+ r15 null fix)
-    "emb_knn_graph",            # half-pair scoring + explode mirror
-    "emb_range_search",         # §4.4 once=True fold
-    "ann_pq_topk",              # §4.4 asNondeterministic adist
-    "ann_lsh_topk",             # §4.4 asNondeterministic buckets
-    "ann_recall_certified",     # probe localCheckpoint legs
-    "ann_append_certified",     # corpus rebuild DISK_ONLY checkpoint
-    "stream_ann_ingest_parity", # encode-side checkpoint + state parts
+    # CHANGED CODE FIRST — every entry whose code path moved onto
+    # streaming/drain.py (landing helpers, drain config, progress
+    # record) or the shared streaming/windows.py body leads; the r14
+    # cohort it displaces was certified in the r15 window. Then
+    # the r15 changes, the standing canaries and the stalest re-cert
+    # vintage (the r8 remainder from the r14 rotation-prep queue).
+    # --- streaming drain / window-helper consolidation ---
+    "stream_session_parity", "stream_sliding_parity",
+    "stream_ewma_parity", "stream_locf_parity",
+    "stream_upsert_parity", "stream_ingest_parity",
+    "window_sliding_agg",       # windows.py shared _window_agg body
+    "window_session_agg",
     "stream_batch_parity", "stream_cascade_parity",
     "stream_retention_parity", "stream_dedup_parity",
     # --- r15-changed code paths ---
@@ -155,7 +162,7 @@ _WINDOW: tuple[str, ...] = (
     "dedup_groups",             # pair-feed checkpoint + 1-job loop
     "dialect_frame_exclude",    # EXCLUDE TIES avg buffer dedup (6->4)
     "stream_rollup_parity",     # sink file sizing per batch
-    "stream_join_parity", "stream_outer_join_parity",  # drain machinery
+    "stream_join_parity", "stream_outer_join_parity",  # shared _stream_join
     # --- standing canaries (green every round) ---
     "flagship_series_scan",   # scan + dialect front + implicit range
     "dialect_params",         # placeholder binding
@@ -174,22 +181,16 @@ _WINDOW: tuple[str, ...] = (
     "ts_histogram_quantile", "ts_interp_align", "ts_m4_downsample",
     "txt_bm25_topk", "txt_redact_pii", "txt_tfidf_topk",
     "udaf_grouped_range", "where_ops",
-    # ROUND-16 ROTATION PREP — r8 remainder tail queued next:
+    # ROTATION PREP — r8 remainder tail queued next:
     # window_moving_avg, window_navigation, window_rank_ntile,
-    # window_running_sum, window_session_agg, window_sliding_agg;
-    # then ROUND-9 cohort in name order.
+    # window_running_sum; then ROUND-9 cohort in name order.
 )
 
 #: window entries the driver checks ROWS-ONLY (no SQL oracle by
-#: design). Round 15: the two oracle-less ANN probes changed in r14
-#: (§4.4 asNondeterministic fixes) ride rows-only per the r14-verdict
-#: "changed code first" ask; their hash-gated certificate siblings
-#: (ann_recall_certified / ann_append_certified) are in the same
-#: window, which is the strong signal for the same code paths
+#: design). Empty while no oracle-less entry is windowed; a windowed
+#: one needs its hash-gated certificate sibling in the same window
 #: (pinned by tests/test_suite_oracle.py).
-_ROWS_ONLY_WINDOWED: frozenset[str] = frozenset(
-    {"ann_pq_topk", "ann_lsh_topk"}
-)
+_ROWS_ONLY_WINDOWED: frozenset[str] = frozenset()
 
 
 def _ordered(d: dict) -> dict:
@@ -6106,19 +6107,6 @@ def dialect_setops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STREAM_LANDING: dict = {}
 
-#: landing-path -> parquet schema (r15): every streaming entry needs
-#: its landing's schema for readStream, and `spark.read.parquet(..)
-#: .schema` is a footer-listing driver job paid INSIDE the timed entry
-#: — the landings are immutable session fixtures (same lifetime as
-#: _STREAM_LANDING), so one footer read per landing is the honest cost
-_LANDING_SCHEMA: dict = {}
-
-
-def _landing_schema(spark: SparkSession, path: str):
-    if path not in _LANDING_SCHEMA:
-        _LANDING_SCHEMA[path] = spark.read.parquet(path).schema
-    return _LANDING_SCHEMA[path]
-
 
 def _write_landing_slices(parts, landing) -> None:
     """Write each time-slice as one file under its own subdir and stamp
@@ -6139,221 +6127,46 @@ def _write_landing_slices(parts, landing) -> None:
             os.utime(os.path.join(d, fn), (base + 10 * i, base + 10 * i))
 
 
+def _time_ordered_landing(src: DataFrame, key: tuple) -> str:
+    """TIME-ORDERED landing of ``src`` for the watermarked drains,
+    written once per ``key``: three contiguous ts ranges split at the
+    33rd/66th percentiles, one mtime-ordered slice each
+    (:func:`_write_landing_slices`). With zero-delay watermarks an
+    out-of-order batch would DROP late rows; ordered batches never
+    regress the watermark."""
+    if key not in _STREAM_LANDING:
+        qs = src.select(F.unix_micros("ts").alias("t")).agg(
+            F.expr("percentile(t, array(0.33, 0.66))").alias("q")
+        ).collect()[0]["q"]
+        lo, hi = int(qs[0]), int(qs[1])
+        landing = session_tmpdir(prefix=f"boost_suite_{key[-1]}_")
+        us = F.unix_micros(F.col("ts"))
+        parts = [
+            src.filter(us <= lo),
+            src.filter((us > lo) & (us <= hi)),
+            src.filter(us > hi),
+        ]
+        _write_landing_slices(parts, landing)
+        _STREAM_LANDING[key] = landing
+    return _STREAM_LANDING[key]
+
+
+def _ckpt() -> str:
+    """A fresh checkpoint location: state partitions pin at a query's
+    first checkpoint, so every drain starts from its own."""
+    import os
+
+    return os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c")
+
+
 #: side channel for the bench record (r10 verdict ask #4): suite
-#: streaming entries that drain MULTIPLE queries internally (the
-#: rollup parity drains two sink variants) stash a per-drain
-#: decomposition here keyed "entry/stage"; bench.py merges it into
-#: the record's stream_detail so a slow wall is attributable to a
-#: specific drain's machinery (n_batches x commit cost) vs data from
-#: the committed record alone. Keyed per process — no cross-run state.
+#: streaming entries stash a per-drain drain.progress_detail here keyed
+#: "entry" or "entry/stage" (the rollup parity drains two sink
+#: variants); bench.py merges it into the record's stream_detail so a
+#: slow wall is attributable to a specific drain's machinery
+#: (n_batches x commit cost) vs data from the committed record alone.
+#: Keyed per process — no cross-run state.
 STREAM_DRAIN_DETAIL: dict[str, dict] = {}
-
-
-def _record_drain(key: str, q, wall_s: float | None, **extra) -> None:
-    """Decompose a finished StreamingQuery's progress events into the
-    bench-readable shape (same fields as bench.py's _progress_detail:
-    per-batch triggerExecution wall, input rows, total state-store
-    commit time) and stash under ``key``.
-
-    ``wall_s=None`` means the drain ran CONCURRENTLY with siblings and
-    has no isolated wall of its own — the per-drain attribution is then
-    this drain's OWN busy time (sum of its triggerExecution batch
-    walls), so the side channel attributes each drain individually
-    (r11 advisor); the callers pass the shared max-wall separately as
-    ``concurrent_wall_s``."""
-    batches, commit_ms, rows = [], 0, 0
-    try:
-        for p in q.recentProgress:
-            dur = p.get("durationMs") or {}
-            batches.append(int(dur.get("triggerExecution", 0)))
-            rows += int(p.get("numInputRows", 0))
-            for so in p.get("stateOperators") or []:
-                commit_ms += int(so.get("commitTimeMs", 0))
-    except Exception:
-        pass  # decomposition is best-effort; never fail the entry
-    if wall_s is None:
-        wall_s = sum(batches) / 1000.0
-    STREAM_DRAIN_DETAIL[key] = {
-        "wall_s": round(wall_s, 3),
-        "n_batches": len(batches),
-        "batch_ms": batches,
-        "state_commit_ms": commit_ms,
-        "input_rows": rows,
-        **extra,
-    }
-
-#: RocksDB state-store provider (bundled with Spark; rocksdbjni ships
-#: in the pyspark distribution) — the public fix for the default
-#: HDFS-backed provider's many small fsync-ing state-commit writes,
-#: which degrade first under driver-environment FS pressure (BENCH_r08
-#: stream_detail pinned 16.6 s of state_commit_ms on the stream-stream
-#: join drain at 3.2-3.5x the same-code local record). Changelog
-#: checkpointing writes per-batch deltas instead of full snapshots.
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-def _state_partitions(
-    landing: str | None, cores: int | None = None
-) -> str | None:
-    """Scale-adaptive streaming STATE partition count (optimization
-    guide §2: derive partitioning from input size, never a constant
-    tuned to one scale). Stateful streaming plans take
-    shuffle.partitions as the state partition count (AQE never applies
-    to state stores), and EVERY micro-batch commits EVERY state
-    partition of every stateful operator — per-commit cost is
-    dominated by fixed state-store IO (RocksDB instance load +
-    changelog write + fsync), so partitions beyond what the state
-    volume needs multiply pure commit overhead: the r14 open
-    calibration (BENCH_SAMECODE_OPEN_r14.json) measured 85.6 s of
-    state-commit wall across the drains at the old fixed 8 partitions,
-    ~4x what the MB-sized bench replays need — and at 100 TB a fixed 8
-    would cram corpus-scaled state into 8 stores. Sizing: ~64 MB of
-    replay input per state partition, floor 2 (the multi-partition
-    commit/merge path stays exercised at every SF), cap 2x the
-    session's cores (``cores=``, normally
-    ``sparkContext.defaultParallelism`` = total executor cores).
-
-    WHY the cap keys off cores (r15 sf1 probe, r14-verdict ask #5): a
-    stateful drain instantiates (partitions x stateful-operator
-    stores) RocksDB instances per host core pool, and the per-HOST
-    instance count — not the data — is the cost cliff. Measured on the
-    2M-row sf1 join drain (32 cores, 4 join-state stores): forced 50
-    partitions (200 instances) = wall parity with auto [13.5-14.4 s vs
-    12.4-14.4 s, commits fully overlapped by cores]; forced 200
-    partitions (800 instances) = wall 110-168 s, 8-12x, with
-    cumulative commit time 2,300-3,600 s (instance load + fsync
-    thrash). 2x cores x ~4 stores = ~8 instances per core, inside the
-    measured-safe regime on every tier; a cluster inherits the cap
-    from its real core count via defaultParallelism.
-    ``SPARK_GRAFT_STATE_PARTITIONS`` overrides for cluster tuning
-    (size to the real retained state, not the replay, when the two
-    diverge). Returns ``None`` (= leave the session's
-    shuffle.partitions untouched) when the landing is non-empty but no
-    parquet bytes are locally visible — a non-local URI must inherit
-    the cluster-sized session posture, not the floor. Results are
-    partition-count-invariant — this knob moves only physical
-    parallelism and commit count."""
-    import os as _os
-    import sys as _sys
-
-    env = _os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if env:
-        # validate up front (r14 advisor): a non-numeric override used
-        # to surface only later inside spark.conf.set, far from its
-        # cause
-        try:
-            if int(env) <= 0:
-                raise ValueError(env)
-        except ValueError:
-            raise ValueError(
-                "SPARK_GRAFT_STATE_PARTITIONS must be a positive "
-                f"integer, got {env!r}"
-            ) from None
-        return env
-    total = 0
-    if landing:
-        for root, _dirs, files in _os.walk(landing):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    try:
-                        total += _os.path.getsize(_os.path.join(root, fn))
-                    except OSError:
-                        pass
-    if landing and total == 0:
-        # Non-local / unreadable landing (e.g. an object-store URI the
-        # local walk cannot see) — flooring to 2 here would cram
-        # cluster-scale state into 2 stores (r14 advisor). Returning
-        # None keeps the SESSION's shuffle.partitions (cluster-sized
-        # posture) instead of guessing.
-        print(
-            f"_state_partitions: no local parquet bytes under "
-            f"{landing!r}; leaving session shuffle.partitions in place "
-            "(set SPARK_GRAFT_STATE_PARTITIONS to size state stores "
-            "explicitly)",
-            file=_sys.stderr,
-        )
-        return None
-    if cores is None:
-        cores = int(_os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    return str(max(2, min(2 * cores, -(-total // (64 << 20)))))
-
-
-class _drain_conf:
-    """Set/restore context for a stateful streaming drain: RocksDB
-    state store + changelog checkpointing + right-sized state
-    partitions (state partitions pin to shuffle.partitions at the
-    FIRST checkpoint; fresh checkpoint per call so the setting always
-    takes). Restore in finally so batch entries keep the session
-    defaults. ``landing=`` sizes the state partitions to the drain's
-    replay volume (:func:`_state_partitions`); explicit ``partitions=``
-    wins when a caller knows better.
-
-    ``no_data_batches=False`` (r15) disables the engine's trailing
-    no-data micro-batch for drains whose OUTPUT it cannot change: an
-    availableNow drain runs one extra empty batch after the last file
-    purely to advance the watermark — that batch pays full per-batch
-    planning + a commit of every state store (the r15 open record
-    clocked it at 0.7-1.1 s on the join drains) and matters only to
-    queries that EMIT on watermark passage (append-mode windowed aggs,
-    outer-join NULL extension). For inner joins (emit on match) and
-    never-finalizing update-mode rollups it is pure overhead. Callers
-    must leave it True wherever the final watermark flush produces
-    rows."""
-
-    _KEYS = (
-        "spark.sql.shuffle.partitions",
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled",
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-    )
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        partitions: str | None = None,
-        landing: str | None = None,
-        no_data_batches: bool = True,
-    ):
-        self.spark = spark
-        if partitions is None:
-            partitions = _state_partitions(
-                landing, cores=spark.sparkContext.defaultParallelism
-            )
-        # partitions may STILL be None (non-local landing, see
-        # _state_partitions): leave the session's shuffle.partitions
-        # untouched in that case. noDataMicroBatches is only SET when a
-        # caller opts out (None = leave the engine default).
-        self.vals = (
-            partitions,
-            _ROCKSDB_PROVIDER,
-            "true",
-            None if no_data_batches else "false",
-        )
-
-    def __enter__(self):
-        self.old = []
-        for k, v in zip(self._KEYS, self.vals):
-            try:
-                self.old.append(self.spark.conf.get(k))
-            except Exception:
-                self.old.append(None)
-            if v is not None:
-                self.spark.conf.set(k, v)
-        return self
-
-    def __exit__(self, *exc):
-        for k, v, new in zip(self._KEYS, self.old, self.vals):
-            if new is None:
-                continue  # never set, nothing to restore
-            if v is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, v)
-        return False
 
 
 def _events_landing(spark: SparkSession, sf_dir: str) -> str:
@@ -6362,15 +6175,8 @@ def _events_landing(spark: SparkSession, sf_dir: str) -> str:
     never-finalizing pipelines only; watermarked append-mode entries
     build their own TIME-ORDERED landings (zero-delay watermarks drop
     late rows on unordered batches)."""
-    import tempfile
-
     t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from boostdb_spark.functions.scalar import ns_to_timestamp
-
-        ev = ev.withColumn("ts", ns_to_timestamp("ts"))
-    ev = ev.select("event_type", F.col("ts").cast("timestamp"), "value")
+    ev = _ts_events(t).select("event_type", "ts", "value")
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _STREAM_LANDING:
         landing = session_tmpdir(prefix="boost_suite_stream_")
@@ -6400,14 +6206,11 @@ def stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     on. Landing write is ingest-time (once per session+SF); each call
     drains ~4 micro-batches of state-store work — the honest cost of
     putting streaming under the hash gate."""
-    import os
-    import tempfile
-
     from boostdb_spark.streaming.windows import tumbling_agg
 
     key = (spark.sparkContext.applicationId, sf_dir)
     landing = _events_landing(spark, sf_dir)
-    schema = _landing_schema(spark, landing)
+    schema = landing_schema(spark, landing)
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -6422,19 +6225,10 @@ def stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     sink = f"stream_parity_{abs(hash(key)) % 10**9}"
-    with _drain_conf(spark, landing=landing):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option(
-                "checkpointLocation",
-                os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        agg, _ckpt(), output_mode="complete", query_name=sink,
+        landing=landing,
+    )
     out = spark.table(sink)
     return out.select(
         F.unix_micros(F.col("win_start")).alias("win_start_us"),
@@ -6471,14 +6265,11 @@ def stream_cascade_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     TimescaleDB continuous-aggregate-with-hierarchy shape: raw rows
     are touched once by the stream; every coarser resolution costs
     O(fine cardinality)."""
-    import os
-    import tempfile
-
     from boostdb_spark.streaming.windows import tumbling_agg
 
     key = (spark.sparkContext.applicationId, sf_dir, "cascade")
     landing = _events_landing(spark, sf_dir)
-    schema = _landing_schema(spark, landing)
+    schema = landing_schema(spark, landing)
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)
@@ -6492,19 +6283,10 @@ def stream_cascade_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     sink = f"stream_cascade_{abs(hash(key)) % 10**9}"
-    with _drain_conf(spark, landing=landing):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option(
-                "checkpointLocation",
-                os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        agg, _ckpt(), output_mode="complete", query_name=sink,
+        landing=landing,
+    )
     fine = spark.table(sink).select(
         F.unix_micros(F.col("win_start")).alias("win_start_us"),
         "event_type", "n", "total",
@@ -6570,7 +6352,7 @@ def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     power; the parity claim is about cumulative update emission and
     sink idempotence, not window width."""
     import os
-    import tempfile
+    import time as _time
 
     from boostdb_spark.streaming.rollup import (
         continuous_rollup,
@@ -6578,13 +6360,11 @@ def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     landing = _events_landing(spark, sf_dir)
-    schema = _landing_schema(spark, landing)
+    schema = landing_schema(spark, landing)
     aggs = [
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,6)")).alias("total"),
     ]
-    import time as _time
-
     # The two sink variants are INDEPENDENT streaming queries (own
     # source, checkpoint, and output table) — drain them CONCURRENTLY
     # and await both, so the entry's wall is max(variant walls) instead
@@ -6601,7 +6381,7 @@ def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermark-only batch writes nothing to either sink table, while
     # paying a full plan + state commit per variant (oracle re-verified
     # at sf0.001/0.01/0.1)
-    with _drain_conf(spark, landing=landing, no_data_batches=False):
+    with drain_conf(spark, landing=landing, no_data_batches=False):
         for variant, runner in (
             ("partitioned", continuous_rollup),
             ("merged", continuous_rollup_merged),
@@ -6612,15 +6392,8 @@ def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(landing)
             )
             rollup = session_tmpdir(prefix=f"boost_rollup_{variant}_")
-            # RocksDB + changelog + 8 state partitions for the
-            # ~150-group load (BASELINE.md round-4 streaming
-            # decomposition); fresh checkpoint per call so the
-            # partition setting always takes
             q = runner(
-                src, os.path.join(rollup, "t"),
-                checkpoint=os.path.join(
-                    session_tmpdir(prefix="boost_ckpt_"), "c"
-                ),
+                src, os.path.join(rollup, "t"), checkpoint=_ckpt(),
                 duration="1 day", keys=["event_type"], aggs=aggs,
                 watermark="3650 days",  # never finalize: stays updatable
             )
@@ -6630,10 +6403,13 @@ def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall = _time.perf_counter() - _t0
     outs = []
     for variant, rollup, q in running:
-        _record_drain(
-            f"stream_rollup_parity/{variant}", q, None,
-            concurrent=True, concurrent_wall_s=round(wall, 3),
-        )
+        # concurrent drains have no wall of their own: progress_detail
+        # attributes each its own busy time, the shared wall rides along
+        STREAM_DRAIN_DETAIL[f"stream_rollup_parity/{variant}"] = {
+            **progress_detail(q),
+            "concurrent": True,
+            "concurrent_wall_s": round(wall, 3),
+        }
         got = spark.read.parquet(os.path.join(rollup, "t"))
         outs.append(
             got.select(
@@ -6669,7 +6445,6 @@ def stream_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash against the same oracle the batch round trip uses. The
     whole streamed write is ingest-time, once per session+SF."""
     import os
-    import tempfile
     from urllib.parse import urlparse
 
     from boostdb_spark.sources.seriesfamily import SeriesFamily
@@ -6693,17 +6468,11 @@ def stream_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         landing = session_tmpdir(prefix="boost_suite_singest_")
         src.repartition(4).write.mode("overwrite").parquet(landing)
         sdf = (
-            spark.readStream.schema(_landing_schema(spark, landing))
+            spark.readStream.schema(landing_schema(spark, landing))
             .option("maxFilesPerTrigger", 1)
             .parquet(landing)
         )
-        q = stream_write(
-            fam, sdf,
-            checkpoint=os.path.join(
-                session_tmpdir(prefix="boost_ckpt_"), "c"
-            ),
-        )
-        q.awaitTermination()
+        stream_write(fam, sdf, checkpoint=_ckpt()).awaitTermination()
         _STREAM_LANDING[key] = landing
     touch_layout(fam.path)
     out = fam.fetch(series=["click", "error"], start=S_NS, end=E_NS)
@@ -6748,34 +6517,10 @@ def stream_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     same cutoff — bit-deterministic, and a session split or merge
     error anywhere in the cross-batch state machinery flips the
     hash."""
-    import os
-    import tempfile
-    import time as _time
-
     t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from boostdb_spark.functions.scalar import ns_to_timestamp
-
-        ev = ev.withColumn("ts", ns_to_timestamp("ts"))
-    src = ev.select("event_type", F.col("ts").cast("timestamp"), "value")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, "session")
-    if key not in _STREAM_LANDING:
-        qs = src.select(F.unix_micros("ts").alias("t")).agg(
-            F.expr("percentile(t, array(0.33, 0.66))").alias("q")
-        ).collect()[0]["q"]
-        lo, hi = int(qs[0]), int(qs[1])
-        landing = session_tmpdir(prefix="boost_suite_ssess_")
-        us = F.unix_micros(F.col("ts"))
-        parts = [
-            src.filter(us <= lo),
-            src.filter((us > lo) & (us <= hi)),
-            src.filter(us > hi),
-        ]
-        _write_landing_slices(parts, landing)
-        _STREAM_LANDING[key] = landing
-    landing = _STREAM_LANDING[key]
+    src = _ts_events(t).select("event_type", "ts", "value")
+    key = (spark.sparkContext.applicationId, sf_dir, "session")
+    landing = _time_ordered_landing(src, key)
     sdf = (
         spark.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", 1)
@@ -6788,19 +6533,7 @@ def stream_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.min("value").alias("vmin"))
     )
     sink = f"stream_session_{abs(hash(key)) % 10**9}"
-    with _drain_conf(spark, landing=landing):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, _ckpt(), query_name=sink, landing=landing)
     return spark.table(sink).select(
         F.unix_micros(F.col("session_window.start")).alias("s_us"),
         F.unix_micros(F.col("session_window.end")).alias("e_us"),
@@ -6831,34 +6564,10 @@ def stream_sliding_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle expands each event into its four overlapping windows and
     applies the same cutoff. Completes the window-type set under the
     hard gate (tumbling, sliding, session)."""
-    import os
-    import tempfile
-    import time as _time
-
     t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from boostdb_spark.functions.scalar import ns_to_timestamp
-
-        ev = ev.withColumn("ts", ns_to_timestamp("ts"))
-    src = ev.select("event_type", F.col("ts").cast("timestamp"), "value")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, "sliding")
-    if key not in _STREAM_LANDING:
-        qs = src.select(F.unix_micros("ts").alias("t")).agg(
-            F.expr("percentile(t, array(0.33, 0.66))").alias("q")
-        ).collect()[0]["q"]
-        lo, hi = int(qs[0]), int(qs[1])
-        landing = session_tmpdir(prefix="boost_suite_sslide_")
-        us = F.unix_micros(F.col("ts"))
-        parts = [
-            src.filter(us <= lo),
-            src.filter((us > lo) & (us <= hi)),
-            src.filter(us > hi),
-        ]
-        _write_landing_slices(parts, landing)
-        _STREAM_LANDING[key] = landing
-    landing = _STREAM_LANDING[key]
+    src = _ts_events(t).select("event_type", "ts", "value")
+    key = (spark.sparkContext.applicationId, sf_dir, "sliding")
+    landing = _time_ordered_landing(src, key)
     sdf = (
         spark.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", 1)
@@ -6871,23 +6580,68 @@ def stream_sliding_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.min("value").alias("vmin"))
     )
     sink = f"stream_sliding_{abs(hash(key)) % 10**9}"
-    with _drain_conf(spark, landing=landing):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, _ckpt(), query_name=sink, landing=landing)
     return spark.table(sink).select(
         F.unix_micros(F.col("window.start")).alias("s_us"),
         F.unix_micros(F.col("window.end")).alias("e_us"),
         "event_type", "n", "vmin",
+    )
+
+
+def _stream_join(
+    spark: SparkSession, sf_dir: str, name: str, how: str,
+    no_data_batches: bool,
+) -> DataFrame:
+    """Purchases joined to the errors within 1h after them, both
+    replayed as streams over one TIME-ORDERED landing (with zero-delay
+    watermarks an out-of-order batch would DROP late rows before they
+    join; buffered state evicts only rows no future batch can match,
+    p_ts + 1h < watermark) and drained to a memory sink. Shared by the
+    inner and left-outer join parities, which differ only in ``how``
+    and in whether the trailing no-data batch runs. The drain's
+    decomposition goes to the bench record under ``name`` (r13-verdict
+    ask #2: it splits a slow wall into commit IO vs compute
+    in-record)."""
+    import os
+
+    t = load_tables(spark, sf_dir)
+    src0 = _ts_events(t).select("event_type", "ts", "user_id", "value")
+    key = (spark.sparkContext.applicationId, sf_dir, "ssjoin")
+    landing = _time_ordered_landing(src0, key)
+    schema = landing_schema(spark, os.path.join(landing, "f0"))
+
+    def stream():
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(landing)
+        )
+
+    purchases = stream().filter(F.col("event_type") == "purchase").select(
+        "user_id", F.col("ts").alias("p_ts"), F.col("value").alias("p_value")
+    )
+    errors = stream().filter(F.col("event_type") == "error").select(
+        F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts")
+    )
+    cond = (
+        (F.col("user_id") == F.col("e_user"))
+        & (F.col("e_ts") >= F.col("p_ts"))
+        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR"))
+    )
+    joined = purchases.withWatermark("p_ts", "0 seconds").join(
+        errors.withWatermark("e_ts", "0 seconds"), cond, how
+    )
+    sink = f"{name}_{abs(hash(key)) % 10**9}"
+    STREAM_DRAIN_DETAIL[name] = drain(
+        joined, _ckpt(), query_name=sink, landing=landing,
+        no_data_batches=no_data_batches,
+    )
+    return spark.table(sink).select(
+        "user_id",
+        F.unix_micros(F.col("p_ts")).alias("p_ts_us"),
+        "p_value",
+        F.unix_micros(F.col("e_ts")).alias("e_ts_us"),
     )
 
 
@@ -6912,101 +6666,14 @@ def stream_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch interval join exactly, certifying the cross-stream state
     store (row buffering, watermark-bounded eviction, interval
     condition) with hard signal."""
-    import os
-    import tempfile
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from boostdb_spark.functions.scalar import ns_to_timestamp
-
-        ev = ev.withColumn("ts", ns_to_timestamp("ts"))
-    src0 = ev.select(
-        "event_type", F.col("ts").cast("timestamp"), "user_id", "value"
-    )
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, "ssjoin")
-    if key not in _STREAM_LANDING:
-        # TIME-ORDERED landing (contiguous ranges, distinct mtimes):
-        # with zero-delay watermarks an out-of-order batch would DROP
-        # late rows before they join; ordered batches never regress the
-        # watermark, and buffered state evicts only rows no future
-        # batch can match (p_ts + 1h < watermark)
-        import time as _time
-
-        qs = src0.select(F.unix_micros("ts").alias("t")).agg(
-            F.expr("percentile(t, array(0.33, 0.66))").alias("q")
-        ).collect()[0]["q"]
-        lo, hi = int(qs[0]), int(qs[1])
-        landing = session_tmpdir(prefix="boost_suite_ssjoin_")
-        us = F.unix_micros(F.col("ts"))
-        parts = [
-            src0.filter(us <= lo),
-            src0.filter((us > lo) & (us <= hi)),
-            src0.filter(us > hi),
-        ]
-        _write_landing_slices(parts, landing)
-        _STREAM_LANDING[key] = landing
-    landing = _STREAM_LANDING[key]
-    schema = _landing_schema(spark, os.path.join(landing, "f0"))
-
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(landing)
-        )
-
-    purchases = stream().filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts"), F.col("value").alias("p_value")
-    )
-    errors = stream().filter(F.col("event_type") == "error").select(
-        F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts")
-    )
-    cond = (
-        (F.col("user_id") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR"))
-    )
-    joined = purchases.withWatermark("p_ts", "0 seconds").join(
-        errors.withWatermark("e_ts", "0 seconds"), cond
-    )
-    sink = f"stream_join_{abs(hash(key)) % 10**9}"
-    import time as _time2
-
     # no_data_batches=False: an INNER stream-stream join emits only on
     # match, during data batches — the trailing watermark-only batch
     # evicts state but cannot add or remove output rows, and it costs a
     # full per-batch plan + state commit (oracle re-verified at
     # sf0.001/0.01/0.1; the outer-join sibling KEEPS the trailing
     # batch, its NULL extension emits there)
-    with _drain_conf(spark, landing=landing, no_data_batches=False):
-        _t0 = _time2.perf_counter()
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # r13-verdict ask #2: the join-parity drains were the one
-        # streaming cohort without per-drain attribution in the bench
-        # record — stash batch walls + state-commit time so a slow
-        # driver wall splits into commit IO vs compute in-record
-        _record_drain(
-            "stream_join_parity", q, _time2.perf_counter() - _t0
-        )
-    return spark.table(sink).select(
-        "user_id",
-        F.unix_micros(F.col("p_ts")).alias("p_ts_us"),
-        "p_value",
-        F.unix_micros(F.col("e_ts")).alias("e_ts_us"),
+    return _stream_join(
+        spark, sf_dir, "stream_join_parity", "inner", no_data_batches=False
     )
 
 
@@ -7044,86 +6711,9 @@ def stream_outer_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer-row eviction, not just row buffering. Reuses the inner
     entry's time-ordered landing (zero-delay watermarks tolerate no
     out-of-order batch)."""
-    import os
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from boostdb_spark.functions.scalar import ns_to_timestamp
-
-        ev = ev.withColumn("ts", ns_to_timestamp("ts"))
-    src0 = ev.select(
-        "event_type", F.col("ts").cast("timestamp"), "user_id", "value"
-    )
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, "ssjoin")  # shared with stream_join_parity
-    if key not in _STREAM_LANDING:
-        import time as _time
-
-        qs = src0.select(F.unix_micros("ts").alias("t")).agg(
-            F.expr("percentile(t, array(0.33, 0.66))").alias("q")
-        ).collect()[0]["q"]
-        lo, hi = int(qs[0]), int(qs[1])
-        landing = session_tmpdir(prefix="boost_suite_ssjoin_")
-        us = F.unix_micros(F.col("ts"))
-        parts = [
-            src0.filter(us <= lo),
-            src0.filter((us > lo) & (us <= hi)),
-            src0.filter(us > hi),
-        ]
-        _write_landing_slices(parts, landing)
-        _STREAM_LANDING[key] = landing
-    landing = _STREAM_LANDING[key]
-    schema = _landing_schema(spark, os.path.join(landing, "f0"))
-
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(landing)
-        )
-
-    purchases = stream().filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts"), F.col("value").alias("p_value")
-    )
-    errors = stream().filter(F.col("event_type") == "error").select(
-        F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts")
-    )
-    cond = (
-        (F.col("user_id") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR"))
-    )
-    joined = purchases.withWatermark("p_ts", "0 seconds").join(
-        errors.withWatermark("e_ts", "0 seconds"), cond, "leftOuter"
-    )
-    sink = f"stream_ljoin_{abs(hash(key)) % 10**9}"
-    import time as _time2
-
-    with _drain_conf(spark, landing=landing):
-        _t0 = _time2.perf_counter()
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # per-drain attribution for the bench record (r13 ask #2)
-        _record_drain(
-            "stream_outer_join_parity", q, _time2.perf_counter() - _t0
-        )
-    return spark.table(sink).select(
-        "user_id",
-        F.unix_micros(F.col("p_ts")).alias("p_ts_us"),
-        "p_value",
-        F.unix_micros(F.col("e_ts")).alias("e_ts_us"),
+    return _stream_join(
+        spark, sf_dir, "stream_outer_join_parity", "leftOuter",
+        no_data_batches=True,
     )
 
 
@@ -7153,14 +6743,7 @@ def stream_upsert_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from boostdb_spark.functions.scalar import ns_to_timestamp
-
-        ev = ev.withColumn("ts", ns_to_timestamp("ts"))
-    src0 = ev.select(
-        "user_id", F.col("ts").cast("timestamp"), "value", "event_id"
-    )
+    src0 = _ts_events(t).select("user_id", "ts", "value", "event_id")
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir, "upsert")
     if key not in _STREAM_LANDING:
@@ -7168,7 +6751,7 @@ def stream_upsert_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         src0.repartition(4).write.mode("overwrite").parquet(landing)
         _STREAM_LANDING[key] = landing
     landing = _STREAM_LANDING[key]
-    schema = _landing_schema(spark, landing)
+    schema = landing_schema(spark, landing)
     sdf = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -7178,7 +6761,7 @@ def stream_upsert_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = session_tmpdir(prefix="boost_upsert_state_")
     state = os.path.join(work, f"state_{abs(hash(key)) % 10**9}")
-    with _drain_conf(spark, landing=landing):
+    with drain_conf(spark, landing=landing):
         q = upsert_view(
             sdf, ["user_id"], "ts", state,
             checkpoint=os.path.join(work, "ckpt"),
@@ -7242,7 +6825,7 @@ def stream_retention_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(landing)
         _STREAM_LANDING[key] = landing
     landing = _STREAM_LANDING[key]
-    schema = _landing_schema(spark, landing)
+    schema = landing_schema(spark, landing)
     work = session_tmpdir(prefix="boost_sret_state_")
     f_state = os.path.join(work, "first_touch")
     a_state = os.path.join(work, "activity")
@@ -7303,7 +6886,7 @@ def stream_retention_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda u: u.distinct(),
         )
 
-    with _drain_conf(spark, landing=landing):
+    with drain_conf(spark, landing=landing):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 2)
@@ -7345,9 +6928,6 @@ def stream_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cross-batch state store does real work — and the appended
     memory-sink rows must hash-equal a plain DISTINCT over the
     original table. Hard signal for the streaming-dedup §2.6 row."""
-    import os
-    import tempfile
-
     t = load_tables(spark, sf_dir)
     ev = t["events"].select("event_id", "event_type", "value")
     app_id = spark.sparkContext.applicationId
@@ -7357,27 +6937,17 @@ def stream_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.union(ev).repartition(4).write.mode("overwrite").parquet(landing)
         _STREAM_LANDING[key] = landing
     landing = _STREAM_LANDING[key]
-    schema = _landing_schema(spark, landing)
+    schema = landing_schema(spark, landing)
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
     sink = f"stream_dedup_{abs(hash(key)) % 10**9}"
-    with _drain_conf(spark, landing=landing):
-        q = (
-            src.dropDuplicates(["event_id"])
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        src.dropDuplicates(["event_id"]), _ckpt(), query_name=sink,
+        landing=landing,
+    )
     return spark.table(sink)
 
 
@@ -7405,38 +6975,12 @@ def stream_ewma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle evaluates. The arbitrary-stateful §2.6 row under the hard
     gate; landing write (utime-stamped slice order) is ingest-time,
     once per session+SF."""
-    import os
-    import tempfile
-    import time as _time
-
     from boostdb_spark.streaming.stateful import streaming_ewma
 
     t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from boostdb_spark.functions.scalar import ns_to_timestamp
-
-        ev = ev.withColumn("ts", ns_to_timestamp("ts"))
-    src = ev.select(
-        "event_type", F.col("ts").cast("timestamp"), "event_id", "value"
-    )
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, "ewma")
-    if key not in _STREAM_LANDING:
-        qs = src.select(F.unix_micros("ts").alias("t")).agg(
-            F.expr("percentile(t, array(0.33, 0.66))").alias("q")
-        ).collect()[0]["q"]
-        lo, hi = int(qs[0]), int(qs[1])
-        landing = session_tmpdir(prefix="boost_suite_sewma_")
-        us = F.unix_micros(F.col("ts"))
-        parts = [
-            src.filter(us <= lo),
-            src.filter((us > lo) & (us <= hi)),
-            src.filter(us > hi),
-        ]
-        _write_landing_slices(parts, landing)
-        _STREAM_LANDING[key] = landing
-    landing = _STREAM_LANDING[key]
+    src = _ts_events(t).select("event_type", "ts", "event_id", "value")
+    key = (spark.sparkContext.applicationId, sf_dir, "ewma")
+    landing = _time_ordered_landing(src, key)
     sdf = (
         spark.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", "1")
@@ -7448,19 +6992,10 @@ def stream_ewma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts", order_extra=["event_id"],
     )
     sink = f"stream_ewma_{abs(hash(key)) % 10**9}"
-    with _drain_conf(spark, landing=landing):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option(
-                "checkpointLocation",
-                os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        out, _ckpt(), output_mode="update", query_name=sink,
+        landing=landing,
+    )
     return (
         spark.table(sink)
         .groupBy("event_type")
@@ -7492,37 +7027,12 @@ def stream_locf_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiom dialect_ignore_nulls certifies in SQL, now certified across
     the state store. Reuses the ewma entry's time-ordered landing
     (same columns, same mtime-ordered three-range layout)."""
-    import os
-    import time as _time
-
     from boostdb_spark.streaming.stateful import streaming_locf
 
     t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from boostdb_spark.functions.scalar import ns_to_timestamp
-
-        ev = ev.withColumn("ts", ns_to_timestamp("ts"))
-    src = ev.select(
-        "event_type", F.col("ts").cast("timestamp"), "event_id", "value"
-    )
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, "ewma")  # shared landing with stream_ewma
-    if key not in _STREAM_LANDING:
-        qs = src.select(F.unix_micros("ts").alias("t")).agg(
-            F.expr("percentile(t, array(0.33, 0.66))").alias("q")
-        ).collect()[0]["q"]
-        lo, hi = int(qs[0]), int(qs[1])
-        landing = session_tmpdir(prefix="boost_suite_sewma_")
-        us = F.unix_micros(F.col("ts"))
-        parts = [
-            src.filter(us <= lo),
-            src.filter((us > lo) & (us <= hi)),
-            src.filter(us > hi),
-        ]
-        _write_landing_slices(parts, landing)
-        _STREAM_LANDING[key] = landing
-    landing = _STREAM_LANDING[key]
+    src = _ts_events(t).select("event_type", "ts", "event_id", "value")
+    key = (spark.sparkContext.applicationId, sf_dir, "ewma")  # shared
+    landing = _time_ordered_landing(src, key)
     sdf = (
         spark.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", "1")
@@ -7537,19 +7047,10 @@ def stream_locf_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="event_id",
     )
     sink = f"stream_locf_{abs(hash(key)) % 10**9}"
-    with _drain_conf(spark, landing=landing):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option(
-                "checkpointLocation",
-                os.path.join(session_tmpdir(prefix="boost_ckpt_"), "c"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        out, _ckpt(), output_mode="update", query_name=sink,
+        landing=landing,
+    )
     return spark.table(sink).withColumn(
         "event_id", F.col("event_id").cast("long")
     )

@@ -483,19 +483,19 @@ def test_upsert_view_cross_batch_merge(spark, tmp_path):
 
 
 def test_drain_conf_sets_and_restores(spark):
-    """_drain_conf must leave the session exactly as it found it —
+    """drain_conf must leave the session exactly as it found it —
     a leaked RocksDB provider or 8-partition setting would silently
     skew every batch entry that follows in the same process."""
-    from boostdb_spark.suite import _ROCKSDB_PROVIDER, _drain_conf
+    from boostdb_spark.streaming.drain import ROCKSDB_PROVIDER, drain_conf
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     key = "spark.sql.streaming.stateStore.providerClass"
-    with _drain_conf(spark):
+    with drain_conf(spark):
         # no landing given -> the scale-adaptive default bottoms out at
         # the 2-partition floor (r14: state partitions size to the
         # replay volume, never a fixed count)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-        assert spark.conf.get(key) == _ROCKSDB_PROVIDER
+        assert spark.conf.get(key) == ROCKSDB_PROVIDER
         assert (
             spark.conf.get(
                 "spark.sql.streaming.stateStore.rocksdb."
@@ -504,7 +504,40 @@ def test_drain_conf_sets_and_restores(spark):
             == "true"
         )
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    assert spark.conf.get(key, None) != _ROCKSDB_PROVIDER
+    assert spark.conf.get(key, None) != ROCKSDB_PROVIDER
+
+    # a drain that raises inside the context still restores every key
+    # to its prior value — including pre-set, non-default ones
+    keys = (
+        "spark.sql.shuffle.partitions",
+        key,
+        "spark.sql.streaming.stateStore.rocksdb."
+        "changelogCheckpointing.enabled",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for no_data in ("false", "true"):
+            prior = {
+                keys[0]: "7",
+                keys[1]: "org.example.PriorStateStoreProvider",
+                keys[2]: "false",
+                keys[3]: no_data,
+            }
+            for k, v in prior.items():
+                spark.conf.set(k, v)
+            with pytest.raises(RuntimeError, match="drain failed"):
+                with drain_conf(spark, no_data_batches=False):
+                    assert spark.conf.get(key) == ROCKSDB_PROVIDER
+                    assert spark.conf.get(keys[3]) == "false"
+                    raise RuntimeError("drain failed")
+            assert {k: spark.conf.get(k) for k in keys} == prior
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_state_partitions_scale_with_replay_volume(tmp_path, monkeypatch):
@@ -513,9 +546,9 @@ def test_state_partitions_scale_with_replay_volume(tmp_path, monkeypatch):
     cap 200) — a constant would multiply fixed per-commit state-store
     IO at bench SF and cram corpus-scaled state into too few stores at
     100 TB. Env override wins for cluster tuning."""
-    from boostdb_spark.suite import _state_partitions
-
-    import pytest
+    from boostdb_spark.streaming.drain import (
+        state_partitions as _state_partitions,
+    )
 
     monkeypatch.delenv("SPARK_GRAFT_STATE_PARTITIONS", raising=False)
     # no landing given -> floor
@@ -553,6 +586,29 @@ def test_state_partitions_scale_with_replay_volume(tmp_path, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", bad)
         with pytest.raises(ValueError, match="positive integer"):
             _state_partitions(str(tmp_path))
+
+
+def test_drain_policy_keys_live_only_in_drain_module():
+    """The drain policy has one home: the session keys it sets appear
+    in no library or bench source except streaming/drain.py."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    home = root / "boostdb_spark" / "streaming" / "drain.py"
+    sources = [*(root / "boostdb_spark").rglob("*.py"), root / "bench.py"]
+    literals = (
+        "stateStore.providerClass",
+        "changelogCheckpointing",
+        "noDataMicroBatches",
+    )
+    found = {
+        (str(p.relative_to(root)), lit)
+        for p in sources
+        for lit in literals
+        if lit in p.read_text()
+    }
+    assert {f for f, _ in found} == {str(home.relative_to(root))}
+    assert {lit for _, lit in found} == set(literals)
 
 
 def test_upsert_bucketed_state_io_shape(spark, tmp_path):

@@ -370,6 +370,25 @@ def test_keep_best_picks_highest_score(spark):
     assert got2 == {1: True, 2: False}
 
 
+def test_keep_best_keeps_every_null_id_row(spark):
+    """NULL-id contract: each NULL-doc_id row is unmatched and kept
+    (one output row per input row), never merged into one NULL group."""
+    pairs = spark.createDataFrame(
+        [(1, 2)], "id_a long, id_b long"
+    ).withColumn("jaccard", F.lit(1.0))
+    docs = spark.createDataFrame(
+        [(1, 10), (2, 99), (None, 40), (None, 70)],
+        "doc_id long, n_chars long",
+    )
+    got = sorted(
+        (tuple(r) for r in dd.keep_best(docs, pairs).collect()),
+        key=lambda r: (r[0] is None, r[0] or 0),
+    )
+    assert got == [
+        (1, 1, False), (2, 1, True), (None, None, True), (None, None, True),
+    ]
+
+
 def test_semantic_dedup_keeps_least_prototypical(spark):
     """Handcrafted 2-D fixture: one cluster holds vectors at 0, 4 and
     6 degrees, the other a lone (0,1). With tau between cos(2deg) and
