@@ -81,6 +81,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from boostdb_spark.sources.seriesfamily import apply_time_range
+
 # --------------------------------------------------------------------------
 # Binding: how a series-family maps onto a physical table
 # --------------------------------------------------------------------------
@@ -2820,21 +2822,8 @@ def _source_scan(
         df = df.filter(F.col(b.series_col) == series[0])
     elif series:
         df = df.filter(F.col(b.series_col).isin(series))
-    df = _time_range(df, b.ts_col, start, end)
+    df = apply_time_range(df, start, end, ts_col=b.ts_col)
     return df.select([F.col(c).alias(f"{key}__{c}") for c in df.columns])
-
-
-def _time_range(df: DataFrame, ts_col: str, start, end) -> DataFrame:
-    """Implicit [start, end) range (executor.go:145-147, 239-252).
-    Bounds are INT64 ns; compared in the ts column's NATIVE dtype so the
-    predicate reaches the parquet scan as PushedFilters either way."""
-    from boostdb_spark.functions.scalar import ts_lit
-
-    if start is not None:
-        df = df.filter(F.col(ts_col) >= ts_lit(df, start, col=ts_col))
-    if end is not None:
-        df = df.filter(F.col(ts_col) < ts_lit(df, end, col=ts_col))
-    return df
 
 
 #: hard cap on recursive-CTE fixpoint iterations. Iteration count is
@@ -3665,7 +3654,7 @@ def plan(
             df = df.filter(F.col(binding.series_col) == series[0])
         elif series:
             df = df.filter(F.col(binding.series_col).isin(series))
-        df = _time_range(df, binding.ts_col, start, end)
+        df = apply_time_range(df, start, end, ts_col=binding.ts_col)
     if q.sample is not None:
         # TABLESAMPLE (p PERCENT ON key): deterministic hash-bucket cut
         # (operators/sampling.py::deterministic_sample semantics) — one

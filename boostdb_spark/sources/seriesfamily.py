@@ -14,22 +14,37 @@ Reference semantics being re-expressed (not ported):
   (client/boostseriesiterator.go:270-343). Here: a partition-pruned read
   plus ``ORDER BY ts`` — the merge iterator is the SortExec.
 
-Scale posture: the table is partitioned by ``date(ts)`` so every query
-with a time predicate prunes partitions at 100 TB; within a partition,
-files are written sorted by ``(series, ts)`` so min/max row-group stats
-make series predicates skippable too.
+Scale posture: the table is partitioned by ``ts_date = to_date(ts)``.
+Spark derives no partition filter from a predicate on ``ts`` alone, so
+``apply_time_range`` adds the matching ``ts_date`` bound itself (one day
+of slack each side: ``ts_date`` is a date in the WRITER's session zone,
+unknown at read time) and a time-ranged fetch lists only the days it
+asks for. Within a partition, files are written sorted by
+``(series, ts)`` so min/max row-group stats make series and time
+predicates skippable too.
+
+Parquet files are immutable once written (Spark writers only add files
+under fresh names and delete whole files), so a file set determines its
+merged schema; ``SeriesFamily.read`` relies on that to run the
+``mergeSchema`` footer job once per file set instead of once per read.
 """
 
 from __future__ import annotations
 
+import numbers
+from datetime import date, timedelta
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: canonical column names (FIXTURES.md section 1)
 TS = "ts"
 SERIES = "series"
 VALUE = "value"
 DATE_COL = "ts_date"
+
+DAY_NS = 86_400_000_000_000
 
 
 class SeriesFamily:
@@ -45,6 +60,8 @@ class SeriesFamily:
         self.domain = domain
         self.family = family
         self.path = f"{root.rstrip('/')}/{domain}/{family}"
+        #: (input files, merged schema) of the last ``mergeSchema`` read
+        self._schema_memo: tuple[frozenset, StructType] | None = None
 
     @property
     def qualified_name(self) -> str:
@@ -136,7 +153,23 @@ class SeriesFamily:
 
     # ------------------------------------------------------------------- read
     def read(self) -> DataFrame:
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        """The whole family, every file's columns merged (``mergeSchema``).
+
+        The merge is a Spark job over all file footers. Parquet files are
+        never changed once written, so the merged schema is a function of
+        the file set: a read whose listing equals the file set of the
+        last merge reuses that schema and runs no job. Any other listing
+        (an append, a compaction, a delete, a write through another
+        handle or a stream) runs the full merge again and refreshes the
+        memo."""
+        if self._schema_memo is not None:
+            files, schema = self._schema_memo
+            df = self.spark.read.schema(schema).parquet(self.path)
+            if frozenset(df.inputFiles()) == files:
+                return df
+        df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        self._schema_memo = (frozenset(df.inputFiles()), df.schema)
+        return df
 
     def fetch(
         self,
@@ -150,8 +183,11 @@ class SeriesFamily:
         Equivalent of Fetch + BoostSeriesIterator (m3dbseriesfamily.go:
         188-222, boostseriesiterator.go:157-343): the implicit time range
         every reference query carries (query/executor/executor.go:145-147)
-        is an explicit predicate here, which Catalyst turns into partition
-        pruning + parquet row-group skipping.
+        is an explicit predicate here. INT64-ns bounds prune ``ts_date``
+        partitions to ``[date(start) - 1 day, date(end - 1 ns) + 1 day]``
+        (the slack covers any writer time zone, see ``apply_time_range``)
+        and reach the parquet scan as PushedFilters for row-group
+        skipping.
         """
         df = self.read()
         if series is not None:
@@ -179,17 +215,34 @@ def apply_time_range(df: DataFrame, start=None, end=None, ts_col: str = TS) -> D
     Works for TimestampType and INT64-ns ``ts`` columns alike; INT64-ns
     bounds against a timestamp column are converted literal-side so the
     predicate still reaches the parquet scan as PushedFilters.
+
+    On a series-family frame (``ts_col`` is ``ts`` and the frame carries
+    the ``ts_date`` partition column) an INT64-ns bound also bounds
+    ``ts_date``, which Spark prunes partitions by: it derives no
+    partition filter from ``ts`` itself. ``ts_date`` is ``to_date(ts)``
+    in the writer's session time zone, unknown here, so the bound is
+    the UTC date widened by one day each side; every zone offset is
+    under a day, so no row in range is dropped. Other bounds filter
+    ``ts`` only.
     """
 
     def _lit(v):
-        if isinstance(v, int):
+        if isinstance(v, numbers.Integral):
             from boostdb_spark.functions.scalar import ts_lit
 
             return ts_lit(df, v, col=ts_col)
         return F.lit(v)
 
+    def _day(ns: int) -> date:
+        return date(1970, 1, 1) + timedelta(days=int(ns) // DAY_NS)
+
+    pruned = ts_col == TS and DATE_COL in df.columns
     if start is not None:
         df = df.filter(F.col(ts_col) >= _lit(start))
+        if pruned and isinstance(start, numbers.Integral):
+            df = df.filter(F.col(DATE_COL) >= F.lit(_day(start) - timedelta(days=1)))
     if end is not None:
         df = df.filter(F.col(ts_col) < _lit(end))
+        if pruned and isinstance(end, numbers.Integral):
+            df = df.filter(F.col(DATE_COL) <= F.lit(_day(end - 1) + timedelta(days=1)))
     return df

@@ -143,12 +143,15 @@ def _q(name: str, oracle: str | None):
 # agg_approx_count_distinct / agg_approx_quantiles are oracle-less
 # (approx by design) with driver-green history — below the fold.
 _WINDOW: tuple[str, ...] = (
-    # CHANGED CODE FIRST — every entry whose code path moved onto
-    # streaming/drain.py (landing helpers, drain config, progress
-    # record) or the shared streaming/windows.py body leads; the r14
-    # cohort it displaces was certified in the r15 window. Then
+    # CHANGED CODE FIRST — the series-family fetch (ts_date partition
+    # bound, memoized schema merge) and every entry whose code path
+    # moved onto streaming/drain.py (landing helpers, drain config,
+    # progress record) or the shared streaming/windows.py body leads;
+    # the r14 cohort it displaces was certified in the r15 window. Then
     # the r15 changes, the standing canaries and the stalest re-cert
     # vintage (the r8 remainder from the r14 rotation-prep queue).
+    # --- series-family read path ---
+    "seriesfamily_roundtrip",
     # --- streaming drain / window-helper consolidation ---
     "stream_session_parity", "stream_sliding_parity",
     "stream_ewma_parity", "stream_locf_parity",
@@ -180,9 +183,9 @@ _WINDOW: tuple[str, ...] = (
     "scan_snapshot_apply", "subquery_exists", "time_bucket_agg",
     "ts_histogram_quantile", "ts_interp_align", "ts_m4_downsample",
     "txt_bm25_topk", "txt_redact_pii", "txt_tfidf_topk",
-    "udaf_grouped_range", "where_ops",
+    "udaf_grouped_range",
     # ROTATION PREP — r8 remainder tail queued next:
-    # window_moving_avg, window_navigation, window_rank_ntile,
+    # where_ops, window_moving_avg, window_navigation, window_rank_ntile,
     # window_running_sum; then ROUND-9 cohort in name order.
 )
 

@@ -291,6 +291,41 @@ def test_hive_partition_prune_in_plan(spark):
     assert "EqualTo(event_type,click)" in p
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT cpu.host, cpu FROM bench.metrics WHERE cpu < 5",
+        "SELECT a.cpu AS x, b.mem AS y FROM bench.metrics a "
+        "JOIN bench.metrics b ON a.host = b.host",
+    ],
+    ids=["single_source", "join"],
+)
+def test_dialect_time_range_prunes_family_partitions(spark, tmp_path, sql):
+    """A time-ranged dialect query over a registered series-family view
+    prunes ts_date DIRECTORIES in every scan, while the ts bounds stay
+    pushed to parquet."""
+    from boostdb_spark.plans import sugar
+    from boostdb_spark.sources import SeriesFamily
+
+    day = 86_400 * 10**9
+    t0 = 1_704_067_200 * 10**9
+    fam = SeriesFamily(spark, "bench", "metrics", str(tmp_path))
+    fam.write(spark.createDataFrame(
+        [(s, t0 + i * day // 2, float(i), f"h{i % 3}")
+         for s in ("cpu", "mem") for i in range(20)],
+        "series string, ts long, value double, host string",
+    ))
+    fam.register()
+    binding = sugar.SeriesFamilyBinding(view=fam.view_name)
+    df = sugar.query(spark, sql, binding, start=t0 + 4 * day, end=t0 + 5 * day)
+    p = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    pf = [ln for ln in p.splitlines() if "PartitionFilters" in ln]
+    assert pf and all("ts_date" in ln for ln in pf), pf
+    assert "GreaterThanOrEqual(ts," in p and "LessThan(ts," in p
+
+
 def test_bm25_single_broadcast_stats_join(spark):
     # corpus stats ride ONE single-row broadcast join; no sort-merge
     p = _plan(spark, "txt_bm25_topk")

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from boostdb_spark.sources import SeriesFamily
+from boostdb_spark.sources.seriesfamily import DAY_NS
 from tests.conftest import SF_DIR
 
 
@@ -65,28 +66,75 @@ def test_fetch_time_range_half_open(spark, family):
     assert [r.value for r in out] == [3.0, 4.0, 5.0]  # [start, end) — i in [2,5)
 
 
-def test_schema_evolution_on_append(spark, family):
+def test_schema_evolution_on_append(spark, family, tmp_path):
     """Attributes appear on first write (symtable dynamic creation,
-    core/symtable.go:288-321) -> mergeSchema on read."""
+    core/symtable.go:288-321) -> mergeSchema on read. A handle that has
+    already read (and memoized the merged schema) must still see a
+    column appended through ANOTHER handle: a changed file set re-runs
+    the merge."""
     family.write(_fixture_df(spark))
+    assert "zone" not in family.read().columns
+    other = SeriesFamily(spark, "bTestDomain", "bTestSF", str(tmp_path))
     extra = spark.createDataFrame(
         [("mem_utilization", 1_704_067_200_000_000_000, 42.0, "zone-a")],
         "series string, ts long, value double, zone string",
     )
-    family.write(extra)
+    other.write(extra)
     df = family.read()
     assert "zone" in df.columns and "host" in df.columns
     assert df.count() == 11
 
 
+def test_read_reuses_merged_schema_while_files_unchanged(spark, family):
+    """The memo hit: with the file set unchanged since the last merge,
+    read() reuses the merged schema and runs no Spark job at all (the
+    mergeSchema footer job runs once per file set)."""
+    family.write(_fixture_df(spark))
+    first = family.read()  # merges, memoizes
+    sc = spark.sparkContext
+    group = "seriesfamily-memo-hit"
+    sc.setJobGroup(group, "read() with an unchanged file set")
+    try:
+        again = family.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def _plan_text(df):
+    qe = df._jdf.queryExecution()
+    jvm = df.sparkSession._jvm
+    return qe.explainString(
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
+def _scanned_files(df) -> list[str]:
+    """The files df's parquet scans actually open, after partition
+    pruning. (``DataFrame.inputFiles()`` lists the whole unpruned file
+    index of a path-based read, so it cannot show pruning.)"""
+    conv = df.sparkSession._jvm.scala.jdk.javaapi.CollectionConverters
+    plan = df._jdf.queryExecution().sparkPlan()
+    return [
+        f.filePath().toString()
+        for leaf in conv.asJava(plan.collectLeaves())
+        for part in conv.asJava(leaf.inputRDD().filePartitions())
+        for f in part.files()
+    ]
+
+
 def test_partitioned_layout_prunes(spark, family):
-    """Date partitioning must actually prune: fetch of one day reads one
-    partition directory."""
+    """Date partitioning must actually prune: a one-day fetch carries a
+    ts_date partition filter and opens only files under that day +- 1
+    (the writer-zone slack), never the far day's partition."""
     df = _fixture_df(spark)
-    # spread across two days
+    # spread across two days four days apart
     df2 = df.withColumn(
         "ts",
-        F.when(F.col("value") > 5.0, F.col("ts") + F.lit(86_400_000_000_000)).otherwise(
+        F.when(F.col("value") > 5.0, F.col("ts") + F.lit(4 * DAY_NS)).otherwise(
             F.col("ts")
         ),
     )
@@ -94,9 +142,54 @@ def test_partitioned_layout_prunes(spark, family):
     pruned = family.fetch(
         "cpu_utilization",
         start=1_704_067_200_000_000_000,
-        end=1_704_067_200_000_000_000 + 86_400_000_000_000,
+        end=1_704_067_200_000_000_000 + DAY_NS,
     )
     assert pruned.count() == 5
+    pf = [ln for ln in _plan_text(pruned).splitlines() if "PartitionFilters" in ln]
+    assert pf and all("ts_date" in ln for ln in pf), pf
+    files = _scanned_files(pruned)
+    allowed = ("ts_date=2023-12-31/", "ts_date=2024-01-01/", "ts_date=2024-01-02/")
+    assert files and all(any(d in f for d in allowed) for f in files), files
+
+
+def test_partition_bound_slack_covers_every_writer_zone(spark, family):
+    """ts_date is to_date(ts) in the WRITER's session zone. Rows written
+    under +14 h (Pacific/Kiritimati) and -11 h (Pacific/Pago_Pago) and
+    fetched under UTC with bounds on and one ns beside midnight must be
+    exactly the rows a ts-only filter keeps."""
+    t_mid = 1_704_240_000_000_000_000  # 2024-01-03 00:00 UTC
+    step = 1_800 * 10**9  # every 30 min over five days around t_mid
+    grid = [t_mid + k * step for k in range(-96, 145)]
+    edges = [t_mid + d * DAY_NS + o for d in range(-1, 3) for o in (-1_000, 1_000)]
+    conf = "spark.sql.session.timeZone"
+    prev = spark.conf.get(conf)
+    try:
+        for zone, series in (("Pacific/Kiritimati", "kir"), ("Pacific/Pago_Pago", "ppg")):
+            spark.conf.set(conf, zone)
+            family.write(spark.createDataFrame(
+                [(series, t, float(i)) for i, t in enumerate(grid + edges)],
+                "series string, ts long, value double",
+            ))
+        spark.conf.set(conf, "UTC")
+        stored = family.read()
+        # the zones really move rows across UTC midnight in both directions
+        shift = stored.select(
+            "series",
+            F.datediff("ts_date", F.to_date(F.timestamp_micros(F.expr("ts div 1000")))).alias("d"),
+        ).distinct().collect()
+        assert {(r.series, r.d) for r in shift} >= {("kir", 1), ("ppg", -1)}
+        checked = 0
+        for start in (t_mid - 1, t_mid, t_mid + 1):
+            for end in (t_mid + DAY_NS - 1, t_mid + DAY_NS, t_mid + DAY_NS + 1,
+                        t_mid + 13 * 3_600 * 10**9):
+                got = family.fetch(start=start, end=end, ordered=False)
+                want = stored.filter((F.col("ts") >= start) & (F.col("ts") < end))
+                rows = sorted(got.select("series", "ts", "value").collect())
+                assert rows == sorted(want.select("series", "ts", "value").collect())
+                checked += len(rows)
+        assert checked
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_compact_collapses_small_files(spark, tmp_path):
