@@ -143,13 +143,22 @@ def _q(name: str, oracle: str | None):
 # agg_approx_count_distinct / agg_approx_quantiles are oracle-less
 # (approx by design) with driver-green history — below the fold.
 _WINDOW: tuple[str, ...] = (
-    # CHANGED CODE FIRST — the series-family fetch (ts_date partition
-    # bound, memoized schema merge) and every entry whose code path
-    # moved onto streaming/drain.py (landing helpers, drain config,
-    # progress record) or the shared streaming/windows.py body leads;
-    # the r14 cohort it displaces was certified in the r15 window. Then
-    # the r15 changes, the standing canaries and the stalest re-cert
-    # vintage (the r8 remainder from the r14 rotation-prep queue).
+    # CHANGED CODE FIRST — the dialect entries whose plan changed under
+    # the one-SQL-statement front (tools/sugar_plan_diff.py) and the
+    # dialect canaries, then the series-family / streaming-drain cohort, the
+    # standing canaries and the LLM-pipeline entries.
+    "dialect_agg_expr", "dialect_arg_minmax", "dialect_bool_agg",
+    "dialect_cte", "dialect_exists", "dialect_filter_agg",
+    "dialect_group_all", "dialect_group_expr", "dialect_grouping_sets",
+    "dialect_join", "dialect_join_full", "dialect_join_left",
+    "dialect_join_multi", "dialect_join_multikey", "dialect_join_right",
+    "dialect_join_theta", "dialect_lateral_tokenize", "dialect_limit_ties",
+    "dialect_nulls_order", "dialect_pivot_sum", "dialect_select_scalar_sub",
+    "dialect_string_agg", "dialect_subquery", "dialect_unpivot",
+    "dialect_using", "dialect_values",
+    "flagship_series_scan",   # scan + dialect front + implicit range
+    "dialect_params",         # placeholder binding (:x via args)
+    "dialect_frame_exclude",  # EXCLUDE lowering, now SQL text
     # --- series-family read path ---
     "seriesfamily_roundtrip",
     # --- streaming drain / window-helper consolidation ---
@@ -160,33 +169,23 @@ _WINDOW: tuple[str, ...] = (
     "window_session_agg",
     "stream_batch_parity", "stream_cascade_parity",
     "stream_retention_parity", "stream_dedup_parity",
-    # --- r15-changed code paths ---
-    "dedup_keep_best",          # members-only policy window + 1-job loop
-    "dedup_groups",             # pair-feed checkpoint + 1-job loop
-    "dialect_frame_exclude",    # EXCLUDE TIES avg buffer dedup (6->4)
-    "stream_rollup_parity",     # sink file sizing per batch
-    "stream_join_parity", "stream_outer_join_parity",  # shared _stream_join
-    # --- standing canaries (green every round) ---
-    "flagship_series_scan",   # scan + dialect front + implicit range
-    "dialect_params",         # placeholder binding
+    # --- standing canaries and LLM-pipeline coverage ---
     "agg_groupby_q1",         # grouped aggregation
     "ts_irate",               # time-series functions
     "dedup_exact",            # dedup family
-    # --- re-certification: ROUND-8 remainder (the r14 rotation-prep
-    # queue, minus the entries promoted to the changed cohorts above) ---
-    "agg_unpivot", "dedup_containment", "dedup_decontaminate",
-    "dedup_ngram_jaccard", "dedup_ngram_jaccard_capped",
-    "dialect_asof_join", "dialect_group_all", "dialect_join_theta",
-    "dialect_nulls_order", "dialect_qualify", "dialect_select_star",
-    "dialect_using", "distinct_series", "pipeline_hybrid_rrf",
-    "scan_hive_partition_prune", "scan_schema_evolution",
-    "scan_snapshot_apply", "subquery_exists", "time_bucket_agg",
-    "ts_histogram_quantile", "ts_interp_align", "ts_m4_downsample",
-    "txt_bm25_topk", "txt_redact_pii", "txt_tfidf_topk",
-    "udaf_grouped_range",
-    # ROTATION PREP — r8 remainder tail queued next:
-    # where_ops, window_moving_avg, window_navigation, window_rank_ntile,
-    # window_running_sum; then ROUND-9 cohort in name order.
+    "dedup_keep_best", "dedup_groups", "dedup_containment",
+    "txt_bm25_topk", "pipeline_hybrid_rrf",
+    # ROTATION PREP — queued next: the r15 cohort (stream_rollup_parity,
+    # stream_join_parity, stream_outer_join_parity), then the ROUND-8
+    # remainder: agg_unpivot, dedup_decontaminate, dedup_ngram_jaccard,
+    # dedup_ngram_jaccard_capped, dialect_asof_join, dialect_qualify,
+    # dialect_select_star, distinct_series, scan_hive_partition_prune,
+    # scan_schema_evolution, scan_snapshot_apply, subquery_exists,
+    # time_bucket_agg, ts_histogram_quantile, ts_interp_align,
+    # ts_m4_downsample, txt_redact_pii, txt_tfidf_topk,
+    # udaf_grouped_range, where_ops, window_moving_avg,
+    # window_navigation, window_rank_ntile, window_running_sum; then
+    # the ROUND-9 cohort in name order.
 )
 
 #: window entries the driver checks ROWS-ONLY (no SQL oracle by
@@ -5967,11 +5966,11 @@ def dialect_join_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dialect_select_scalar_sub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar subqueries in the SELECT list: each plans once and joins
-    in as a broadcast single-row cross join (the same decorrelated
-    shape the WHERE-side scalar machinery uses), and the select
-    expression references the joined column — normalize-by-corpus-max
-    without a second query. Identical IEEE division both engines."""
+    """Scalar subqueries in the SELECT list: each is Spark's native
+    scalar subquery (one single-row aggregate, evaluated once — the
+    same shape the WHERE-side scalar comparison uses), and the select
+    expression divides by it — normalize-by-corpus-max without a
+    second query. Identical IEEE division both engines."""
     load_tables(spark, sf_dir)
     return sugar.query(
         spark,
@@ -6026,10 +6025,10 @@ def dialect_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query/base/expression.go:16-18) but never planned it. ``IN
     (SELECT ...)`` plans as a broadcast left-semi join with both
     sides' filters pushed to the scans; the scalar aggregate
-    comparison plans as a single-row broadcast cross join — the same
-    decorrelated shapes the DataFrame-level subquery_in /
-    subquery_scalar entries certify, now produced from parsed dialect
-    SQL (plans/sugar.py parse_operand / parse_predicate / plan)."""
+    comparison is Spark's native scalar subquery, run once — the
+    shapes the DataFrame-level subquery_in / subquery_scalar entries
+    certify, now printed as SQL from parsed dialect text
+    (plans/sugar.py parse_operand / parse_predicate / plan)."""
     load_tables(spark, sf_dir)
     return sugar.query(
         spark,
@@ -7146,10 +7145,10 @@ def dialect_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     front (r8-verdict ask #4; the DataFrame path is certified as
     agg_grouping_sets, ROLLUP/CUBE as dialect_rollup): three
     independent aggregations — per-user, per-value-bin (a COMPUTED
-    group key through the _gk_ path), grand total — in ONE native
-    Expand pass over the scan. Sets must reach Spark as raw physical
-    columns (alias wrappers break set-to-key canonicalized matching
-    and NULL every key; names re-apply in a rename after the agg).
+    group key, spelled as its expression in the set), grand total —
+    in ONE native Expand pass over the scan. The sets carry the raw
+    key expressions and the select list aliases them (Spark matches
+    the two by canonicalized expression, so no key reads NULL).
     Decimal 6dp quantization absorbs group-sum ordering."""
     load_tables(spark, sf_dir)
     df = sugar.query(
@@ -8212,9 +8211,9 @@ def dialect_filter_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``agg(x) FILTER (WHERE pred)`` excludes rows from THIS aggregate
     only — the standard multi-metric one-pass idiom (every engine
     ships it; the CASE-arm workaround is what Q12/Q14 already
-    certify). Compiled as agg(CASE WHEN pred THEN x END): aggregates
-    ignore NULLs, which IS the FILTER semantics, so the whole select
-    stays ONE partial+final hash aggregate. A FILTERed aggregate never
+    certify). Emitted as Spark's native aggregate FILTER, so the
+    whole select stays ONE partial+final hash aggregate (the filter
+    rides each aggregate's update). A FILTERed aggregate never
     satisfies a HAVING/ORDER lookup for its unfiltered twin (post_name
     guard). Groups with no qualifying rows surface NULL (count: 0) on
     both engines. The oracle's s6_hi casts to DOUBLE to match Spark's

@@ -37,7 +37,7 @@ SHOWCASE = [
     ("multimodal_pixels", "real-codec pixel chain: three mapInPandas stages, zero shuffle end to end"),
     ("ts_linear_trend", "least-squares trend: bucket-mean agg + per-series fold, two exchanges, no window/join"),
     ("ts_holt_winters", "Holt-Winters: the sequential recurrence as one fold — same two-exchange shape"),
-    ("dialect_subquery", "dialect IN/scalar subqueries: broadcast LeftSemi + single-row broadcast cross join, both scans keep pushed filters"),
+    ("dialect_subquery", "dialect IN/scalar subqueries: broadcast LeftSemi + native scalar subquery, both scans keep pushed filters"),
     ("dialect_setops", "dialect set ops: per-core pushed filters, one distinct exchange for UNION, left-associative chain"),
     ("doc_temperature_mixture", "temperature mixing: |sources|-row rate table broadcast, zero full-data shuffle"),
     ("scan_bloom_pointlookup", "bloom point-lookup: IN probe pushed to the bloom-filtered scan"),

@@ -1,0 +1,142 @@
+"""Compare the plans the dialect front produces in two checkouts.
+
+For every suite entry that calls ``sugar.query`` / ``sugar.plan`` and
+for the three ``tsdb_query`` dialect shapes, each checkout prints the
+optimized logical plan and the formatted physical plan with expression
+ids, plan ids, temp-view names and input paths removed. Entries are
+then listed as identical or changed, with a unified diff for each
+changed one.
+
+Run (each checkout plans in its own process, on its own code):
+
+    python tools/sugar_plan_diff.py PARENT_CHECKOUT CHANGE_CHECKOUT \\
+        --sf TESTDATA_SF_DIR --out OUT_DIR
+
+writes ``summary.txt`` and one ``<entry>.diff`` per changed entry.
+"""
+
+from __future__ import annotations
+
+import argparse
+import difflib
+import inspect
+import json
+import re
+import subprocess
+import sys
+import tempfile
+from pathlib import Path
+
+_NORMALIZE = [
+    (re.compile(r"#\d+L?"), ""),  # expression ids
+    (re.compile(r"plan_id=\d+"), "plan_id"),
+    (re.compile(r"_pyspark_[0-9a-f]{32}"), "_pyspark_view"),
+    (re.compile(r"\bx_\d+\b"), "x_"),  # DataFrame-API lambda variables
+]
+
+
+def _normalize(text: str) -> str:
+    for pat, rep in _NORMALIZE:
+        text = pat.sub(rep, text)
+    return text.strip() + "\n"
+
+
+def _tsdb_frames(spark, checkout: Path, work: str) -> dict:
+    """The tsdb_query dialect shapes over a small written family."""
+    sys.path.insert(0, str(checkout / "perfbench"))
+    from workloads.tsdb_query import DIALECT
+
+    from boostdb_spark.plans import sugar
+    from boostdb_spark.sources import SeriesFamily
+
+    day, t0 = 86_400 * 10**9, 1_704_067_200 * 10**9
+    fam = SeriesFamily(spark, "bench", "metrics", work)
+    fam.write(spark.createDataFrame(
+        [(f"s{s}", t0 + i * day // 4, float(i), f"h{i % 5:06d}", f"dc{s % 4}", "prod")
+         for s in range(4) for i in range(40)],
+        "series string, ts long, value double, host string, dc string, env string",
+    ))
+    fam.register()
+    binding = sugar.SeriesFamilyBinding(view=fam.view_name)
+    p = {"a": "s0", "b": "s1", "c": "s2"}
+    out = {}
+    for kind, sql in DIALECT.items():
+        params = {"h": "h000001"} if kind == "attr_filter" else {"x": 3.5}
+        out[f"tsdb_query:{kind}"] = lambda sql=sql, params=params: sugar.plan(
+            spark, sugar.parse(sql.format(**p)), binding,
+            start=t0 + 2 * day, end=t0 + 5 * day, params=params,
+        )
+    return out
+
+
+def dump(checkout: Path, sf: str, out_json: str) -> None:
+    """Plan every dialect entry of ``checkout`` and write the plans."""
+    sys.path.insert(0, str(checkout))
+    from boostdb_spark import suite
+    from boostdb_spark.session import get_spark
+
+    spark = get_spark(app_name="sugar-plan-diff")
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    frames = {
+        name: (lambda fn=fn: fn(spark, sf))
+        for name, fn in sorted(suite.spark_queries().items())
+        if re.search(r"sugar\.(query|plan)\(", inspect.getsource(fn))
+    }
+    plans = {}
+    with tempfile.TemporaryDirectory() as work:
+        frames.update(_tsdb_frames(spark, checkout, work))
+        for name, make in frames.items():
+            try:
+                qe = make()._jdf.queryExecution()
+                plans[name] = _normalize(
+                    "== Optimized Logical Plan ==\n" + qe.optimizedPlan().toString()
+                    + "\n== Physical Plan ==\n" + qe.explainString(mode)
+                ).replace(work, "<family-dir>").replace(sf.rstrip("/"), "<sf>")
+            except Exception as e:  # an entry that fails to plan is a change too
+                plans[name] = f"PLANNING FAILED: {type(e).__name__}: {e}\n"
+    Path(out_json).write_text(json.dumps(plans, indent=1, sort_keys=True))
+    spark.stop()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("parent", type=Path)
+    ap.add_argument("change", type=Path)
+    ap.add_argument("--sf", required=True, help="testdata scale-factor directory")
+    ap.add_argument("--out", type=Path, default=Path("plans/sugar_plan_diff"))
+    ap.add_argument("--dump", action="store_true", help=argparse.SUPPRESS)
+    a = ap.parse_args()
+    if a.dump:  # child process: parent = checkout, change = output json
+        dump(a.parent.resolve(), a.sf, str(a.change))
+        return
+    sides = []
+    with tempfile.TemporaryDirectory() as tmp:
+        for label, checkout in (("parent", a.parent), ("change", a.change)):
+            js = Path(tmp) / f"{label}.json"
+            subprocess.run(
+                [sys.executable, __file__, str(checkout.resolve()), str(js),
+                 "--sf", a.sf, "--dump"],
+                check=True, cwd=checkout,
+            )
+            sides.append(json.loads(js.read_text()))
+    before, after = sides
+    a.out.mkdir(parents=True, exist_ok=True)
+    lines = []
+    for name in sorted(set(before) | set(after)):
+        b, c = before.get(name, "MISSING\n"), after.get(name, "MISSING\n")
+        if b == c:
+            lines.append(f"identical  {name}")
+            continue
+        lines.append(f"changed    {name}")
+        diff = difflib.unified_diff(
+            b.splitlines(True), c.splitlines(True), "parent", "change", n=2
+        )
+        (a.out / f"{name.replace(':', '__')}.diff").write_text("".join(diff))
+    n_changed = sum(ln.startswith("changed") for ln in lines)
+    lines.append(f"\n{len(lines) - n_changed} identical, {n_changed} changed")
+    (a.out / "summary.txt").write_text("\n".join(lines) + "\n")
+    print("\n".join(lines))
+
+
+if __name__ == "__main__":
+    main()
