@@ -19,9 +19,11 @@ Spark derives no partition filter from a predicate on ``ts`` alone, so
 ``apply_time_range`` adds the matching ``ts_date`` bound itself (one day
 of slack each side: ``ts_date`` is a date in the WRITER's session zone,
 unknown at read time) and a time-ranged fetch lists only the days it
-asks for. Within a partition, files are written sorted by
-``(series, ts)`` so min/max row-group stats make series and time
-predicates skippable too.
+asks for. Within a partition, ``write`` sizes files by volume (one
+file for a small day, files of about the AQE advisory partition size
+for a big one) and sorts each file by ``(series, ts)``, so min/max
+row-group and page stats make series and time predicates skippable
+inside a file.
 
 Parquet files are immutable once written (Spark writers only add files
 under fresh names and delete whole files), so a file set determines its
@@ -62,6 +64,8 @@ class SeriesFamily:
         self.path = f"{root.rstrip('/')}/{domain}/{family}"
         #: (input files, merged schema) of the last ``mergeSchema`` read
         self._schema_memo: tuple[frozenset, StructType] | None = None
+        #: whether ``register`` bound ``view_name`` through this handle
+        self._registered = False
 
     @property
     def qualified_name(self) -> str:
@@ -72,7 +76,7 @@ class SeriesFamily:
         return f"{self.domain}__{self.family}"
 
     # ------------------------------------------------------------------ write
-    def write(self, df: DataFrame, mode: str = "append", files_per_day: int = 8) -> None:
+    def write(self, df: DataFrame, mode: str = "append") -> None:
         """Append datapoints. Expects at least (series, ts, value) plus any
         tag/attribute columns; schema evolution is allowed (the reference
         creates attributes on first write, core/symtable.go:288-321 — here
@@ -80,29 +84,35 @@ class SeriesFamily:
 
         ``ts`` may be TimestampType or INT64 ns (ns-native reference,
         core/seriesfamily.go:23). A ``ts_date`` partition column is derived
-        for pruning; data within each output file is sorted by
-        (series, ts) for row-group skipping at scale.
+        for pruning.
 
-        Shuffle key is (date, series-hash % files_per_day), NOT date
-        alone: a typical ingest batch is one day, and hashing on date
-        alone funnels the whole batch through ONE reducer. The series
-        bucket spreads a day over ``files_per_day`` writers while
-        keeping each series clustered in one file per day (the write
-        round-robin distribution of m3dbseriesfamily.go:156-168, minus
-        the read-side merge cost).
+        File size follows data volume: a ``rebalance`` on ``ts_date``
+        lets AQE write a small day as one file and split a day bigger
+        than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` into
+        files of about that size (the write-side spread of
+        m3dbseriesfamily.go:156-168, sized by bytes instead of a fixed
+        shard count). The layout relies on AQE: with it off, a day goes
+        to a single writer. Series skipping inside a day comes from the
+        per-file ``(series, ts)`` sort and the row-group/page stats it
+        makes selective, not from one file per series bucket.
         """
         ts_as_time = self._ts_expr(df)
         out = df.withColumn(DATE_COL, F.to_date(ts_as_time))
-        bucket = F.pmod(F.hash(F.col(SERIES)), F.lit(files_per_day))
-        # sortWithinPartitions (not orderBy): no global shuffle on ingest,
-        # just per-file clustering for stats-based skipping.
-        out = out.repartition(F.col(DATE_COL), bucket).sortWithinPartitions(SERIES, TS)
+        # sortWithinPartitions (not orderBy): no global sort on ingest,
+        # just per-file clustering for stats-based skipping. ts_date
+        # leads because a write task may hold several days: the planned
+        # write needs its input ordered by the partition column, and for
+        # any other ordering it sorts by ts_date alone and the optimizer
+        # drops the (series, ts) sort beneath it.
+        out = out.hint("rebalance", DATE_COL).sortWithinPartitions(DATE_COL, SERIES, TS)
         (
             out.write.mode(mode)
             .option("mergeSchema", "true")
             .partitionBy(DATE_COL)
             .parquet(self.path)
         )
+        if self._registered:
+            self.register()
 
     def compact(
         self,
@@ -142,6 +152,8 @@ class SeriesFamily:
             .partitionBy(DATE_COL)
             .parquet(self.path)
         )
+        if self._registered:
+            self.register()
 
     @staticmethod
     def _ts_expr(df: DataFrame):
@@ -204,8 +216,16 @@ class SeriesFamily:
         return df
 
     def register(self) -> DataFrame:
+        """Bind the temp view ``view_name`` to the family as it is now.
+
+        The view holds the file listing of this moment. ``write`` and
+        ``compact`` through this handle re-register it; a writer going
+        through another handle or a stream must call ``register`` again
+        before the view sees its files (after a compaction, a stale view
+        names files that no longer exist)."""
         df = self.read()
         df.createOrReplaceTempView(self.view_name)
+        self._registered = True
         return df
 
 

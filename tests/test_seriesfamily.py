@@ -192,13 +192,26 @@ def test_partition_bound_slack_covers_every_writer_zone(spark, family):
         spark.conf.set(conf, prev)
 
 
+def _files_by_date(path):
+    """{ts_date value: [parquet file paths]} of a family directory."""
+    import os
+
+    out = {}
+    for d in sorted(os.listdir(path)):
+        if d.startswith("ts_date="):
+            out[d.split("=", 1)[1]] = sorted(
+                os.path.join(path, d, f)
+                for f in os.listdir(os.path.join(path, d))
+                if f.endswith(".parquet")
+            )
+    return out
+
+
 def test_compact_collapses_small_files(spark, tmp_path):
     """Streaming-style many-small-file ingest, then compaction: the
     targeted date collapses to one file per day, rows and their
     in-file (series, ts) clustering are preserved, and untouched date
     partitions keep their files."""
-    import os
-
     from pyspark.sql import functions as F
 
     from boostdb_spark.sources.seriesfamily import SeriesFamily
@@ -214,32 +227,98 @@ def test_compact_collapses_small_files(spark, tmp_path):
     )
     # simulate micro-batch ingest: 6 tiny appends
     for i in range(6):
-        fam.write(src.filter(F.pmod(F.hash("ts"), F.lit(6)) == i), files_per_day=4)
+        fam.write(src.filter(F.pmod(F.hash("ts"), F.lit(6)) == i))
 
     def files_per_date():
-        root = fam.path
-        out = {}
-        for d in os.listdir(root):
-            if d.startswith("ts_date="):
-                out[d] = len(
-                    [f for f in os.listdir(os.path.join(root, d)) if f.endswith(".parquet")]
-                )
-        return out
+        return {d: len(files) for d, files in _files_by_date(fam.path).items()}
 
     before = files_per_date()
     assert before and max(before.values()) > 1
-    target = sorted(before)[0].split("=", 1)[1]
+    target = sorted(before)[0]
     n_before = fam.read().count()
 
     fam.compact(files_per_day=1, dates=[target])
 
     after = files_per_date()
-    assert after[f"ts_date={target}"] == 1
+    assert after[target] == 1
     for d, n in before.items():
-        if d != f"ts_date={target}":
+        if d != target:
             assert after[d] == n  # untouched partitions not rewritten
     assert fam.read().count() == n_before
     # compacted rows keep (series, ts) order within the file
     import pandas as pd  # noqa: F401
     part = spark.read.parquet(fam.path + f"/ts_date={target}").toPandas()
     assert list(part.sort_values(["series", "ts"]).index) == list(part.index) or len(part) <= 1
+
+
+def _assert_files_sorted(files):
+    import pyarrow.parquet as pq
+
+    for f in files:
+        t = pq.read_table(f, columns=["series", "ts"]).to_pydict()
+        keys = list(zip(t["series"], t["ts"]))
+        assert keys == sorted(keys), f
+
+
+def _day_frame(spark, n_rows, n_days, n_parts):
+    """n_rows points of 16 series spread evenly over n_days days."""
+    t0 = 1_704_067_200 * 10**9
+    step = n_days * DAY_NS // n_rows
+    return (
+        spark.range(0, n_rows, 1, n_parts)
+        .select(
+            F.concat(F.lit("s"), (F.col("id") * 7919 % 16).cast("string")).alias("series"),
+            (F.lit(t0) + F.col("id") * step).alias("ts"),
+            (F.col("id") % 1024 / 1024.0).alias("value"),
+        )
+    )
+
+
+def test_write_sizes_files_by_day_volume(spark, family):
+    """A small day is written as ONE file whatever the number of input
+    partitions or series, and every file is sorted by (series, ts)."""
+    src = _day_frame(spark, 6000, n_days=3, n_parts=4)
+    family.write(src)
+    files = _files_by_date(family.path)
+    assert len(files) == 3
+    assert all(len(v) == 1 for v in files.values()), files
+    _assert_files_sorted([f for v in files.values() for f in v])
+    assert family.read().count() == 6000
+
+
+def test_write_splits_a_day_above_the_advisory_size(spark, family):
+    """A day bigger than the AQE advisory partition size is split into
+    several files; every row comes back and each file stays sorted."""
+    conf = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "256k")
+    try:
+        src = _day_frame(spark, 400_000, n_days=1, n_parts=4)
+        family.write(src)
+    finally:
+        spark.conf.set(conf, prev)
+    files = _files_by_date(family.path)
+    assert max(len(v) for v in files.values()) > 1, files
+    _assert_files_sorted([f for v in files.values() for f in v])
+    back = family.read().select("series", "ts", "value")
+    assert back.count() == 400_000
+    assert back.exceptAll(src).count() == 0
+
+
+def test_registered_view_follows_writes_and_compaction(spark, family):
+    """A view registered through a handle sees that handle's later
+    appends, and still reads after a compaction replaced its files."""
+    from boostdb_spark.plans import sugar
+
+    family.write(_fixture_df(spark))
+    family.register()
+    later = _fixture_df(spark).withColumn("ts", F.col("ts") + DAY_NS)
+    family.write(later)
+    assert family.read().count() == 20
+    assert spark.table(family.view_name).count() == 20
+
+    family.compact()
+    binding = sugar.SeriesFamilyBinding(view=family.view_name)
+    sql = "SELECT cpu_utilization.host, cpu_utilization FROM d.f WHERE cpu_utilization > 0"
+    rows = sugar.query(spark, sql, binding).collect()
+    assert len(rows) == 20
