@@ -7,15 +7,26 @@ The reference parses its dialect with the TiDB parser into ``QueryOps``
 (query/executor/executor.go:184-274). Here the pipeline is:
 
 1. **Parse.** A recursive-descent parser turns the dialect into a
-   ``BoostQuery`` (the QueryOps analog): ``SELECT`` with aggregates,
-   FILTER, WITHIN GROUP, window functions (ROWS / RANGE INTERVAL /
-   GROUPS frames, EXCLUDE, named WINDOWs), joins (inner/outer/cross,
-   USING, theta residuals, ASOF, LATERAL), WITH [RECURSIVE], derived
-   tables, VALUES, PIVOT/UNPIVOT, TABLESAMPLE, WHERE with ``:name``
+   ``BoostQuery`` (the QueryOps analog): ``SELECT`` with computed
+   items, window specs (ROWS / RANGE INTERVAL / GROUPS frames,
+   EXCLUDE, named WINDOWs), joins (inner/outer/cross, USING, theta
+   residuals, ASOF, LATERAL), WITH [RECURSIVE], derived tables,
+   VALUES, PIVOT/UNPIVOT, TABLESAMPLE, WHERE with ``:name``
    placeholders and IN / EXISTS / scalar subqueries, GROUP BY
    (ROLLUP/CUBE/GROUPING SETS/ALL/ordinals), HAVING, QUALIFY, set
    operations, DISTINCT [ON], ORDER BY (expressions, NULLS FIRST/LAST,
    ALL) and LIMIT/OFFSET/FETCH [WITH TIES].
+
+   Every ``name(...)`` call, in every position (select items, ORDER
+   BY, GROUP BY, WHERE, HAVING, QUALIFY, CASE, arithmetic, call
+   arguments, PIVOT), goes through one method, :meth:`_Parser.parse_call`,
+   driven by one table, :data:`_FUNCS`. A row gives a function's
+   kind (scalar, aggregate or window), aliases, arity, the modifiers it
+   admits (DISTINCT, ``*``, FILTER, WITHIN GROUP, IGNORE/RESPECT NULLS,
+   OVER required/allowed/forbidden), a small validator where one is
+   needed, and its Spark SQL spelling, which the emitter prints the
+   call from. Adding a plain scalar or aggregate function is adding one
+   row.
 2. **Resolve names.** The dialect's own rules apply, exactly as the
    reference declares them (query/parser/selectfieldparser.go:100-135,
    whereparser.go:271-285):
@@ -176,26 +187,33 @@ class FieldRef:
     """A sugared column reference (selectfieldparser.go:100-135),
     optionally wrapped in an aggregate / window call — the syntax the
     reference declares via its Aggregate/GroupBy enums but never parses
-    (query/base/expression.go:16-25)."""
+    (query/base/expression.go:16-25). A call's first argument is
+    ``parts`` when it is a plain column, else ``arg_expr``."""
 
     parts: tuple[str, ...]
     alias: str | None = None  # AS name (parsed but unused in ref, :88)
-    func: str | None = None  # aggregate/window function; parts=() for count(*)
+    #: aggregate/window function (``name_distinct`` for DISTINCT);
+    #: parts=() for count(*)
+    func: str | None = None
     window: "WindowSpec | None" = None
     #: computed select item (parts/func unused; AS alias required)
     expr: "Expr | None" = None
-    #: aggregate/window argument when it is an expression (parts=())
+    #: first call argument when it is an expression (parts=())
     arg_expr: "Expr | None" = None
-    #: second argument: max_by/min_by order operand, corr/covar y
+    #: second call argument
     arg2_expr: "Expr | None" = None
     #: ANSI ``agg(x) FILTER (WHERE pred)``
     filter_expr: "Expr | None" = None
-    #: ``first_value/last_value(x) IGNORE NULLS`` (gap-fill / LOCF)
+    #: ``fn(x) IGNORE NULLS`` (gap-fill / LOCF)
     ignore_nulls: bool = False
-    #: WITHIN GROUP (ORDER BY k [DESC], ...) keys of string_agg /
-    #: percentile_cont / percentile_disc
+    #: WITHIN GROUP (ORDER BY k [DESC], ...) keys
     within_group: "list[tuple[FieldRef, bool]] | None" = None
-    sep: str = ","  # string_agg separator (ANSI listagg default)
+
+    @property
+    def sep(self) -> str:
+        """string_agg's separator: its second argument, else ',' (the
+        ANSI listagg default)."""
+        return "," if self.arg2_expr is None else self.arg2_expr.value
 
 
 @dataclass
@@ -248,7 +266,7 @@ class PivotClause:
     EXPLICIT value list (static schema, one aggregate); every source
     column the clause does not reference is a group key."""
 
-    func: str  # count | sum | avg | min | max
+    func: str  # an aggregate of the call table
     agg_col: str | None  # None = count(*)
     key_col: str
     values: list  # literal pivot values (strings/numbers)
@@ -363,6 +381,211 @@ def _total_cte_refs(q: "BoostQuery", name: str) -> int:
         for sq in _expr_subqueries(e):
             n += _total_cte_refs(sq, name)
     return n
+
+
+# --------------------------------------------------------------------------
+# The call table: every ``name(...)`` the dialect knows
+# --------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Fn:
+    """One function of the dialect. The parser reads its arity and the
+    modifiers it admits; the emitter prints it from ``sql``: a format
+    template over the printed arguments (``{0}``, ``{args}`` joined),
+    the call node (``{node}``) and the printed WITHIN GROUP keys
+    (``{order}``), or a function ``(args, keys, node) -> str``."""
+
+    kind: str  # 'scalar' | 'agg' | 'window'
+    lo: int = 1
+    hi: int | None = 1  # None: variadic
+    sql: "str | Callable | None" = None  # None: name({args})
+    aliases: tuple[str, ...] = ()
+    distinct: str | None = None  # what DISTINCT prints ('' = a no-op); None refuses it
+    star: bool = False  # name(*)
+    filter: bool = False  # FILTER (WHERE ...)
+    within: int = 0  # WITHIN GROUP (ORDER BY ...), required if set: 1 one key, 2 any
+    nulls: bool = False  # IGNORE / RESPECT NULLS
+    over: str = "forbidden"  # OVER: 'forbidden' | 'allowed' | 'required'
+    frame: bool = True  # a window frame is meaningful
+    pred: bool = False  # the arguments are predicates
+    form: str | None = None  # keyword argument syntax: 'cast' | 'extract'
+    part: bool = False  # a date part EXTRACT(part FROM ts) names
+    check: "Callable | None" = None  # validator of the parsed call
+
+
+def _is_lit(e: "Expr | None", types) -> bool:
+    return (
+        e is not None and e.kind == "lit" and isinstance(e.value, types)
+        and not isinstance(e.value, bool)
+    )
+
+
+def _round_check(e: "Expr") -> None:
+    if len(e.children) == 2 and not _is_lit(e.children[1], int):
+        raise ValueError("round() scale must be an integer literal")
+
+
+def _round_sql(args: list[str], keys, e: "Expr") -> str:
+    """round(x[, n]) as the engine-independent grid floor(x*10^n +
+    0.5)/10^n: identical IEEE ops on every engine, where ANSI half-up
+    rounding differs between Spark's BigDecimal and DuckDB's binary
+    rounding at half boundaries."""
+    scale = _lit(float(10 ** (e.children[1].value if len(e.children) == 2 else 0)))
+    return f"(floor((({args[0]} * {scale}) + 0.5D)) / {scale})"
+
+
+def _date_trunc_check(e: "Expr") -> None:
+    if not _is_lit(e.children[0], str):
+        raise ValueError("date_trunc('unit', ts) requires a string-literal unit")
+
+
+def _distinct_check(c: "FieldRef") -> None:
+    if c.func.endswith("_distinct") and c.arg_expr is not None:
+        raise ValueError(f"{c.func.removesuffix('_distinct')}(DISTINCT ...) takes a plain column")
+
+
+def _avg_check(c: "FieldRef") -> None:
+    _distinct_check(c)
+    if c.func.endswith("_distinct") and c.filter_expr is not None:
+        raise ValueError("avg(DISTINCT col) does not combine with FILTER (WHERE ...)")
+
+
+def _sep_check(c: "FieldRef") -> None:
+    if c.arg2_expr is not None and not _is_lit(c.arg2_expr, str):
+        raise ValueError("string_agg separator must be a string literal")
+
+
+def _string_agg_sql(args: list[str], keys, c: "FieldRef") -> str:
+    """array_join(transform(array_sort(collect_list(struct(k..., x))),
+    s -> s.x), sep) rather than Spark's native listagg: the struct sort
+    breaks ties by the VALUE deterministically (native listagg leaves
+    tie order unspecified). One partial+final hash aggregate."""
+    descs = {d for _, d in keys}
+    if len(descs) > 1:
+        raise ValueError(
+            "WITHIN GROUP (ORDER BY ...) keys must share one direction (all "
+            "ASC or all DESC) — mixed-direction ordered-set aggregation is not supported"
+        )
+    val = f"CAST({args[0]} AS STRING)"
+    st = ", ".join(f"'_o{i}', {k}" for i, (k, _) in enumerate(keys))
+    arr = (
+        f"array_sort(collect_list(CASE WHEN ({val} IS NOT NULL) THEN "
+        f"named_struct({st}, '_v', {val}) END))"
+    )
+    if descs == {True}:
+        arr = f"reverse({arr})"
+    return f"array_join(transform({arr}, s -> s._v), {_lit(c.sep)})"
+
+
+def _fraction_check(c: "FieldRef") -> None:
+    if not (_is_lit(c.arg_expr, (int, float)) and 0 <= c.arg_expr.value <= 1):
+        raise ValueError(f"{c.func}(f) requires a numeric literal fraction in [0, 1]")
+
+
+def _ntile_check(c: "FieldRef") -> None:
+    if not (_is_lit(c.arg_expr, int) and c.arg_expr.value >= 1):
+        raise ValueError("ntile(n) requires a positive integer literal")
+
+
+#: native inverse-distribution aggregates: one partial+final
+#: ObjectHashAggregate (plan-pinned in tests/test_plan_shapes.py)
+_PERCENTILE_SQL = "{node.func}({node.arg_expr.value!r}) WITHIN GROUP (ORDER BY {order})"
+
+#: The dialect's functions, by canonical name. Everything prints as
+#: built-in Catalyst expressions; a plain scalar or aggregate function
+#: is one more row.
+_FUNCS: dict[str, _Fn] = {
+    **{n: _Fn("scalar") for n in (
+        "abs", "sqrt", "upper", "lower", "length", "trim", "ltrim", "rtrim", "reverse",
+    )},
+    **{n: _Fn("scalar", part=True) for n in ("year", "month", "hour", "minute")},
+    "day": _Fn("scalar", sql="dayofmonth({0})", part=True),
+    # DOUBLE like DuckDB's, not Spark's natural LONG
+    "floor": _Fn("scalar", sql="CAST(floor({0}) AS DOUBLE)"),
+    "ceil": _Fn("scalar", sql="CAST(ceil({0}) AS DOUBLE)"),
+    **{n: _Fn("scalar", 2, None) for n in ("coalesce", "concat", "greatest", "least")},
+    "nullif": _Fn("scalar", 2, 2),
+    "substring": _Fn("scalar", 3, 3),
+    "replace": _Fn("scalar", 3, 3),
+    "round": _Fn("scalar", 1, 2, sql=_round_sql, check=_round_check),
+    "date_trunc": _Fn("scalar", 2, 2, check=_date_trunc_check),
+    "cast": _Fn("scalar", sql="CAST({0} AS {node.op})", form="cast"),
+    "extract": _Fn("scalar", form="extract"),
+    "count": _Fn("agg", distinct="DISTINCT ", star=True, filter=True, over="allowed",
+                 check=_distinct_check),
+    "sum": _Fn("agg", distinct="DISTINCT ", filter=True, over="allowed"),
+    "avg": _Fn("agg", distinct="DISTINCT ", filter=True, over="allowed", check=_avg_check),
+    "min": _Fn("agg", distinct="", filter=True, over="allowed"),
+    "max": _Fn("agg", distinct="", filter=True, over="allowed"),
+    # stddev/variance are the _samp ANSI defaults, as in DuckDB/Spark
+    "stddev_samp": _Fn("agg", aliases=("stddev",), filter=True, over="allowed"),
+    "stddev_pop": _Fn("agg", filter=True, over="allowed"),
+    "var_samp": _Fn("agg", aliases=("variance",), filter=True, over="allowed"),
+    "var_pop": _Fn("agg", filter=True, over="allowed"),
+    **{n: _Fn("agg", 2, 2, filter=True) for n in ("corr", "covar_samp", "covar_pop")},
+    # the x of the row with the maximal y; NULL y rows are ignored, ties
+    # on y are engine-unspecified (use a unique order key)
+    "max_by": _Fn("agg", 2, 2, aliases=("arg_max",), filter=True),
+    "min_by": _Fn("agg", 2, 2, aliases=("arg_min",), filter=True),
+    "bool_and": _Fn("agg", aliases=("every",), filter=True, pred=True),
+    "bool_or": _Fn("agg", filter=True, pred=True),
+    # the ordering is required: an unordered concatenation is
+    # nondeterministic under distributed execution
+    "string_agg": _Fn("agg", 1, 2, sql=_string_agg_sql, aliases=("listagg",), within=2,
+                      check=_sep_check),
+    "percentile_cont": _Fn("agg", sql=_PERCENTILE_SQL, within=1, check=_fraction_check),
+    "percentile_disc": _Fn("agg", sql=_PERCENTILE_SQL, within=1, check=_fraction_check),
+    **{n: _Fn("window", 0, 0, over="required", frame=False) for n in (
+        "rank", "dense_rank", "row_number", "percent_rank", "cume_dist",
+    )},
+    "ntile": _Fn("window", over="required", frame=False, check=_ntile_check),
+    "lag": _Fn("window", over="required", frame=False),
+    "lead": _Fn("window", over="required", frame=False),
+    # IGNORE NULLS over a preceding frame is the gap-fill (LOCF) idiom
+    "first_value": _Fn("window", sql="first({0}, {node.ignore_nulls})", nulls=True,
+                       over="required"),
+    "last_value": _Fn("window", sql="last({0}, {node.ignore_nulls})", nulls=True,
+                      over="required"),
+}
+_FN_NAMES = {a: n for n, f in _FUNCS.items() for a in (n, *f.aliases)}
+
+#: CAST target whitelist: dialect type name -> Spark cast type. Only the
+#: cross-engine-deterministic targets are admitted. bigint/int on a
+#: DOUBLE input only certifies for integral values (DuckDB rounds,
+#: Spark truncates — never route a fractional double through these);
+#: float32 is excluded (pandas float32 vs DuckDB REAL repr drift).
+_CAST_TYPES: dict = {
+    "bigint": "long",
+    "long": "long",
+    "int": "int",
+    "integer": "int",
+    "double": "double",
+    "varchar": "string",
+    "string": "string",
+    "date": "date",
+    "timestamp": "timestamp",
+}
+
+
+def _call_sql(func: str, args: list[str], node=None, keys=(), flt: str | None = None) -> str:
+    """One call printed from its table row: ``args`` are the printed
+    arguments, ``keys`` the printed WITHIN GROUP (sql, desc) keys,
+    ``flt`` the printed FILTER predicate."""
+    name = func.removesuffix("_distinct")
+    fn = _FUNCS[name]
+    if name != func:
+        args = [fn.distinct + ", ".join(args)]
+    elif not args and fn.star:
+        args = ["1"]
+    if callable(fn.sql):
+        out = fn.sql(args, keys, node)
+    else:
+        order = ", ".join(k + (" DESC" if d else "") for k, d in keys)
+        out = (fn.sql or name + "({args})").format(
+            *args, args=", ".join(args), node=node, order=order
+        )
+    return out + (f" FILTER (WHERE {flt})" if flt else "")
 
 
 class _Parser:
@@ -585,20 +808,13 @@ class _Parser:
                     order_by.append((tgt, False, None))
             else:
                 while True:
+                    # bare numbers are ordinals, a bare ref or call is a
+                    # key, anything else an expression over select-list
+                    # OUTPUT columns
                     f2 = self._ordinal_item(fields or [], "ORDER BY", allow_agg=True)
                     if f2 is None:
-                        # ORDER BY <expression> over select-list OUTPUT
-                        # columns; bare numbers stay ordinals, bare names
-                        # field refs
-                        t = self.peek()
-                        if t in (("op", "("), ("kw", "case")) or (
-                            t[0] == "name"
-                            and t[1].lower() in self._SCALAR_FUNCS
-                            and self.peek2() == ("op", "(")
-                        ):
-                            f2 = FieldRef((), expr=self.parse_arith())
-                        else:
-                            f2 = self.parse_field()
+                        e = self.parse_arith()
+                        f2 = e.value if e.kind == "ref" else FieldRef((), expr=e)
                     desc = self.accept_kw("desc")
                     if not desc:
                         self.accept_kw("asc")
@@ -812,14 +1028,24 @@ class _Parser:
             self.expect_kw("by")
 
             def _gitem() -> FieldRef:
-                return self._ordinal_item(fields, "GROUP BY", allow_agg=False) or self.parse_field()
+                f = self._ordinal_item(fields, "GROUP BY", allow_agg=False)
+                if f is not None:
+                    return f
+                e = self.parse_arith()
+                if e.kind != "ref" or e.value.func is not None:
+                    raise ValueError(
+                        "GROUP BY takes column names, select aliases or ordinals — "
+                        "alias an expression in the select list and group by the alias"
+                    )
+                return e.value
 
             if self.accept_kw("all"):
-                # GROUP BY ALL (DuckDB): every non-aggregate select item,
-                # computed items via their AS alias
+                # GROUP BY ALL (DuckDB): every select item without an
+                # aggregate or window call, computed items via their AS alias
                 group_by = [
                     FieldRef((f.alias,)) if f.expr is not None else FieldRef(f.parts)
                     for f in fields if f.func is None and f.window is None
+                    and not (f.expr and any(r.func for r in _expr_refs(f.expr)))
                 ]
                 if not group_by:
                     raise ValueError("GROUP BY ALL found no non-aggregate select items to group by")
@@ -932,24 +1158,14 @@ class _Parser:
         if not self.accept_op("("):
             raise ValueError(f"{which.upper()} requires (...)")
         if which == "pivot":
-            k2, fn = self.name_next()
-            if k2 != "name" or fn.lower() not in self._AGG_FUNCS:
-                raise ValueError(
-                    "PIVOT requires an aggregate: "
-                    f"PIVOT (agg(col) FOR key IN (...)), agg one of "
-                    f"{sorted(self._AGG_FUNCS)}"
-                )
-            fn = fn.lower()
-            if not self.accept_op("("):
-                raise ValueError(f"PIVOT {fn} requires an argument list")
-            agg_col = None
-            if self.accept_op("*"):
-                if fn != "count":
-                    raise ValueError(f"{fn}(*) is not valid; only count(*)")
-            else:
-                agg_col = self._name("PIVOT aggregate takes a plain column name")
-            if not self.accept_op(")"):
-                raise ValueError(f"unbalanced parenthesis in PIVOT {fn}(...)")
+            e = self.parse_operand()
+            c = e.value if e.kind == "ref" else None
+            if c is None or c.func is None or c.window is not None:
+                raise ValueError("PIVOT requires an aggregate: PIVOT (agg(col) FOR key IN (...))")
+            if len(c.parts) > 1 or any((
+                c.arg_expr, c.arg2_expr, c.filter_expr, c.within_group,
+            )):
+                raise ValueError("PIVOT aggregate takes one plain column name or *")
             self._expect_name("for", "PIVOT requires FOR <col> IN (...)")
             keycol = self._name("PIVOT FOR takes a plain column name")
             if not self.accept_kw("in"):
@@ -959,7 +1175,7 @@ class _Parser:
             values = self._key_list(self._reshape_lit, "PIVOT IN value")
             if not self.accept_op(")"):
                 raise ValueError("unbalanced PIVOT clause parenthesis")
-            return PivotClause(fn, agg_col, keycol, values), None
+            return PivotClause(c.func, c.parts[0] if c.parts else None, keycol, values), None
         # UNPIVOT (val FOR key IN (c1, c2, ...))
         valcol = self._name("UNPIVOT requires: UNPIVOT (val FOR key IN (col, ...))")
         self._expect_name("for", "UNPIVOT requires FOR <key> IN (col, ...)")
@@ -1124,98 +1340,31 @@ class _Parser:
             alias = self.next()[1]
         return domain, family, alias
 
-    _AGG_FUNCS = ("count", "sum", "avg", "min", "max")
-    #: statistical aggregates -> canonical (Spark-native) name.
-    #: stddev/variance are the _samp ANSI defaults, as in DuckDB/Spark.
-    _STAT_AGGS = {
-        "stddev": "stddev_samp", "stddev_samp": "stddev_samp",
-        "stddev_pop": "stddev_pop",
-        "variance": "var_samp", "var_samp": "var_samp",
-        "var_pop": "var_pop",
-        "corr": "corr",
-        "covar_samp": "covar_samp", "covar_pop": "covar_pop",
-    }
-    _RANK_FUNCS = (
-        "rank", "dense_rank", "row_number", "percent_rank", "cume_dist",
-        "ntile",
-    )
-    _NAV_FUNCS = ("lag", "lead", "first_value", "last_value")
-    #: whitelisted scalar functions — a name followed by '(' parses as
-    #: a call (winning over a same-named series); everything compiles
-    #: to built-in Catalyst expressions (functions/scalar.py carries
-    #: the wider DataFrame-level library; this is the dialect subset)
-    _SCALAR_FUNCS = frozenset({
-        "abs", "sqrt", "floor", "ceil", "round", "upper", "lower",
-        "length", "trim", "coalesce", "concat", "substring",
-        "year", "month", "day", "hour", "minute", "date_trunc",
-        "cast",  # CAST(expr AS type) — special-cased in parse_operand
-        "extract",  # EXTRACT(unit FROM expr) — ditto
-        "nullif", "greatest", "least", "ltrim", "rtrim", "replace",
-        "reverse",
-    })
-
     def parse_select_item(self) -> FieldRef:
-        """A select-list item: a (possibly windowed/aggregate) field,
-        or a computed arithmetic expression over sugared refs, scalar
-        function calls and literals — the projection the reference
-        rejects outright (selectfieldparser.go:90-99). Computed items
-        require AS."""
-        t = self.peek()
-        if (
-            t[0] in ("num", "str", "param")
-            or t == ("op", "(")
-            or t == ("op", "-")
-            or t == ("kw", "case")
-            or (
-                t[0] == "name"
-                and t[1].lower() in self._SCALAR_FUNCS
-                and self.peek2() == ("op", "(")
-            )
-        ):
-            return self._finish_computed(self.parse_arith())
-        mark = self.i
-        f = self.parse_field()
-        nxt = self.peek()
-        if (
-            f.alias is None
-            and nxt[0] == "op"
-            and nxt[1] in ("+", "-", "*", "/", "%")
-            and (
-                f.func is None
-                or (
-                    f.window is None
-                    and f.filter_expr is None
-                    and not f.within_group
-                    and f.arg_expr is None
-                    and f.func.removesuffix("_distinct") in self._AGG_FUNCS
+        """A select-list item: a sugared ref, an aggregate or window
+        call, or a computed expression over refs, calls and literals —
+        the projection the reference rejects outright
+        (selectfieldparser.go:90-99). Computed items and calls with no
+        canonical sugar name require AS."""
+        e = self.parse_arith()
+        alias = self._name("expected alias after AS", plain=False) if self.accept_kw("as") else None
+        if e.kind == "ref":
+            f = e.value
+            f.alias = alias
+            if alias is None and any((f.arg_expr, f.arg2_expr, f.filter_expr, f.within_group)):
+                raise ValueError(
+                    f"{f.func}(...) requires AS <name> (no canonical sugar name for this call)"
                 )
-            )
-        ):
-            # a ref or plain aggregate call followed by arithmetic:
-            # re-parse the item as an expression (sum(a)/sum(b) ratios)
-            self.i = mark
-            return self._finish_computed(self.parse_arith())
-        return f
-
-    def _finish_computed(self, expr: Expr) -> FieldRef:
-        alias = None
-        if self.accept_kw("as"):
-            alias = self._name("expected alias after AS", plain=False)
+            return f
         if alias is None:
             raise ValueError(
                 "computed select expressions require AS <name> "
                 "(there is no canonical sugar name for them)"
             )
-        return FieldRef((), alias=alias, expr=expr)
+        return FieldRef((), alias=alias, expr=e)
 
-    def _within_group(self, func: str) -> list[tuple[FieldRef, bool]]:
-        """``WITHIN GROUP (ORDER BY k [ASC|DESC], ...)`` after an
-        ordered-set aggregate call."""
-        self.expect_kw("group")
-        if not self.accept_op("("):
-            raise ValueError("WITHIN GROUP requires (ORDER BY ...)")
-        self.expect_kw("order")
-        self.expect_kw("by")
+    def _sort_keys(self) -> list[tuple[FieldRef, bool]]:
+        """``ref [ASC|DESC] {, ref [ASC|DESC]}`` -> [(ref, desc)]."""
         keys = []
         while True:
             r = self.parse_plain_ref()
@@ -1224,152 +1373,100 @@ class _Parser:
                 self.accept_kw("asc")
             keys.append((r, d))
             if not self.accept_op(","):
-                break
-            if func != "string_agg":
-                raise ValueError(
-                    f"{func} takes exactly one WITHIN GROUP sort key "
-                    "(ANSI inverse-distribution aggregates are "
-                    "single-keyed)"
-                )
-        if not self.accept_op(")"):
-            raise ValueError("unbalanced WITHIN GROUP (ORDER BY ...)")
-        return keys
+                return keys
 
-    def _plain_or_expr(self, e: Expr) -> tuple[tuple[str, ...], Expr | None]:
-        """An aggregate argument: a plain column (parts) or an expression."""
-        if e.kind == "ref" and e.value.func is None:
-            return e.value.parts, None
-        if any(r.func for r in _expr_refs(e)):
-            raise ValueError("nested aggregate calls are not supported")
-        return (), e
-
-    def parse_field(self) -> FieldRef:
-        kind, v = self.name_next()
-        if kind != "name":
-            raise ValueError(f"expected field name, got {v!r} (explicit names required, selectfieldparser.go:108-114)")
-        func = None
-        arg_expr: Expr | None = None
-        arg2_expr: Expr | None = None
-        within_group: list[tuple[FieldRef, bool]] | None = None
-        sep = ","
-        parts: tuple[str, ...] = tuple(v.split("."))
-        lv = v.lower()
+    def parse_call(self, name: str) -> Expr:
+        """``name(args)`` and the modifiers its :data:`_FUNCS` row admits
+        — the one grammar of a call in every position. A scalar call is
+        ``Expr('fn')`` (CAST ``Expr('cast')``); an aggregate or window
+        call is a ref to a :class:`FieldRef` with ``func`` set."""
+        func = _FN_NAMES.get(name.lower())
+        if func is None:
+            raise ValueError(f"unknown function {name}()")
+        fn = _FUNCS[func]
+        self.next()  # '('
 
         def close() -> None:
             if not self.accept_op(")"):
                 raise ValueError(f"unbalanced parenthesis in {func}(...)")
 
-        if lv in self._AGG_FUNCS and self.accept_op("("):
-            func = lv
-            if self.accept_op("*"):
-                if func != "count":
-                    raise ValueError(f"{func}(*) is not valid; only count(*)")
-                parts = ()
-            else:
-                if self.accept_kw("distinct"):
-                    # agg(DISTINCT col); min/max(DISTINCT) are plain extrema
-                    func = f"{func}_distinct"
-                parts, arg_expr = self._plain_or_expr(self.parse_arith())
-                if arg_expr is not None and func in ("count_distinct", "avg_distinct"):
-                    raise ValueError(f"{func[:-9]}(DISTINCT ...) takes a plain column")
+        if fn.form == "cast":  # CAST(expr AS type), whitelisted targets
+            inner = self.parse_arith()
+            if self.next() != ("kw", "as"):
+                raise ValueError("CAST requires 'AS <type>'")
+            k3, ty = self.name_next()
+            if k3 != "name" or ty.lower() not in _CAST_TYPES:
+                raise ValueError(f"unsupported CAST target {ty!r}; one of {sorted(_CAST_TYPES)}")
             close()
-        elif lv in ("string_agg", "listagg") and self.accept_op("("):
-            # string_agg(x[, 'sep']) WITHIN GROUP (ORDER BY k, ...) — the
-            # ordering is REQUIRED: an unordered concatenation is
-            # nondeterministic under distributed execution
-            func = "string_agg"
-            parts, arg_expr = self._plain_or_expr(self.parse_arith())
-            if self.accept_op(","):
-                ks, sep = self.next()
-                if ks != "str":
-                    raise ValueError("string_agg separator must be a string literal")
+            return Expr("cast", op=_CAST_TYPES[ty.lower()], children=[inner])
+        if fn.form == "extract":  # EXTRACT(part FROM expr): the date-part call
+            ku, unit = self.name_next()
+            if ku != "name" or not getattr(_FUNCS.get(unit.lower()), "part", False):
+                parts = "/".join(n for n, f in _FUNCS.items() if f.part)
+                raise ValueError(f"EXTRACT unit must be one of {parts}, got {unit!r}")
+            if self.next() != ("kw", "from"):
+                raise ValueError("EXTRACT requires 'unit FROM expr'")
+            inner = self.parse_arith()
             close()
-            if not self.accept_kw("within"):
-                raise ValueError(
-                    "string_agg/listagg requires WITHIN GROUP "
-                    "(ORDER BY ...) — unordered concatenation is "
-                    "nondeterministic on a distributed engine"
-                )
-            within_group = self._within_group(func)
-        elif lv in ("bool_and", "bool_or", "every") and self.accept_op("("):
-            # ANSI boolean aggregates over a PREDICATE argument
-            func = "bool_or" if lv == "bool_or" else "bool_and"
-            arg_expr, parts = self.parse_or(), ()
-            close()
-        elif lv in self._STAT_AGGS and self.accept_op("("):
-            # stddev/variance family, two-argument corr/covar
-            func = self._STAT_AGGS[lv]
-            arg_expr, parts = self.parse_arith(), ()
-            if func in ("corr", "covar_samp", "covar_pop"):
-                if not self.accept_op(","):
-                    raise ValueError(f"{func}(x, y) takes two arguments")
-                arg2_expr = self.parse_arith()
-            close()
-        elif lv in ("max_by", "min_by", "arg_max", "arg_min") and self.accept_op("("):
-            # max_by(x, y): the x of the row with the maximal y (arg_max
-            # is the DuckDB spelling); rows with a NULL y are ignored and
-            # ties on y are engine-unspecified — use a unique order key
-            func = "max_by" if lv in ("max_by", "arg_max") else "min_by"
-            arg_expr = self.parse_arith()
-            if not self.accept_op(","):
-                raise ValueError(f"{func}(x, y) takes exactly two arguments")
-            arg2_expr, parts = self.parse_arith(), ()
-            close()
-        elif lv in ("percentile_cont", "percentile_disc") and self.accept_op("("):
-            # ANSI inverse-distribution aggregates, exactly one sort key
-            func = lv
-            kn, nv = self.next()
-            if kn != "num" or not (0.0 <= float(nv) <= 1.0):
-                raise ValueError(f"{func}(f) requires a numeric literal fraction in [0, 1]")
-            arg_expr, parts = Expr("lit", value=float(nv)), ()
-            close()
-            if not self.accept_kw("within"):
-                raise ValueError(
-                    f"{func} requires WITHIN GROUP (ORDER BY <col>) — "
-                    "an inverse-distribution aggregate has no meaning "
-                    "without an ordering"
-                )
-            within_group = self._within_group(func)
-        elif lv in self._RANK_FUNCS and self.accept_op("("):
-            func, parts = lv, ()
-            if func == "ntile":
-                kn, nv = self.next()
-                if kn != "num" or "." in nv or int(nv) < 1:
-                    raise ValueError("ntile(n) requires a positive integer literal")
-                arg_expr = Expr("lit", value=int(nv))
+            return Expr("fn", op=unit.lower(), children=[inner])
+        distinct = self.accept_kw("distinct")
+        if distinct and fn.distinct is None:
+            raise ValueError(f"{func}() does not take DISTINCT")
+        args: list[Expr] = []
+        star = self.accept_op("*")
+        if star and (distinct or not fn.star):
+            stars = "/".join(f"{n}(*)" for n, f in _FUNCS.items() if f.star)
+            raise ValueError(f"{func}({'DISTINCT ' * distinct}*) is not valid; only {stars}")
+        if not star and self.peek() != ("op", ")"):
+            arg = self.parse_or if fn.pred else self.parse_arith
+            args.append(arg())
+            while self.accept_op(","):
+                args.append(arg())
+        close()
+        n = len(args) + star
+        if n < fn.lo or (fn.hi is not None and n > fn.hi):
+            want = (
+                f"{('no', 'one', 'two', 'three')[fn.lo]} argument{'s' * (fn.lo != 1)}"
+                if fn.lo == fn.hi else f"{fn.lo} to {fn.hi or 'n'} arguments"
+            )
+            raise ValueError(f"{func}() takes {want}, got {n}")
+        within = None
+        if self.accept_kw("within"):
+            if not fn.within:
+                raise ValueError(f"{func} does not take WITHIN GROUP")
+            self.expect_kw("group")
+            if not self.accept_op("("):
+                raise ValueError("WITHIN GROUP requires (ORDER BY ...)")
+            self.expect_kw("order")
+            self.expect_kw("by")
+            within = self._sort_keys()
             if not self.accept_op(")"):
-                if func == "ntile":
-                    raise ValueError("unbalanced parenthesis in ntile(n)")
-                raise ValueError(f"{func}() takes no arguments")
-        elif lv in self._NAV_FUNCS and self.accept_op("("):
-            func = lv
-            inner = self._name(f"expected column in {func}(...), got {{!r}}", plain=False)
-            parts = tuple(inner.split("."))
-            close()
+                raise ValueError("unbalanced WITHIN GROUP (ORDER BY ...)")
+            if fn.within == 1 and len(within) > 1:
+                raise ValueError(
+                    f"{func} takes exactly one WITHIN GROUP sort key (ANSI "
+                    "inverse-distribution aggregates are single-keyed)"
+                )
+        elif fn.within:
+            raise ValueError(
+                f"{func} requires WITHIN GROUP (ORDER BY ...) — an ordered-set "
+                "aggregate has no deterministic meaning without an ordering"
+            )
         ignore_nulls = False
-        if func is not None and self.peek() in (("kw", "ignore"), ("kw", "respect")):
-            # fn(col) IGNORE NULLS OVER w — the LOCF navigation modifier;
-            # Spark exposes it on first/last only, so lag/lead refuse
+        if self.peek() in (("kw", "ignore"), ("kw", "respect")):
             mode = self.next()[1]
             self.expect_kw("nulls")
-            if func not in ("first_value", "last_value"):
+            if not fn.nulls:
+                names = "/".join(n for n, f in _FUNCS.items() if f.nulls)
                 raise ValueError(
-                    f"{mode.upper()} NULLS is supported on first_value/"
-                    "last_value only (Spark's lag/lead do not expose "
-                    "null treatment); for gap-fill use last_value(col) "
-                    "IGNORE NULLS over a preceding frame"
+                    f"{mode.upper()} NULLS is supported on {names} only (Spark "
+                    f"exposes no null treatment on {func})"
                 )
             ignore_nulls = mode == "ignore"
         filter_expr = None
-        if (
-            func is not None
-            and (
-                func.removesuffix("_distinct") in self._AGG_FUNCS
-                or func in ("bool_and", "bool_or", "max_by", "min_by")
-                or func in self._STAT_AGGS.values()
-            )
-            and self.accept_kw("filter")
-        ):  # ANSI aggregate FILTER clause: agg(x) FILTER (WHERE pred)
+        if self.accept_kw("filter"):  # ANSI aggregate FILTER (WHERE pred)
+            if not fn.filter:
+                raise ValueError(f"{func} does not take FILTER (WHERE ...)")
             if not self.accept_op("("):
                 raise ValueError("FILTER requires (WHERE <predicate>)")
             self.expect_kw("where")
@@ -1377,7 +1474,12 @@ class _Parser:
             if not self.accept_op(")"):
                 raise ValueError("unbalanced FILTER (WHERE ...) clause")
         window = None
-        if func is not None and self.accept_kw("over"):
+        if self.accept_kw("over"):
+            if fn.over == "forbidden":
+                what = "grouped aggregate" if fn.kind == "agg" else "scalar function"
+                raise ValueError(f"{func} is a {what} in this dialect, not a window function")
+            if filter_expr is not None:
+                raise ValueError("FILTER is supported on plain aggregates, not on window functions")
             if self.peek()[0] in ("name", "kw") and self.peek() != ("op", "("):
                 # OVER w — a named WINDOW clause declared later
                 window = WindowSpec(pending_name=self._name(
@@ -1385,33 +1487,27 @@ class _Parser:
                 ))
             else:
                 window = self.parse_window()
-        if window is not None and filter_expr is not None:
-            raise ValueError("FILTER is supported on plain aggregates, not on window functions")
-        if window is not None and func in (
-            "string_agg", "percentile_cont", "percentile_disc", "bool_and", "bool_or",
-            "max_by", "min_by", "corr", "covar_samp", "covar_pop",
-        ):
-            raise ValueError(f"{func} is a grouped aggregate in this dialect, not a window function")
-        if window is None and func in (*self._RANK_FUNCS, *self._NAV_FUNCS):
+        elif fn.over == "required":
             raise ValueError(f"{func}() requires an OVER (...) clause")
-        alias = None
-        if self.accept_kw("as"):
-            alias = self._name("expected alias after AS", plain=False)
-        if alias is None:
-            if arg_expr is not None:
-                raise ValueError(
-                    f"{func}(<expression>) requires AS <name> (no canonical "
-                    "sugar name for an expression argument)"
-                )
-            if filter_expr is not None:
-                raise ValueError("agg(...) FILTER (WHERE ...) requires AS <name>")
-            if func == "string_agg":
-                raise ValueError("string_agg(...) requires AS <name>")
-        return FieldRef(
-            parts, alias, func, window, arg_expr=arg_expr, arg2_expr=arg2_expr,
-            filter_expr=filter_expr, ignore_nulls=ignore_nulls,
-            within_group=within_group, sep=sep,
+        if fn.kind == "scalar":
+            e = Expr("fn", op=func, children=args)
+            if fn.check:
+                fn.check(e)
+            return e
+        if any(r.func for a in (*args, filter_expr) if a is not None for r in _expr_refs(a)):
+            raise ValueError("nested aggregate calls are not supported")
+        first = args[0] if args else None
+        plain = first is not None and first.kind == "ref"
+        c = FieldRef(
+            first.value.parts if plain else (), None,
+            f"{func}_distinct" if distinct else func, window,
+            arg_expr=None if plain else first,
+            arg2_expr=args[1] if len(args) > 1 else None,
+            filter_expr=filter_expr, ignore_nulls=ignore_nulls, within_group=within,
         )
+        if fn.check:
+            fn.check(c)
+        return Expr("ref", value=c)
 
     def parse_window(self) -> WindowSpec:
         if not self.accept_op("("):
@@ -1424,14 +1520,7 @@ class _Parser:
                 spec.partition_by.append(self.parse_plain_ref())
         if self.accept_kw("order"):
             self.expect_kw("by")
-            while True:
-                ref = self.parse_plain_ref()
-                desc = self.accept_kw("desc")
-                if not desc:
-                    self.accept_kw("asc")
-                spec.order_by.append((ref, desc))
-                if not self.accept_op(","):
-                    break
+            spec.order_by = self._sort_keys()
         # ROWS counts rows; RANGE BETWEEN INTERVAL '<n>' <unit> bounds are
         # ns deltas on the one time column (bare numeric RANGE offsets are
         # refused: their unit would depend on the column's representation);
@@ -1721,66 +1810,10 @@ class _Parser:
             return Expr("lit", value={"true": True, "false": False}.get(v))
         if kind != "name":
             raise ValueError(f"unexpected operand {v!r}")
-        lv = v.lower()
         if self.peek() != ("op", "("):
             return Expr("ref", value=FieldRef(tuple(v.split("."))))
-        if lv == "cast":
-            # CAST(expr AS type), whitelisted to the cross-engine-safe
-            # targets (see _CAST_TYPES)
-            self.next()
-            inner = self.parse_arith()
-            if self.next() != ("kw", "as"):
-                raise ValueError("CAST requires 'AS <type>'")
-            k3, ty = self.name_next()
-            if k3 != "name" or ty.lower() not in _CAST_TYPES:
-                raise ValueError(f"unsupported CAST target {ty!r}; one of {sorted(_CAST_TYPES)}")
-            if not self.accept_op(")"):
-                raise ValueError("unbalanced parenthesis in CAST(...)")
-            return Expr("cast", op=_CAST_TYPES[ty.lower()], children=[inner])
-        if lv == "extract":
-            # EXTRACT(unit FROM expr) — the date-part functions' ANSI spelling
-            self.next()
-            ku, unit = self.name_next()
-            if ku != "name" or unit.lower() not in ("year", "month", "day", "hour", "minute"):
-                raise ValueError(
-                    f"EXTRACT unit must be one of year/month/day/hour/minute, got {unit!r}"
-                )
-            if self.next() != ("kw", "from"):
-                raise ValueError("EXTRACT requires 'unit FROM expr'")
-            inner = self.parse_arith()
-            if not self.accept_op(")"):
-                raise ValueError("unbalanced parenthesis in EXTRACT(...)")
-            return Expr("fn", op=unit.lower(), children=[inner])
-        if lv in self._SCALAR_FUNCS:
-            # a function name followed by '(' wins over a same-named series
-            self.next()
-            args = [self.parse_arith()]
-            while self.accept_op(","):
-                args.append(self.parse_arith())
-            if not self.accept_op(")"):
-                raise ValueError(f"unbalanced parenthesis in {lv}(...)")
-            return Expr("fn", op=lv, children=args)
-        # aggregate-call operands (HAVING count(*) > 2, round(stddev(x), 6))
-        # take a plain column; the two-argument corr/covar stay select items
-        stat = self._STAT_AGGS.get(lv)
-        if lv in self._AGG_FUNCS or (stat and stat not in ("corr", "covar_samp", "covar_pop")):
-            self.next()
-            func = stat or lv
-            parts: tuple[str, ...] = ()
-            if not stat and self.accept_op("*"):
-                if func != "count":
-                    raise ValueError(f"{func}(*) is not valid; only count(*)")
-            else:
-                if not stat and self.accept_kw("distinct"):
-                    func = f"{func}_distinct"  # HAVING count(DISTINCT x) > n
-                k2, inner = self.name_next()
-                if k2 != "name":
-                    raise ValueError(f"expected column in {func}(...), got {inner!r}")
-                parts = tuple(inner.split("."))
-            if not self.accept_op(")"):
-                raise ValueError(f"unbalanced parenthesis in {func}(...)")
-            return Expr("ref", value=FieldRef(parts, None, func))
-        return Expr("ref", value=FieldRef(tuple(v.split("."))))
+        return self.parse_call(v)
+
 
 def parse(sql: str) -> BoostQuery:
     """Parse boost-dialect SQL into a :class:`BoostQuery` (single
@@ -2018,6 +2051,19 @@ def _expr_refs(e: Expr):
         yield from _expr_refs(c)
 
 
+def _reads(f: FieldRef):
+    """The column refs a select item reads, through the calls in it:
+    its plain column and the refs of its expression, arguments, FILTER
+    and WITHIN GROUP keys (window specs aside)."""
+    if f.parts:
+        yield f
+    for e in (f.expr, f.arg_expr, f.arg2_expr, f.filter_expr):
+        for r in _expr_refs(e) if e is not None else ():
+            yield from _reads(r)
+    for r, _ in f.within_group or ():
+        yield r
+
+
 def _has_subquery(e: Expr) -> bool:
     return e.kind == "subquery" or any(_has_subquery(c) for c in e.children)
 
@@ -2035,74 +2081,6 @@ def _param_value(name: str, params: dict | None):
     return params[name]
 
 
-#: CAST target whitelist: dialect type name -> Spark cast type. Only the
-#: cross-engine-deterministic targets are admitted. bigint/int on a
-#: DOUBLE input only certifies for integral values (DuckDB rounds,
-#: Spark truncates — never route a fractional double through these);
-#: float32 is excluded (pandas float32 vs DuckDB REAL repr drift).
-_CAST_TYPES: dict = {
-    "bigint": "long",
-    "long": "long",
-    "int": "int",
-    "integer": "int",
-    "double": "double",
-    "varchar": "string",
-    "string": "string",
-    "date": "date",
-    "timestamp": "timestamp",
-}
-
-#: scalar-fn table: name -> (min_args, max_args|None, Spark SQL name).
-#: floor/ceil pin a DOUBLE result (Spark's natural LONG vs DuckDB's
-#: DOUBLE would otherwise diverge); everything else keeps Spark's
-#: natural type and the oracle side casts where engines differ.
-_FN_SQL: dict = {
-    "abs": (1, 1, "abs"), "sqrt": (1, 1, "sqrt"),
-    "floor": (1, 1, "floor"), "ceil": (1, 1, "ceil"),
-    "upper": (1, 1, "upper"), "lower": (1, 1, "lower"),
-    "length": (1, 1, "length"), "trim": (1, 1, "trim"),
-    "coalesce": (2, None, "coalesce"), "concat": (2, None, "concat"),
-    "substring": (3, 3, "substring"),
-    "year": (1, 1, "year"), "month": (1, 1, "month"),
-    "day": (1, 1, "dayofmonth"), "hour": (1, 1, "hour"),
-    "minute": (1, 1, "minute"),
-    # r10 batch — identical name + semantics on both engines:
-    "nullif": (2, 2, "nullif"), "greatest": (2, None, "greatest"),
-    "least": (2, None, "least"), "ltrim": (1, 1, "ltrim"),
-    "rtrim": (1, 1, "rtrim"), "replace": (3, 3, "replace"),
-    "reverse": (1, 1, "reverse"),
-}
-
-
-def _compile_fn(e: Expr, c) -> str:
-    """A whitelisted scalar call. round() compiles to the engine-
-    independent grid floor(x*10^n + 0.5)/10^n (identical IEEE ops on
-    every engine — ANSI half-up disagrees between Spark's BigDecimal
-    shortest-repr rounding and DuckDB's binary-value rounding at half
-    boundaries); date_trunc requires its unit as a string literal."""
-    fn, args = e.op, e.children
-    if fn == "round":
-        if not 1 <= len(args) <= 2:
-            raise ValueError("round(x[, n]) takes 1 or 2 arguments")
-        n = 0
-        if len(args) == 2:
-            if args[1].kind != "lit" or not isinstance(args[1].value, int):
-                raise ValueError("round() scale must be an integer literal")
-            n = args[1].value
-        scale = _lit(float(10**n))
-        return f"(floor((({c(args[0])} * {scale}) + 0.5D)) / {scale})"
-    if fn == "date_trunc":
-        if len(args) != 2 or args[0].kind != "lit" or not isinstance(args[0].value, str):
-            raise ValueError("date_trunc('unit', ts) requires a string-literal unit")
-        return f"date_trunc({_lit(args[0].value)}, {c(args[1])})"
-    lo, hi, name = _FN_SQL[fn]
-    if len(args) < lo or (hi is not None and len(args) > hi):
-        arity = str(lo) if hi == lo else f"{lo}..{hi if hi else 'n'}"
-        raise ValueError(f"{fn}() takes {arity} argument(s), got {len(args)}")
-    out = f"{name}({', '.join(c(a) for a in args)})"
-    return f"CAST({out} AS DOUBLE)" if fn in ("floor", "ceil") else out
-
-
 _CMP_SQL = {"=": "=", "!=": "!=", "<": "<", "<=": "<=", ">": ">", ">=": ">="}
 
 
@@ -2118,10 +2096,8 @@ def _compile_expr(e: Expr, res: _Resolver, name_of=None, params: dict | None = N
         return _compile_expr(x, res, name_of, params, em)
 
     k = e.kind
-    if k == "fn":
-        return _compile_fn(e, c)
-    if k == "cast":
-        return f"CAST({c(e.children[0])} AS {e.op})"
+    if k in ("fn", "cast"):
+        return _call_sql(e.op if k == "fn" else k, [c(a) for a in e.children], e)
     if k == "exists":
         if em is None:
             raise ValueError("EXISTS is supported as a top-level AND conjunct of WHERE only")
@@ -2140,7 +2116,14 @@ def _compile_expr(e: Expr, res: _Resolver, name_of=None, params: dict | None = N
         _param_value(e.value, params)
         return f":{e.value}"
     if k == "ref":
-        return name_of(e.value) if name_of is not None else res.ref_sql(e.value)
+        if name_of is not None:
+            return name_of(e.value)
+        if e.value.func is not None:
+            raise ValueError(
+                f"{e.value.func}() is an aggregate or window call outside an "
+                "aggregation scope (the select list, HAVING or ORDER BY)"
+            )
+        return res.ref_sql(e.value)
     if k == "arith":
         # %: both Spark and DuckDB implement remainder-with-dividend-sign
         return f"({c(e.children[0])} {e.op} {c(e.children[1])})"
@@ -2440,7 +2423,6 @@ _SETOP_SQL = {
     "intersect_all": "INTERSECT ALL", "except": "EXCEPT",
     "except_all": "EXCEPT ALL",
 }
-_RANK_FNS = ("rank", "dense_rank", "row_number", "percent_rank", "cume_dist")
 _JOIN_SQL = {
     "inner": "JOIN", "left": "LEFT OUTER JOIN", "right": "RIGHT OUTER JOIN",
     "full": "FULL OUTER JOIN", "cross": "CROSS JOIN",
@@ -2853,7 +2835,7 @@ class _Emitter:
                     "(a source column not referenced by the clause)"
                 )
             names = [str(v) for v in p.values]
-            agg = f"{p.func}({_ident(p.agg_col) if p.agg_col else 1})"
+            agg = _call_sql(p.func, [_ident(p.agg_col)] if p.agg_col else [])
             text = (
                 f"SELECT * FROM {src.sql} PIVOT ({agg} FOR {_ident(p.key_col)} "
                 f"IN ({', '.join(_lit(v) for v in p.values)}))"
@@ -2879,64 +2861,20 @@ class _Emitter:
             out = [c for c in cols if c not in u.cols] + [u.key_col, u.val_col]
         return _Src("table", out, sql=f"({text})", qual=src.qual)
 
-    def agg(self, col: str | None, func: str, ref: FieldRef, res: _Resolver) -> str:
-        """One aggregate call, lowered to Spark's native aggregate
-        functions; ``agg(x) FILTER (WHERE p)`` keeps the ANSI FILTER."""
-        flt = None if ref.filter_expr is None else self.expr(ref.filter_expr, res)
-        tail = f" FILTER (WHERE {flt})" if flt else ""
-        if func in ("avg_distinct", "percentile_cont", "percentile_disc") and flt:
+    def call(self, ref: FieldRef, res: _Resolver, over: bool = False) -> str:
+        """An aggregate or window call without its OVER, printed from its
+        table row."""
+        if ref.window is not None and not over:
             raise ValueError(
-                f"{'avg(DISTINCT col)' if func == 'avg_distinct' else func} "
-                "does not combine with FILTER (WHERE ...)"
+                f"window call {ref.func}() is supported as a whole select item "
+                "only — alias it there (and filter it with QUALIFY)"
             )
-        if func in ("percentile_cont", "percentile_disc"):
-            # native inverse-distribution aggregates: one partial+final
-            # ObjectHashAggregate (plan-pinned in tests/test_plan_shapes.py);
-            # per-group state is the group's value list, the documented
-            # contract of EXACT percentiles in every engine
-            r, d = ref.within_group[0]
-            return (
-                f"{func}({ref.arg_expr.value!r}) WITHIN GROUP "
-                f"(ORDER BY {res.ref_sql(r)}{' DESC' if d else ''})"
-            )
-        if func == "string_agg":
-            # array_join(transform(array_sort(collect_list(struct(k...,
-            # x))), s -> s.x), sep) rather than Spark's native listagg —
-            # the struct sort breaks ties by the VALUE deterministically
-            # (hash-certifiable on any engine; native listagg leaves tie
-            # order unspecified). One partial+final hash aggregate.
-            descs = {d for _, d in ref.within_group}
-            if len(descs) > 1:
-                raise ValueError(
-                    "WITHIN GROUP (ORDER BY ...) keys must share one "
-                    "direction (all ASC or all DESC) — mixed-direction "
-                    "ordered-set aggregation is not supported"
-                )
-            val = self.expr(ref.arg_expr, res) if ref.arg_expr is not None else res.sql(col)
-            val = f"CAST({val} AS STRING)"
-            st = ", ".join(
-                f"'_o{i}', {res.ref_sql(r)}" for i, (r, _) in enumerate(ref.within_group)
-            )
-            arr = (
-                f"array_sort(collect_list(CASE WHEN ({val} IS NOT NULL) THEN "
-                f"named_struct({st}, '_v', {val}) END){tail})"
-            )
-            if descs == {True}:
-                arr = f"reverse({arr})"
-            return f"array_join(transform({arr}, s -> s._v), {_lit(ref.sep)})"
-        if ref.arg_expr is not None:
-            args = [self.expr(ref.arg_expr, res)]
-        else:
-            args = [res.sql(col) if col is not None else "1"]  # count(*)
-        if ref.arg2_expr is not None:
-            args.append(self.expr(ref.arg2_expr, res))
-        # min/max(DISTINCT) are the plain extrema (dedup is a no-op)
-        name = {
-            "count_distinct": "count(DISTINCT ", "sum_distinct": "sum(DISTINCT ",
-            "avg_distinct": "avg(DISTINCT ", "min_distinct": "min(",
-            "max_distinct": "max(",
-        }.get(func, f"{func}(")
-        return f"{name}{', '.join(args)}){tail}"
+        args = [self.expr(a, res) for a in (ref.arg_expr, ref.arg2_expr) if a is not None]
+        if ref.parts:
+            args.insert(0, res.ref_sql(ref))
+        flt = None if ref.filter_expr is None else self.expr(ref.filter_expr, res)
+        keys = [(res.ref_sql(r), d) for r, d in ref.within_group or ()]
+        return _call_sql(ref.func, args, ref, keys, flt)
 
     def ts_ns(self, res: _Resolver, ref: FieldRef) -> str:
         """Long nanoseconds from a time column of either representation
@@ -2955,7 +2893,7 @@ class _Emitter:
             )
         return f"(unix_micros(CAST({sql} AS TIMESTAMP)) * 1000)"
 
-    def window(self, col, func: str, ref: FieldRef, res: _Resolver, pre: list, i: int) -> str:
+    def window(self, ref: FieldRef, res: _Resolver, pre: list, i: int) -> str:
         """``fn(...) OVER (...)``. GROUPS frames lower to a RANGE frame
         over a dense_rank() of the ORDER BY key computed one level below
         (rank distance == peer-group distance; CURRENT ROW -> offset 0
@@ -2992,24 +2930,15 @@ class _Emitter:
             # definition; first_value/last_value ARE frame-sensitive
             # (last_value(...) IGNORE NULLS over a preceding frame is
             # the LOCF idiom) and accept one
-            if func in _RANK_FNS or func in ("lag", "lead", "ntile"):
-                raise ValueError(f"{func}() does not take a frame clause")
+            if not _FUNCS[ref.func.removesuffix("_distinct")].frame:
+                raise ValueError(f"{ref.func}() does not take a frame clause")
             full = f"{noframe} {_frame_sql('ROWS' if ft == 'rows' else 'RANGE', *w.frame)}"
         if w.exclude is not None:
             xc = self.expr(ref.arg_expr, res) if ref.arg_expr is not None else (
-                None if col is None else res.sql(col)
+                res.ref_sql(ref) if ref.parts else None
             )
-            return _window_exclude(func, xc, w, full, noframe)
-        if func in _RANK_FNS:
-            return f"{func}() OVER ({full})"
-        if func == "ntile":
-            return f"ntile({ref.arg_expr.value}) OVER ({full})"
-        if func in ("first_value", "last_value"):
-            fn = "first" if func == "first_value" else "last"
-            return f"{fn}({res.sql(col)}, {'true' if ref.ignore_nulls else 'false'}) OVER ({full})"
-        if func in ("lag", "lead"):
-            return f"{func}({res.sql(col)}) OVER ({full})"
-        return f"{self.agg(col, func, ref, res)} OVER ({full})"
+            return _window_exclude(ref.func, xc, w, full, noframe)
+        return f"{self.call(ref, res, over=True)} OVER ({full})"
 
     def select(self, q: BoostQuery) -> tuple[str, list[str]]:
         """One SELECT level: FROM/JOIN -> WHERE -> aggregate | window |
@@ -3025,22 +2954,9 @@ class _Emitter:
             from_ = f"({text}) AS {_ident(qual)}"
         sel: list[tuple[str, str | None, str | None, FieldRef]] = []
         for f in q.fields:  # resolve every select ref: the series to fetch
-            for r in _expr_refs(f.filter_expr) if f.filter_expr is not None else ():
+            for r in _reads(f):
                 res.resolve(r)
-            for r, _d in f.within_group or ():
-                res.resolve(r)
-            if f.expr is not None:
-                for r in _expr_refs(f.expr):
-                    if r.parts:  # count(*) refs have no column to register
-                        res.resolve(r)
-                sel.append((f.alias, None, None, f))
-                continue
-            if f.arg_expr is not None:  # agg over an expression argument
-                for r in _expr_refs(f.arg_expr):
-                    res.resolve(r)
-                sel.append((f.alias, None, f.func, f))
-                continue
-            col = res.resolve(f)[1] if f.parts else None  # count(*) has no column
+            col = res.resolve(f)[1] if f.parts and f.func is None else None
             sel.append((res.default_name(f), col, f.func, f))
         # a computed select item may serve as a GROUP BY key via its
         # alias (SELECT floor(x/50) AS bin ... GROUP BY bin); one whose
@@ -3112,7 +3028,7 @@ class _Emitter:
         res.frozen = True
 
         post_name = None
-        hidden: dict[tuple, str] = {}  # (func, col) -> hidden aggregate name
+        hidden: dict[str, str] = {}  # call SQL -> hidden aggregate name
         group = having = ""
         distinct = "DISTINCT " if q.distinct else ""
         if q.group_by or post_agg or any(f.func and f.window is None for f in q.fields):
@@ -3141,6 +3057,18 @@ class _Emitter:
                 gkeys[col] = (res.sql(col), sel_alias_of.get(col, res.default_name(g)))
             gnames = {n for _, n in gkeys.values()}
             out_names = {alias for alias, _, _, _ in sel}
+            calls = [(self.call(ref, res), alias) for alias, _, func, ref in sel if func]
+            # plain non-grouped select fields default to AVG (GROUP BY
+            # is a declared-only stub in the reference,
+            # query/base/expression.go:22-25)
+            calls += [
+                (_call_sql("avg", [res.sql(col)]), alias)
+                for alias, col, func, _ in sel
+                if not func and col is not None and col not in gkeys
+            ]
+            call_name: dict[str, str] = {}
+            for sql, alias in calls:
+                call_name.setdefault(sql, alias)
 
             def post_name(ref: FieldRef) -> str:
                 """HAVING / ORDER BY scope: select aliases and group
@@ -3156,20 +3084,15 @@ class _Emitter:
                     if col in gkeys:
                         return gkeys[col][1]
                     raise ValueError(f"{'.'.join(ref.parts)} is neither grouped nor aggregated")
-                col = res.resolve(ref)[1] if ref.parts else None
-                for alias, scol, fn2, r4 in sel:
-                    # a FILTERed or expression aggregate is a DIFFERENT
-                    # value than the plain call and never matches it
-                    if (fn2, scol) == (ref.func, col) and r4.arg_expr is None and r4.filter_expr is None:
-                        return alias
-                    if ref.func == "avg" and fn2 is None and scol == col and col not in gkeys:
-                        return alias  # the default-AVG select field
-                name = (col or "star").replace("`.`", "__").strip("`")
-                return hidden.setdefault((ref.func, col), f"_h_{ref.func}_{name}")
-
-            def inline(ref: FieldRef) -> str:  # post-aggregation expressions
-                col = res.resolve(ref)[1] if ref.parts else None
-                return self.agg(col, ref.func, FieldRef(ref.parts), res)
+                sql = self.call(ref, res)  # the same call prints the same SQL
+                if sql in call_name:
+                    return call_name[sql]
+                if any((ref.arg_expr, ref.arg2_expr, ref.filter_expr, ref.within_group)):
+                    return hidden.setdefault(sql, f"_h{len(hidden)}_{ref.func}")
+                col = res.resolve(ref)[1] if ref.parts else "star"
+                return hidden.setdefault(
+                    sql, f"_h_{ref.func}_{col.replace('`.`', '__').strip('`')}"
+                )
 
             for r in _expr_refs(q.having) if q.having is not None else ():
                 post_name(r)
@@ -3182,30 +3105,13 @@ class _Emitter:
                     "aggregates that are not in the select list"
                 )
 
-            items = [f"{s} AS {_ident(n)}" for s, n in gkeys.values()]
-            items += [
-                f"{self.agg(col, func, ref, res)} AS {_ident(alias)}"
-                for alias, col, func, ref in sel if func
-            ]
-            # plain non-grouped select fields default to AVG (GROUP BY
-            # is a declared-only stub in the reference,
-            # query/base/expression.go:22-25)
-            items += [
-                f"avg({res.sql(col)}) AS {_ident(alias)}"
-                for alias, col, func, _ in sel
-                if not func and col is not None and col not in gkeys
-            ]
-            items += [
-                f"{self.expr(f.expr, res, name_of=inline)} AS {_ident(f.alias)}"
+            items = [f"{s} AS {_ident(n)}" for s, n in [*gkeys.values(), *calls]]
+            items += [  # post-aggregation expressions print their calls inline
+                f"{self.expr(f.expr, res, name_of=lambda r: self.call(r, res))} AS {_ident(f.alias)}"
                 for f in post_agg
             ]
-            items += [
-                f"{self.agg(col, fn, FieldRef(()), res)} AS {_ident(h)}"
-                for (fn, col), h in hidden.items()
-            ]
-            out = [n for _, n in gkeys.values()]
-            out += [a for a, _, func, _ in sel if func]
-            out += [a for a, col, func, _ in sel if not func and col is not None and col not in gkeys]
+            items += [f"{s} AS {_ident(h)}" for s, h in hidden.items()]
+            out = [n for _, n in [*gkeys.values(), *calls]]
             out += [f.alias for f in post_agg]
             keys = [s for s, _ in gkeys.values()]
             if q.group_mode == "grouping_sets":
@@ -3230,7 +3136,7 @@ class _Emitter:
                 if ref.window is None:
                     s = self.expr(ref.expr, res) if ref.expr is not None else res.sql(col)
                 else:
-                    s = self.window(col, func, ref, res, pre, len(items))
+                    s = self.window(ref, res, pre, len(items))
                 items.append(f"{s} AS {_ident(alias)}")
             if pre:  # GROUPS ranks, one level below the frame
                 inner = f"SELECT *, {', '.join(pre)} FROM {from_}"
@@ -3268,6 +3174,11 @@ class _Emitter:
 
     def tail(self, q, res, core, out, post_name) -> str:
         """QUALIFY, DISTINCT ON, ORDER BY, LIMIT [WITH TIES] / OFFSET."""
+        if any(ref.window is not None for ref, _, _ in q.order_by):
+            raise ValueError(
+                "ORDER BY cannot take a window call — alias the select item "
+                "and order by the alias"
+            )
         if not (
             q.qualify is not None or q.distinct_on or q.limit_ties
             or any(r.expr is not None for r, _, _ in q.order_by)

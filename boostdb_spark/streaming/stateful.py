@@ -363,95 +363,3 @@ def streaming_locf(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def streaming_ewma_tws(
-    df: DataFrame,
-    alpha: float,
-    key_cols: Sequence[str] = ("series",),
-    value_col: str = "value",
-    ts_col: str = "ts",
-    order_extra: Sequence[str] = (),
-) -> DataFrame:
-    """Spark-4-native twin of :func:`streaming_ewma` on the
-    ``transformWithStateInPandas`` API (StatefulProcessor + typed
-    ValueState) — the forward-looking arbitrary-state surface that
-    replaces ``applyInPandasWithState``: named state variables with
-    their own schemas, optional TTL, and timer support, still
-    Arrow-batched per key. Identical fold arithmetic and ordering
-    contract, so the drained final state bit-matches both the batch
-    fold AND the applyInPandasWithState twin — which is exactly what
-    the parity entry certifies (same oracle as stream_ewma_parity).
-
-    Requires the RocksDB state-store provider (a transformWithState
-    constraint — :func:`boostdb_spark.streaming.drain.drain_conf` sets
-    it around every drain) AND the ``protobuf`` package (the API's
-    Python<->JVM state server speaks protobuf; PySpark does not
-    declare it a hard dependency). Environments without protobuf get a
-    LOUD refusal up front pointing at :func:`streaming_ewma` — never a
-    mid-stream worker crash — so the certified arbitrary-state path stays the
-    applyInPandasWithState twin wherever protobuf is absent (this
-    repo's container is one such environment; the parity suite
-    therefore certifies the twin, and this function's plumbing is
-    guard-tested)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the 'protobuf' "
-            "package (its state server protocol); it is not installed "
-            "here. Use streaming_ewma (applyInPandasWithState) — the "
-            "same fold contract, certified by stream_ewma_parity."
-        ) from exc
-    from pyspark.sql.streaming import StatefulProcessor
-
-    key_cols = list(key_cols)
-    order_cols = [ts_col, *order_extra]
-    a = float(alpha)
-    out_schema = StructType(
-        [StructField(k, StringType()) for k in key_cols]
-        + [StructField("ewma", DoubleType()), StructField("n", LongType())]
-    )
-
-    class _Ewma(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._st = handle.getValueState(
-                "ewma", "ewma double, n bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._st.exists():
-                ew, n = self._st.get()
-            else:
-                ew, n = None, 0
-            batch = pd.concat(list(rows), ignore_index=True)
-            # same in-batch ordering contract as streaming_ewma:
-            # (ts, *order_extra), stable sort; same loop shape too —
-            # rounding-chained recursion, so conversions/branches hoist
-            # out of the loop but the fold itself stays sequential
-            # (bit-match contract with the batch fold)
-            batch = batch.sort_values(order_cols, kind="mergesort")
-            vals = batch[value_col].to_numpy(dtype="float64").tolist()
-            n = int(n)
-            start = 0
-            if n == 0 and vals:
-                ew = vals[0]
-                start = 1
-            om = 1.0 - a
-            for v in vals[start:]:
-                ew = a * v + om * ew
-            n += len(vals)
-            self._st.update((ew, n))
-            row = {k: [str(kv)] for k, kv in zip(key_cols, key)}
-            row.update({"ewma": [ew], "n": [n]})
-            yield pd.DataFrame(row)
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_Ewma(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -676,39 +676,3 @@ def test_upsert_bucketed_state_io_shape(spark, tmp_path):
         for r in spark.read.parquet(state).drop("_bucket").collect()
     }
     assert got[7] == 99.0 and got[1] == 1.0 and len(got) == 20
-
-
-def test_streaming_ewma_tws_guard(spark):
-    """The Spark-4 transformWithStateInPandas twin refuses LOUDLY when
-    protobuf (its state-server protocol dependency) is absent — a
-    mid-stream Python-worker crash is the alternative. If protobuf IS
-    present the construction must at least build a streaming plan."""
-    import pytest as _pytest
-
-    from boostdb_spark.streaming.stateful import streaming_ewma_tws
-
-    src = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .selectExpr(
-            "'a' AS event_type", "timestamp AS ts",
-            "value AS event_id", "CAST(value AS DOUBLE) AS value",
-        )
-    )
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        have_pb = True
-    except ImportError:
-        have_pb = False
-    if have_pb:
-        df = streaming_ewma_tws(
-            src, alpha=0.25, key_cols=["event_type"],
-            value_col="value", ts_col="ts", order_extra=["event_id"],
-        )
-        assert df.isStreaming
-    else:
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            streaming_ewma_tws(
-                src, alpha=0.25, key_cols=["event_type"],
-                value_col="value", ts_col="ts",
-                order_extra=["event_id"],
-            )

@@ -4,6 +4,8 @@ planning must produce a DataFrame whose schema matches the field list.
 The reference's parser tests cover 3 hand-written queries
 (query/parser/parser_test.go:10-59); properties cover the space."""
 
+import dataclasses
+
 from hypothesis import given, settings, strategies as st
 
 from boostdb_spark.plans import sugar
@@ -412,3 +414,73 @@ def test_post_agg_ratio_matches_spark_sql(spark):
     ga = {r.uid: (r.r, r.spread, r.n2) for r in got.collect()}
     for r in exp.collect():
         assert ga[r.uid] == (r.r, r.spread, r.n2)
+
+
+_COL = st.sampled_from(["a.x", "a.y", "a.z"])
+
+
+@st.composite
+def call_texts(draw):
+    """Any row of the dialect's function table (by any of its names),
+    called with valid arguments and modifiers it admits."""
+    name = draw(st.sampled_from(sorted(sugar._FN_NAMES)))
+    func = sugar._FN_NAMES[name]
+    fn = sugar._FUNCS[func]
+    if fn.form == "cast":
+        return f"{name}({draw(_COL)} AS {draw(st.sampled_from(sorted(sugar._CAST_TYPES)))})"
+    if fn.form == "extract":
+        part = draw(st.sampled_from([n for n, f in sugar._FUNCS.items() if f.part]))
+        return f"{name}({part} FROM {draw(_COL)})"
+    distinct = fn.distinct is not None and draw(st.booleans())
+    plain = distinct or draw(st.booleans())
+    arg = (
+        _COL.map(lambda c: f"{c} > 1") if fn.pred
+        else _COL if plain else _COL.map(lambda c: f"{c} * 2")
+    )
+    n = draw(st.integers(fn.lo, fn.hi if fn.hi is not None else fn.lo + 2))
+    args = [draw(arg) for _ in range(n)]
+    special = {
+        "round": lambda: args[:1] + [str(draw(st.integers(0, 4)))] * (n - 1),
+        "date_trunc": lambda: ["'day'", args[1]],
+        "ntile": lambda: [str(draw(st.integers(1, 9)))],
+        "percentile_cont": lambda: [f"{draw(st.floats(0, 1)):.2f}"],
+        "percentile_disc": lambda: [f"{draw(st.floats(0, 1)):.2f}"],
+        "string_agg": lambda: args[:1] + ["'|'"] * (n - 1),
+    }
+    args = special.get(func, lambda: args)()
+    if fn.star and not distinct and draw(st.booleans()):
+        args = ["*"]
+    text = f"{name}({'DISTINCT ' * distinct}{', '.join(args)})"
+    if fn.within:
+        text += f" WITHIN GROUP (ORDER BY a.k{draw(st.sampled_from(['', ' DESC']))})"
+    if fn.nulls and draw(st.booleans()):
+        text += draw(st.sampled_from([" IGNORE NULLS", " RESPECT NULLS"]))
+    over = fn.over == "required" or (fn.over == "allowed" and draw(st.booleans()))
+    if fn.filter and not over and not distinct and draw(st.booleans()):
+        text += " FILTER (WHERE a.y > 0)"
+    if over:
+        text += " OVER (PARTITION BY a.k ORDER BY a.t)"
+    return text
+
+
+def _call_node(x):
+    """The call node of a parsed position: a FieldRef call without its
+    alias, or a scalar call's Expr."""
+    if isinstance(x, sugar.FieldRef):
+        return x.expr if x.expr is not None else dataclasses.replace(x, alias=None)
+    return x.value if x.kind == "ref" else x
+
+
+@given(call=call_texts())
+@settings(max_examples=300, deadline=None)
+def test_one_call_grammar_in_every_position(call):
+    """The same call text parses to the same node as a select item, as
+    an argument of round(), as a HAVING operand and as an ORDER BY key."""
+    item = sugar.parse(f"SELECT {call} AS c FROM d.f a").fields[0]
+    rounded = sugar.parse(f"SELECT round({call}, 2) AS r FROM d.f a").fields[0]
+    having = sugar.parse(f"SELECT a.k FROM d.f a GROUP BY a.k HAVING {call} > 0").having
+    order = sugar.parse(f"SELECT a.k FROM d.f a ORDER BY {call} DESC").order_by[0][0]
+    node = _call_node(item)
+    assert _call_node(rounded.expr.children[0]) == node
+    assert _call_node(having.children[0]) == node
+    assert _call_node(order) == node

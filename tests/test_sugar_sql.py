@@ -197,3 +197,77 @@ def test_lateral_tokenize_over_cte_matches_operator(spark, tbl):
         .filter("pos > 0").collect()
     )
     assert sorted(map(tuple, got)) == sorted(map(tuple, want)) and len(want) == 3
+
+
+_BY_UID = "SELECT purchase.uid AS u, count(*) AS c FROM d.f GROUP BY purchase.uid "
+_DUCK_BY_UID = "SELECT uid, count(*) FROM t WHERE series = 'purchase' GROUP BY uid "
+
+
+@pytest.mark.parametrize("dialect, duck, ordered", [
+    (
+        "SELECT purchase.uid AS u, round(sum(purchase.mts * purchase), 2) AS s "
+        "FROM d.f GROUP BY purchase.uid",
+        "SELECT uid, round(sum(mts * value), 2) FROM t WHERE series = 'purchase' GROUP BY uid",
+        False,
+    ),
+    (_BY_UID + "HAVING sum(purchase.mts * 2) > 3", _DUCK_BY_UID + "HAVING sum(mts * 2) > 3", False),
+    (
+        _BY_UID + "HAVING max_by(purchase.mts, purchase) > 1",
+        _DUCK_BY_UID + "HAVING max_by(mts, value) > 1",
+        False,
+    ),
+    (
+        "SELECT purchase.table AS k, count(*) AS c FROM d.f GROUP BY purchase.table "
+        "HAVING corr(purchase.mts, purchase) > 0",
+        "SELECT \"table\", count(*) FROM t WHERE series = 'purchase' GROUP BY \"table\" "
+        "HAVING corr(mts, value) > 0",
+        False,
+    ),
+    (_BY_UID + "HAVING bool_or(purchase > 1)", _DUCK_BY_UID + "HAVING bool_or(value > 1)", False),
+    (
+        _BY_UID + "HAVING sum(purchase) FILTER (WHERE purchase.mts > 0) > 1",
+        _DUCK_BY_UID + "HAVING sum(value) FILTER (WHERE mts > 0) > 1",
+        False,
+    ),
+    (
+        "SELECT purchase.table AS k, stddev(purchase.mts) AS sd FROM d.f "
+        "GROUP BY purchase.table ORDER BY stddev(purchase.mts)",
+        "SELECT \"table\", stddev(mts) FROM t WHERE series = 'purchase' GROUP BY \"table\"",
+        True,
+    ),
+    (
+        _BY_UID + "ORDER BY sum(purchase.mts * purchase) DESC",
+        _DUCK_BY_UID + "ORDER BY sum(mts * value) DESC",
+        True,
+    ),
+    (
+        "SELECT purchase.table AS k, round(sum(purchase), 2) AS s FROM d.f GROUP BY ALL",
+        "SELECT \"table\", round(sum(value), 2) FROM t WHERE series = 'purchase' GROUP BY \"table\"",
+        False,
+    ),
+], ids=[
+    "round_sum_expr", "having_sum_expr", "having_max_by", "having_corr",
+    "having_bool_or", "having_filter", "order_by_stddev", "order_by_hidden_expr",
+    "group_all_skips_agg_expr",
+])
+def test_call_parses_in_every_clause_and_matches_duckdb(spark, tbl, dialect, duck, ordered):
+    """A call plans the same wherever it stands: an aggregate over an
+    expression inside round(), in HAVING and in ORDER BY (a hidden
+    aggregate when the select list lacks it), two-argument and predicate
+    aggregates and FILTER in HAVING."""
+    got = [tuple(r) for r in sugar.query(spark, dialect, _B).collect()]
+    want = _duck(tbl, duck)
+    if not ordered:
+        got, want = sorted(got, key=repr), sorted(want, key=repr)
+    assert got == want and want
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT purchase.mts AS m FROM d.f WHERE sum(purchase.mts) > 1",
+    "SELECT purchase.mts + sum(purchase) AS z FROM d.f",
+])
+def test_aggregate_call_outside_aggregation_is_refused(spark, tbl, sql):
+    """An aggregate call where no aggregation runs must not print as its
+    argument column."""
+    with pytest.raises(ValueError, match="outside an aggregation scope"):
+        sugar.query(spark, sql, _B)
