@@ -282,9 +282,7 @@ def asof_join(
     # cast between long and timestamp (epoch-SECONDS semantics) would
     # mis-scale the ordering when the two sides carry different ts
     # dtypes, so the window never orders on a casted ts.
-    l2 = left.withColumn("_ord_ns", ts_ns(left, ts_col)).withColumn(
-        "_side", F.lit(1)
-    )
+    l2 = left.select("*", ts_ns(left, ts_col).alias("_ord_ns"), F.lit(1).alias("_side"))
     # The right side's (ts, payload...) travels as ONE struct so the
     # LOCF below picks the whole matched row atomically: per-column
     # F.last(ignorenulls) would stitch a NULL payload column from an
@@ -292,14 +290,15 @@ def asof_join(
     # return the matched row's NULL, so the struct (non-null whenever
     # the row is a right row, even with all-NULL payload) is the unit
     # of carry-forward.
+    rns = ts_ns(right, rts)
     r2 = right.select(
         *on,
-        ts_ns(right, rts).alias("_ord_ns"),
-        F.struct(
-            ts_ns(right, rts).alias("_r_ts"),
-            *[F.col(c).alias(f"_r_{c}") for c in rpayload],
-        ).alias("_r_row"),
-    ).withColumn("_side", F.lit(0))
+        rns.alias("_ord_ns"),
+        F.struct(rns.alias("_r_ts"), *[F.col(c).alias(f"_r_{c}") for c in rpayload]).alias(
+            "_r_row"
+        ),
+        F.lit(0).alias("_side"),
+    )
     u = l2.unionByName(r2, allowMissingColumns=True)
 
     if direction == "backward":
@@ -359,32 +358,34 @@ def asof_join(
         )
     else:
         raise ValueError("direction must be 'backward', 'forward' or 'nearest'")
-    filled = u.select(
+    # the window runs over both sides, so left rows are kept only after
+    # it; the final select names the outputs (renames and drops folded
+    # into its aliases)
+    out = u.select(
         *left.columns,
         F.col("_ord_ns"),
         F.col("_side"),
         carried.getField("_r_ts").alias("_r_ts"),
         *[carried.getField(f"_r_{c}").alias(f"_r_{c}") for c in rpayload],
-    )
-    out = filled.filter(F.col("_side") == 1).drop("_side")
+    ).filter(F.col("_side") == 1)
+    r_ts = F.col("_r_ts")
+    payload = [F.col(f"_r_{c}") for c in rpayload]
     if tolerance_ns is not None:
         lns = F.col("_ord_ns")
         if direction == "backward":
-            gap = lns - F.col("_r_ts")
+            gap = lns - r_ts
         elif direction == "forward":
-            gap = F.col("_r_ts") - lns
+            gap = r_ts - lns
         else:  # nearest: the chosen row's absolute distance
-            gap = F.abs(F.col("_r_ts") - lns)
+            gap = F.abs(r_ts - lns)
         keep = gap <= F.lit(tolerance_ns)
-        out = out.select(
-            *left.columns,
-            F.when(keep, F.col("_r_ts")).alias("_r_ts"),
-            *[F.when(keep, F.col(f"_r_{c}")).alias(f"_r_{c}") for c in rpayload],
-        )
-    for c in rpayload:
-        new = f"{c}{suffix}" if c in left.columns else c
-        out = out.withColumnRenamed(f"_r_{c}", new)
-    return out.drop("_ord_ns").withColumnRenamed("_r_ts", f"{ts_col}{suffix}")
+        r_ts = F.when(keep, r_ts)
+        payload = [F.when(keep, p) for p in payload]
+    return out.select(
+        *left.columns,
+        r_ts.alias(f"{ts_col}{suffix}"),
+        *[p.alias(f"{c}{suffix}" if c in left.columns else c) for c, p in zip(rpayload, payload)],
+    )
 
 
 def moving_agg(

@@ -42,10 +42,10 @@ The reference parses its dialect with the TiDB parser into ``QueryOps``
      ``floor(x*10^n + 0.5)/10^n`` (ANSI half-up rounding is not
      bit-stable across engines); ``floor``/``ceil`` return DOUBLE.
 
-   Each family source is one DataFrame built in one place: the view,
-   the ``isin`` filter on the series the query names (the FetchSeries
-   fan-out), then the implicit ``[start, end)`` time range
-   (query/executor/executor.go:145-147) through ``apply_time_range``,
+   Each family source is one DataFrame built in one place: the view
+   and one filter, the ``isin`` on the series the query names (the
+   FetchSeries fan-out) ANDed with the implicit ``[start, end)`` time
+   range (query/executor/executor.go:145-147) by ``apply_time_range``,
    which also prunes ``ts_date`` partitions.
 3. **One Spark SQL statement.** Everything else prints as SQL over the
    resolved names and runs through
@@ -2241,7 +2241,12 @@ def _plan_recursive_cte(
     terminate; UNION ALL stops only on an empty step (the iteration cap
     backstops divergence). The accumulator and delta LOCALCHECKPOINT
     each step so plans stay constant-size; the driver's only per-step
-    traffic is one isEmpty probe."""
+    traffic is one isEmpty probe.
+
+    In-scope CTEs are evaluated once, as SQL evaluates a CTE: body-level
+    CTEs plan first, then every in-scope CTE frame the recursive term
+    reads is localCheckpointed before the loop, so no step re-runs its
+    source. Frames only the base term reads stay lazy: it runs once."""
     op, rec = body.set_ops[0]
     local = dict(ctes)
     # body-level derived tables / nested CTEs plan once, up front
@@ -2249,6 +2254,9 @@ def _plan_recursive_cte(
         if nm in local:
             raise ValueError(f"duplicate WITH name {nm!r}")
         local[nm] = plan(spark, b, binding, start, end, params, _ctes=local)
+    for nm, df in local.items():
+        if _total_cte_refs(rec, nm) > 0:
+            local[nm] = df.localCheckpoint()
     base_q = dataclasses.replace(
         body, set_ops=[], ctes=[], recursive=False
     )
@@ -2475,16 +2483,17 @@ class _Emitter:
         return src
 
     def build_family(self, src: _Src) -> DataFrame:
-        """scan -> series filter (the FetchSeries fan-out collapsed into
-        one predicate parquet row-group stats can skip on) -> implicit
-        time range -> pre-steps."""
-        b, df = src.binding, src.df0
+        """scan -> ONE filter: the series predicate (the FetchSeries
+        fan-out collapsed into one predicate parquet row-group stats can
+        skip on) ANDed with the implicit time range -> pre-steps."""
+        b = src.binding
         series = sorted(src.series)
+        where = None
         if len(series) == 1:
-            df = df.filter(F.col(b.series_col) == series[0])
+            where = F.col(b.series_col) == series[0]
         elif series:
-            df = df.filter(F.col(b.series_col).isin(series))
-        df = apply_time_range(df, self.start, self.end, ts_col=b.ts_col)
+            where = F.col(b.series_col).isin(series)
+        df = apply_time_range(src.df0, self.start, self.end, ts_col=b.ts_col, where=where)
         for step in src.pre:
             df = step(df)
         return df

@@ -104,6 +104,127 @@ def test_read_reuses_merged_schema_while_files_unchanged(spark, family):
     assert sorted(again.collect()) == sorted(first.collect())
 
 
+class _NoSpark:
+    """A session stand-in that fails on any use."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"read() used the Spark session ({name})")
+
+
+def test_read_returns_the_held_relation_without_spark_calls(spark, family):
+    """With no change to the family's files, read() returns the very
+    DataFrame it holds and makes no Spark call at all: the file-set
+    check is a pyarrow listing."""
+    family.write(_fixture_df(spark))
+    held = family.read()
+    session, family.spark = family.spark, _NoSpark()
+    try:
+        assert family.read() is held
+        assert family.read() is held
+    finally:
+        family.spark = session
+    assert held.count() == 10
+
+
+def _later(spark):
+    """The fixture's 10 points one day later."""
+    return _fixture_df(spark).withColumn("ts", F.col("ts") + DAY_NS)
+
+
+def _drain(spark, fam, landing, ckpt):
+    """Append ``landing``'s new files to ``fam`` through stream_write."""
+    from boostdb_spark.streaming import stream_write
+
+    sdf = spark.readStream.schema(spark.read.parquet(landing).schema).parquet(landing)
+    stream_write(fam, sdf, checkpoint=ckpt).awaitTermination(120)
+
+
+def _append_other(spark, family, other, tmp_path):
+    family.write(_fixture_df(spark))
+    yield 10
+    other.write(_later(spark))
+    yield 20
+
+
+def _compact_other(spark, family, other, tmp_path):
+    family.write(_fixture_df(spark))
+    family.write(_later(spark))
+    yield 20
+    other.compact()  # deletes every file the first handle's relation read
+    yield 20
+
+
+def _stream_drain(spark, family, other, tmp_path):
+    landing, ckpt = str(tmp_path / "landing"), str(tmp_path / "ckpt")
+    _fixture_df(spark).write.parquet(landing)
+    _drain(spark, family, landing, ckpt)
+    yield 10
+    _later(spark).write.mode("append").parquet(landing)
+    _drain(spark, family, landing, ckpt)
+    yield 20
+
+
+def _delete_day(spark, family, other, tmp_path):
+    import shutil
+
+    family.write(_fixture_df(spark).unionByName(_later(spark)))
+    yield 20
+    shutil.rmtree(f"{family.path}/ts_date=2024-01-02")
+    yield 10
+
+
+@pytest.mark.parametrize(
+    "change", [_append_other, _compact_other, _stream_drain, _delete_day],
+    ids=["append_other_handle", "compact_other_handle", "stream_drain", "delete_day"],
+)
+def test_held_relation_follows_every_file_change(spark, family, tmp_path, change):
+    """A change to the family's files made anywhere (another handle's
+    append or compaction, a stream_write drain, a deleted ts_date
+    directory) is visible at the next fetch through the first handle."""
+    other = SeriesFamily(spark, "bTestDomain", "bTestSF", str(tmp_path))
+    steps = change(spark, family, other, tmp_path)
+    before = next(steps)
+    assert family.fetch().count() == before
+    held = family.read()
+    after = next(steps)
+    assert family.read() is not held
+    assert family.fetch().count() == after
+
+
+def test_spark_listing_keys_paths_pyarrow_does_not_list(spark, family, tmp_path, monkeypatch):
+    """Where the pyarrow listing is unavailable (a non-local URI), the
+    file-set key is Spark's own listing: another handle's append is
+    still visible, and an unchanged family still returns the held
+    relation."""
+    from boostdb_spark.sources import seriesfamily
+
+    monkeypatch.setattr(seriesfamily, "_file_set", lambda uri: None)
+    family.write(_fixture_df(spark))
+    held = family.read()
+    assert family.read() is held
+    SeriesFamily(spark, "bTestDomain", "bTestSF", str(tmp_path)).write(_later(spark))
+    assert family.fetch().count() == 20
+
+
+@pytest.mark.parametrize("listing", ["pyarrow", "spark"])
+def test_family_without_data_files_raises_named_error(spark, family, monkeypatch, listing):
+    """Input contract: a family with no data files, never written or
+    written only an empty frame (the directory then holds _SUCCESS
+    alone), raises a ValueError naming it instead of Spark's
+    PATH_NOT_FOUND or UNABLE_TO_INFER_SCHEMA."""
+    from boostdb_spark.sources import seriesfamily
+
+    if listing == "spark":
+        monkeypatch.setattr(seriesfamily, "_file_set", lambda uri: None)
+    with pytest.raises(ValueError, match=r"bTestDomain\.bTestSF has no data files"):
+        family.read()
+    family.write(_fixture_df(spark).limit(0))
+    with pytest.raises(ValueError, match=r"bTestDomain\.bTestSF has no data files"):
+        family.fetch("cpu_utilization")
+    family.write(_fixture_df(spark))
+    assert family.fetch("cpu_utilization").count() == 10
+
+
 def _plan_text(df):
     qe = df._jdf.queryExecution()
     jvm = df.sparkSession._jvm

@@ -1784,6 +1784,39 @@ def test_recursive_cte_validation_and_fixpoint(spark):
         )
 
 
+def test_recursive_cte_evaluates_in_scope_cte_once(spark):
+    """An in-scope CTE the recursive term reads is evaluated once, as
+    SQL evaluates a CTE, not once per fixpoint step: an accumulator
+    bumped by a Python UDF filter on the bound view counts each source
+    row once for a closure that takes five steps."""
+    import pyspark.sql.functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(_):
+        seen.add(1)
+        return True
+
+    edges = [(i, i + 1) for i in range(4)]  # the chain 0 -> 1 -> 2 -> 3 -> 4
+    df = spark.createDataFrame(
+        [("edge", i, 0.0, a, b) for i, (a, b) in enumerate(edges)],
+        "series STRING, mts LONG, value DOUBLE, src LONG, dst LONG",
+    )
+    df.filter(F.udf(count_row, "boolean")("src")).createOrReplaceTempView("rec_once_tbl")
+    b = SeriesFamilyBinding(view="rec_once_tbl", series_col="series", value_col="value",
+                            ts_col="mts")
+    out = sugar.query(
+        spark,
+        "WITH RECURSIVE e AS (SELECT edge.src AS src, edge.dst AS dst FROM d.f), "
+        "reach AS (SELECT x.src AS node FROM e x WHERE x.src = 0 UNION "
+        "SELECT x.dst AS node FROM e x JOIN reach r ON x.src = r.node) "
+        "SELECT count(*) AS n FROM reach",
+        b,
+    ).collect()
+    assert out[0].n == 5
+    assert seen.value == len(edges)
+
+
 def test_grouping_sets_parse_and_interop(spark):
     """GROUPING SETS grammar (r8-verdict ask #4): parse shape, refusal
     of degenerate forms, and grouping()-bitmask interop — the front's

@@ -1,11 +1,13 @@
-"""Compare the plans the dialect front produces in two checkouts.
+"""Compare the plans the dialect front and the series-family read path
+produce in two checkouts.
 
-For every suite entry that calls ``sugar.query`` / ``sugar.plan`` and
-for the three ``tsdb_query`` dialect shapes, each checkout prints the
-optimized logical plan and the formatted physical plan with expression
-ids, plan ids, temp-view names and input paths removed. Entries are
-then listed as identical or changed, with a unified diff for each
-changed one.
+For every suite entry that calls ``sugar.query`` / ``sugar.plan``,
+``SeriesFamily.fetch`` or ``timeseries.asof_join``, and for the seven
+``tsdb_query`` shapes (three dialect queries, four built on ``fetch``),
+each checkout prints the optimized logical plan and the formatted
+physical plan with expression ids, plan ids, RDD and application ids,
+temp-view names and input paths removed. Entries are then listed as
+identical or changed, with a unified diff for each changed one.
 
 Run (each checkout plans in its own process, on its own code):
 
@@ -32,6 +34,8 @@ _NORMALIZE = [
     (re.compile(r"plan_id=\d+"), "plan_id"),
     (re.compile(r"_pyspark_[0-9a-f]{32}"), "_pyspark_view"),
     (re.compile(r"\bx_\d+\b"), "x_"),  # DataFrame-API lambda variables
+    (re.compile(r"RDD\[\d+\]"), "RDD"),  # checkpointed frames' RDD ids
+    (re.compile(r"local-\d{6,}"), "local-app"),  # application ids in paths
 ]
 
 
@@ -42,10 +46,14 @@ def _normalize(text: str) -> str:
 
 
 def _tsdb_frames(spark, checkout: Path, work: str) -> dict:
-    """The tsdb_query dialect shapes over a small written family."""
+    """The tsdb_query shapes over a small written family: the dialect
+    queries, and the fetch-based ones built as the workload builds
+    them."""
     sys.path.insert(0, str(checkout / "perfbench"))
-    from workloads.tsdb_query import DIALECT
+    from pyspark.sql import functions as F
+    from workloads.tsdb_query import BUCKET_S, DIALECT, FETCH_PAGE
 
+    from boostdb_spark.operators import timeseries as tsops
     from boostdb_spark.plans import sugar
     from boostdb_spark.sources import SeriesFamily
 
@@ -59,13 +67,39 @@ def _tsdb_frames(spark, checkout: Path, work: str) -> dict:
     fam.register()
     binding = sugar.SeriesFamilyBinding(view=fam.view_name)
     p = {"a": "s0", "b": "s1", "c": "s2"}
+    start, end = t0 + 2 * day, t0 + 5 * day
     out = {}
     for kind, sql in DIALECT.items():
         params = {"h": "h000001"} if kind == "attr_filter" else {"x": 3.5}
         out[f"tsdb_query:{kind}"] = lambda sql=sql, params=params: sugar.plan(
             spark, sugar.parse(sql.format(**p)), binding,
-            start=t0 + 2 * day, end=t0 + 5 * day, params=params,
+            start=start, end=end, params=params,
         )
+
+    def fetch(series, ordered=False):
+        return fam.fetch(series, start, end, ordered=ordered)
+
+    out["tsdb_query:bucket_agg"] = lambda: tsops.bucket_agg(
+        fetch(["s0", "s1", "s2", "s3"]), BUCKET_S, ["series"], [
+            F.count(F.lit(1)).alias("n"), F.min("value").alias("lo"),
+            F.max("value").alias("hi"), F.sum("value").alias("total"),
+        ])
+    out["tsdb_query:rate"] = lambda: tsops.rate(
+        fetch("s0").select("series", "ts", "value")
+    ).groupBy("series").agg(
+        F.count("rate").alias("n"), F.min("rate").alias("lo"), F.max("rate").alias("hi"),
+    )
+    out["tsdb_query:asof_join"] = lambda: tsops.asof_join(
+        fetch("s0").select("dc", "ts", "value"), fetch("s1").select("dc", "ts", "value"),
+        on=["dc"],
+    ).agg(
+        F.count(F.lit(1)).alias("n"), F.count("value_right").alias("matched"),
+        F.max("ts_right").alias("last_ts"),
+        F.sum(F.col("value") - F.col("value_right")).alias("spread"),
+    )
+    out["tsdb_query:fetch_ordered"] = lambda: fetch(["s0", "s1"], ordered=True).select(
+        "series", "ts", "value", "host"
+    ).limit(FETCH_PAGE)
     return out
 
 
@@ -80,7 +114,7 @@ def dump(checkout: Path, sf: str, out_json: str) -> None:
     frames = {
         name: (lambda fn=fn: fn(spark, sf))
         for name, fn in sorted(suite.spark_queries().items())
-        if re.search(r"sugar\.(query|plan)\(", inspect.getsource(fn))
+        if re.search(r"sugar\.(query|plan)\(|\.fetch\(|asof_join\(", inspect.getsource(fn))
     }
     plans = {}
     with tempfile.TemporaryDirectory() as work:
@@ -91,7 +125,9 @@ def dump(checkout: Path, sf: str, out_json: str) -> None:
                 plans[name] = _normalize(
                     "== Optimized Logical Plan ==\n" + qe.optimizedPlan().toString()
                     + "\n== Physical Plan ==\n" + qe.explainString(mode)
-                ).replace(work, "<family-dir>").replace(sf.rstrip("/"), "<sf>")
+                ).replace(work, "<family-dir>").replace(sf.rstrip("/"), "<sf>").replace(
+                    str(checkout), "<checkout>"
+                )
             except Exception as e:  # an entry that fails to plan is a change too
                 plans[name] = f"PLANNING FAILED: {type(e).__name__}: {e}\n"
     Path(out_json).write_text(json.dumps(plans, indent=1, sort_keys=True))
