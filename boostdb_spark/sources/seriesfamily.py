@@ -60,6 +60,11 @@ DATE_COL = "ts_date"
 
 DAY_NS = 86_400_000_000_000
 
+#: Spark's errors for a parquet read that finds no data files: no path,
+#: no file to infer a schema from, and (Spark 4.1's legacy code for the
+#: same) a stream sink's metadata log that has committed no file yet
+_NO_DATA_CONDITIONS = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA", "_LEGACY_ERROR_TEMP_1134")
+
 
 class SeriesFamily:
     """A table-like collection of series (core/seriesfamily.go:8-11).
@@ -193,35 +198,41 @@ class SeriesFamily:
         (``s3a://``, ``hdfs://``) is keyed by Spark's own listing,
         ``inputFiles()`` of a read with the held schema, instead.
 
-        Input contract: a family with no data files (never written, or
-        written only empty frames) has no schema to read, and ``read``
+        Input contract: a family with no data files (never written,
+        written only empty frames, or a stream sink whose log has
+        committed no file yet) has no schema to read, and ``read``
         raises ``ValueError`` naming ``domain.family``."""
         key = _file_set(self._uri)
         if key is None:
             return self._read_by_spark_listing()
         if self._held is None or self._held[0] != key:
-            if not any(_is_data_file(rel) for rel, _, _ in key):
-                raise self._no_data_error()
             self._held = (key, self._merged_read())
         return self._held[1]
 
     def _read_by_spark_listing(self) -> DataFrame:
-        try:
-            if self._held is not None:
-                files, held = self._held
-                probe = self.spark.read.schema(held.schema).parquet(self.path)
-                if frozenset(probe.inputFiles()) == files:
-                    return held
-            df = self._merged_read()
-        except AnalysisException as e:
-            if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                raise self._no_data_error() from e
-            raise
+        if self._held is not None:
+            files, held = self._held
+            probe = self._parquet(self.spark.read.schema(held.schema))
+            if frozenset(probe.inputFiles()) == files:
+                return held
+        df = self._merged_read()
         self._held = (frozenset(df.inputFiles()), df)
         return df
 
     def _merged_read(self) -> DataFrame:
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        return self._parquet(self.spark.read.option("mergeSchema", "true"))
+
+    def _parquet(self, reader) -> DataFrame:
+        """``reader`` over ``path``. Where Spark's own file index finds no
+        data files (no path, ``_SUCCESS`` alone, or a stream sink whose
+        ``_spark_metadata`` log has committed none), its error becomes
+        the named ``ValueError`` of the input contract."""
+        try:
+            return reader.parquet(self.path)
+        except AnalysisException as e:
+            if e.getCondition() in _NO_DATA_CONDITIONS:
+                raise self._no_data_error() from e
+            raise
 
     def _no_data_error(self) -> ValueError:
         return ValueError(
@@ -350,9 +361,3 @@ def _file_set(uri: str | None) -> frozenset | None:
         if i.type == pafs.FileType.File
     )
 
-
-def _is_data_file(rel: str) -> bool:
-    """Whether Spark's file index reads a file at this relative path: it
-    skips every path with a component starting with ``_`` or ``.``
-    (``_SUCCESS``, ``_spark_metadata/``, ``.crc`` checksums)."""
-    return not any(part.startswith(("_", ".")) for part in rel.split("/"))

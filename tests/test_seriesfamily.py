@@ -225,6 +225,27 @@ def test_family_without_data_files_raises_named_error(spark, family, monkeypatch
     assert family.fetch("cpu_utilization").count() == 10
 
 
+@pytest.mark.parametrize("listing", ["pyarrow", "spark"])
+def test_stream_family_with_only_uncommitted_files_raises_named_error(
+    spark, family, monkeypatch, listing
+):
+    """A stream-sink family is read through its ``_spark_metadata`` log,
+    so part files no batch has committed (a first micro-batch still
+    running, or one that failed) are not data files: the read raises
+    the named ValueError too."""
+    import os
+
+    from boostdb_spark.sources import seriesfamily
+
+    if listing == "spark":
+        monkeypatch.setattr(seriesfamily, "_file_set", lambda uri: None)
+    _fixture_df(spark).write.parquet(family.path)
+    os.remove(f"{family.path}/_SUCCESS")
+    os.makedirs(f"{family.path}/_spark_metadata")
+    with pytest.raises(ValueError, match=r"bTestDomain\.bTestSF has no data files"):
+        family.read()
+
+
 def _plan_text(df):
     qe = df._jdf.queryExecution()
     jvm = df.sparkSession._jvm
