@@ -20,26 +20,33 @@ if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
 from boostdb_spark import suite  # noqa: E402
+from boostdb_spark.session import _DEFAULTS  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 
 
+#: Keys of ``session._DEFAULTS`` set on a session the engine did not
+#: build (the driver's own): the reader and plan settings its queries
+#: depend on. PySpark's DataFrame debugging key is not among them: it
+#: is a static config (a runtime set raises CANNOT_MODIFY_STATIC_CONFIG),
+#: so such a session keeps PySpark's per-call origin capture.
+RUNTIME_KEYS = (
+    # the events fixture is TIMESTAMP(NANOS) parquet
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.session.timeZone",
+    "spark.sql.adaptive.enabled",
+    # broadcast posture: static estimate-based broadcasts off, AQE
+    # re-converts at runtime from actual sizes
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+)
+
+
 def _ensure_conf(spark: SparkSession) -> SparkSession:
-    """The events fixture is TIMESTAMP(NANOS) parquet; the driver's
-    session may not carry our reader configs, so set the ones that are
-    runtime-settable."""
-    for k, v in [
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        # broadcast posture (see boostdb_spark/session.py): static
-        # estimate-based broadcasts off — estimates don't grow through
-        # explode; AQE re-converts at runtime from actual sizes
-        ("spark.sql.autoBroadcastJoinThreshold", "-1"),
-        ("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m"),
-    ]:
+    """Set ``RUNTIME_KEYS`` to the engine's values (``session._DEFAULTS``)."""
+    for k in RUNTIME_KEYS:
         try:
-            spark.conf.set(k, v)
+            spark.conf.set(k, _DEFAULTS[k])
         except Exception:
             pass
     return spark

@@ -59,28 +59,35 @@ def ts_ns(df, col: str = "ts") -> Column:
     return F.unix_micros(c.cast("timestamp")) * F.lit(1000)
 
 
-def ts_lit(df, ns: int, col: str = "ts") -> Column:
-    """A literal comparable to ``col`` in its NATIVE dtype, from an
-    INT64-ns instant. Native-dtype comparison is what keeps the
-    predicate eligible for parquet pushdown (a cast wrapped around the
-    *column* would block PushedFilters; a cast around the *literal*
-    constant-folds away before pushdown runs)."""
-    dt = dict(df.dtypes)[col]
-    if dt in ("bigint", "long"):
-        return F.lit(ns)
+def ts_sql(dtype: str, ns: int) -> str:
+    """SQL text of a literal comparable to a column of ``dtype`` (a
+    ``DataFrame.dtypes`` name) in its NATIVE dtype, from an INT64-ns
+    instant. Native-dtype comparison is what keeps the predicate
+    eligible for parquet pushdown (a cast wrapped around the *column*
+    would block PushedFilters; a cast around the *literal*
+    constant-folds away before pushdown runs). Text rather than a
+    Column so a caller can put several bounds in one ``F.expr``: each
+    Column call is a py4j round trip."""
+    if dtype in ("bigint", "long"):
+        # typed as F.lit types a Python int: INT, or BIGINT past int32
+        return str(ns)
     # ceiling division ns -> µs: for a µs-grid column t and any ns bound
     # b, both `t >= b` and `t < b` are exactly `t_us >= ceil(b/1000)` /
     # `t_us < ceil(b/1000)` — floor would off-by-one non-aligned bounds
     us = -((-ns) // 1000)
-    if dt == "timestamp_ntz":
+    if dtype == "timestamp_ntz":
         # NTZ literal built from the UTC wall string: a TIMESTAMP ->
         # NTZ cast would shift by the session zone offset
         from datetime import datetime, timedelta
 
         wall = datetime(1970, 1, 1) + timedelta(microseconds=us)
-        return F.expr(f"TIMESTAMP_NTZ'{wall.isoformat(sep=' ')}'")
-    lit = F.timestamp_micros(F.lit(us))
-    return lit.cast(dt)
+        return f"TIMESTAMP_NTZ'{wall.isoformat(sep=' ')}'"
+    return f"CAST(timestamp_micros({us}) AS {dtype})"
+
+
+def ts_lit(df, ns: int, col: str = "ts") -> Column:
+    """``ts_sql`` of ``col``'s dtype in ``df`` as one Column."""
+    return F.expr(ts_sql(dict(df.dtypes)[col], ns))
 
 
 def json_prop(col: Column | str, key: str) -> Column:

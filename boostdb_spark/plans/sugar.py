@@ -76,6 +76,7 @@ reference's left-type-wins quirks (SURVEY.md section 1.2).
 from __future__ import annotations
 
 import dataclasses
+import math
 import re
 from dataclasses import dataclass, field
 
@@ -107,7 +108,7 @@ class SeriesFamilyBinding:
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
-        (?P<num>\d+\.\d+|\.\d+|\d+)
+        (?P<num>(?:\d+\.\d+|\.\d+|\d+)(?:[eE][+-]?\d+)?)
       | (?P<str>'(?:[^']|'')*')
       | (?P<param>:[A-Za-z_][A-Za-z0-9_]*)
       | (?P<name>[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)
@@ -128,6 +129,18 @@ _KEYWORDS = {
     "recursive", "range", "window", "ignore", "respect", "values",
     "exclude", "groups", "within",
 }
+
+
+def _num(v: str) -> int | float:
+    """Value of a ``num`` token. SQL decimals and exponent literals coerce
+    to float64 (Spark and DuckDB read ``1e3`` as DOUBLE), ints to int64
+    (whereparser.go:223-246)."""
+    if v.isdigit():
+        return int(v)
+    x = float(v)
+    if math.isinf(x):
+        raise ValueError(f"numeric literal {v} overflows a DOUBLE")
+    return x
 
 
 def _tokenize(sql: str) -> list[tuple[str, str]]:
@@ -761,7 +774,7 @@ class _Parser:
         if self.peek()[0] != "num":
             return None
         _, n = self.next()
-        if "." in n:
+        if not n.isdigit():
             raise ValueError(f"{clause} position must be an integer, got {n}")
         i = int(n)
         if not fields or not (1 <= i <= len(fields)):
@@ -1260,8 +1273,7 @@ class _Parser:
         neg = self.accept_op("-")
         kind, v = self.next()
         if kind == "num":
-            x = float(v) if "." in v else int(v)
-            return -x if neg else x
+            return -_num(v) if neg else _num(v)
         if not neg and kind == "str":
             return v
         if not neg and kind == "kw" and v in ("true", "false", "null"):
@@ -1799,11 +1811,9 @@ class _Parser:
             k2, v2 = self.next()
             if k2 != "num":
                 raise ValueError(f"expected number after '-', got {v2!r}")
-            return Expr("lit", value=-(float(v2) if "." in v2 else int(v2)))
+            return Expr("lit", value=-_num(v2))
         if kind == "num":
-            # SQL decimals coerce to float64, ints to int64
-            # (whereparser.go:223-246)
-            return Expr("lit", value=float(v) if "." in v else int(v))
+            return Expr("lit", value=_num(v))
         if kind == "str":
             return Expr("lit", value=v)
         if kind == "kw" and v in ("true", "false", "null"):

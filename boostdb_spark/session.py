@@ -12,6 +12,9 @@ Scale posture (100 TB / 1000 executors):
 - ``nanosAsLong`` so ns-native event streams (the reference is ns-native,
   core/seriesfamily.go:23) read losslessly as INT64 ns.
 - Session TZ pinned UTC so results are reproducible across clusters.
+
+Driver-side cost: PySpark's DataFrame debugging is off, so building a
+Column is one py4j round trip rather than about five (see ``_DEFAULTS``).
 """
 
 from __future__ import annotations
@@ -79,6 +82,18 @@ _DEFAULTS = {
     # references; with a large heap that can take the default 30min.
     # 5min keeps hundreds-of-queries sessions from accumulating state.
     "spark.cleaner.periodicGC.interval": "5min",
+    # PySpark 4.1 wraps every F.* function and Column method in
+    # _with_origin, which records the Python call site for error
+    # messages: getActiveSession, a PySparkCurrentOrigin class lookup,
+    # a conf read, a set and a clear, all py4j round trips on top of the
+    # call itself. Off, a warm round of perfbench's seven tsdb_query
+    # operations makes about 1,340 gateway round trips instead of about
+    # 3,200, and a warm one-series ranged fetch 41 instead of 181. An
+    # error then loses only the Python call-site fragment of its query
+    # context; the error class and message stay.
+    # PySpark reads the key once per process, at the first Column call,
+    # so it must be in the session before engine code builds a Column.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

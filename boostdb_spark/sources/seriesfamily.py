@@ -52,6 +52,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from boostdb_spark.functions.scalar import ts_sql
+
 #: canonical column names (FIXTURES.md section 1)
 TS = "ts"
 SERIES = "series"
@@ -292,8 +294,9 @@ def apply_time_range(
     """``[start, end)`` half-open time-range predicate (executor.go:239-252).
 
     Works for TimestampType and INT64-ns ``ts`` columns alike; INT64-ns
-    bounds against a timestamp column are converted literal-side so the
-    predicate still reaches the parquet scan as PushedFilters.
+    bounds are printed as literals of the column's native dtype
+    (``ts_sql``), so the predicate still reaches the parquet scan as
+    PushedFilters.
 
     On a series-family frame (``ts_col`` is ``ts`` and the frame carries
     the ``ts_date`` partition column) an INT64-ns bound also bounds
@@ -301,35 +304,39 @@ def apply_time_range(
     partition filter from ``ts`` itself. ``ts_date`` is ``to_date(ts)``
     in the writer's session time zone, unknown here, so the bound is
     the UTC date widened by one day each side; every zone offset is
-    under a day, so no row in range is dropped. Other bounds filter
-    ``ts`` only.
+    under a day, so no row in range is dropped.
 
-    ``where`` (a caller's own predicate, such as a series filter) is
-    ANDed in front of the bounds, and the frame gets ONE ``filter``:
-    Spark analyzes every DataFrame call eagerly, so each extra filter
-    is an extra analysis of the whole plan.
+    The INT64-ns bounds, ``ts`` and ``ts_date`` alike, are one SQL
+    expression (one ``F.expr``): every Column call is a py4j round trip,
+    and a ranged fetch would otherwise build about a dozen. Other bounds
+    (datetime, string) compare ``ts`` with ``F.lit``. ``where`` (a
+    caller's own predicate, such as a series filter) is ANDed in front
+    of the bounds, and the frame gets ONE ``filter``: Spark analyzes
+    every DataFrame call eagerly, so each extra filter is an extra
+    analysis of the whole plan.
     """
-
-    def _lit(v):
-        if isinstance(v, numbers.Integral):
-            from boostdb_spark.functions.scalar import ts_lit
-
-            return ts_lit(df, v, col=ts_col)
-        return F.lit(v)
 
     def _day(ns: int) -> date:
         return date(1970, 1, 1) + timedelta(days=int(ns) // DAY_NS)
 
     conds = [] if where is None else [where]
+    text = []
+    col = "`" + ts_col.replace("`", "``") + "`"
     pruned = ts_col == TS and DATE_COL in df.columns
-    if start is not None:
-        conds.append(F.col(ts_col) >= _lit(start))
-        if pruned and isinstance(start, numbers.Integral):
-            conds.append(F.col(DATE_COL) >= F.lit(_day(start) - timedelta(days=1)))
-    if end is not None:
-        conds.append(F.col(ts_col) < _lit(end))
-        if pruned and isinstance(end, numbers.Integral):
-            conds.append(F.col(DATE_COL) <= F.lit(_day(end - 1) + timedelta(days=1)))
+    if isinstance(start, numbers.Integral):
+        text.append(f"{col} >= {ts_sql(dict(df.dtypes)[ts_col], start)}")
+        if pruned:
+            text.append(f"{DATE_COL} >= DATE'{_day(start) - timedelta(days=1)}'")
+    elif start is not None:
+        conds.append(F.col(ts_col) >= F.lit(start))
+    if isinstance(end, numbers.Integral):
+        text.append(f"{col} < {ts_sql(dict(df.dtypes)[ts_col], end)}")
+        if pruned:
+            text.append(f"{DATE_COL} <= DATE'{_day(end - 1) + timedelta(days=1)}'")
+    elif end is not None:
+        conds.append(F.col(ts_col) < F.lit(end))
+    if text:
+        conds.append(F.expr(" AND ".join(text)))
     return df.filter(reduce(and_, conds)) if conds else df
 
 

@@ -349,6 +349,77 @@ def _files_by_date(path):
     return out
 
 
+@pytest.mark.parametrize("dtype", ["bigint", "timestamp", "timestamp_ntz"])
+def test_time_range_is_half_open_in_every_ts_dtype(spark, tmp_path, dtype):
+    """The SQL-text bounds keep [start, end) exact for ns-long, TIMESTAMP
+    and TIMESTAMP_NTZ ``ts`` under a non-UTC session zone, with ns bounds
+    off the µs grid, and still reach the scan: the ts bounds as
+    PushedFilters, the ts_date bounds as PartitionFilters."""
+    from boostdb_spark.sources.seriesfamily import apply_time_range
+
+    t_mid = 1_704_240_000_000_000_000  # 2024-01-03 00:00 UTC
+    grid = [t_mid + k * 1_800 * 10**9 for k in range(-96, 145)]
+    grid += [t_mid + d * DAY_NS + o for d in (0, 1) for o in (-1_000, 0, 1_000)]
+    ts = {
+        "bigint": "n",
+        "timestamp": "timestamp_micros(n div 1000)",
+        "timestamp_ntz": "CAST(timestamp_micros(n div 1000) AS TIMESTAMP_NTZ)",
+    }[dtype]
+    path = str(tmp_path / "range")
+    (spark.createDataFrame([(n,) for n in grid], "n long")
+        .selectExpr("n", f"{ts} AS ts", "to_date(timestamp_micros(n div 1000)) AS ts_date")
+        .write.partitionBy("ts_date").parquet(path))
+    conf = "spark.sql.session.timeZone"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "America/New_York")
+        df = spark.read.parquet(path)
+        assert dict(df.dtypes)["ts"] == dtype
+        for start, end in ((t_mid + 1, t_mid + DAY_NS + 1), (t_mid - 1, t_mid + DAY_NS - 1)):
+            got = apply_time_range(df, start, end)
+            assert sorted(r.n for r in got.collect()) == [n for n in sorted(grid) if start <= n < end]
+            plan = _plan_text(got)
+            assert "GreaterThanOrEqual(ts," in plan and "LessThan(ts," in plan, plan
+            pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+            assert pf and all("ts_date" in ln for ln in pf), pf
+    finally:
+        spark.conf.set(conf, prev)
+
+
+@pytest.mark.parametrize("name", ["event time", "t`s"])
+def test_time_range_quotes_the_ts_column(spark, name):
+    """A ts column whose name needs backticks in SQL text."""
+    from boostdb_spark.sources.seriesfamily import apply_time_range
+
+    df = spark.range(10).toDF(name)
+    assert sorted(r[0] for r in apply_time_range(df, 3, 7, ts_col=name).collect()) == [3, 4, 5, 6]
+
+
+def test_warm_ranged_fetch_makes_few_py4j_round_trips(spark, family):
+    """A warm one-series ranged fetch on a held family builds its
+    predicate in a handful of gateway round trips: the series Column,
+    one F.expr for every time bound, one AND and one filter. A Column
+    call per bound made 41, and PySpark's DataFrame debugging on top of
+    that 181."""
+    family.write(_fixture_df(spark))
+    start = 1_704_067_200_000_000_000
+
+    def fetch():
+        return family.fetch("cpu_utilization", start, start + DAY_NS, ordered=False)
+
+    fetch()
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+    client.send_command = lambda *a, **k: calls.append(a) or send(*a, **k)
+    try:
+        df = fetch()
+    finally:
+        del client.send_command
+    assert len(calls) <= 12, calls
+    assert df.count() == 10
+
+
 def test_compact_collapses_small_files(spark, tmp_path):
     """Streaming-style many-small-file ingest, then compaction: the
     targeted date collapses to one file per day, rows and their

@@ -2,6 +2,8 @@
 entry point (replaces the reference's placeholder-literal machinery,
 query/base/literalintexpression.go:9-113)."""
 
+import pytest
+
 from boostdb_spark.session import BoostSession
 from tests.conftest import SF_DIR
 
@@ -50,6 +52,37 @@ def test_ts_helpers_zone_independent(spark):
         assert all(v == (expect_ns, 1) for v in results.values()), results
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_engine_session_skips_dataframe_origin_capture(spark):
+    """get_spark turns PySpark's DataFrame debugging off (each Column call
+    is then one py4j round trip, not about five); a runtime error still
+    carries its condition."""
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        with pytest.raises(ArithmeticException) as err:
+            spark.range(1).select(F.lit(1) / F.col("id")).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+
+
+def test_driver_entry_sets_runtime_keys_from_the_engine_defaults(spark):
+    """__spark_entry__ sets on the driver's session only keys a running
+    session accepts, each to its session._DEFAULTS value."""
+    import __spark_entry__ as entry
+    from boostdb_spark.session import _DEFAULTS
+
+    assert all(spark.conf.isModifiable(k) for k in entry.RUNTIME_KEYS)
+    entry._ensure_conf(spark)
+    assert {k: spark.conf.get(k) for k in entry.RUNTIME_KEYS} == {
+        k: _DEFAULTS[k] for k in entry.RUNTIME_KEYS
+    }
 
 
 def test_gc_stale_layouts_and_touch(tmp_path):

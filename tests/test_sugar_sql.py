@@ -262,6 +262,29 @@ def test_call_parses_in_every_clause_and_matches_duckdb(spark, tbl, dialect, duc
     assert got == want and want
 
 
+def test_exponent_literals_match_duckdb(spark, tbl):
+    """1e3, 1E3, 2.5e-3 and .5e2 are DOUBLE literals, as Spark and DuckDB
+    read them, in the select list and in WHERE."""
+    got = sugar.query(
+        spark,
+        "SELECT purchase.mts AS m, purchase * 1e3 AS k, purchase.mts * 1E3 AS h, "
+        "purchase + 2.5e-3 AS j FROM d.f WHERE purchase < .5e2 AND purchase.mts < 1.5e0 "
+        "AND purchase > -1e0",
+        _B,
+    ).collect()
+    want = _duck(
+        tbl,
+        "SELECT mts, value * 1e3, mts * 1E3, value + 2.5e-3 FROM t WHERE series = 'purchase' "
+        "AND value < .5e2 AND mts < 1.5e0 AND value > -1e0",
+    )
+    assert sorted(map(tuple, got)) == sorted(want) and len(want) == 2
+
+
+def test_overflowing_numeric_literal_is_refused():
+    with pytest.raises(ValueError, match="1e999"):
+        sugar.parse("SELECT purchase FROM d.f WHERE purchase < 1e999")
+
+
 @pytest.mark.parametrize("sql", [
     "SELECT purchase.mts AS m FROM d.f WHERE sum(purchase.mts) > 1",
     "SELECT purchase.mts + sum(purchase) AS z FROM d.f",
