@@ -90,6 +90,31 @@ def ts_lit(df, ns: int, col: str = "ts") -> Column:
     return F.expr(ts_sql(dict(df.dtypes)[col], ns))
 
 
+def _ident(name: str) -> str:
+    """SQL text of a column or relation name, backquoted."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(v) -> str:
+    """SQL text of a literal, typed the way ``F.lit`` types the Python
+    value: ints INT (BIGINT past int32), floats DOUBLE — never a SQL
+    decimal, which would change the result types."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        s = str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+        return f"({s})" if v < 0 else s
+    if isinstance(v, float):
+        return f"({v!r}D)" if v < 0 else f"{v!r}D"
+    # NUL as its SQL escape: the dialect emitter delimits frame slots
+    # with NUL (plans/sugar.py, _SLOT)
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'").replace(
+        "\x00", "\\u0000"
+    ) + "'"
+
+
 def json_prop(col: Column | str, key: str) -> Column:
     """Extract a top-level key from a JSON attribute column as string —
     per-datapoint attribute access (core/seriesfamily.go:19-26) for

@@ -42,18 +42,21 @@ The reference parses its dialect with the TiDB parser into ``QueryOps``
      ``floor(x*10^n + 0.5)/10^n`` (ANSI half-up rounding is not
      bit-stable across engines); ``floor``/``ceil`` return DOUBLE.
 
-   Each family source is one DataFrame built in one place: the view
-   and one filter, the ``isin`` on the series the query names (the
-   FetchSeries fan-out) ANDed with the implicit ``[start, end)`` time
-   range (query/executor/executor.go:145-147) by ``apply_time_range``,
-   which also prunes ``ts_date`` partitions.
+   Each family source is one piece of SQL text printed in one place,
+   ``(SELECT * FROM view WHERE ...)``: the predicate is
+   ``sources.seriesfamily.family_predicate``, the series the query
+   names (the FetchSeries fan-out) ANDed with the implicit
+   ``[start, end)`` time range (query/executor/executor.go:145-147),
+   whose INT64-ns bounds also prune ``ts_date`` partitions. It is
+   filled in when the statement runs, once every name is resolved.
 3. **One Spark SQL statement.** Everything else prints as SQL over the
-   resolved names and runs through
-   ``spark.sql(text, args=params, **sources)``: sources reach the text
-   through PySpark's ``{name}`` DataFrame formatting, ``:name`` values
-   bind through ``args`` (user values never become SQL text), and
-   literals come only from the parser, quoted, floats as DOUBLE.
-   Catalyst resolves, optimizes and pushes the filters into each scan.
+   resolved names and runs through ``spark.sql(text, args=params)``:
+   ``:name`` values bind through ``args`` (user values never become
+   SQL text), and literals come only from the parser, quoted,
+   floats as DOUBLE. Catalyst resolves, optimizes and pushes the
+   filters into each scan. Only the operators below that need a
+   DataFrame add one, as a frame the text names through PySpark's
+   ``{name}`` DataFrame formatting.
 4. **Lowering for the constructs Spark 4.1 lacks.** Seven are
    rewritten: QUALIFY and DISTINCT ON become subquery wrappers (DISTINCT
    ON a ``row_number`` filter), GROUPS frames a RANGE frame over a
@@ -62,12 +65,12 @@ The reference parses its dialect with the TiDB parser into ``QueryOps``
    against the page's sort keys, ASOF JOIN the
    ``operators.timeseries.asof_join`` frame, and UNION-distinct
    recursion the fixpoint loop of :func:`_plan_recursive_cte`.
-   TABLESAMPLE and LATERAL ``tokenize`` are DataFrame pre-steps on the
-   family frame (``sampling._bucket``, ``text.tokens``); TABLESAMPLE on
-   a WITH/derived source cuts that source's relation. Where a construct
-   needs the FROM items so far as one relation (GROUPS over a join, an
-   ASOF JOIN after another join, LATERAL over a non-family source),
-   :meth:`_Emitter.flatten` makes them one, columns named ``key__col``.
+   TABLESAMPLE (``sampling._bucket``) and LATERAL ``tokenize``
+   (``text.tokens``) are DataFrame steps on a frame of their source's
+   relation. Where a construct needs the FROM items so far as one
+   relation (GROUPS over a join, an ASOF JOIN, LATERAL after another
+   source), :meth:`_Emitter.flatten` makes them one, columns named
+   ``key__col``.
 
 Comparison coercion follows ANSI Spark semantics, deliberately not the
 reference's left-type-wins quirks (SURVEY.md section 1.2).
@@ -83,7 +86,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from boostdb_spark.sources.seriesfamily import apply_time_range
+from boostdb_spark.functions.scalar import _ident, _lit
+from boostdb_spark.sources.seriesfamily import family_predicate
 
 # --------------------------------------------------------------------------
 # Binding: how a series-family maps onto a physical table
@@ -1838,29 +1842,6 @@ def parse(sql: str) -> BoostQuery:
 # --------------------------------------------------------------------------
 
 
-def _ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _lit(v) -> str:
-    """SQL text of a parser literal, typed the way ``F.lit`` types the
-    Python value: ints INT (BIGINT past int32), floats DOUBLE — never a
-    SQL decimal, which would change the result types."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, int):
-        s = str(v) if -(2**31) <= v < 2**31 else f"{v}L"
-        return f"({s})" if v < 0 else s
-    if isinstance(v, float):
-        return f"({v!r}D)" if v < 0 else f"{v!r}D"
-    # NUL as its SQL escape: frame slots are NUL-delimited (_SLOT)
-    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'").replace(
-        "\x00", "\\u0000"
-    ) + "'"
-
-
 def _order_sql(target: str, desc: bool, nulls: str | None) -> str:
     """Sort key with explicit NULLS FIRST/LAST. Spark's bare ASC/DESC
     ties the null position to the direction (ASC→first, DESC→last);
@@ -1897,10 +1878,10 @@ def _frame_sql(kind: str, lo: int, hi: int) -> str:
 
 @dataclass
 class _Src:
-    """One FROM/JOIN source of a query level. ``sql`` is its FROM item
-    (a frame slot or a CTE name); its columns are spelled
-    ``qual.prefix+col`` (an as-of pair shares one frame and prefixes
-    each side's columns with its source key)."""
+    """One FROM/JOIN source of a query level. ``sql`` is its FROM item:
+    a slot (a family's SQL text or a frame) or a CTE body. Its columns
+    are spelled ``qual.prefix+col`` (an as-of pair shares one frame and
+    prefixes each side's columns with its source key)."""
 
     kind: str  # 'family' | 'table' | 'lateral'
     cols: list
@@ -1908,9 +1889,6 @@ class _Src:
     sql: str = ""
     dtypes: dict = field(default_factory=dict)
     series: set = field(default_factory=set)
-    #: DataFrame pre-steps on a family frame (TABLESAMPLE, LATERAL)
-    pre: list = field(default_factory=list)
-    df0: DataFrame | None = None
     qual: str = ""
     prefix: str = ""
     cte: str | None = None  # the text CTE it reads
@@ -2449,18 +2427,21 @@ _SLOT = re.compile("\x00(\\d+)\x00")
 
 
 class _Emitter:
-    """Prints one Spark SQL statement for a BoostQuery. Family sources
-    become DataFrame frames (view -> series ``isin`` -> implicit time
-    range -> pre-steps) that reach the text through PySpark's ``{name}``
-    DataFrame formatting; CTE and derived-table bodies inline at each reference; a recursive
-    CTE, an inline VALUES table and an as-of join are frames built by
-    their own code."""
+    """Prints one Spark SQL statement for a BoostQuery. A family source
+    is SQL text, ``(SELECT * FROM view WHERE <family_predicate>)``, and
+    CTE and derived-table bodies inline at each reference. A DataFrame
+    frame remains only where an operator needs one (an as-of join,
+    LATERAL ``tokenize``, TABLESAMPLE, an inline VALUES table, a
+    recursive CTE's working table); frames reach the text through
+    PySpark's ``{name}`` DataFrame formatting. Both are NUL-delimited
+    slots, built when the statement runs."""
 
     def __init__(self, spark, binding, start, end, params, ctes):
         self.spark, self.binding = spark, binding
         self.start, self.end, self.params = start, end, params
-        self.slots: list = []  # frame slot -> DataFrame | builder
-        self.built: dict[int, DataFrame] = {}
+        #: slot -> DataFrame, or a builder of a DataFrame or of SQL text
+        self.slots: list = []
+        self.built: dict[int, DataFrame | str] = {}
         self.ctes: dict[str, _Src] = {}
         self.n = 0
         #: ids of the top-level WHERE conjuncts that are a positive IN
@@ -2477,7 +2458,7 @@ class _Emitter:
         self.slots.append(obj)
         return f"\x00{len(self.slots) - 1}\x00"
 
-    def frame(self, i: int) -> DataFrame:
+    def frame(self, i: int) -> DataFrame | str:
         if i not in self.built:
             obj = self.slots[i]
             self.built[i] = obj if isinstance(obj, DataFrame) else obj()
@@ -2487,34 +2468,37 @@ class _Emitter:
         return _Src("table", list(df.columns), sql=self.slot(df), dtypes=dict(df.dtypes))
 
     def family(self, b: SeriesFamilyBinding) -> _Src:
-        df0 = self.spark.table(b.view)
-        src = _Src("family", list(df0.columns), b, dtypes=dict(df0.dtypes), df0=df0)
-        src.sql = self.slot(lambda: self.build_family(src))
+        """A family source prints as ``(SELECT * FROM view WHERE ...)``,
+        its predicate (``family_predicate``: the series the level names,
+        ANDed with the implicit time range) filled in when the statement
+        runs, once every name of the level is resolved."""
+        df = self.spark.table(b.view)
+        src = _Src("family", list(df.columns), b, dtypes=dict(df.dtypes))
+
+        def text() -> str:
+            where = family_predicate(
+                src.dtypes, sorted(src.series) or None, self.start, self.end,
+                b.series_col, b.ts_col,
+            )
+            return f"(SELECT * FROM {_ident(b.view)}{f' WHERE {where}' if where else ''})"
+
+        src.sql = self.slot(text)
         return src
 
-    def build_family(self, src: _Src) -> DataFrame:
-        """scan -> ONE filter: the series predicate (the FetchSeries
-        fan-out collapsed into one predicate parquet row-group stats can
-        skip on) ANDed with the implicit time range -> pre-steps."""
-        b = src.binding
-        series = sorted(src.series)
-        where = None
-        if len(series) == 1:
-            where = F.col(b.series_col) == series[0]
-        elif series:
-            where = F.col(b.series_col).isin(series)
-        df = apply_time_range(src.df0, self.start, self.end, ts_col=b.ts_col, where=where)
-        for step in src.pre:
-            df = step(df)
-        return df
-
     def run(self, text: str) -> DataFrame:
+        """``text`` as one ``spark.sql`` call: text slots are inlined,
+        frame slots reach it through PySpark's ``{name}`` formatting."""
+        text = _SLOT.sub(self._inline, text)
         args = {k: v for k, v in (self.params or {}).items() if f":{k}" in text} or None
         ids = sorted({int(i) for i in _SLOT.findall(text)})
         if not ids:
             return self.spark.sql(text, args=args)
         text = _SLOT.sub(r"{p\1}", text.replace("{", "{{").replace("}", "}}"))
         return self.spark.sql(text, args=args, **{f"p{i}": self.frame(i) for i in ids})
+
+    def _inline(self, m: re.Match) -> str:
+        obj = self.frame(int(m.group(1)))
+        return obj if isinstance(obj, str) else m.group(0)
 
     def cte_frame(self, name: str) -> DataFrame:
         src = self.ctes[name]
@@ -2746,14 +2730,14 @@ class _Emitter:
             lref = self.using(lref, seen, res)
             on.append((f"{lref.parts[0]}__{res.on_col(lref)[1]}", f"{kb}__{res.on_col(rref)[1]}"))
         text, qual = self.flatten(" ".join(items), res, seen)
+        rename = {rc: lc for lc, rc in on}  # asof_join's equi keys are same-name columns
+        rtext = "SELECT " + ", ".join(
+            f"{_ident(c)} AS {_ident(rename.get(f'{kb}__{c}', f'{kb}__{c}'))}" for c in right.cols
+        ) + f" FROM {right.sql} AS {_ident(kb)}"
 
         def build() -> DataFrame:
-            rgt = self.build_family(right)
-            rgt = rgt.select([F.col(c).alias(f"{kb}__{c}") for c in rgt.columns])
-            for lc, rc in on:  # asof_join's equi keys are same-name columns
-                rgt = rgt.withColumnRenamed(rc, lc)
             return asof_join(
-                self.run(text), rgt, on=[lc for lc, _ in on],
+                self.run(text), self.run(rtext), on=[lc for lc, _ in on],
                 ts_col=f"{seen[0]}__{left.binding.ts_col}",
                 right_ts_col=f"{kb}__{right.binding.ts_col}", direction="backward",
             )
@@ -2779,14 +2763,11 @@ class _Emitter:
                 "*", F.posexplode(tokens(F.expr(arg))).alias(f"{prefix}pos", f"{prefix}token")
             )
 
-        hosts = {r.parts[0] for r in _expr_refs(j.lateral_arg)}
-        host = res.srcs.get(next(iter(hosts))) if len(hosts) == 1 else None
-        if host is not None and host.kind == "family" and not host.prefix:
-            qual = host.qual
-            host.pre.append(step)
+        if len(res.srcs) == 1 and not res.single().prefix:  # keeps its names
+            text, qual = f"SELECT * FROM {items[0]}", res.single().qual
         else:
             text, qual = self.flatten(" ".join(items), res, list(res.srcs))
-            items = [f"{self.slot(lambda: step(self.run(text)))} AS {_ident(qual)}"]
+        items = [f"{self.slot(lambda: step(self.run(text)))} AS {_ident(qual)}"]
         arg = self.expr(j.lateral_arg, res, name_of=lambda r: _ident(
             (lambda src, col: src.prefix + col)(*res.on_col(r))
         ))
@@ -2814,11 +2795,8 @@ class _Emitter:
         def step(df: DataFrame) -> DataFrame:
             return df.filter(_bucket(F.col(s.key_col), 10_000) < cut)
 
-        if src.kind == "family":
-            src.pre.append(step)
-        else:
-            base = src.sql
-            src.sql = self.slot(lambda: step(self.run(f"SELECT * FROM {base} AS _ts")))
+        base = src.sql
+        src.sql = self.slot(lambda: step(self.run(f"SELECT * FROM {base} AS _ts")))
 
     def reshape(self, q: BoostQuery, src: _Src) -> _Src:
         """PIVOT/UNPIVOT on a plain-column anchor, in Spark's own
@@ -3328,8 +3306,12 @@ def plan(
 ) -> DataFrame:
     """Plan a BoostQuery as ONE Spark SQL statement (module docstring).
     ``binding`` may be a dict keyed by ``domain.family``; a single
-    binding serves every family source (self-joins). ``_ctes`` supplies
-    already-planned CTE frames (the fixpoint's working table)."""
+    binding serves every family source (self-joins). ``start``/``end``
+    bound every family source's ``ts`` to ``[start, end)``; they are
+    INT64 ns or None, and a family source with another type raises
+    ``ValueError``. ``_ctes``
+    supplies already-planned CTE frames (the fixpoint's working
+    table)."""
     em = _Emitter(spark, binding, start, end, params, _ctes)
     return em.run(em.query(q)[0])
 

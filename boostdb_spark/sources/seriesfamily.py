@@ -16,7 +16,7 @@ Reference semantics being re-expressed (not ported):
 
 Scale posture: the table is partitioned by ``ts_date = to_date(ts)``.
 Spark derives no partition filter from a predicate on ``ts`` alone, so
-``apply_time_range`` adds the matching ``ts_date`` bound itself (one day
+``family_predicate`` adds the matching ``ts_date`` bound itself (one day
 of slack each side: ``ts_date`` is a date in the WRITER's session zone,
 unknown at read time) and a time-ranged fetch lists only the days it
 asks for. Within a partition, ``write`` sizes files by volume (one
@@ -43,16 +43,14 @@ from __future__ import annotations
 
 import numbers
 from datetime import date, timedelta
-from functools import reduce
-from operator import and_
 
 import pyarrow.fs as pafs
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from boostdb_spark.functions.scalar import ts_sql
+from boostdb_spark.functions.scalar import _ident, _lit, ts_sql
 
 #: canonical column names (FIXTURES.md section 1)
 TS = "ts"
@@ -245,8 +243,8 @@ class SeriesFamily:
     def fetch(
         self,
         series: str | list[str] | None = None,
-        start=None,
-        end=None,
+        start: int | None = None,
+        end: int | None = None,
         ordered: bool = True,
     ) -> DataFrame:
         """Time-ordered scan of one/many/all series in ``[start, end)``.
@@ -255,18 +253,18 @@ class SeriesFamily:
         188-222, boostseriesiterator.go:157-343): the implicit time range
         every reference query carries (query/executor/executor.go:145-147)
         is an explicit predicate here: ONE filter on the held relation
-        (see ``read``), the series predicate ANDed with the time range.
-        INT64-ns bounds prune ``ts_date`` partitions to
+        (see ``read``), the text of ``family_predicate`` in one
+        ``F.expr``. ``start``/``end`` are INT64 ns or None (the
+        reference's contract); another type raises ``ValueError``. The
+        bounds prune ``ts_date`` partitions to
         ``[date(start) - 1 day, date(end - 1 ns) + 1 day]`` (the slack
-        covers any writer time zone, see ``apply_time_range``) and reach
-        the parquet scan as PushedFilters for row-group skipping.
+        covers any writer time zone) and reach the parquet scan as
+        PushedFilters for row-group skipping.
         """
-        where = None
-        if isinstance(series, str):
-            where = F.col(SERIES) == series
-        elif series is not None:
-            where = F.col(SERIES).isin(series)
-        df = apply_time_range(self.read(), start, end, where=where)
+        df = self.read()
+        where = family_predicate(dict(df.dtypes), series, start, end)
+        if where:
+            df = df.filter(F.expr(where))
         if ordered:
             # Per-series time order with deterministic tie-break — the
             # contract the k-way merge iterator provides
@@ -289,55 +287,70 @@ class SeriesFamily:
 
 
 def apply_time_range(
-    df: DataFrame, start=None, end=None, ts_col: str = TS, where: Column | None = None
+    df: DataFrame, start: int | None = None, end: int | None = None, ts_col: str = TS
 ) -> DataFrame:
-    """``[start, end)`` half-open time-range predicate (executor.go:239-252).
+    """``[start, end)`` half-open time-range predicate (executor.go:239-252)
+    as one ``filter`` of one ``F.expr``: ``family_predicate`` with no
+    series. ``start``/``end`` are INT64 ns or None; another type raises
+    ``ValueError``."""
+    where = family_predicate(dict(df.dtypes), start=start, end=end, ts_col=ts_col)
+    return df.filter(F.expr(where)) if where else df
 
-    Works for TimestampType and INT64-ns ``ts`` columns alike; INT64-ns
-    bounds are printed as literals of the column's native dtype
-    (``ts_sql``), so the predicate still reaches the parquet scan as
-    PushedFilters.
 
-    On a series-family frame (``ts_col`` is ``ts`` and the frame carries
-    the ``ts_date`` partition column) an INT64-ns bound also bounds
-    ``ts_date``, which Spark prunes partitions by: it derives no
-    partition filter from ``ts`` itself. ``ts_date`` is ``to_date(ts)``
-    in the writer's session time zone, unknown here, so the bound is
-    the UTC date widened by one day each side; every zone offset is
-    under a day, so no row in range is dropped.
+def family_predicate(
+    dtypes: dict,
+    series=None,
+    start: int | None = None,
+    end: int | None = None,
+    series_col: str = SERIES,
+    ts_col: str = TS,
+) -> str | None:
+    """SQL text of a family scan's one predicate, or None when it has
+    nothing to filter: the series (the FetchSeries fan-out, planner.go:
+    149-157; ``None`` is every series) ANDed with the half-open
+    ``[start, end)`` range. ``dtypes`` are the frame's column types.
 
-    The INT64-ns bounds, ``ts`` and ``ts_date`` alike, are one SQL
-    expression (one ``F.expr``): every Column call is a py4j round trip,
-    and a ranged fetch would otherwise build about a dozen. Other bounds
-    (datetime, string) compare ``ts`` with ``F.lit``. ``where`` (a
-    caller's own predicate, such as a series filter) is ANDed in front
-    of the bounds, and the frame gets ONE ``filter``: Spark analyzes
-    every DataFrame call eagerly, so each extra filter is an extra
-    analysis of the whole plan.
-    """
+    Every value is a quoted literal (``functions.scalar._lit``); the
+    INT64-ns bounds are literals of ``ts``'s native dtype (``ts_sql``),
+    so they reach the parquet scan as PushedFilters. On a series-family
+    frame (``ts_col`` is ``ts`` and ``ts_date`` is a column) the bounds
+    also bound ``ts_date``, which Spark prunes partitions by: it derives
+    no partition filter from ``ts`` itself. ``ts_date`` is
+    ``to_date(ts)`` in the writer's session time zone, unknown here, so
+    the bound is the UTC date widened by one day each side; every zone
+    offset is under a day, so no row in range is dropped.
+
+    ``start``/``end`` are INT64 ns (any ``numbers.Integral``) or None,
+    else ``ValueError`` naming the type: a float would compare in double
+    precision (256 ns apart at 2024 instants), and a ``datetime`` does
+    not compare with an INT64 ``ts`` at all."""
+    for name, v in (("start", start), ("end", end)):
+        if v is not None and not isinstance(v, numbers.Integral):
+            raise ValueError(
+                f"time-range {name} must be INT64 nanoseconds or None, "
+                f"not {type(v).__name__} ({v!r})"
+            )
 
     def _day(ns: int) -> date:
         return date(1970, 1, 1) + timedelta(days=int(ns) // DAY_NS)
 
-    conds = [] if where is None else [where]
-    text = []
-    col = "`" + ts_col.replace("`", "``") + "`"
-    pruned = ts_col == TS and DATE_COL in df.columns
-    if isinstance(start, numbers.Integral):
-        text.append(f"{col} >= {ts_sql(dict(df.dtypes)[ts_col], start)}")
+    conds = []
+    if series is not None:
+        names = [series] if isinstance(series, str) else list(series)
+        conds.append(
+            f"{_ident(series_col)} IN ({', '.join(map(_lit, names))})" if names else "false"
+        )
+    ts = _ident(ts_col)
+    pruned = ts_col == TS and DATE_COL in dtypes
+    if start is not None:
+        conds.append(f"{ts} >= {ts_sql(dtypes[ts_col], start)}")
         if pruned:
-            text.append(f"{DATE_COL} >= DATE'{_day(start) - timedelta(days=1)}'")
-    elif start is not None:
-        conds.append(F.col(ts_col) >= F.lit(start))
-    if isinstance(end, numbers.Integral):
-        text.append(f"{col} < {ts_sql(dict(df.dtypes)[ts_col], end)}")
+            conds.append(f"{DATE_COL} >= DATE'{_day(start) - timedelta(days=1)}'")
+    if end is not None:
+        conds.append(f"{ts} < {ts_sql(dtypes[ts_col], end)}")
         if pruned:
-            text.append(f"{DATE_COL} <= DATE'{_day(end - 1) + timedelta(days=1)}'")
-    elif end is not None:
-        conds.append(F.col(ts_col) < F.lit(end))
-    if text:
-        conds.append(F.expr(" AND ".join(text)))
-    return df.filter(reduce(and_, conds)) if conds else df
+            conds.append(f"{DATE_COL} <= DATE'{_day(end - 1) + timedelta(days=1)}'")
+    return " AND ".join(conds) or None
 
 
 def _qualified_uri(spark: SparkSession, path: str) -> str | None:

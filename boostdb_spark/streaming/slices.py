@@ -23,8 +23,9 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from boostdb_spark.sources.seriesfamily import apply_time_range
 
 NS_PER_SEC = 1_000_000_000
 
@@ -38,21 +39,17 @@ def time_slices(
 ) -> Iterator[tuple[int, int, DataFrame]]:
     """Yield ``(slice_start_ns, slice_end_ns, slice_df)`` over the
     half-open span ``[start_ns, end_ns)`` in ``window_ns`` steps — the
-    executor's window-advance loop (executor.go:239-252). ``ts_col`` is
-    INT64 ns (TimestampType works too if the bounds are timestamps).
+    executor's window-advance loop (executor.go:239-252). The bounds
+    are INT64 ns; ``ts_col`` may be INT64 ns or a timestamp column.
 
-    Each slice predicate reaches the scan (partition pruning + row-group
-    skipping), so iterating all slices reads each byte once.
+    Each slice is ``apply_time_range``, so its predicate reaches the
+    scan (partition pruning + row-group skipping) and iterating all
+    slices reads each byte once.
     """
-    from boostdb_spark.functions.scalar import ts_lit
-
     lo = start_ns
     while lo < end_ns:
         hi = min(lo + window_ns, end_ns)
-        yield lo, hi, df.filter(
-            (F.col(ts_col) >= ts_lit(df, lo, col=ts_col))
-            & (F.col(ts_col) < ts_lit(df, hi, col=ts_col))
-        )
+        yield lo, hi, apply_time_range(df, lo, hi, ts_col)
         lo = hi
 
 

@@ -143,24 +143,26 @@ def _q(name: str, oracle: str | None):
 # agg_approx_count_distinct / agg_approx_quantiles are oracle-less
 # (approx by design) with driver-green history — below the fold.
 _WINDOW: tuple[str, ...] = (
-    # CHANGED CODE FIRST — the dialect entries whose plan changed under
-    # the one-SQL-statement front (tools/sugar_plan_diff.py) and the
-    # dialect canaries, then the series-family / streaming-drain cohort, the
-    # standing canaries and the LLM-pipeline entries.
+    # CHANGED CODE FIRST — the entries that read a family source printed
+    # as SQL text or a frame-wrapped TABLESAMPLE / LATERAL / ASOF source
+    # (tools/sugar_plan_diff.py), then the dialect entries of the
+    # one-SQL-statement front and the dialect canaries, then the
+    # series-family / streaming-drain cohort, the standing canaries and
+    # the LLM-pipeline entries.
+    "dialect_sample", "dialect_lateral_tokenize", "dialect_asof_join",
+    "flagship_series_scan",   # scan + dialect front + implicit range
+    "dialect_params",         # placeholder binding (:x via args)
+    "seriesfamily_roundtrip",  # fetch: one printed predicate
     "dialect_agg_expr", "dialect_arg_minmax", "dialect_bool_agg",
     "dialect_cte", "dialect_exists", "dialect_filter_agg",
     "dialect_group_all", "dialect_group_expr", "dialect_grouping_sets",
     "dialect_join", "dialect_join_full", "dialect_join_left",
     "dialect_join_multi", "dialect_join_multikey", "dialect_join_right",
-    "dialect_join_theta", "dialect_lateral_tokenize", "dialect_limit_ties",
+    "dialect_join_theta", "dialect_limit_ties",
     "dialect_nulls_order", "dialect_pivot_sum", "dialect_select_scalar_sub",
     "dialect_string_agg", "dialect_subquery", "dialect_unpivot",
     "dialect_using", "dialect_values",
-    "flagship_series_scan",   # scan + dialect front + implicit range
-    "dialect_params",         # placeholder binding (:x via args)
     "dialect_frame_exclude",  # EXCLUDE lowering, now SQL text
-    # --- series-family read path ---
-    "seriesfamily_roundtrip",
     # --- streaming drain / window-helper consolidation ---
     "stream_session_parity", "stream_sliding_parity",
     "stream_ewma_parity", "stream_locf_parity",
@@ -168,17 +170,18 @@ _WINDOW: tuple[str, ...] = (
     "window_sliding_agg",       # windows.py shared _window_agg body
     "window_session_agg",
     "stream_batch_parity", "stream_cascade_parity",
-    "stream_retention_parity", "stream_dedup_parity",
     # --- standing canaries and LLM-pipeline coverage ---
     "agg_groupby_q1",         # grouped aggregation
     "ts_irate",               # time-series functions
     "dedup_exact",            # dedup family
     "dedup_keep_best", "dedup_groups", "dedup_containment",
     "txt_bm25_topk", "pipeline_hybrid_rrf",
-    # ROTATION PREP — queued next: the r15 cohort (stream_rollup_parity,
+    # ROTATION PREP — queued next: stream_retention_parity and
+    # stream_dedup_parity (left the window for dialect_sample and
+    # dialect_asof_join), the r15 cohort (stream_rollup_parity,
     # stream_join_parity, stream_outer_join_parity), then the ROUND-8
     # remainder: agg_unpivot, dedup_decontaminate, dedup_ngram_jaccard,
-    # dedup_ngram_jaccard_capped, dialect_asof_join, dialect_qualify,
+    # dedup_ngram_jaccard_capped, dialect_qualify,
     # dialect_select_star, distinct_series, scan_hive_partition_prune,
     # scan_schema_evolution, scan_snapshot_apply, subquery_exists,
     # time_bucket_agg, ts_histogram_quantile, ts_interp_align,

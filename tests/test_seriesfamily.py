@@ -1,6 +1,9 @@
 """Series-family storage layer: the programmatic write/fetch path
 (reference: client/m3dbseriesfamily.go Write/Fetch + merge iterator)."""
 
+from datetime import datetime
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,6 +67,10 @@ def test_fetch_time_range_half_open(spark, family):
         "cpu_utilization", start=t0 + 2_000_000_000, end=t0 + 5_000_000_000
     ).collect()
     assert [r.value for r in out] == [3.0, 4.0, 5.0]  # [start, end) — i in [2,5)
+    # a numpy integer is INT64 ns like a Python int
+    assert family.fetch(
+        "cpu_utilization", start=np.int64(t0 + 2_000_000_000), end=np.int64(t0 + 5_000_000_000)
+    ).collect() == out
 
 
 def test_schema_evolution_on_append(spark, family, tmp_path):
@@ -418,6 +425,98 @@ def test_warm_ranged_fetch_makes_few_py4j_round_trips(spark, family):
         del client.send_command
     assert len(calls) <= 12, calls
     assert df.count() == 10
+
+
+@pytest.mark.parametrize(
+    "bound", [1.7040672e18, datetime(2024, 1, 1), "2024-01-01"],
+    ids=["float", "datetime", "str"],
+)
+def test_time_bounds_are_int64_ns_or_none(spark, family, bound):
+    """``start``/``end`` are INT64 ns or None everywhere a time range is
+    taken. A float bound compared in double precision (256 ns apart at
+    2024 instants) and pruned no ts_date partition, and a datetime bound
+    over an INT64 ``ts`` failed in Spark's analyzer; now every entry
+    point raises a ValueError naming the bound's type."""
+    from boostdb_spark.plans import sugar
+    from boostdb_spark.sources.seriesfamily import apply_time_range
+
+    family.write(_fixture_df(spark))
+    family.register()
+    binding = sugar.SeriesFamilyBinding(view=family.view_name)
+    name = type(bound).__name__
+    calls = [
+        lambda: family.fetch("cpu_utilization", start=bound),
+        lambda: family.fetch(end=bound),
+        lambda: apply_time_range(family.read(), bound, None),
+        lambda: sugar.query(
+            spark, "SELECT cpu_utilization FROM b.f", binding, end=bound
+        ),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match=f"INT64 nanoseconds or None, not {name}"):
+            call()
+
+
+def test_fetch_quotes_hostile_series_names(spark, family):
+    """Series names reach the fetch predicate as SQL text: each must
+    select the same rows as a Column-literal filter."""
+    names = ["it's", "back\\slash\\", "a -- b", "x; DROP TABLE t", "{p0}", "}{",
+             "nul\x00x", "日本語 ü", "plain"]
+    t0 = 1_704_067_200_000_000_000
+    family.write(spark.createDataFrame(
+        [(n, t0 + i * 1_000_000_000, float(i)) for i, n in enumerate(names)],
+        "series string, ts long, value double",
+    ))
+    held = family.read()
+    for n in names:
+        got = family.fetch(n, t0, t0 + DAY_NS, ordered=False).collect()
+        want = held.filter(F.col("series") == F.lit(n)).collect()
+        assert got == want and len(want) == 1, n
+    got = family.fetch(names[:5], t0, t0 + DAY_NS).collect()
+    assert sorted(r.series for r in got) == sorted(names[:5])
+
+
+def test_warm_dialect_plan_registers_no_view(spark, family):
+    """A warm dialect plan of the tsdb_query point_range shape prints its
+    family source as SQL text: it registers no temp view, hands
+    ``spark.sql`` no DataFrame argument, and makes at most 12 gateway
+    round trips, counted like the fetch guard above (9 on a 4-core
+    host). Built as a filtered DataFrame that PySpark registered and
+    dropped as a temp view on every plan, it made 20."""
+    from boostdb_spark.plans import sugar
+
+    family.write(_fixture_df(spark))
+    family.register()
+    binding = sugar.SeriesFamilyBinding(view=family.view_name)
+    q = sugar.parse(
+        "SELECT cpu_utilization.host, cpu_utilization FROM b.f WHERE cpu_utilization < :x"
+    )
+    start = 1_704_067_200_000_000_000
+
+    def plan():
+        return sugar.plan(spark, q, binding, start=start, end=start + DAY_NS,
+                          params={"x": 5.5})
+
+    plan()
+    df_cls, spark_cls = type(family.read()), type(spark)
+    view, sql = df_cls.createOrReplaceTempView, spark_cls.sql
+    views, kwargs = [], []
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+    df_cls.createOrReplaceTempView = lambda self, name: views.append(name) or view(self, name)
+    spark_cls.sql = lambda self, text, args=None, **kw: kwargs.append(kw) or sql(
+        self, text, args, **kw
+    )
+    client.send_command = lambda *a, **k: calls.append(a) or send(*a, **k)
+    try:
+        df = plan()
+    finally:
+        del client.send_command
+        df_cls.createOrReplaceTempView, spark_cls.sql = view, sql
+    assert views == [] and kwargs == [{}], (views, kwargs)
+    assert len(calls) <= 12, len(calls)
+    assert sorted(r.value for r in df.collect()) == [1.0, 2.0, 3.0, 4.0, 5.0]
 
 
 def test_compact_collapses_small_files(spark, tmp_path):

@@ -294,3 +294,24 @@ def test_aggregate_call_outside_aggregation_is_refused(spark, tbl, sql):
     argument column."""
     with pytest.raises(ValueError, match="outside an aggregation scope"):
         sugar.query(spark, sql, _B)
+
+
+@pytest.mark.parametrize("frame", ["asof", "values"])
+def test_brace_literals_beside_frames(spark, tbl, frame):
+    """A statement that names a DataFrame frame (an as-of join, a VALUES
+    table) goes through PySpark's ``{name}`` formatting, so every brace
+    of its inlined text (the family sources and the literals) must come
+    through escaped."""
+    if frame == "asof":
+        sql = (
+            "SELECT a.purchase.mts AS t, c.purchase AS v, '{p0}' AS s FROM d.f a "
+            "ASOF JOIN d.f c ON a.order = c.order WHERE a.purchase.note <> '}{'"
+        )
+        want = [(0, 1.0, "{p0}"), (1, 2.0, "{p0}"), (2, 3.0, "{p0}")]
+    else:
+        sql = (
+            "SELECT a.purchase.mts AS t, v.k AS k, '{' AS s FROM d.f a "
+            "JOIN (VALUES ('{p0}', 'plain'), ('}{', 'x')) v(k, n) ON a.note = v.n"
+        )
+        want = [(1, "{p0}", "{"), (2, "}{", "{")]
+    assert sorted(map(tuple, sugar.query(spark, sql, _B).collect())) == want

@@ -7,14 +7,18 @@ For every suite entry that calls ``sugar.query`` / ``sugar.plan``,
 each checkout prints the optimized logical plan and the formatted
 physical plan with expression ids, plan ids, RDD and application ids,
 temp-view names and input paths removed. Entries are then listed as
-identical or changed, with a unified diff for each changed one.
+``identical``, ``logical-only`` (the same physical plan under a
+different optimized logical plan, such as an AND tree grouped another
+way) or ``changed`` (the physical plan differs, or the entry failed to
+plan), with a unified diff for each entry that is not identical.
 
 Run (each checkout plans in its own process, on its own code):
 
     python tools/sugar_plan_diff.py PARENT_CHECKOUT CHANGE_CHECKOUT \\
         --sf TESTDATA_SF_DIR --out OUT_DIR
 
-writes ``summary.txt`` and one ``<entry>.diff`` per changed entry.
+writes ``summary.txt`` and one ``<entry>.diff`` per entry that is not
+identical.
 """
 
 from __future__ import annotations
@@ -43,6 +47,10 @@ def _normalize(text: str) -> str:
     for pat, rep in _NORMALIZE:
         text = pat.sub(rep, text)
     return text.strip() + "\n"
+
+
+def _physical(plan: str) -> str:
+    return plan.partition("== Physical Plan ==")[2]
 
 
 def _tsdb_frames(spark, checkout: Path, work: str) -> dict:
@@ -157,19 +165,23 @@ def main() -> None:
             sides.append(json.loads(js.read_text()))
     before, after = sides
     a.out.mkdir(parents=True, exist_ok=True)
-    lines = []
+    lines, counts = [], dict.fromkeys(("identical", "logical-only", "changed"), 0)
     for name in sorted(set(before) | set(after)):
         b, c = before.get(name, "MISSING\n"), after.get(name, "MISSING\n")
         if b == c:
-            lines.append(f"identical  {name}")
-            continue
-        lines.append(f"changed    {name}")
-        diff = difflib.unified_diff(
-            b.splitlines(True), c.splitlines(True), "parent", "change", n=2
-        )
-        (a.out / f"{name.replace(':', '__')}.diff").write_text("".join(diff))
-    n_changed = sum(ln.startswith("changed") for ln in lines)
-    lines.append(f"\n{len(lines) - n_changed} identical, {n_changed} changed")
+            kind = "identical"
+        elif _physical(b) and _physical(b) == _physical(c):
+            kind = "logical-only"
+        else:
+            kind = "changed"
+        counts[kind] += 1
+        lines.append(f"{kind:<13}{name}")
+        if kind != "identical":
+            diff = difflib.unified_diff(
+                b.splitlines(True), c.splitlines(True), "parent", "change", n=2
+            )
+            (a.out / f"{name.replace(':', '__')}.diff").write_text("".join(diff))
+    lines.append("\n" + ", ".join(f"{n} {kind}" for kind, n in counts.items()))
     (a.out / "summary.txt").write_text("\n".join(lines) + "\n")
     print("\n".join(lines))
 
