@@ -29,7 +29,10 @@ SF0001 = "/root/testdata/sf0.001"
 #: build (the driver's own): the reader and plan settings its queries
 #: depend on. PySpark's DataFrame debugging key is not among them: it
 #: is a static config (a runtime set raises CANNOT_MODIFY_STATIC_CONFIG),
-#: so such a session keeps PySpark's per-call origin capture.
+#: so a session ``get_spark`` did not build keeps PySpark's per-call
+#: origin capture, about 4 extra py4j round trips per Column call. To
+#: avoid it, build the session with
+#: ``spark.python.sql.dataFrameDebugging.enabled=false``.
 RUNTIME_KEYS = (
     # the events fixture is TIMESTAMP(NANOS) parquet
     "spark.sql.legacy.parquet.nanosAsLong",

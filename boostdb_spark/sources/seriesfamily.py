@@ -22,8 +22,25 @@ unknown at read time) and a time-ranged fetch lists only the days it
 asks for. Within a partition, ``write`` sizes files by volume (one
 file for a small day, files of about the AQE advisory partition size
 for a big one) and sorts each file by ``(series, ts)``, so min/max
-row-group and page stats make series and time predicates skippable
-inside a file.
+row-group and page stats make series predicates skippable inside a
+file.
+
+The exact ``[start, end)`` check on a family scan is evaluated, not
+compiled: ``exists(array(ts), _t -> _t >= lo AND _t < hi)``. Spark
+inlines long and double literals into whole-stage generated Java, so
+plain ``ts`` comparisons made every new range compile the scan's
+class again, twice (Spark's compile cache is keyed by class loader
+too, and the py4j and executor threads use different loaders): 16
+Janino compiles per warm round of perfbench's seven ``tsdb_query``
+operations. The lambda keeps its literals inside the expression
+object, so the generated source is the same for every range and a
+warm round compiles 2. The costs, all on a family scan:
+``ts`` leaves the scan's PushedFilters, so the rows of the ±1-day
+slack days are decoded rather than skipped by row-group statistics
+(traced seed 7 ``spark.rows_scanned_per_result`` 258.6 → 297.5); the
+Filter leaves whole-stage codegen; and each row that reaches the
+check is interpreted. A frame without ``ts_date`` keeps plain
+comparisons, since ``ts`` statistics are all the skipping it has.
 
 A handle holds one analyzed relation per file set. Parquet files are
 immutable once written (Spark writers only add files under fresh names
@@ -258,8 +275,12 @@ class SeriesFamily:
         reference's contract); another type raises ``ValueError``. The
         bounds prune ``ts_date`` partitions to
         ``[date(start) - 1 day, date(end - 1 ns) + 1 day]`` (the slack
-        covers any writer time zone) and reach the parquet scan as
-        PushedFilters for row-group skipping.
+        covers any writer time zone); the series reach the parquet scan
+        as PushedFilters. The exact ``ts`` check is evaluated, so a new
+        range compiles nothing, at the costs the module docstring
+        lists: ``ts`` is not in PushedFilters (the slack days' rows are
+        decoded), the Filter is outside whole-stage codegen, and each
+        row that reaches the check is interpreted.
         """
         df = self.read()
         where = family_predicate(dict(df.dtypes), series, start, end)
@@ -292,7 +313,12 @@ def apply_time_range(
     """``[start, end)`` half-open time-range predicate (executor.go:239-252)
     as one ``filter`` of one ``F.expr``: ``family_predicate`` with no
     series. ``start``/``end`` are INT64 ns or None; another type raises
-    ``ValueError``."""
+    ``ValueError``. On a series-family frame (``ts_date`` is a column
+    and ``ts_col`` is ``ts``) the ``ts`` check is the evaluated one
+    ``fetch`` uses: ``ts`` is not in PushedFilters, the Filter is
+    outside whole-stage codegen and each row that reaches the check is
+    interpreted. On any other frame the bounds are plain comparisons
+    and reach the scan as PushedFilters, its only time skipping."""
     where = family_predicate(dict(df.dtypes), start=start, end=end, ts_col=ts_col)
     return df.filter(F.expr(where)) if where else df
 
@@ -311,14 +337,22 @@ def family_predicate(
     ``[start, end)`` range. ``dtypes`` are the frame's column types.
 
     Every value is a quoted literal (``functions.scalar._lit``); the
-    INT64-ns bounds are literals of ``ts``'s native dtype (``ts_sql``),
-    so they reach the parquet scan as PushedFilters. On a series-family
-    frame (``ts_col`` is ``ts`` and ``ts_date`` is a column) the bounds
-    also bound ``ts_date``, which Spark prunes partitions by: it derives
-    no partition filter from ``ts`` itself. ``ts_date`` is
-    ``to_date(ts)`` in the writer's session time zone, unknown here, so
-    the bound is the UTC date widened by one day each side; every zone
-    offset is under a day, so no row in range is dropped.
+    INT64-ns bounds are literals of ``ts``'s native dtype (``ts_sql``).
+    On a series-family frame (``ts_col`` is ``ts`` and ``ts_date`` is a
+    column) the bounds bound ``ts_date``, which Spark prunes partitions
+    by: it derives no partition filter from ``ts`` itself. ``ts_date``
+    is ``to_date(ts)`` in the writer's session time zone, unknown here,
+    so the bound is the UTC date widened by one day each side; every
+    zone offset is under a day, so no row in range is dropped. There the
+    exact check is ``exists(array(ts), _t -> _t >= lo AND _t < hi)``:
+    Spark inlines long literals into whole-stage generated Java, so
+    plain comparisons compiled the scan again for every new range,
+    while a higher-order function is evaluated and its literals stay
+    in the expression object. The price: ``ts`` is not in the scan's
+    PushedFilters (the slack days' rows are decoded), the Filter is
+    outside whole-stage codegen, and each row that reaches the check
+    is interpreted. On any other frame the bounds are plain
+    comparisons and reach the parquet scan as PushedFilters.
 
     ``start``/``end`` are INT64 ns (any ``numbers.Integral``) or None,
     else ``ValueError`` naming the type: a float would compare in double
@@ -342,14 +376,22 @@ def family_predicate(
         )
     ts = _ident(ts_col)
     pruned = ts_col == TS and DATE_COL in dtypes
+    t = "_t" if pruned else ts
+    check = []
     if start is not None:
-        conds.append(f"{ts} >= {ts_sql(dtypes[ts_col], start)}")
-        if pruned:
-            conds.append(f"{DATE_COL} >= DATE'{_day(start) - timedelta(days=1)}'")
+        check.append(f"{t} >= {ts_sql(dtypes[ts_col], start)}")
     if end is not None:
-        conds.append(f"{ts} < {ts_sql(dtypes[ts_col], end)}")
-        if pruned:
-            conds.append(f"{DATE_COL} <= DATE'{_day(end - 1) + timedelta(days=1)}'")
+        check.append(f"{t} < {ts_sql(dtypes[ts_col], end)}")
+    if pruned and check:
+        # a lambda's literals stay inside the expression object, so the
+        # scan's generated source is the same for every range
+        conds.append(f"exists(array({ts}), _t -> {' AND '.join(check)})")
+    else:
+        conds += check
+    if pruned and start is not None:
+        conds.append(f"{DATE_COL} >= DATE'{_day(start) - timedelta(days=1)}'")
+    if pruned and end is not None:
+        conds.append(f"{DATE_COL} <= DATE'{_day(end - 1) + timedelta(days=1)}'")
     return " AND ".join(conds) or None
 
 

@@ -42,9 +42,12 @@ def time_slices(
     executor's window-advance loop (executor.go:239-252). The bounds
     are INT64 ns; ``ts_col`` may be INT64 ns or a timestamp column.
 
-    Each slice is ``apply_time_range``, so its predicate reaches the
-    scan (partition pruning + row-group skipping) and iterating all
-    slices reads each byte once.
+    Each slice is ``apply_time_range``. On a frame without ``ts_date``
+    its bounds reach the scan as PushedFilters (row-group skipping), so
+    iterating all slices reads each byte once. On a series-family frame
+    a slice prunes ``ts_date`` partitions with one day of slack each
+    side and checks ``ts`` after the scan, so a slice also decodes the
+    rows of its slack days.
     """
     lo = start_ns
     while lo < end_ns:

@@ -143,16 +143,20 @@ def _q(name: str, oracle: str | None):
 # agg_approx_count_distinct / agg_approx_quantiles are oracle-less
 # (approx by design) with driver-green history — below the fold.
 _WINDOW: tuple[str, ...] = (
-    # CHANGED CODE FIRST — the entries that read a family source printed
-    # as SQL text or a frame-wrapped TABLESAMPLE / LATERAL / ASOF source
-    # (tools/sugar_plan_diff.py), then the dialect entries of the
-    # one-SQL-statement front and the dialect canaries, then the
-    # series-family / streaming-drain cohort, the standing canaries and
-    # the LLM-pipeline entries.
-    "dialect_sample", "dialect_lateral_tokenize", "dialect_asof_join",
+    # CHANGED CODE FIRST — the entries whose time range family_predicate
+    # prints: fetches on a family frame (evaluated ts check) and the
+    # time-ranged scans and dialect queries over a frame without ts_date
+    # (plain pushed bounds), then the ASOF frame source, the dialect
+    # entries of the one-SQL-statement front and the dialect canaries,
+    # then the series-family / streaming-drain cohort, the standing
+    # canaries and the LLM-pipeline entries.
     "flagship_series_scan",   # scan + dialect front + implicit range
+    "seriesfamily_roundtrip",  # fetch on a family frame
+    "scan_time_sliced",       # time_slices over apply_time_range
     "dialect_params",         # placeholder binding (:x via args)
-    "seriesfamily_roundtrip",  # fetch: one printed predicate
+    "dialect_window",         # time-ranged dialect window query
+    "stream_ingest_parity",   # fetch on a stream-written family
+    "dialect_asof_join",
     "dialect_agg_expr", "dialect_arg_minmax", "dialect_bool_agg",
     "dialect_cte", "dialect_exists", "dialect_filter_agg",
     "dialect_group_all", "dialect_group_expr", "dialect_grouping_sets",
@@ -166,7 +170,7 @@ _WINDOW: tuple[str, ...] = (
     # --- streaming drain / window-helper consolidation ---
     "stream_session_parity", "stream_sliding_parity",
     "stream_ewma_parity", "stream_locf_parity",
-    "stream_upsert_parity", "stream_ingest_parity",
+    "stream_upsert_parity",
     "window_sliding_agg",       # windows.py shared _window_agg body
     "window_session_agg",
     "stream_batch_parity", "stream_cascade_parity",
@@ -176,9 +180,10 @@ _WINDOW: tuple[str, ...] = (
     "dedup_exact",            # dedup family
     "dedup_keep_best", "dedup_groups", "dedup_containment",
     "txt_bm25_topk", "pipeline_hybrid_rrf",
-    # ROTATION PREP — queued next: stream_retention_parity and
-    # stream_dedup_parity (left the window for dialect_sample and
-    # dialect_asof_join), the r15 cohort (stream_rollup_parity,
+    # ROTATION PREP — queued next: dialect_sample and
+    # dialect_lateral_tokenize (left the window for scan_time_sliced and
+    # dialect_window), stream_retention_parity and stream_dedup_parity,
+    # the r15 cohort (stream_rollup_parity,
     # stream_join_parity, stream_outer_join_parity), then the ROUND-8
     # remainder: agg_unpivot, dedup_decontaminate, dedup_ngram_jaccard,
     # dedup_ngram_jaccard_capped, dialect_qualify,

@@ -302,8 +302,10 @@ def test_hive_partition_prune_in_plan(spark):
 )
 def test_dialect_time_range_prunes_family_partitions(spark, tmp_path, sql):
     """A time-ranged dialect query over a registered series-family view
-    prunes ts_date DIRECTORIES in every scan, while the ts bounds stay
-    pushed to parquet."""
+    prunes ts_date DIRECTORIES in every scan, pushes each scan's series
+    to parquet, evaluates the exact ts check in the scan's Filter (one
+    ``exists`` over ``array(ts)``, whose generated code is the same for
+    every range) and keeps the Project in whole-stage codegen."""
     from boostdb_spark.plans import sugar
     from boostdb_spark.sources import SeriesFamily
 
@@ -317,13 +319,22 @@ def test_dialect_time_range_prunes_family_partitions(spark, tmp_path, sql):
     ))
     fam.register()
     binding = sugar.SeriesFamilyBinding(view=fam.view_name)
-    df = sugar.query(spark, sql, binding, start=t0 + 4 * day, end=t0 + 5 * day)
+    start, end = t0 + 4 * day, t0 + 5 * day
+    df = sugar.query(spark, sql, binding, start=start, end=end)
+    df.collect()  # the final adaptive plan marks its codegen stages
     p = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-    pf = [ln for ln in p.splitlines() if "PartitionFilters" in ln]
+    lines = p.splitlines()
+    pf = [ln for ln in lines if "PartitionFilters" in ln]
     assert pf and all("ts_date" in ln for ln in pf), pf
-    assert "GreaterThanOrEqual(ts," in p and "LessThan(ts," in p
+    pushed = [ln for ln in lines if ln.startswith("PushedFilters")]
+    assert len(pushed) == len(pf) and all("EqualTo(series," in ln for ln in pushed), pushed
+    # formatted mode prints the final adaptive plan and the initial one
+    checks = [ln for ln in lines if ln.startswith("Condition") and "exists(array(ts#" in ln]
+    assert len(checks) >= len(pf), p
+    assert all(f">= {start})" in ln and f"< {end})" in ln for ln in checks), checks
+    assert "Project [codegen id" in p, p
 
 
 def test_bm25_single_broadcast_stats_join(spark):

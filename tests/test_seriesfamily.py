@@ -360,8 +360,11 @@ def _files_by_date(path):
 def test_time_range_is_half_open_in_every_ts_dtype(spark, tmp_path, dtype):
     """The SQL-text bounds keep [start, end) exact for ns-long, TIMESTAMP
     and TIMESTAMP_NTZ ``ts`` under a non-UTC session zone, with ns bounds
-    off the µs grid, and still reach the scan: the ts bounds as
-    PushedFilters, the ts_date bounds as PartitionFilters."""
+    off the µs grid. On a frame with ``ts_date`` the ts_date bounds reach
+    the scan as PartitionFilters, the exact ts check is evaluated in the
+    Filter (one ``exists`` over ``array(ts)``, whose generated code is
+    the same for every range) and the Project stays in whole-stage
+    codegen."""
     from boostdb_spark.sources.seriesfamily import apply_time_range
 
     t_mid = 1_704_240_000_000_000_000  # 2024-01-03 00:00 UTC
@@ -385,10 +388,12 @@ def test_time_range_is_half_open_in_every_ts_dtype(spark, tmp_path, dtype):
         for start, end in ((t_mid + 1, t_mid + DAY_NS + 1), (t_mid - 1, t_mid + DAY_NS - 1)):
             got = apply_time_range(df, start, end)
             assert sorted(r.n for r in got.collect()) == [n for n in sorted(grid) if start <= n < end]
-            plan = _plan_text(got)
-            assert "GreaterThanOrEqual(ts," in plan and "LessThan(ts," in plan, plan
+            plan = _plan_text(got.select("n"))
             pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
             assert pf and all("ts_date" in ln for ln in pf), pf
+            cond = [ln for ln in plan.splitlines() if ln.startswith("Condition")]
+            assert len(cond) == 1 and "exists(array(ts#" in cond[0], plan
+            assert "Project [codegen id" in plan, plan
     finally:
         spark.conf.set(conf, prev)
 
@@ -425,6 +430,72 @@ def test_warm_ranged_fetch_makes_few_py4j_round_trips(spark, family):
         del client.send_command
     assert len(calls) <= 12, calls
     assert df.count() == 10
+
+
+def _compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_fetch_with_a_new_range_compiles_nothing(spark, family):
+    """A family scan's time range is evaluated, not compiled: a warm
+    one-series fetch over a range it has not seen runs the classes the
+    first fetch generated. As plain comparisons, the bounds were long
+    literals that Spark inlines into the scan's generated Java, so each
+    new range compiled it again (2 compiles here: one per thread's
+    class loader)."""
+    family.write(_fixture_df(spark))
+    start = 1_704_067_200_000_000_000
+
+    def fetch(lo, hi):
+        return family.fetch("cpu_utilization", lo, hi, ordered=False).collect()
+
+    assert len(fetch(start, start + DAY_NS)) == 10
+    before = _compiles(spark)
+    assert len(fetch(start + 3 * 10**9 + 1, start + DAY_NS - 1)) == 6
+    assert _compiles(spark) == before
+
+
+def test_warm_string_parameter_dialect_query_compiles_nothing(spark, family):
+    """The tsdb_query ``attr_filter`` shape, a dialect family query whose
+    only parameter is a string: warm, with a new range and a new host,
+    it compiles nothing (string literals stay references of the
+    generated class, and the range is the evaluated check). With the
+    bounds as plain comparisons it compiled 2 classes."""
+    from boostdb_spark.plans import sugar
+
+    family.write(_fixture_df(spark))
+    family.register()
+    binding = sugar.SeriesFamilyBinding(view=family.view_name)
+    q = sugar.parse(
+        "SELECT cpu_utilization.ts, cpu_utilization FROM b.f "
+        "WHERE cpu_utilization.host = :h"
+    )
+    start = 1_704_067_200_000_000_000
+
+    def run(lo, host):
+        df = sugar.plan(spark, q, binding, start=lo, end=lo + DAY_NS, params={"h": host})
+        return [r[1] for r in df.collect()]
+
+    assert run(start, "host-0000002") == [3.0]
+    before = _compiles(spark)
+    assert run(start + 1, "host-0000005") == [6.0]
+    assert _compiles(spark) == before
+
+
+def test_time_range_without_ts_date_pushes_ts_bounds(spark, tmp_path):
+    """On a frame with no ``ts_date`` the ts statistics are the only
+    skipping a time range gets, so ``apply_time_range`` keeps plain
+    comparisons there and they reach the scan as PushedFilters."""
+    from boostdb_spark.sources.seriesfamily import apply_time_range
+
+    path = str(tmp_path / "plain")
+    spark.range(100).selectExpr("id * 1000 AS ts").write.parquet(path)
+    got = apply_time_range(spark.read.parquet(path), 10_500, 20_000)
+    assert sorted(r.ts for r in got.collect()) == list(range(11_000, 20_000, 1000))
+    pushed = [ln for ln in _plan_text(got).splitlines() if ln.startswith("PushedFilters")]
+    assert pushed and "GreaterThanOrEqual(ts," in pushed[0] and "LessThan(ts," in pushed[0]
 
 
 @pytest.mark.parametrize(
