@@ -11,6 +11,17 @@ reference (which has no dedup surface); designed scale-first:
   bucket join -> exact-Jaccard verification of candidates only. The
   100 TB path: candidate generation is an equi-join on (band, hash),
   never an all-pairs product.
+
+The n-gram pair finders share three steps, each written once:
+``_doc_shingles`` is the one place text becomes distinct
+``(key, shingle)`` rows (one checkpointed table per corpus, from which
+MinHash signatures, set sizes and both join sides are read, so the
+``shingles`` UDF runs over a corpus once); ``_band_signatures`` is the
+one LSH banding step; and ``_shared_shingles`` is the one exact-overlap
+path, ``(id_a, id_b, common, sz_a, sz_b)`` for every pair that shares
+a shingle or for a given candidate-pair table. Each pair finder keeps
+only its own ratio and filter. ``containment_pairs`` keeps its own
+join: its reference side is broadcast and its self-pair rule is ``!=``.
 - SimHash: 32-bit weighted-bit fingerprint; near-dup = Hamming <= d.
   Banding by pigeonhole (split into d+1 chunks; any pair within
   distance d shares a chunk) keeps the candidate join linear.
@@ -100,12 +111,79 @@ def shingles(col, n: int = 3):
     return _sh(col)
 
 
-def _doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, shingle) distinct pairs."""
-    return (
+def _doc_shingles(df: DataFrame, key_col: str, text_col: str, n: int) -> DataFrame:
+    """Distinct ``(id, sh)`` rows, ``id`` being ``key_col`` (a document
+    id, or a source for :func:`source_overlap`): the only place a pair
+    finder runs the ``shingles`` UDF.
+
+    Checkpointed lazily at DISK_ONLY (GC-cleaned; ``.cache()`` leaked
+    storage blocks across a long session), so a caller that reads the
+    table several times (signatures, sizes, both join sides) shingles
+    the corpus once. no_broadcast: corpus-scaled exploded shingles must
+    never ride a static size estimate into a broadcast join (sf10
+    catch, see common.py)."""
+    return no_broadcast(checkpoint_corpus(
         _spread(df)
-        .select(F.col(id_col).alias("id"), F.explode(shingles(F.col(text_col), n)).alias("sh"))
+        .select(F.col(key_col).alias("id"), F.explode(shingles(F.col(text_col), n)).alias("sh"))
         .distinct()
+    ))
+
+
+def _shared_shingles(
+    ds: DataFrame,
+    cand: DataFrame | None = None,
+    other: DataFrame | None = None,
+    max_doc_freq: int | None = None,
+) -> DataFrame:
+    """The exact shingle overlap of id pairs: ``(id_a, id_b, common,
+    sz_a, sz_b)``, ``common`` the number of distinct shingles the pair
+    shares and ``sz_a``/``sz_b`` each side's distinct shingle count.
+    ``ds``/``other`` are :func:`_doc_shingles` tables.
+
+    Without ``cand``: every pair of ``ds`` ids that shares a shingle,
+    ``id_a < id_b``, from a self equi-join on the shingle (never an
+    all-pairs product). ``max_doc_freq`` drops shingles held by more
+    than that many ids before the join: a ubiquitous shingle's fanout
+    is quadratic and it carries no dedup signal. The sizes stay the
+    pre-cut set sizes.
+
+    With ``cand`` (``id_a``, ``id_b``): those pairs only, ``id_a`` from
+    ``ds`` and ``id_b`` from ``other`` (default ``ds``)."""
+    other = ds if other is None else other
+    sizes = [t.groupBy("id").agg(F.count("*").alias("sz")) for t in (ds, other)]
+
+    def side(t: DataFrame, s: str) -> DataFrame:
+        return t.select(F.col("id").alias(f"id_{s}"), "sh")
+
+    if cand is None:
+        if max_doc_freq is not None:
+            rare = (
+                ds.groupBy("sh")
+                .agg(F.count("*").alias("df"))
+                .filter(F.col("df") <= max_doc_freq)
+                .select("sh")
+            )
+            ds = ds.join(rare, "sh")
+        pairs = side(ds, "a").join(side(ds, "b"), "sh").filter(
+            F.col("id_a") < F.col("id_b")
+        )
+    else:
+        # intersect via EQUI-join on (id_b, shingle): the candidate pair
+        # expands to |sh_a| rows, each probing b's hash table — never the
+        # |sh_a| x |sh_b| blowup of joining both sides by id and filtering
+        # shingle equality afterwards (that shape was quadratic per pair)
+        pairs = cand.join(side(ds, "a"), "id_a").join(side(other, "b"), ["id_b", "sh"])
+    common = pairs.groupBy("id_a", "id_b").agg(F.count("*").alias("common"))
+    return common.join(
+        sizes[0].withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a"
+    ).join(sizes[1].withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
+
+
+def _jaccard():
+    """``common / (sz_a + sz_b - common)`` over a :func:`_shared_shingles`
+    row: one exact IEEE division of two ints."""
+    return F.col("common").cast("double") / (
+        F.col("sz_a") + F.col("sz_b") - F.col("common")
     )
 
 
@@ -125,42 +203,13 @@ def ngram_jaccard_pairs(
     ubiquitous shingle is quadratic, and a shingle shared by thousands
     of documents carries no dedup signal.
     """
-    # materialized once (feeds sizes + both join sides) and GC-cleaned;
-    # .cache() leaked storage blocks across a long session; no_broadcast:
-    # corpus-scaled exploded shingles must never ride a static size
-    # estimate into a broadcast join (sf10 catch, see common.py)
-    ds = no_broadcast(
-        checkpoint_corpus(_doc_shingles(df, id_col, text_col, n))
-    )
-    sizes = ds.groupBy("id").agg(F.count("*").alias("sz"))
-    if max_doc_freq is not None:
-        rare = (
-            ds.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("sh")
-        )
-        ds = ds.join(rare, "sh")
-    a = ds.select(F.col("id").alias("id_a"), "sh")
-    b = ds.select(F.col("id").alias("id_b"), "sh")
-    common = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
-    out = (
-        common.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-        )
+    ds = _doc_shingles(df, id_col, text_col, n)
+    return (
+        _shared_shingles(ds, max_doc_freq=max_doc_freq)
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 def substring_spans(
@@ -552,7 +601,7 @@ def containment_pairs(
     partial-aggregated map-side. Self-pairs (same id on both sides)
     are excluded."""
     ds = _doc_shingles(df, id_col, text_col, n)
-    rs = _doc_shingles(ref, id_col, text_col, n).localCheckpoint(eager=False)
+    rs = _doc_shingles(ref, id_col, text_col, n)
     rsz = rs.groupBy("id").agg(F.count("*").alias("ref_sz"))
     common = (
         ds.select(F.col("id").alias("doc_id"), "sh")
@@ -598,22 +647,18 @@ def minhash_signature(
     Docs with no shingles (< n tokens) drop out with the explode — they
     cannot near-duplicate anything at this n.
     """
-    sh = _spread(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(F.col(text_col), n)).alias("sh"),
+    return _minhash_sig_from_shingles(
+        _doc_shingles(df, id_col, text_col, n), num_hashes
     )
-    return _minhash_sig_from_shingles(sh, num_hashes)
 
 
 def _minhash_sig_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """(id, sh) -> (id, sig): the MinHash aggregation over a shingle
-    table. MinHash is a function of the shingle SET (min over
-    duplicates is the min), so callers that already hold the DISTINCT
-    per-doc shingle table (minhash_lsh_pairs' verify side,
-    build_dedup_index) feed it here and the corpus is tokenized,
-    shingled and hash32'd ONCE instead of once per consumer (r15 —
-    the signature branch used to re-scan the text in parallel with
-    the checkpointed verify table)."""
+    """(id, sh) -> (id, sig): the MinHash aggregation over a
+    :func:`_doc_shingles` table. MinHash is a function of the shingle
+    SET (min over distinct shingles == min over all occurrences), so
+    every signature is derived from the same checkpointed table that
+    the exact verification reads, and a corpus is tokenized, shingled
+    and hash32'd ONCE instead of once per consumer."""
     base = sh.select("id", hash32(F.col("sh")).alias("_h"))
     # affine coefficients from the same md5-derived generator, so the
     # whole family is seedless and engine-reproducible
@@ -672,19 +717,22 @@ def build_dedup_index(
 ) -> tuple[DataFrame, DataFrame]:
     """Materializable dedup index of the EXISTING corpus: the banded
     MinHash table (ex_id, band, bh) and the distinct shingle table
-    (ex_id, sh) that :func:`incremental_dedup` probes per ingest
+    (id, sh) that :func:`incremental_dedup` probes per ingest
     batch. In production both persist as parquet (the band table
     partitioned/bucketed by (band, bh)) and are appended as batches
     are accepted — the corpus text is never rescanned at ingest
-    time."""
+    time.
+
+    One text pass: the shingle table is the checkpointed
+    :func:`_doc_shingles` table, and the signatures are derived from
+    it, so writing both tables runs the ``shingles`` UDF over the
+    corpus once."""
     assert num_hashes % bands == 0
-    r = num_hashes // bands
+    ds = _doc_shingles(existing, id_col, text_col, n)
     banded = _band_signatures(
-        minhash_signature(existing, num_hashes, n, text_col, id_col),
-        bands, r,
+        _minhash_sig_from_shingles(ds, num_hashes), bands, num_hashes // bands
     ).withColumnsRenamed({"id": "ex_id"})
-    shingles_tbl = _doc_shingles(existing, id_col, text_col, n)
-    return banded, shingles_tbl
+    return banded, ds
 
 
 def incremental_dedup(
@@ -717,58 +765,42 @@ def incremental_dedup(
     ``index``: a pre-built (banded, shingles) pair from
     :func:`build_dedup_index` — the production path, where the corpus
     index persists across ingest batches and the text is never
-    rescanned; without it the index builds inline from ``existing``."""
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    from pyspark.sql import Window
+    rescanned; without it the index builds inline from ``existing``.
 
-    if index is not None:
-        eb, ds_ex = index
-    else:
-        eb, ds_ex = build_dedup_index(
-            existing, num_hashes, bands, n, text_col, id_col
-        )
+    One text pass per corpus: the incoming signatures are derived from
+    the incoming :func:`_doc_shingles` table that the verification
+    reads, and an inline index does the same for ``existing``, so the
+    ``shingles`` UDF runs once over each corpus. The index's shingle
+    table is read as given: either the checkpointed table of an inline
+    build or the caller's persisted one."""
+    assert num_hashes % bands == 0
+    eb, ds_ex = index or build_dedup_index(
+        existing, num_hashes, bands, n, text_col, id_col
+    )
+    ds_in = _doc_shingles(incoming, id_col, text_col, n)
     ib = _band_signatures(
-        minhash_signature(incoming, num_hashes, n, text_col, id_col),
-        bands, r,
-    ).withColumnsRenamed({"id": "in_id"})
+        _minhash_sig_from_shingles(ds_in, num_hashes), bands, num_hashes // bands
+    )
     cand = no_broadcast(
         ib.join(no_broadcast(eb), ["band", "bh"])
-        .select("in_id", "ex_id")
+        .select(F.col("id").alias("id_a"), F.col("ex_id").alias("id_b"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    ds_in = no_broadcast(
-        checkpoint_corpus(_doc_shingles(incoming, id_col, text_col, n))
-    )
-    ds_ex = no_broadcast(checkpoint_corpus(ds_ex))
-    sz_in = ds_in.groupBy("id").agg(F.count("*").alias("sz_in"))
-    sz_ex = ds_ex.groupBy("id").agg(F.count("*").alias("sz_ex"))
-    common = (
-        cand.join(ds_in.withColumnsRenamed({"id": "in_id"}), "in_id")
-        .join(ds_ex.withColumnsRenamed({"id": "ex_id"}), ["ex_id", "sh"])
-        .groupBy("in_id", "ex_id")
-        .agg(F.count("*").alias("c"))
-    )
     scored = (
-        common.join(sz_in.withColumnsRenamed({"id": "in_id"}), "in_id")
-        .join(sz_ex.withColumnsRenamed({"id": "ex_id"}), "ex_id")
-        .withColumn(
-            "jaccard",
-            F.col("c").cast("double")
-            / (F.col("sz_in") + F.col("sz_ex") - F.col("c")),
-        )
+        _shared_shingles(ds_in, cand, other=no_broadcast(ds_ex))
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
     )
-    w = Window.partitionBy("in_id").orderBy(
-        F.col("jaccard").desc(), F.col("ex_id").asc()
+    w = Window.partitionBy("id_a").orderBy(
+        F.col("jaccard").desc(), F.col("id_b").asc()
     )
     return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
-            F.col("in_id").alias("doc_id"),
-            F.col("ex_id").alias("match_id"),
+            F.col("id_a").alias("doc_id"),
+            F.col("id_b").alias("match_id"),
             "jaccard",
         )
     )
@@ -795,43 +827,13 @@ def minhash_lsh_pairs(
     governed by (bands, rows) and precision is 1.
     """
     assert num_hashes % bands == 0
-    r = num_hashes // bands
     # ONE corpus shingle pass (r15): the distinct shingle table is
-    # needed anyway for exact verification (checkpointed below), and
-    # MinHash is a set function — deriving the signatures FROM it
-    # instead of re-tokenizing/re-shingling/re-hash32-ing the text in a
-    # parallel branch removes the second full text pass of this
-    # operator (and of every LSH-fed consumer: dedup_groups,
-    # keep_best, pipeline_curate). Signatures are bit-identical: min
-    # over distinct shingles == min over all occurrences.
-    ds = no_broadcast(
-        checkpoint_corpus(_doc_shingles(df, id_col, text_col, n))
-    )
+    # needed anyway for exact verification, and MinHash is a set
+    # function, so the signatures come FROM it instead of a parallel
+    # text branch (for every LSH-fed consumer too: dedup_groups,
+    # keep_best, pipeline_curate)
+    ds = _doc_shingles(df, id_col, text_col, n)
     sig = _minhash_sig_from_shingles(ds, num_hashes)
-    # band index is a PLAN-TIME constant, so the per-band structs are a
-    # literal array of codegen'd projections — never the interpreted
-    # higher-order-function path a transform() lambda would take
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                F.slice(F.col("sig"), b * r + 1, r).cast(
-                                    "array<string>"
-                                ),
-                            )
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bh")
     # materialize the banded signatures once: the self-join's two
     # branches are structurally identical but get NO ReusedExchange
     # under AQE, so without this the whole signature pipeline (the
@@ -839,7 +841,9 @@ def minhash_lsh_pairs(
     # O(docs*bands) rows on executor storage, freed by the context
     # cleaner when the plan is GC'd, no unpersist bookkeeping leaked
     # across a long session.
-    banded = no_broadcast(checkpoint_corpus(banded))
+    banded = no_broadcast(
+        checkpoint_corpus(_band_signatures(sig, bands, num_hashes // bands))
+    )
     cand = (
         banded.alias("x")
         .join(banded.alias("y"), ["band", "bh"])
@@ -847,29 +851,10 @@ def minhash_lsh_pairs(
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()
     )
-    # exact verification of candidates only; the shingle table above is
-    # materialized once and feeds signatures, sizes and both join sides
-    sizes = ds.groupBy("id").agg(F.count("*").alias("sz"))
-    a = ds.withColumnsRenamed({"id": "id_a"})
-    b = ds.withColumnsRenamed({"id": "id_b"})
-    # intersect via EQUI-join on (id_b, shingle): the candidate pair
-    # expands to |sh_a| rows, each probing b's hash table — never the
-    # |sh_a| x |sh_b| blowup of joining both sides by id and filtering
-    # shingle equality afterwards (that shape was quadratic per pair)
-    common = (
-        cand.join(a, "id_a")
-        .join(b, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
+    # exact verification of candidates only
     return (
-        common.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-        )
+        _shared_shingles(ds, cand)
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -1029,42 +1014,19 @@ def source_overlap(
     per-document work. Returns (source_a, source_b, n_common, n_a,
     n_b, jaccard).
 
-    Shape: distinct (source, shingle) explode (the per-source shingle
-    VOCABULARY, far smaller than the corpus), self-equi-join on
-    shingle for intersections, tiny per-source totals broadcast back.
+    Shape: the :func:`_doc_shingles` table keyed by source (the
+    per-source shingle VOCABULARY, far smaller than the corpus) through
+    the all-pairs :func:`_shared_shingles` path: self-equi-join on
+    shingle for intersections, tiny per-source totals joined back
+    (AQE broadcasts them at run time).
     Integer arithmetic — bit-exact oracle. Sources are few; shingle
     vocabulary dominates and shuffles once, map-side combined.
     """
-    ss = (
-        _spread(df)
-        .select(
-            F.col(source_col).alias("src"),
-            F.explode(shingles(F.col(text_col), n)).alias("sh"),
-        )
-        .distinct()
-    )
-    # feeds totals + both join sides; DISK_ONLY: vocabulary-scaled
-    ss = no_broadcast(checkpoint_corpus(ss))
-    totals = ss.groupBy("src").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        ss.alias("a")
-        .join(ss.alias("b"), "sh")
-        .filter(F.col("a.src") < F.col("b.src"))
-        .groupBy(F.col("a.src").alias("source_a"), F.col("b.src").alias("source_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    ta = totals.select(F.col("src").alias("source_a"), F.col("n_sh").alias("n_a"))
-    tb = totals.select(F.col("src").alias("source_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(F.broadcast(ta), "source_a")
-        .join(F.broadcast(tb), "source_b")
-        .select(
-            "source_a", "source_b", "n_common", "n_a", "n_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
+    ov = _shared_shingles(_doc_shingles(df, source_col, text_col, n))
+    return ov.select(
+        F.col("id_a").alias("source_a"), F.col("id_b").alias("source_b"),
+        F.col("common").alias("n_common"), F.col("sz_a").alias("n_a"),
+        F.col("sz_b").alias("n_b"), _jaccard().alias("jaccard"),
     )
 
 
@@ -1202,29 +1164,9 @@ def shingle_containment_pairs(
     counts map-side combined; ``max_doc_freq`` drops ubiquitous
     shingles whose fanout is quadratic and whose signal is zero. The
     containment value is one exact IEEE division of two ints."""
-    ds = no_broadcast(
-        checkpoint_corpus(_doc_shingles(df, id_col, text_col, n))
+    sized = _shared_shingles(
+        _doc_shingles(df, id_col, text_col, n), max_doc_freq=max_doc_freq
     )
-    sizes = ds.groupBy("id").agg(F.count("*").alias("sz"))
-    if max_doc_freq is not None:
-        rare = (
-            ds.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("sh")
-        )
-        ds = ds.join(rare, "sh")
-    a = ds.select(F.col("id").alias("id_a"), "sh")
-    b = ds.select(F.col("id").alias("id_b"), "sh")
-    common = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
-    sized = common.join(
-        sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a"
-    ).join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
     fwd = sized.select(
         F.col("id_a").alias("contained_id"),
         F.col("id_b").alias("container_id"),

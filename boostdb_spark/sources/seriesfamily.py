@@ -77,6 +77,10 @@ DATE_COL = "ts_date"
 
 DAY_NS = 86_400_000_000_000
 
+#: a stream sink's metadata log: once a family path holds it, Spark reads
+#: only the files the log names
+STREAM_LOG = "_spark_metadata"
+
 #: Spark's errors for a parquet read that finds no data files: no path,
 #: no file to infer a schema from, and (Spark 4.1's legacy code for the
 #: same) a stream sink's metadata log that has committed no file yet
@@ -132,7 +136,13 @@ class SeriesFamily:
         to a single writer. Series skipping inside a day comes from the
         per-file ``(series, ts)`` sort and the row-group/page stats it
         makes selective, not from one file per series bucket.
+
+        A family written by ``streaming.stream_write`` refuses a batch
+        write with a ``ValueError`` naming ``domain.family``: Spark reads
+        such a family through its ``_spark_metadata`` log only, so the
+        rows would never be read.
         """
+        self._check_writer(stream=False)
         ts_as_time = self._ts_expr(df)
         out = df.withColumn(DATE_COL, F.to_date(ts_as_time))
         # sortWithinPartitions (not orderBy): no global sort on ingest,
@@ -173,7 +183,13 @@ class SeriesFamily:
         atomicity caveat as any non-transactional parquet rewrite:
         concurrent readers of the exact partition being swapped can see
         a partial listing; run it when the partition is cold.
+
+        Only a batch-written family compacts. A family written by
+        ``streaming.stream_write`` raises ``ValueError`` naming
+        ``domain.family``: its ``_spark_metadata`` log still names the
+        files a rewrite deletes, so every later read would fail.
         """
+        self._check_writer(stream=False)
         df = self.read()
         if dates is not None:
             df = df.filter(F.col(DATE_COL).isin([str(d) for d in dates]))
@@ -191,6 +207,34 @@ class SeriesFamily:
         )
         if self._registered:
             self.register()
+
+    def _check_writer(self, stream: bool) -> None:
+        """Refuse a second kind of writer, from one listing of the family
+        directory (pyarrow on a local path: no Spark job, no py4j call).
+
+        A family takes batch writes (``write``, ``compact``) or one
+        stream sink (``streaming.stream_write``), never both. Once the
+        path holds a stream sink's ``_spark_metadata`` log, Spark reads
+        only the files the log names: a batch write's rows are never
+        read, and a compaction deletes files the log still names. So
+        ``stream=False`` raises ``ValueError`` on a family that holds
+        the log, and ``stream=True`` on one that holds batch-written
+        ``ts_date`` partitions and no log."""
+        names = _dir_names(self.spark, self._uri)
+        if stream and STREAM_LOG not in names and any(
+            n.startswith(f"{DATE_COL}=") for n in names
+        ):
+            raise ValueError(
+                f"series family {self.qualified_name} holds batch-written data "
+                f"under {self.path}: a stream sink's {STREAM_LOG} log would hide "
+                "it from every read; stream into a family of its own"
+            )
+        if not stream and STREAM_LOG in names:
+            raise ValueError(
+                f"series family {self.qualified_name} is written by a stream sink "
+                f"({STREAM_LOG} under {self.path}): reads see only the files its "
+                "log names, so a batch write or compaction is refused"
+            )
 
     @staticmethod
     def _ts_expr(df: DataFrame):
@@ -404,6 +448,20 @@ def _qualified_uri(spark: SparkSession, path: str) -> str | None:
     except Py4JJavaError:
         return None
     return fs.makeQualified(p).toUri().toString()
+
+
+def _dir_names(spark: SparkSession, uri: str | None) -> set[str]:
+    """Names of the entries directly under ``uri``, from one listing
+    (empty when the directory does not exist): pyarrow for a local
+    ``file:`` URI, Spark's Hadoop filesystem for any other."""
+    if uri is None:
+        return set()
+    if uri.startswith("file:"):
+        fs, root = pafs.FileSystem.from_uri(uri)
+        return {i.base_name for i in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True))}
+    p = spark._jvm.org.apache.hadoop.fs.Path(uri)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return {st.getPath().getName() for st in fs.listStatus(p)} if fs.exists(p) else set()
 
 
 def _file_set(uri: str | None) -> frozenset | None:

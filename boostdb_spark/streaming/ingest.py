@@ -10,6 +10,10 @@ m3dbseriesfamily.go:106-123) as Structured Streaming:
   Parquet layout the batch path uses, exactly-once via checkpointing.
   The checkpoint replaces the ``Wait`` barrier; ``maxFilesPerTrigger``
   / ``maxBytesPerTrigger`` on the source replace the concurrency gate.
+  A family takes one kind of writer: Spark reads a stream-written
+  family through the sink's ``_spark_metadata`` log only, so batch and
+  streaming ingest do not interleave in one family
+  (``SeriesFamily._check_writer`` refuses the second kind).
 - ``read_family_stream`` — ``readStream`` over a family path so a
   downstream query runs continuously over arriving data — the
   reference's executor loop (one ``Execute()`` per time slice,
@@ -27,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from boostdb_spark.sources.seriesfamily import DATE_COL, SERIES, TS, SeriesFamily
+from boostdb_spark.sources.seriesfamily import DATE_COL, SeriesFamily
 
 
 def stream_write(
@@ -40,20 +44,21 @@ def stream_write(
     """Continuously append a streaming DataFrame to a series family.
 
     ``stream_df`` must carry (series, ts, value, ...); the ``ts_date``
-    partition column is derived exactly as the batch write does, so batch
-    and streaming ingest interleave in one table.
+    partition column is derived by the batch write's own helper, so the
+    layout is the batch path's. The family must hold no batch-written
+    data: once the sink's ``_spark_metadata`` log exists Spark reads only
+    the files it names, so a family that ``SeriesFamily.write`` filled
+    raises ``ValueError`` naming ``domain.family`` before the query
+    starts (and a stream-written family refuses ``write`` and
+    ``compact`` the same way).
 
     ``trigger``: kwargs for ``DataStreamWriter.trigger`` — e.g.
     ``{"processingTime": "10 seconds"}`` (the reference's 200 ms
     ``executionWindowSize`` analog, query/executor/executor_test.go:51) or
     ``{"availableNow": True}`` for drain-and-stop.
     """
-    ts_as_time = (
-        F.timestamp_micros(F.expr(f"{TS} div 1000"))
-        if dict(stream_df.dtypes)[TS] in ("bigint", "long")
-        else F.col(TS)
-    )
-    out = stream_df.withColumn(DATE_COL, F.to_date(ts_as_time))
+    family._check_writer(stream=True)
+    out = stream_df.withColumn(DATE_COL, F.to_date(SeriesFamily._ts_expr(stream_df)))
     writer = (
         out.writeStream.format("parquet")
         .option("path", family.path)
@@ -75,8 +80,10 @@ def read_family_stream(
     """Open a series family as a streaming source (new files as they
     land). ``max_files_per_trigger`` is the backpressure gate
     (m3dbseriesfamily.go:230-239's ``maxConcurrentWrites`` analog).
+    The schema is ``family.read()``'s: every file's columns merged, and
+    a family with no data files raises its named ``ValueError``.
     """
-    schema = spark.read.parquet(family.path).schema
+    schema = family.read().schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -143,20 +143,21 @@ def _q(name: str, oracle: str | None):
 # agg_approx_count_distinct / agg_approx_quantiles are oracle-less
 # (approx by design) with driver-green history — below the fold.
 _WINDOW: tuple[str, ...] = (
-    # CHANGED CODE FIRST — the entries whose time range family_predicate
-    # prints: fetches on a family frame (evaluated ts check) and the
-    # time-ranged scans and dialect queries over a frame without ts_date
-    # (plain pushed bounds), then the ASOF frame source, the dialect
-    # entries of the one-SQL-statement front and the dialect canaries,
-    # then the series-family / streaming-drain cohort, the standing
-    # canaries and the LLM-pipeline entries.
+    # CHANGED CODE FIRST — the n-gram pair finders that now share one
+    # shingle table, one banding step and one exact-overlap path
+    # (operators/dedup.py), then the series-family entries whose
+    # writers the one-kind-of-writer check guards, the standing dialect
+    # canaries, the streaming-drain cohort, the standing canaries and
+    # the LLM-pipeline entries.
+    "dedup_minhash_lsh",      # _band_signatures + candidate overlap path
+    "dedup_keep_best",        # LSH pairs -> components -> keep policy
+    "dedup_incremental",      # one shingle pass per corpus
+    "dedup_ngram_jaccard_capped",  # all-pairs overlap path, df cap
+    "dedup_containment",      # shingle_containment_pairs
+    "doc_source_overlap",     # shingle table keyed by source
     "flagship_series_scan",   # scan + dialect front + implicit range
-    "seriesfamily_roundtrip",  # fetch on a family frame
-    "scan_time_sliced",       # time_slices over apply_time_range
-    "dialect_params",         # placeholder binding (:x via args)
-    "dialect_window",         # time-ranged dialect window query
-    "stream_ingest_parity",   # fetch on a stream-written family
-    "dialect_asof_join",
+    "seriesfamily_roundtrip",  # batch-written family: write + fetch
+    "stream_ingest_parity",   # stream-written family: stream_write
     "dialect_agg_expr", "dialect_arg_minmax", "dialect_bool_agg",
     "dialect_cte", "dialect_exists", "dialect_filter_agg",
     "dialect_group_all", "dialect_group_expr", "dialect_grouping_sets",
@@ -178,15 +179,16 @@ _WINDOW: tuple[str, ...] = (
     "agg_groupby_q1",         # grouped aggregation
     "ts_irate",               # time-series functions
     "dedup_exact",            # dedup family
-    "dedup_keep_best", "dedup_groups", "dedup_containment",
+    "dedup_groups",
     "txt_bm25_topk", "pipeline_hybrid_rrf",
-    # ROTATION PREP — queued next: dialect_sample and
-    # dialect_lateral_tokenize (left the window for scan_time_sliced and
-    # dialect_window), stream_retention_parity and stream_dedup_parity,
+    # ROTATION PREP — queued next: scan_time_sliced, dialect_params,
+    # dialect_window and dialect_asof_join (left the window for the
+    # dedup pair finders), dialect_sample and dialect_lateral_tokenize,
+    # stream_retention_parity and stream_dedup_parity,
     # the r15 cohort (stream_rollup_parity,
     # stream_join_parity, stream_outer_join_parity), then the ROUND-8
     # remainder: agg_unpivot, dedup_decontaminate, dedup_ngram_jaccard,
-    # dedup_ngram_jaccard_capped, dialect_qualify,
+    # dialect_qualify,
     # dialect_select_star, distinct_series, scan_hive_partition_prune,
     # scan_schema_evolution, scan_snapshot_apply, subquery_exists,
     # time_bucket_agg, ts_histogram_quantile, ts_interp_align,

@@ -253,6 +253,67 @@ def test_stream_family_with_only_uncommitted_files_raises_named_error(
         family.read()
 
 
+def _landing(spark, tmp_path, df):
+    landing = str(tmp_path / "landing")
+    df.write.parquet(landing)
+    return landing, str(tmp_path / "ckpt")
+
+
+def _listing(family, listing):
+    """``hadoop``: a scheme-less path, which the writer check lists
+    through Spark's Hadoop filesystem instead of pyarrow."""
+    if listing == "hadoop":
+        family._uri = family.path
+
+
+@pytest.mark.parametrize("listing", ["pyarrow", "hadoop"])
+def test_stream_write_refuses_a_batch_written_family(spark, family, tmp_path, listing):
+    """A stream sink's _spark_metadata log would hide the batch rows
+    from every read (write 10 rows, stream 10 more: a read saw 10), so
+    stream_write into a batch-written family raises before any query
+    starts, and the batch rows stay readable."""
+    from boostdb_spark.streaming import stream_write
+
+    _listing(family, listing)
+    family.write(_fixture_df(spark))
+    landing, ckpt = _landing(spark, tmp_path, _later(spark))
+    sdf = spark.readStream.schema(spark.read.parquet(landing).schema).parquet(landing)
+    with pytest.raises(ValueError, match=r"bTestDomain\.bTestSF holds batch-written data"):
+        stream_write(family, sdf, checkpoint=ckpt)
+    assert not (tmp_path / "bTestDomain" / "bTestSF" / "_spark_metadata").exists()
+    assert family.fetch().count() == 10
+
+
+@pytest.mark.parametrize("listing", ["pyarrow", "hadoop"])
+def test_write_and_compact_refuse_a_stream_written_family(spark, family, tmp_path, listing):
+    """Once a family holds a stream sink's log, a batch write's rows are
+    never read (a write after a drain still read 10, not 20) and a
+    compaction deletes the files the log names (every later read failed
+    with FileNotFoundException): both raise, and the streamed rows stay
+    readable."""
+    _listing(family, listing)
+    landing, ckpt = _landing(spark, tmp_path, _fixture_df(spark))
+    _drain(spark, family, landing, ckpt)
+    with pytest.raises(ValueError, match=r"bTestDomain\.bTestSF is written by a stream sink"):
+        family.write(_later(spark))
+    with pytest.raises(ValueError, match=r"bTestDomain\.bTestSF is written by a stream sink"):
+        family.compact()
+    assert family.fetch().count() == 10
+
+
+def test_writer_check_makes_no_spark_call_on_a_local_path(spark, family):
+    """The writer check runs on every append; on a local path it is one
+    pyarrow listing, with no Spark job and no py4j call."""
+    family.write(_fixture_df(spark))
+    session, family.spark = family.spark, _NoSpark()
+    try:
+        family._check_writer(stream=False)
+        with pytest.raises(ValueError, match="holds batch-written data"):
+            family._check_writer(stream=True)
+    finally:
+        family.spark = session
+
+
 def _plan_text(df):
     qe = df._jdf.queryExecution()
     jvm = df.sparkSession._jvm

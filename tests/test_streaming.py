@@ -218,6 +218,23 @@ def test_streaming_dedup_within_watermark(spark, landing, tmp_path):
     assert got.select("event_id").distinct().count() == src.count()
 
 
+def test_family_stream_schema_merges_every_file(spark, tmp_path):
+    """read_family_stream takes the family's merged schema: an attribute
+    that only a later write added (host) is a stream column too, where
+    one file's footer alone had [series, ts, value, ts_date]."""
+    fam = SeriesFamily(spark, "test", "evolving", str(tmp_path / "families"))
+    t0 = 1_704_067_200 * 10**9
+    fam.write(spark.createDataFrame(
+        [("cpu", t0, 1.0)], "series string, ts long, value double"
+    ))
+    fam.write(spark.createDataFrame(
+        [("cpu", t0 + 86_400 * 10**9, 2.0, "h1")],
+        "series string, ts long, value double, host string",
+    ))
+    assert "host" in fam.read().columns
+    assert read_family_stream(spark, fam).columns == fam.read().columns
+
+
 def test_stream_write_then_read_family(spark, landing, tmp_path):
     fam = SeriesFamily(spark, "test", "stream_fam", str(tmp_path / "families"))
     src = file_stream(spark, landing, max_files_per_trigger=2).select(

@@ -6,7 +6,7 @@ The reference's parser tests cover 3 hand-written queries
 
 import dataclasses
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from boostdb_spark.plans import sugar
 
@@ -147,6 +147,14 @@ def test_parser_never_crashes_only_raises_value_error(junk):
         pass  # the contract
 
 
+def _float_lit(f: float) -> tuple[str, str]:
+    """A decimal literal as (dialect_text, spark_sql_text). The dialect
+    reads ``1.50`` as DOUBLE, as DuckDB (the oracle) does; ``spark.sql``
+    reads it as DECIMAL(3,2), so the reference spells it ``1.50D``."""
+    t = f"{f:.2f}"
+    return t, f"{t}D"
+
+
 @st.composite
 def arith_exprs(draw, depth=0):
     """Random arithmetic over the click series' value and user_id plus
@@ -160,16 +168,13 @@ def arith_exprs(draw, depth=0):
         if kind == "int":
             n = draw(st.integers(1, 9))
             return str(n), str(n)
-        f = draw(st.floats(0.5, 9.5, allow_nan=False))
-        t = f"{f:.2f}"
-        return t, t
+        return _float_lit(draw(st.floats(0.5, 9.5, allow_nan=False)))
     a_d, a_s = draw(arith_exprs(depth=depth + 1))
     op = draw(st.sampled_from(["+", "-", "*", "/"]))
     if op == "/":
         # ANSI division (Spark default) errors on a zero divisor and
         # the fixture's user_id reaches 0 — divide by literals only
-        f = draw(st.floats(0.5, 9.5, allow_nan=False))
-        b_d = b_s = f"{f:.2f}"
+        b_d, b_s = _float_lit(draw(st.floats(0.5, 9.5, allow_nan=False)))
     else:
         b_d, b_s = draw(arith_exprs(depth=depth + 1))
     if draw(st.booleans()):
@@ -193,6 +198,10 @@ def test_dialect_arithmetic_matches_spark_sql(spark):
     @settings(max_examples=25, deadline=None)
     @given(lhs=arith_exprs(), rhs=arith_exprs(),
            op=st.sampled_from(["<", "<=", ">", ">=", "=", "!="]))
+    # a DOUBLE/DECIMAL boundary: with the reference literal spelled
+    # 1.50, spark.sql returned one row more than the dialect at sf0.001
+    @example(lhs=("5 / 1.50", "5 / 1.50D"),
+             rhs=("click / 1.50 + 1.50", "value / 1.50D + 1.50D"), op="<")
     def check(lhs, rhs, op):
         d = (f"SELECT click.event_id FROM boost.events "
              f"WHERE {lhs[0]} {op} {rhs[0]}")

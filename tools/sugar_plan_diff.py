@@ -2,7 +2,8 @@
 produce in two checkouts.
 
 For every suite entry that calls ``sugar.query`` / ``sugar.plan``,
-``SeriesFamily.fetch`` or ``timeseries.asof_join``, and for the seven
+``SeriesFamily.fetch``, ``timeseries.asof_join`` or an
+``operators.dedup`` function, and for the seven
 ``tsdb_query`` shapes (three dialect queries, four built on ``fetch``),
 each checkout prints the optimized logical plan and the formatted
 physical plan with expression ids, plan ids, RDD and application ids,
@@ -11,6 +12,8 @@ temp-view names and input paths removed. Entries are then listed as
 different optimized logical plan, such as an AND tree grouped another
 way) or ``changed`` (the physical plan differs, or the entry failed to
 plan), with a unified diff for each entry that is not identical.
+A ``localCheckpoint``ed frame shows in a plan only as an RDD scan, so
+the sub-plan behind a checkpoint is not compared.
 
 Run (each checkout plans in its own process, on its own code):
 
@@ -39,6 +42,8 @@ _NORMALIZE = [
     (re.compile(r"_pyspark_[0-9a-f]{32}"), "_pyspark_view"),
     (re.compile(r"\bx_\d+\b"), "x_"),  # DataFrame-API lambda variables
     (re.compile(r"RDD\[\d+\]"), "RDD"),  # checkpointed frames' RDD ids
+    # a checkpointed frame's call site, which PySpark may or may not set
+    (re.compile(r"(RDD at \w+) at \S+:\d+"), r"\1"),
     (re.compile(r"local-\d{6,}"), "local-app"),  # application ids in paths
 ]
 
@@ -122,7 +127,10 @@ def dump(checkout: Path, sf: str, out_json: str) -> None:
     frames = {
         name: (lambda fn=fn: fn(spark, sf))
         for name, fn in sorted(suite.spark_queries().items())
-        if re.search(r"sugar\.(query|plan)\(|\.fetch\(|asof_join\(", inspect.getsource(fn))
+        if re.search(
+            r"sugar\.(query|plan)\(|\.fetch\(|asof_join\(|\bdd\.\w+\(|operators\.dedup import",
+            inspect.getsource(fn),
+        )
     }
     plans = {}
     with tempfile.TemporaryDirectory() as work:
