@@ -12,10 +12,17 @@ registered entry cannot silently skip the bench. Four streaming
 drains (file-source micro-batches over the same SF events data,
 availableNow trigger) ride along under ``stream_*`` keys so the
 Structured Streaming surface has throughput regression signal too.
+
+Every run — each WARMUP entry, timed entry, isolated rerun and stream
+drain — goes through one :class:`Runner`, which also records the run's
+Spark profile (``profile`` in the record): jobs, stages, tasks, driver
+time between jobs, scan, shuffle, spill, Python-worker, executor and
+task-GC counters, read back from Spark's status stores.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import shutil
@@ -28,8 +35,32 @@ _REPO = Path(__file__).resolve().parent
 if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
+
 from boostdb_spark import suite  # noqa: E402
 from boostdb_spark.session import get_spark  # noqa: E402
+
+
+def _load_spans():
+    """perfbench's status-store reader, from this file's checkout.
+    perfbench is not a package, so it is loaded by path: an import
+    would take whichever checkout comes first on ``sys.path``."""
+    spec = importlib.util.spec_from_file_location(
+        "bench_spans", _REPO / "perfbench" / "spans.py"
+    )
+    module = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = module  # dataclasses look up their module
+    spec.loader.exec_module(module)
+    return module
+
+
+spans = _load_spans()
+
+#: the profile counters the stdout tail keeps for the slowest entries
+PROFILE_DIGEST = (
+    "wall_s", "jobs", "stages", "tasks", "driver_gap_ms",
+    "shuffle_write_bytes", "python_ms", "gc_ms",
+)
 
 #: registered queries deliberately NOT benched, with the reason pinned.
 #: (empty today: every registry entry runs; keep reasons here if that
@@ -87,7 +118,70 @@ def _headline() -> list[str]:
     return names
 
 
-def _stream_benchmarks(spark, sf_dir: str) -> tuple[dict[str, float], dict]:
+class _RunIds(StreamingQueryListener):
+    """The run id of every streaming query the session starts: the job
+    group its micro-batch jobs run under. ``onQueryStarted`` is called
+    before ``start()`` returns."""
+
+    def __init__(self):
+        self.started: list[str] = []
+
+    def onQueryStarted(self, event):
+        self.started.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+class Runner:
+    """Runs and profiles suite entries and drains, one at a time.
+
+    Each run is one span of ``spans.Tracer``: jobs started in it land in
+    the span's job group, and so do the micro-batch jobs of a streaming
+    query started in it (its run id joins the span). After the clock
+    stops, ``finish_op`` reads the span's jobs, stages and SQL
+    executions back from Spark's status stores. ``profile[key]`` holds
+    the span's wall and every ``spans.COUNTERS`` sum. Its ``gc_ms`` is
+    the GC time of the run's tasks, not of the whole JVM."""
+
+    def __init__(self, spark, sf_dir: str):
+        self.spark, self.sf_dir = spark, sf_dir
+        self.registry = suite.spark_queries()
+        self.tracer = spans.Tracer(spark, enabled=True)
+        self.profile: dict[str, dict] = {}
+        self.listener = _RunIds()
+        spark.streams.addListener(self.listener)
+
+    def run(self, key: str, work):
+        """``work()`` in one profiled span; returns (wall s, its result)."""
+        with self.tracer.span(key, "entry") as span:
+            t0 = time.perf_counter()
+            out = work()
+            wall = round(time.perf_counter() - t0, 3)
+            while self.listener.started:
+                self.tracer.add_group(self.listener.started.pop())
+        self.tracer.finish_op()
+        counters = self.tracer.op_counters[span.id]
+        self.profile[key] = {
+            "wall_s": wall, **{k: round(v) for k, v in counters.items()}
+        }
+        return wall, out
+
+    def entry(self, name: str, key: str | None = None) -> float:
+        """Registry entry ``name`` materialized through the noop sink;
+        returns its wall in s."""
+        fn = self.registry[name]
+        return self.run(
+            key or name,
+            lambda: fn(self.spark, self.sf_dir)
+            .write.mode("overwrite").format("noop").save(),
+        )[0]
+
+
+def _stream_benchmarks(runner: Runner) -> tuple[dict[str, float], dict]:
     """Structured Streaming throughput: the SF events table replayed as
     an 8-file landing directory through availableNow micro-batches of
     2 files each, every drain run by ``streaming.drain.drain`` into the
@@ -111,7 +205,8 @@ def _stream_benchmarks(spark, sf_dir: str) -> tuple[dict[str, float], dict]:
 
     Landing-dir write is ingest, excluded from the timing; each drain
     is timed start->drain over the same 4-batch replay, and its
-    per-batch walls and input rows go to the record.
+    per-batch walls and input rows go to the record. Each drain is one
+    profiled ``runner`` run.
     """
     from pyspark.sql import functions as F
 
@@ -120,7 +215,8 @@ def _stream_benchmarks(spark, sf_dir: str) -> tuple[dict[str, float], dict]:
     from boostdb_spark.streaming.stateful import streaming_ewma
     from boostdb_spark.streaming.windows import sliding_agg
 
-    ev = suite._ts_events(load_tables(spark, sf_dir))
+    spark = runner.spark
+    ev = suite._ts_events(load_tables(spark, runner.sf_dir))
     work = tempfile.mkdtemp(prefix="boost_bench_stream_")
     landing = os.path.join(work, "landing")
     (
@@ -147,14 +243,14 @@ def _stream_benchmarks(spark, sf_dir: str) -> tuple[dict[str, float], dict]:
         )
 
     def run(name: str, build, output_mode: str, no_data_batches=True):
-        detail[name] = drain(
+        _, detail[name] = runner.run(name, lambda: drain(
             build(stream()),
             os.path.join(work, f"ckpt_{name}"),
             fmt="noop",
             output_mode=output_mode,
             landing=landing,
             no_data_batches=no_data_batches,
-        )
+        ))
         times[name] = detail[name]["wall_s"]
         print(
             f"  {name}: {times[name]}s {detail[name]}",
@@ -280,74 +376,29 @@ def _posture(spark) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    core = os.environ.get("SPARK_GRAFT_BENCH_TIER") == "core"
     spark = get_spark(app_name="boostdb-bench")
-    registry = suite.spark_queries()
+    runner = Runner(spark, sf_dir)
 
     times: dict[str, float] = {}
-    gc_ms: dict[str, int] = {}
+    # isolated re-runs: the top 5 entries by wall of this run, each
+    # timed a SECOND time from a comparable heap state (System.gc()
+    # first, outside the timer): `isolated` ~= the in-suite wall says
+    # the plan is the cost; `isolated` << in-suite says the first run's
+    # wall was JVM state (heap tenure / JIT / inherited AQE state), not
+    # the plan
+    isolated: dict[str, float] = {}
     # SPARK_GRAFT_BENCH_ONLY=stream: run JUST the streaming drains in a
     # fresh session — the isolated (no suite JVM pressure) number that
     # BASELINE.md records next to the in-suite one
     stream_only = os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "stream"
-    # SPARK_GRAFT_BENCH_ONLY=ann: the isolated ANN decomposition —
-    # index build (k-means + PQ training + layout writes, INGEST work)
-    # timed separately from each probe entry, so any suite-bench ANN
-    # number is explainable from this record alone (r2/r4 saw
-    # unexplained ANN wall swings when training ran inside the timed
-    # entries under suite JVM pressure)
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "ann":
-        from boostdb_spark import suite_llm
-
-        t0 = time.perf_counter()
-        suite_llm._ann_index(spark, sf_dir)
-        times["ann_index_build"] = round(time.perf_counter() - t0, 3)
-        for name in (
-            "ann_ivf_topk", "ann_pq_topk", "ann_lsh_topk",
-            "ann_recall_certified",
-        ):
-            fn = registry[name]
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            times[name] = round(time.perf_counter() - t0, 3)
-            print(f"  {name}: {times[name]}s", file=sys.stderr, flush=True)
-        print(
-            json.dumps(
-                {
-                    "queries": times,
-                    "warmup_amortized": [],
-                    "metric": "ann_decomposition_seconds",
-                    "unit": "sec",
-                    "n_queries": len(times),
-                    "value": round(sum(times.values()), 3),
-                    "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                }
-            )
-        )
-        return
     if not stream_only:
         headline = _headline()
-        missing = [n for n in headline if n not in registry]
+        missing = [n for n in headline if n not in runner.registry]
         assert not missing, f"HEADLINE out of sync with registry: {missing}"
 
         for name in WARMUP:
-            registry[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-
-        # per-entry GC attribution (r8-verdict ask #6: txt_ngram_novelty
-        # ran 4.7x its local record in the driver with no decomposition
-        # to prove the suspected GC/heap placement): JVM-wide collector
-        # time is sampled around every timed entry, so any future
-        # driver-vs-local outlier carries its own explanation in the
-        # record — a large gc_ms says the wall was collector pressure,
-        # not the entry's plan. Driver-side jconsole-style beans; ~0 cost.
-        _mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-
-        def _jvm_gc_ms() -> int:
-            return sum(
-                b.getCollectionTime()
-                for b in _mx.getGarbageCollectorMXBeans()
-            )
+            runner.entry(name, f"warmup/{name}")
 
         for i, name in enumerate(headline):
             if i % 25 == 24:
@@ -360,163 +411,18 @@ def main() -> None:
                 # outside every timer, so entries are measured from a
                 # comparable heap state.
                 spark.sparkContext._jvm.System.gc()
-            fn = registry[name]
-            g0 = _jvm_gc_ms()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            times[name] = round(time.perf_counter() - t0, 3)
-            gc_ms[name] = _jvm_gc_ms() - g0
+            times[name] = runner.entry(name)
             print(f"  {name}: {times[name]}s", file=sys.stderr, flush=True)
 
-    # isolated re-run probes (r9-verdict ask #4: the driver clocked
-    # agg_approx_count_distinct at 6.6x its local record with only
-    # 575 ms attributable to GC, leaving the gap environment-unproven).
-    # For the entries with a history of driver-vs-local divergence on
-    # untouched code, time a SECOND run from a comparable heap state
-    # (System.gc() first, outside the timer): `isolated` ~= the entry's
-    # in-suite time says the plan is the cost; `isolated` << in-suite
-    # says the first-run wall was JVM state (heap tenure / JIT /
-    # inherited AQE state), not the plan — the record now carries that
-    # proof wherever it runs.
-    isolated: dict[str, float] = {}
-    if not stream_only:
-        # DYNAMIC list (r12-verdict ask #1b): the r11 hardcoded four
-        # kept re-probing stale history while the round's actual #1
-        # outlier (ann_append_certified, 62 s, 14.9x its record) went
-        # unprobed. The list is now the TOP-5 BY WALL of the current
-        # run — whatever the anomaly is, it self-decomposes in the
-        # same record — plus the two entries with a documented history
-        # of JVM-state sensitivity (fixpoint job storms, pair-join IO).
-        top_by_wall = [
-            n for n, _ in
-            sorted(times.items(), key=lambda kv: kv[1], reverse=True)[:5]
-        ]
-        probe = list(dict.fromkeys(
-            top_by_wall + ["dialect_recursive_cte", "dedup_semantic"]
-        ))
-        for name in probe:
+        for name in sorted(times, key=times.get, reverse=True)[:5]:
             spark.sparkContext._jvm.System.gc()
-            fn = registry[name]
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            isolated[name] = round(time.perf_counter() - t0, 3)
+            isolated[name] = runner.entry(name, f"isolated/{name}")
             print(
                 f"  isolated {name}: {isolated[name]}s",
                 file=sys.stderr, flush=True,
             )
 
-    # dedup_semantic per-stage decomposition (r11-verdict ask #2: the
-    # entry read 62.5 s in-suite on the driver vs 11.4 s isolated vs
-    # 6.6 s local, and the record could not say WHERE). Three stage
-    # walls from a comparable heap, none added to `times` (they re-run
-    # work the timed entry already paid):
-    #   idx_centroids_s  — fetching the session ANN index (MUST be ~0:
-    #                      proves the k-means/PQ train was amortized in
-    #                      WARMUP on this entry's path, not paid here)
-    #   assign_dedup_s   — semantic_dedup alone: corpus->centroid
-    #                      assignment + within-cluster domination
-    #   full_entry_s     — the whole certified entry (dedup + the
-    #                      certificate pair join + output join); the
-    #                      certificate increment is full - assign_dedup
-    # A driver wall >> full_entry_s with idx_centroids_s ~ 0 is
-    # environment, attributable from the committed record alone.
-    semdedup_stage_s: dict[str, float] = {}
-    if not stream_only:
-        # best-effort like every other diagnostic block: these stages
-        # re-run work the timed entries already paid, so a failure here
-        # must degrade to an error marker, never abort main() after all
-        # timed queries but before the record is written (ADVICE r12)
-        try:
-            from boostdb_spark import suite_llm
-            from boostdb_spark.operators import dedup as _dd
-            from boostdb_spark.session import load_tables as _lt
-
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            _cents = suite_llm._ann_index(spark, sf_dir)["centroids"]
-            semdedup_stage_s["idx_centroids_s"] = round(
-                time.perf_counter() - t0, 3
-            )
-            t0 = time.perf_counter()
-            _dd.semantic_dedup(
-                _lt(spark, sf_dir)["embeddings"], tau=0.4, centroids=_cents
-            ).write.mode("overwrite").format("noop").save()
-            semdedup_stage_s["assign_dedup_s"] = round(
-                time.perf_counter() - t0, 3
-            )
-            t0 = time.perf_counter()
-            registry["dedup_semantic"](spark, sf_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            semdedup_stage_s["full_entry_s"] = round(
-                time.perf_counter() - t0, 3
-            )
-            print(
-                f"  semdedup stages: {semdedup_stage_s}",
-                file=sys.stderr, flush=True,
-            )
-        except Exception as exc:  # pragma: no cover - diagnostic only
-            semdedup_stage_s["error"] = repr(exc)[:200]
-            print(
-                f"  semdedup stages FAILED (record continues): {exc!r}",
-                file=sys.stderr, flush=True,
-            )
-
-    # dedup_keep_best per-stage decomposition (r14-verdict ask #2: the
-    # entry was the only flat top-20 member and nobody had split its
-    # wall into LSH-pair feed vs label propagation vs the keep-policy
-    # join+window). Three stage walls from a comparable heap, none
-    # added to `times` (they re-run work the timed entry already paid):
-    #   lsh_pairs_s   — minhash_lsh_pairs alone (candidate gen + exact
-    #                   Jaccard verify), the shared feed
-    #   groups_s      — + dedup_groups label propagation (the
-    #                   iterative min-label loop; increment over
-    #                   lsh_pairs_s is the propagation cost)
-    #   full_entry_s  — the whole entry (adds the corpus left join +
-    #                   keep-policy window)
-    keepbest_stage_s: dict[str, float] = {}
-    if not stream_only:
-        try:
-            from boostdb_spark.operators import dedup as _dd2
-            from boostdb_spark.session import load_tables as _lt2
-
-            _docs = _lt2(spark, sf_dir)["documents"]
-
-            def _kb_pairs():
-                return _dd2.minhash_lsh_pairs(
-                    _docs, threshold=0.8, num_hashes=48, bands=16, n=3
-                )
-
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            _kb_pairs().write.mode("overwrite").format("noop").save()
-            keepbest_stage_s["lsh_pairs_s"] = round(
-                time.perf_counter() - t0, 3
-            )
-            t0 = time.perf_counter()
-            _dd2.dedup_groups(_kb_pairs()).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            keepbest_stage_s["groups_s"] = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            registry["dedup_keep_best"](spark, sf_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            keepbest_stage_s["full_entry_s"] = round(
-                time.perf_counter() - t0, 3
-            )
-            print(
-                f"  keep_best stages: {keepbest_stage_s}",
-                file=sys.stderr, flush=True,
-            )
-        except Exception as exc:  # pragma: no cover - diagnostic only
-            keepbest_stage_s["error"] = repr(exc)[:200]
-            print(
-                f"  keep_best stages FAILED (record continues): {exc!r}",
-                file=sys.stderr, flush=True,
-            )
-
-    stream_times, stream_detail = _stream_benchmarks(spark, sf_dir)
+    stream_times, stream_detail = _stream_benchmarks(runner)
     times.update(stream_times)
     # suite entries that drain multiple internal queries (rollup parity's
     # two sink variants) publish their own per-drain decomposition —
@@ -526,7 +432,7 @@ def main() -> None:
     total = round(sum(times.values()), 3)
     # The driver records only the LAST ~2000 chars of this line, so the
     # record is ordered to survive front-truncation: the big per-entry
-    # map goes first and the self-explaining summary goes last — the 20
+    # maps go first and the self-explaining summary goes last — the 20
     # slowest entries (`top20`, the hotspot digest that made the r6
     # 41% wall jump unattributable when it lived only in the truncated
     # head), then total/sf. The COMPLETE per-entry record is also
@@ -536,30 +442,24 @@ def main() -> None:
     top20 = dict(
         sorted(times.items(), key=lambda kv: kv[1], reverse=True)[:20]
     )
-    # GC attribution digest: the 10 entries that paid the most
-    # collector time while timed (full map in the BENCH_LOCAL file via
-    # gc_ms; the digest rides the tail of the truncation-surviving
-    # stdout line like top20 does)
-    gc_top10 = dict(
-        sorted(gc_ms.items(), key=lambda kv: kv[1], reverse=True)[:10]
-    )
+    # the profiles of the 5 slowest entries, cut to the counters that
+    # split a wall: job/task counts, driver time between jobs, shuffle,
+    # Python-worker time and task GC
+    profile_top5 = {
+        name: {k: runner.profile[name][k] for k in PROFILE_DIGEST}
+        for name in list(top20)[:5]
+    }
     # one-scalar streaming diagnostics that MUST survive the driver's
-    # tail truncation (r11-verdict ask #3): the zero-operator-state
-    # passthrough floor separates IO-poisoned-host rounds from plan
-    # regressions, and the total state-commit time attributes the
-    # stateful drains' walls — both were being cut from the recorded
-    # tail in r11, which is why the streaming cohort stayed "weak".
+    # tail truncation: the zero-operator-state passthrough floor
+    # separates IO-poisoned-host rounds from plan regressions, and the
+    # total state-commit time attributes the stateful drains' walls
     stream_commit_total_ms = sum(
         d.get("state_commit_ms", 0)
         for d in stream_detail.values()
         if isinstance(d, dict)
     )
-    # r13-verdict ask #2: the two stream-stream JOIN parities were the
-    # one cohort whose wall couldn't be split into commit IO vs
-    # compute from the driver-retained tail alone (r13 saw 12->52 s
-    # with only totals recorded). Keep their per-drain decomposition
-    # (few batches, so batch_ms is a handful of ints) among the
-    # truncation-surviving small scalars.
+    # the per-drain decomposition of the two stream-stream JOIN
+    # parities (few batches, so batch_ms is a handful of ints)
     stream_join_detail = {
         k: {
             f: v[f]
@@ -572,43 +472,31 @@ def main() -> None:
         for k, v in stream_detail.items()
         if isinstance(v, dict) and "join_parity" in k
     }
-    # Key order is the truncation contract: the driver keeps only the
-    # LAST ~2000 chars of this line, so big maps go first and the
-    # self-explaining diagnostics go last — top20/gc_top10 lead the
-    # tail (truncation bites their head first), then the small scalars
-    # that must always survive: calibration, isolated reruns, the
-    # semdedup stage decomposition, the streaming floor + commit
-    # total, and finally value/sf.
+    # Key order is the truncation contract: big maps first, then the
+    # self-explaining diagnostics — top20 and the profile digest lead
+    # the tail (truncation bites their head first), then the small
+    # scalars that must always survive: calibration, posture, the
+    # streaming floor + commit total, and finally value/sf.
     record = {
         "queries": times,
-        "gc_ms": gc_ms,
+        "profile": runner.profile,
         "stream_detail": stream_detail,
         "warmup_amortized": [] if stream_only else WARMUP,
-        "metric": (
-            "core_suite_wall_seconds"
-            if os.environ.get("SPARK_GRAFT_BENCH_TIER") == "core"
-            else "suite_wall_seconds"
-        ),
+        "metric": "core_suite_wall_seconds" if core else "suite_wall_seconds",
         "unit": "sec",
         "n_queries": len(times),
+        "isolated_rerun": isolated,
+        "stream_join_detail": stream_join_detail,
         "top20": top20,
-        "gc_top10": gc_top10,
+        "profile_top5": profile_top5,
         "calibration": _calibration(spark),
         "posture": _posture(spark),
-        "isolated_rerun": isolated,
-        "semdedup_stage_s": semdedup_stage_s,
-        "keepbest_stage_s": keepbest_stage_s,
         "stream_floor_s": times.get("stream_passthrough_floor"),
         "stream_commit_total_ms": stream_commit_total_ms,
-        "stream_join_detail": stream_join_detail,
         "value": total,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    default_out = (
-        "BENCH_LOCAL_CORE.json"
-        if os.environ.get("SPARK_GRAFT_BENCH_TIER") == "core"
-        else "BENCH_LOCAL.json"
-    )
+    default_out = "BENCH_LOCAL_CORE.json" if core else "BENCH_LOCAL.json"
     out = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT", str(_REPO / default_out)
     )

@@ -21,10 +21,11 @@ from pyspark.sql.functions import pandas_udf
 
 
 def ns_to_micros(col: Column | str) -> Column:
-    """INT64 nanoseconds -> INT64 microseconds (integer div — ns-scale
-    longs must never route through a double, which rounds above 2^53)."""
+    """INT64 nanoseconds -> INT64 microseconds, truncated toward zero
+    (integer ``div`` — ns-scale longs must never route through a double,
+    which rounds above 2^53; Spark's ``/`` divides longs as doubles)."""
     c = F.col(col) if isinstance(col, str) else col
-    return (c - (c % F.lit(1000))) / F.lit(1000)
+    return F.call_function("div", c, F.lit(1000))
 
 
 def ns_to_timestamp(col: Column | str) -> Column:

@@ -84,7 +84,9 @@ def _ts_us(df, col: str = "ts"):
     oracle's epoch_us(ts)."""
     dt = dict(df.dtypes)[col]
     if dt in ("bigint", "long"):
-        return F.expr(f"{col} div 1000")
+        from boostdb_spark.functions.scalar import ns_to_micros
+
+        return ns_to_micros(col)
     return F.unix_micros(F.col(col).cast("timestamp"))
 
 

@@ -54,6 +54,22 @@ def test_ts_helpers_zone_independent(spark):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
+def test_ns_to_micros_is_exact_int64(spark):
+    """ns_to_micros divides as integers: a BIGINT, exact for ns beyond
+    2^53 and truncated toward zero for negative ns."""
+    from boostdb_spark.functions import ns_to_micros
+
+    df = spark.createDataFrame(
+        [(1_705_708_800_123_456_789,), (-1_705_708_800_123_456_789,)],
+        "ts long",
+    )
+    out = df.select(ns_to_micros("ts").alias("us"))
+    assert dict(out.dtypes)["us"] == "bigint"
+    assert [r["us"] for r in out.collect()] == [
+        1_705_708_800_123_456, -1_705_708_800_123_456,
+    ]
+
+
 def test_engine_session_skips_dataframe_origin_capture(spark):
     """get_spark turns PySpark's DataFrame debugging off (each Column call
     is then one py4j round trip, not about five); a runtime error still

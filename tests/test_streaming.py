@@ -628,6 +628,38 @@ def test_drain_policy_keys_live_only_in_drain_module():
     assert {lit for _, lit in found} == set(literals)
 
 
+def test_bench_runner_profiles_batch_and_stream_entries(spark):
+    """bench.py's runner gives each run a profile with every
+    ``spans.COUNTERS`` key, and a streaming entry's profile counts the
+    micro-batch jobs that run under its query's run-id job group."""
+    import importlib.util
+    from pathlib import Path
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", Path(__file__).resolve().parent.parent / "bench.py"
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    runner = bench.Runner(spark, SF_DIR)
+    names = ("flagship_series_scan", "stream_batch_parity")
+    try:
+        for name in names:
+            runner.entry(name)
+    finally:
+        spark.streams.removeListener(runner.listener)
+    for name in names:
+        assert set(bench.spans.COUNTERS) <= set(runner.profile[name])
+        assert runner.profile[name]["jobs"] >= 1
+
+    span = next(s for s in runner.tracer.spans if s.name == names[1])
+    run_ids = span.groups[1:]  # the first group is the span's own
+    tracker = spark.sparkContext.statusTracker()
+    batch_jobs = {j for g in run_ids for j in tracker.getJobIdsForGroup(g)}
+    counted = {j.id for j in runner.tracer.jobs if j.span == span.id}
+    assert run_ids and batch_jobs and batch_jobs <= counted
+    assert runner.profile[names[1]]["jobs"] == len(counted)
+
+
 def test_upsert_bucketed_state_io_shape(spark, tmp_path):
     """r8-verdict I/O contract of the bucketed state merge: a batch
     must neither read nor rewrite buckets it does not touch — every

@@ -1,70 +1,59 @@
-"""Interleaved A/B probe for ONE suite entry across two checkouts.
+"""Interleaved A/B probe for suite entries across checkouts.
 
 Usage: python tools/ab_entry.py <repo_dir> <entry> [<entry> ...]
 
 Runs in a FRESH process per invocation (the caller interleaves
 invocations across checkouts — the bd9bbbc host-noise methodology):
-imports the suite from <repo_dir>, measures the fixed machine canary
-(same arithmetic as bench.py's _calibration), runs the entry once
-UNTIMED (the warmup/layout-build the bench amortizes in WARMUP), then
-times a second full materialization through the noop sink. One JSON
-line per entry on stdout — walls are comparable across processes at
-matched canary.
+imports the suite from <repo_dir>, and bench.py's ``Runner`` and
+machine canary (``_calibration``) from the checkout that holds this
+file, so every checkout is timed and profiled by the same code. Each
+entry runs once as a warm-up (the layout build the bench amortizes in
+WARMUP), then is timed a second time through the noop sink. One JSON
+line per entry on stdout: the canary, both walls, and the timed run's
+Spark profile (``spans.COUNTERS`` plus its wall) — walls are
+comparable across processes at matched canary.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import sys
-import time
+from pathlib import Path
 
 
 def main() -> None:
-    repo = sys.argv[1]
-    entries = sys.argv[2:]
+    repo = os.path.abspath(sys.argv[1])
+    # the timed checkout's engine: Python workers import it from the
+    # working directory, and the driver imports the package before
+    # bench.py, so the suite bench.py imports comes from it too
+    os.chdir(repo)
     sys.path.insert(0, repo)
-    from boostdb_spark import suite
     from boostdb_spark.session import get_spark
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", Path(__file__).resolve().parents[1] / "bench.py"
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="ab-entry")
-    reg = suite.spark_queries()
-
-    t0 = time.perf_counter()
-    spark.range(0, 200_000_000, 1, 32).selectExpr(
-        "sum(id * 7 % 1000)"
-    ).collect()
-    jvm = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(5_000_000):
-        x += i * 31 % 97
-    py = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    spark.range(0, 2_000_000, 1, 32).selectExpr(
-        "id % 10000 AS k", "id AS v"
-    ).groupBy("k").sum("v").selectExpr("sum(`sum(v)`)").collect()
-    sh = time.perf_counter() - t0
-
-    for name in entries:
-        fn = reg[name]
-        t0 = time.perf_counter()
-        fn(spark, sf).write.mode("overwrite").format("noop").save()
-        warm = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        fn(spark, sf).write.mode("overwrite").format("noop").save()
-        timed = time.perf_counter() - t0
+    runner = bench.Runner(spark, sf)
+    calibration = bench._calibration(spark)
+    for name in sys.argv[2:]:
+        warm = runner.entry(name, f"warmup/{name}")
+        timed = runner.entry(name)
         print(
             json.dumps(
                 {
                     "repo": os.path.basename(repo.rstrip("/")),
                     "entry": name,
-                    "jvm": round(jvm, 3),
-                    "py": round(py, 3),
-                    "shuffle": round(sh, 3),
-                    "warm_s": round(warm, 3),
-                    "timed_s": round(timed, 3),
+                    "calibration": calibration,
+                    "warm_s": warm,
+                    "timed_s": timed,
+                    "profile": runner.profile[name],
                 }
             ),
             flush=True,

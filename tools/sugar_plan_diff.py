@@ -5,17 +5,23 @@ For every suite entry that calls ``sugar.query`` / ``sugar.plan``,
 ``SeriesFamily.fetch``, ``timeseries.asof_join`` or an
 ``operators.dedup`` function, and for the seven
 ``tsdb_query`` shapes (three dialect queries, four built on ``fetch``),
-each checkout prints the optimized logical plan and the formatted
-physical plan with expression ids, plan ids, RDD and application ids,
-temp-view names and input paths removed. Entries are then listed as
+each checkout runs the entry's statement once (``collect``) and prints
+its optimized logical plan and its final physical plan: the adaptive
+plan as it ran (``isFinalPlan=true``), so a join that AQE turned into a
+broadcast at run time reads as one. Expression ids, plan ids, RDD and
+application ids, temp-view names and input paths are removed. AQE
+re-plans from run-time statistics, so an entry may show another final
+plan on unchanged code (such as the other build side of a broadcast
+join between two near-equal shuffle stages); run the tool twice before
+reading such a change. Entries are then listed as
 ``identical``, ``logical-only`` (the same physical plan under a
 different optimized logical plan, such as an AND tree grouped another
-way) or ``changed`` (the physical plan differs, or the entry failed to
-plan), with a unified diff for each entry that is not identical.
+way) or ``changed`` (the physical plan differs, or the entry failed),
+with a unified diff for each entry that is not identical.
 A ``localCheckpoint``ed frame shows in a plan only as an RDD scan, so
 the sub-plan behind a checkpoint is not compared.
 
-Run (each checkout plans in its own process, on its own code):
+Run (each checkout runs in its own process, on its own code):
 
     python tools/sugar_plan_diff.py PARENT_CHECKOUT CHANGE_CHECKOUT \\
         --sf TESTDATA_SF_DIR --out OUT_DIR
@@ -45,6 +51,10 @@ _NORMALIZE = [
     # a checkpointed frame's call site, which PySpark may or may not set
     (re.compile(r"(RDD at \w+) at \S+:\d+"), r"\1"),
     (re.compile(r"local-\d{6,}"), "local-app"),  # application ids in paths
+    # a final adaptive plan numbers its query stages and codegen stages in
+    # the order they ran
+    (re.compile(r"(QueryStage\nOutput \[\d+\]: \[[^\]]*\]\nArguments: )\d+"), r"\1N"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id]"),
 ]
 
 
@@ -117,7 +127,7 @@ def _tsdb_frames(spark, checkout: Path, work: str) -> dict:
 
 
 def dump(checkout: Path, sf: str, out_json: str) -> None:
-    """Plan every dialect entry of ``checkout`` and write the plans."""
+    """Run every compared entry of ``checkout`` and write its plans."""
     sys.path.insert(0, str(checkout))
     from boostdb_spark import suite
     from boostdb_spark.session import get_spark
@@ -137,15 +147,17 @@ def dump(checkout: Path, sf: str, out_json: str) -> None:
         frames.update(_tsdb_frames(spark, checkout, work))
         for name, make in frames.items():
             try:
-                qe = make()._jdf.queryExecution()
+                df = make()
+                df.collect()  # AQE settles the final plan as it runs
+                qe = df._jdf.queryExecution()
                 plans[name] = _normalize(
                     "== Optimized Logical Plan ==\n" + qe.optimizedPlan().toString()
                     + "\n== Physical Plan ==\n" + qe.explainString(mode)
                 ).replace(work, "<family-dir>").replace(sf.rstrip("/"), "<sf>").replace(
                     str(checkout), "<checkout>"
                 )
-            except Exception as e:  # an entry that fails to plan is a change too
-                plans[name] = f"PLANNING FAILED: {type(e).__name__}: {e}\n"
+            except Exception as e:  # an entry that fails is a change too
+                plans[name] = f"FAILED: {type(e).__name__}: {e}\n"
     Path(out_json).write_text(json.dumps(plans, indent=1, sort_keys=True))
     spark.stop()
 
