@@ -190,14 +190,14 @@ def _stream_benchmarks(runner: Runner) -> tuple[dict[str, float], dict]:
 
     - stream_passthrough_floor: no operator state — the machinery floor.
     - stream_sliding_agg: watermark + overlapping event-time windows
-      (streaming/windows.py) — the windowed-state path. It runs 4 or
-      5 batches on the same code. The 5th reads 0 rows: the engine
-      adds it when the last data batch raised the max event time, so
-      the 2-hour watermark moved past windows still held in state, and
-      it emits those windows (append mode) — part of the result, so
-      it keeps running. Whether the last batch holds the latest event
-      depends on which landing files it gets; files replay in write
-      mtime order, which varies from run to run.
+      (streaming/windows.py) — the windowed-state path. It may run a
+      5th batch of 0 rows: the engine adds it when the last data batch
+      raised the max event time, so the 2-hour watermark moved past
+      windows still held in state, and it emits those windows (append
+      mode) — part of the result, so it keeps running. The landing
+      files are stamped in part order (``stamp_replay_order``), so
+      every run replays the same files in the same batches and the
+      batch count is the same from run to run.
     - stream_stateful_ewma: applyInPandasWithState running EWMA
       (streaming/stateful.py) — the arbitrary-state path.
     - stream_stream_join: watermarked interval inner join — the
@@ -211,7 +211,11 @@ def _stream_benchmarks(runner: Runner) -> tuple[dict[str, float], dict]:
     from pyspark.sql import functions as F
 
     from boostdb_spark.session import load_tables
-    from boostdb_spark.streaming.drain import drain, landing_schema
+    from boostdb_spark.streaming.drain import (
+        drain,
+        landing_schema,
+        stamp_replay_order,
+    )
     from boostdb_spark.streaming.stateful import streaming_ewma
     from boostdb_spark.streaming.windows import sliding_agg
 
@@ -225,6 +229,11 @@ def _stream_benchmarks(runner: Runner) -> tuple[dict[str, float], dict]:
         .write.mode("overwrite")
         .parquet(landing)
     )
+    stamp_replay_order([
+        [os.path.join(landing, fn)]
+        for fn in sorted(os.listdir(landing))
+        if fn.startswith("part-")
+    ])
     schema = landing_schema(spark, landing)
     times: dict[str, float] = {}
     detail: dict[str, dict] = {}

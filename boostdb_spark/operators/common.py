@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 #: storage class used by checkpoint_corpus; exported so the bench
 #: record's posture fingerprint is derived from the code, not retyped
@@ -83,3 +86,27 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def topk_per_group(
+    df: DataFrame,
+    k: int,
+    group_cols: Sequence[str],
+    order_col: str,
+    ascending: bool = False,
+    tiebreak: Sequence[str] = (),
+) -> DataFrame:
+    """Top-k rows per group (e.g. top series per time bucket, nearest
+    matches per query).
+
+    row_number over a per-group window: single shuffle, no global sort.
+    Deterministic via explicit tiebreak columns (ascending).
+    """
+    oc = F.col(order_col).asc() if ascending else F.col(order_col).desc()
+    order = [oc, *[F.col(c).asc() for c in tiebreak]]
+    w = Window.partitionBy(*group_cols).orderBy(*order)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )

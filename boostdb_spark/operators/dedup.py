@@ -32,7 +32,7 @@ DuckDB oracles reproduce results bit-exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 import hashlib
@@ -59,6 +59,7 @@ def _gen32(label: str) -> int:
 from boostdb_spark.operators.common import checkpoint_corpus  # noqa: E402
 from boostdb_spark.operators.common import no_broadcast  # noqa: E402
 from boostdb_spark.operators.common import spread as _spread  # noqa: E402
+from boostdb_spark.operators.common import topk_per_group  # noqa: E402
 
 
 def exact_dedup(
@@ -469,12 +470,8 @@ def edit_distance_pairs(
         max_doc_freq=max_doc_freq,
     ).localCheckpoint(eager=True)
     if max_candidates_per_doc is not None:
-        w = Window.partitionBy("id_a").orderBy(
-            F.col("jaccard").desc(), F.col("id_b").asc()
-        )
-        cand = (
-            cand.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= max_candidates_per_doc)
+        cand = topk_per_group(
+            cand, max_candidates_per_doc, ["id_a"], "jaccard", tiebreak=["id_b"]
         )
     cand = _spread(cand.select("id_a", "id_b"))
     docs = no_broadcast(_spread(df).select(
@@ -792,17 +789,8 @@ def incremental_dedup(
         .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
     )
-    w = Window.partitionBy("id_a").orderBy(
-        F.col("jaccard").desc(), F.col("id_b").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("id_a").alias("doc_id"),
-            F.col("id_b").alias("match_id"),
-            "jaccard",
-        )
+    return topk_per_group(scored, 1, ["id_a"], "jaccard", tiebreak=["id_b"]).select(
+        F.col("id_a").alias("doc_id"), F.col("id_b").alias("match_id"), "jaccard"
     )
 
 

@@ -16,25 +16,74 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from boostdb_spark.operators.common import no_broadcast
-from boostdb_spark.operators.dedup import _spread
+from boostdb_spark.operators.common import no_broadcast, topk_per_group
+from boostdb_spark.operators.dedup import _gen32, _spread
 
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _with_norm(df: DataFrame, id_col: str, vec_col: str, id_as: str, v_as: str):
-    """(id, v, nrm) with the norm hoisted to a per-row column BEFORE any
-    pair join: norms crossing the join exchange are materialized, so a
-    pair evaluates one dot instead of three (the per-pair
-    dot/(sqrt(dot)*sqrt(dot)) form re-folded both norms for every
-    pair). Also spreads a single-file input across cores — the streamed
-    side of a broadcast nested-loop join otherwise runs one-core."""
-    out = _spread(df).select(
-        F.col(id_col).alias(id_as), _as_double(F.col(vec_col)).alias(v_as)
+def _with_norm(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    id_as: str,
+    v_as: str,
+    *extra,
+    spread: bool = True,
+):
+    """(id, *extra, v, nrm) with the norm hoisted to a per-row column
+    BEFORE any pair join: norms crossing the join exchange are
+    materialized, so a pair evaluates one dot instead of three (the
+    per-pair dot/(sqrt(dot)*sqrt(dot)) form re-folded both norms for
+    every pair). ``spread`` spreads a single-file input across cores —
+    the streamed side of a broadcast nested-loop join otherwise runs
+    one-core."""
+    out = (_spread(df) if spread else df).select(
+        F.col(id_col).alias(id_as), *extra, _as_double(F.col(vec_col)).alias(v_as)
     )
     return out.withColumn(f"{v_as}_nrm", norm(F.col(v_as)))
+
+
+def _cos(a: str, b: str, *, once: bool = False):
+    """The exact pair score ``cos``: :func:`fold_dot` of the vector
+    columns ``a`` and ``b`` over their norms ``a_nrm`` and ``b_nrm``
+    hoisted by :func:`_with_norm`. ``once`` as in :func:`fold_dot`."""
+    return (
+        fold_dot(F.col(a), F.col(b), once=once)
+        / (F.col(f"{a}_nrm") * F.col(f"{b}_nrm"))
+    ).alias("cos")
+
+
+def _scored(pairs: DataFrame, *, once: bool = False) -> DataFrame:
+    """(query_id, match_id, cos) of every candidate pair of a query row
+    (query_id, qv, qv_nrm) and a corpus row (match_id, cv, cv_nrm),
+    self-matches excluded."""
+    return pairs.filter(F.col("query_id") != F.col("match_id")).select(
+        "query_id", "match_id", _cos("qv", "cv", once=once)
+    )
+
+
+def _exact_scored(
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *,
+    once: bool = False,
+) -> DataFrame:
+    """Every (query, corpus) pair scored: the query side broadcast, the
+    corpus streamed — one pass, no shuffle."""
+    q = _with_norm(queries, id_col, vec_col, "query_id", "qv")
+    c = _with_norm(corpus, id_col, vec_col, "match_id", "cv")
+    return _scored(F.broadcast(q).crossJoin(c), once=once)
+
+
+def _top_matches(scored: DataFrame, k: int) -> DataFrame:
+    """The k best-scored matches per query, ties to the smaller match
+    id."""
+    return topk_per_group(scored, k, ["query_id"], "cos", tiebreak=["match_id"])
 
 
 def unit_vec(v_col: str, nrm_col: str):
@@ -102,10 +151,6 @@ def norm(a):
     return F.sqrt(dot(a, a))
 
 
-def cosine(a, b):
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -124,27 +169,7 @@ def cosine_topk(
     (small) candidate set. For huge query sets, use lsh_ann_topk.
     """
     _guard_query_count(queries, max_queries, "cosine_topk")
-    q = _with_norm(queries, id_col, vec_col, "query_id", "qv")
-    c = _with_norm(corpus, id_col, vec_col, "match_id", "cv")
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select(
-            "query_id",
-            "match_id",
-            (fold_dot(F.col("qv"), F.col("cv"))
-             / (F.col("qv_nrm") * F.col("cv_nrm"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _top_matches(_exact_scored(queries, corpus, id_col, vec_col), k)
 
 
 def cosine_range_search(
@@ -170,25 +195,14 @@ def cosine_range_search(
     keep tau meaningfully high or cap queries. For huge query sets
     use the LSH/IVF candidate generators and filter their cos."""
     _guard_query_count(queries, max_queries, "cosine_range_search")
-    q = _with_norm(queries, id_col, vec_col, "query_id", "qv")
-    c = _with_norm(corpus, id_col, vec_col, "match_id", "cv")
     # once=True: cos is both FILTERED on and EMITTED — without the
     # non-deterministic pin the optimizer pushes the tau filter below
     # this projection and every corpus row pays the Arrow fold TWICE
     # (guide §4.4; the r14 python_eval_sweep caught two ArrowEvalPython
     # nodes carrying the same fold). No predicate needs to push past
     # this projection: the self-match filter is already below it.
-    return (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select(
-            "query_id",
-            "match_id",
-            (fold_dot(F.col("qv"), F.col("cv"), once=True)
-             / (F.col("qv_nrm") * F.col("cv_nrm"))).alias("cos"),
-        )
-        .filter(F.col("cos") >= tau)
+    return _exact_scored(queries, corpus, id_col, vec_col, once=True).filter(
+        F.col("cos") >= tau
     )
 
 
@@ -214,7 +228,7 @@ def knn_graph(
     10-label grouping — so group sizes above ``max_group`` REFUSE
     loudly (one count-aggregate guard pass, the _guard_query_count
     pattern) instead of silently melting an executor: re-bucket first
-    (ivf_assign / lsh_bucket, or compose (label, cell)) and pass the
+    (ivf_assign, or compose (label, cell)) and pass the
     finer group. Norms hoist to per-row columns before the join (one
     fold per pair, not three); the per-src top-k is one row_number
     window over the group-local candidates — shuffle on the group
@@ -231,19 +245,14 @@ def knn_graph(
             f"knn_graph: group {big[0][0]!r} has {big[0]['count']} rows "
             f"(> max_group={max_group}); the within-group pair join "
             "would be quadratic in that group. Bucket first "
-            "(ivf_assign / lsh_bucket / compose a finer key) or raise "
+            "(ivf_assign / compose a finer key) or raise "
             "max_group explicitly if the blowup is intended."
         )
-    a = _spread(df).select(
-        F.col(id_col).alias("src"),
-        F.col(group_col).alias("_g"),
-        _as_double(F.col(vec_col)).alias("av"),
-    ).withColumn("av_nrm", norm(F.col("av")))
-    b = no_broadcast(df.select(
-        F.col(id_col).alias("dst"),
-        F.col(group_col).alias("_g2"),
-        _as_double(F.col(vec_col)).alias("bv"),
-    ).withColumn("bv_nrm", norm(F.col("bv"))))
+    a = _with_norm(df, id_col, vec_col, "src", "av", F.col(group_col).alias("_g"))
+    b = no_broadcast(_with_norm(
+        df, id_col, vec_col, "dst", "bv", F.col(group_col).alias("_g2"),
+        spread=False,
+    ))
     # Each unordered pair is scored ONCE (src < dst) and mirrored into
     # both directed edges with a 2-row inline explode: cosine is
     # exactly symmetric (fold_dot adds a_i*b_i in index order; IEEE
@@ -254,14 +263,7 @@ def knn_graph(
     half = (
         a.join(b, F.col("_g") == F.col("_g2"))
         .filter(F.col("src") < F.col("dst"))
-        .select(
-            "src",
-            "dst",
-            (
-                fold_dot(F.col("av"), F.col("bv"))
-                / (F.col("av_nrm") * F.col("bv_nrm"))
-            ).alias("cos"),
-        )
+        .select("src", "dst", _cos("av", "bv"))
     )
     scored = half.select(
         F.explode(
@@ -275,14 +277,7 @@ def knn_graph(
             )
         ).alias("e")
     ).select("e.src", "e.dst", "e.cos")
-    w = Window.partitionBy("src").orderBy(
-        F.col("cos").desc(), F.col("dst").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return topk_per_group(scored, k, ["src"], "cos", tiebreak=["dst"])
 
 
 def cosine_neardup_pairs(
@@ -404,53 +399,18 @@ def cosine_neardup_pairs(
     )
 
 
-def _hyperplane(table_idx: int, plane_idx: int, dim: int):
-    """Deterministic pseudo-random hyperplane: component j of plane i in
-    table t is +1/-1 from bit 0 of md5(t:i:j). Seedless and reproducible
-    — and computed in PYTHON at plan time, so the plane ships to
-    executors as a literal array instead of dim md5 calls per row."""
-    import hashlib
-
-    signs = [
-        1.0
-        if int(hashlib.md5(f"{table_idx}:{plane_idx}:{j}".encode()).hexdigest()[:8], 16)
-        % 2
-        else -1.0
-        for j in range(dim)
-    ]
-    return F.array(*[F.lit(s) for s in signs])
-
-
-def lsh_bucket(vec_col, num_planes: int, dim: int, table_idx: int = 0):
-    """Random-hyperplane (sign) LSH bucket id: bit i = sign(v . plane_i).
-    Cosine-similar vectors collide with probability 1 - theta/pi per
-    bit."""
-    bucket = F.lit(0).cast("long")
-    for i in range(num_planes):
-        bit = F.when(dot(vec_col, _hyperplane(table_idx, i, dim)) >= 0, 1).otherwise(0)
-        bucket = bucket * 2 + bit
-    return bucket
-
-
 def _plane_matrix(num_tables: int, num_planes: int, dim: int):
-    """All hyperplanes as one (tables*planes, dim) ±1 numpy matrix —
-    same md5 derivation as _hyperplane."""
-    import hashlib
-
+    """All hyperplanes as one (tables*planes, dim) ±1 numpy matrix:
+    component j of plane i in table t is +1/-1 from bit 0 of
+    ``_gen32(f"{t}:{i}:{j}")``. Seedless and reproducible, computed in
+    Python at plan time."""
     import numpy as np
 
-    rows = []
-    for t in range(num_tables):
-        for i in range(num_planes):
-            rows.append(
-                [
-                    1.0
-                    if int(hashlib.md5(f"{t}:{i}:{j}".encode()).hexdigest()[:8], 16) % 2
-                    else -1.0
-                    for j in range(dim)
-                ]
-            )
-    return np.array(rows)
+    return np.array([
+        [1.0 if _gen32(f"{t}:{i}:{j}") % 2 else -1.0 for j in range(dim)]
+        for t in range(num_tables)
+        for i in range(num_planes)
+    ])
 
 
 def _lsh_tables(df: DataFrame, vec_col: str, num_planes: int, dim: int, num_tables: int):
@@ -478,7 +438,7 @@ def _lsh_tables(df: DataFrame, vec_col: str, num_planes: int, dim: int, num_tabl
         X = np.stack(v.values)  # (batch, dim)
         bits = (X @ P) >= 0  # (batch, T*p), plane i of table t at t*p+i
         B = bits.reshape(len(X), num_tables, num_planes)
-        w = 1 << np.arange(num_planes - 1, -1, -1)  # MSB-first like lsh_bucket
+        w = 1 << np.arange(num_planes - 1, -1, -1)  # bit i = plane i, MSB first
         return pd.Series(list((B * w).sum(axis=2).astype("int64")))
 
     # asNondeterministic: the optimizer infers `size(..)>0 AND
@@ -530,6 +490,15 @@ def ivf_assign(
     return df.withColumn(out_col, assign(F.col(vec_col)))
 
 
+def _seed_centroids(
+    c: DataFrame, id_as: str, v_as: str, n_centroids: int
+) -> list[tuple[int, list[float]]]:
+    """The seedless IVF init: the ``n_centroids`` lowest-id vectors of a
+    :func:`_with_norm` frame, unit-normalized."""
+    seed = c.orderBy(id_as).limit(n_centroids).collect()
+    return [(int(r[id_as]), unit_list(r[v_as], r[f"{v_as}_nrm"])) for r in seed]
+
+
 def ivf_train_kmeans(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -556,10 +525,7 @@ def ivf_train_kmeans(
     (n_centroids x dim) sums are collected per iteration.
     """
     c = _with_norm(corpus, id_col, vec_col, "cid", "v")
-    seed = c.orderBy("cid").limit(n_centroids).collect()
-    centroids = [
-        (int(r["cid"]), unit_list(r["v"], r["v_nrm"])) for r in seed
-    ]
+    centroids = _seed_centroids(c, "cid", "v", n_centroids)
     normed = c.select(
         "cid", unit_vec("v", "v_nrm").alias("v")
     ).localCheckpoint(eager=False)  # reused every iteration
@@ -697,14 +663,7 @@ def ivf_ann_topk(
         queries, corpus, n_centroids, n_probe, id_col, vec_col,
         centroids, index,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _top_matches(scored, k)
 
 
 def ivf_range_search(
@@ -777,11 +736,7 @@ def _ivf_scored(
     else:
         c = _with_norm(corpus, id_col, vec_col, "match_id", "cv")
         if centroids is None:
-            seed = c.orderBy("match_id").limit(n_centroids).collect()
-            centroids = [
-                (int(r["match_id"]), unit_list(r["cv"], r["cv_nrm"]))
-                for r in seed
-            ]
+            centroids = _seed_centroids(c, "match_id", "cv", n_centroids)
         c_assigned = ivf_assign(c, centroids, "cv", n_probe=1).select(
             "match_id", "cv", "cv_nrm",
             F.element_at("list_id", 1).alias("list_id"),
@@ -789,22 +744,14 @@ def _ivf_scored(
     q_assigned = ivf_assign(q, centroids, "qv", n_probe=n_probe).select(
         "query_id", "qv", "qv_nrm", F.explode("list_id").alias("list_id")
     )
-    scored = (
-        # queries are the broadcast-sized side by construction (a probe
-        # set vs the corpus): broadcasting pins a shuffle-free
-        # hash join — the corpus streams, no exchange, no AQE replan
-        F.broadcast(q_assigned).join(c_assigned, "list_id")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select(
-            "query_id",
-            "match_id",
-            (fold_dot(F.col("qv"), F.col("cv"), once=once)
-             / (F.col("qv_nrm") * F.col("cv_nrm"))).alias("cos"),
-        )
-        # no dedup needed: each corpus vector lives in exactly one list,
-        # and a query probes n_probe DISTINCT lists
+    # queries are the broadcast-sized side by construction (a probe set
+    # vs the corpus): broadcasting pins a shuffle-free hash join — the
+    # corpus streams, no exchange, no AQE replan. No dedup needed: each
+    # corpus vector lives in exactly one list, and a query probes
+    # n_probe DISTINCT lists
+    return _scored(
+        F.broadcast(q_assigned).join(c_assigned, "list_id"), once=once
     )
-    return scored
 
 
 def lsh_ann_topk(
@@ -854,30 +801,16 @@ def lsh_ann_topk(
         _with_norm(corpus, id_col, vec_col, "match_id", "cv"),
         "cv", num_planes, dim, num_tables,
     )
+    # queries are the broadcast-sized side by construction (a probe set
+    # vs the corpus): broadcasting pins a shuffle-free hash join — the
+    # corpus streams, no exchange, no AQE replan; the max-aggregate
+    # dedups multi-table collisions (cos identical across tables)
     scored = (
-        # queries are the broadcast-sized side by construction (a probe
-        # set vs the corpus): broadcasting pins a shuffle-free
-        # hash join — the corpus streams, no exchange, no AQE replan
-        F.broadcast(q).join(c, ["tbl", "bucket"])
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select(
-            "query_id",
-            "match_id",
-            (fold_dot(F.col("qv"), F.col("cv"))
-             / (F.col("qv_nrm") * F.col("cv_nrm"))).alias("cos"),
-        )
-        # dedup multi-table collisions (cos identical across tables)
+        _scored(F.broadcast(q).join(c, ["tbl", "bucket"]))
         .groupBy("query_id", "match_id")
         .agg(F.max("cos").alias("cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _top_matches(scored, k)
 
 
 def centroid_per_group(
@@ -1000,15 +933,10 @@ def centroid_outliers(
             lambda acc, t: acc + t["_d2"],
         ).alias("_s")
     )
-    w = Window.partitionBy("_g").orderBy(F.col("_s").desc(), F.col("_id").asc())
-    return (
-        agg.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            F.col("_g").alias(group_col),
-            F.col("_id").alias(id_col),
-            F.sqrt(F.col("_s")).alias("dist"),
-        )
+    return topk_per_group(agg, k, ["_g"], "_s", tiebreak=["_id"]).select(
+        F.col("_g").alias(group_col),
+        F.col("_id").alias(id_col),
+        F.sqrt(F.col("_s")).alias("dist"),
     )
 
 
@@ -1080,6 +1008,49 @@ def embedding_dim_stats(
     )
 
 
+def _lit_array(xs):
+    return F.array(*[F.lit(x) for x in xs])
+
+
+def _dim_profile(stats: DataFrame, op: str):
+    """The rows of an :func:`embedding_dim_stats` profile in dim order
+    and their means; an empty profile raises."""
+    rows = sorted(stats.collect(), key=lambda r: int(r["dim"]))
+    if not rows:
+        raise ValueError(f"{op}: empty embedding_dim_stats profile")
+    return rows, [float(r["mean"]) for r in rows]
+
+
+def _centered(vec_col: str, means: list[float]):
+    """``x - mean`` per dimension, in double, the means as literals."""
+    return F.zip_with(
+        _as_double(F.col(vec_col)), _lit_array(means), lambda x, mu: x - mu
+    )
+
+
+def _cov_times(src: DataFrame, v: list[float], scale: int) -> list[float]:
+    """One power-iteration pass over the centered column ``_c`` of
+    ``src``: per dimension j, the sum over rows of ``c_j * (c . v)``
+    (n times ``C v``). Each contribution quantizes to the 1/scale grid
+    and sums as exact decimal integers, so the result is the same under
+    any partitioning. Only the dim-length vector is collected."""
+    d = dot(F.col("_c"), _lit_array(v))
+    q = F.transform(
+        F.transform(F.col("_c"), lambda x: x * d),
+        lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("long"),
+    )
+    sums = (
+        src.select(F.posexplode(q).alias("dim", "_q"))
+        .groupBy("dim")
+        .agg(F.sum(F.col("_q").cast("decimal(38,0)")).alias("s"))
+        .collect()
+    )
+    w = [0.0] * len(v)
+    for r in sums:
+        w[int(r["dim"])] = float(r["s"]) / float(scale)
+    return w
+
+
 def top_principal_component(
     df: DataFrame,
     n_iter: int = 12,
@@ -1110,42 +1081,19 @@ def top_principal_component(
     broadcast literals. 100 TB-safe by construction."""
     import math
 
-    stats = embedding_dim_stats(df, vec_col, scale=scale).collect()
-    if not stats:
-        raise ValueError("top_principal_component: empty input")
+    stats, means = _dim_profile(
+        embedding_dim_stats(df, vec_col, scale=scale), "top_principal_component"
+    )
     dim = len(stats)
-    means = [0.0] * dim
-    for r in stats:
-        means[int(r["dim"])] = float(r["mean"])
     n_rows = int(stats[0]["n"])
     v = [0.0] * dim
     v[max(stats, key=lambda r: (float(r["variance"]), int(r["dim"])))["dim"]] = 1.0
-
-    src = _spread(df).select(_as_double(F.col(vec_col)).alias("_x"))
-    m_arr = F.array(*[F.lit(m) for m in means])
-    centered = F.zip_with(F.col("_x"), m_arr, lambda x, mu: x - mu)
-    src = src.select(centered.alias("_c")).localCheckpoint(eager=False)
+    src = _spread(df).select(_centered(vec_col, means).alias("_c"))
+    src = src.localCheckpoint(eager=False)  # reused every iteration
 
     lam = 0.0
     for _ in range(n_iter):
-        v_arr = F.array(*[F.lit(x) for x in v])
-        d = dot(F.col("_c"), v_arr)
-        contrib = F.transform(F.col("_c"), lambda x: x * d)
-        q = F.transform(
-            contrib,
-            lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast(
-                "long"
-            ),
-        )
-        sums = (
-            src.select(F.posexplode(q).alias("dim", "_q"))
-            .groupBy("dim")
-            .agg(F.sum(F.col("_q").cast("decimal(38,0)")).alias("s"))
-            .collect()
-        )
-        w = [0.0] * dim
-        for r in sums:
-            w[int(r["dim"])] = float(r["s"]) / float(scale)
+        w = _cov_times(src, v, scale)
         # Rayleigh quotient BEFORE normalization: lam = v.(Cv) with
         # Cv = w/n (v is unit)
         lam = sum(a * b for a, b in zip(v, w)) / n_rows
@@ -1181,22 +1129,15 @@ def remove_top_component(
     ``dot(x', v) == 0`` up to double rounding for every row — the
     invariant emb_abtt_certified pins."""
     if means is None:
-        stats = embedding_dim_stats(df, vec_col).collect()
-        if not stats:
-            raise ValueError("remove_top_component: empty input")
-        means = [0.0] * len(stats)
-        for r in stats:
-            means[int(r["dim"])] = float(r["mean"])
+        _, means = _dim_profile(
+            embedding_dim_stats(df, vec_col), "remove_top_component"
+        )
     if len(means) != len(component):
         raise ValueError(
             f"means ({len(means)}) and component ({len(component)}) "
             "dimensions differ"
         )
-    m_arr = F.array(*[F.lit(m) for m in means])
-    v_arr = F.array(*[F.lit(x) for x in component])
-    centered = F.zip_with(
-        _as_double(F.col(vec_col)), m_arr, lambda x, mu: x - mu
-    )
+    v_arr = _lit_array(component)
     # the projection scalar materializes via fold_dot (one Arrow-batch
     # pass) BEFORE the subtraction zip_with — embedding the fold
     # expression inside the lambda would re-evaluate it per element
@@ -1204,7 +1145,7 @@ def remove_top_component(
     base = _spread(df).select(
         F.col(id_col),
         *[F.col(c) for c in keep_cols],
-        centered.alias("_c"),
+        _centered(vec_col, means).alias("_c"),
     ).withColumn("_p", fold_dot(F.col("_c"), v_arr))
     out = F.zip_with(
         F.col("_c"), v_arr, lambda c, vv: c - F.col("_p") * vv
@@ -1273,30 +1214,12 @@ def pca_residual(
     scalar is deterministic."""
     import math
 
-    stats = embedding_dim_stats(df, vec_col, scale=scale).collect()
-    dim = len(stats)
-    means = [0.0] * dim
-    for r in stats:
-        means[int(r["dim"])] = float(r["mean"])
+    stats, means = _dim_profile(
+        embedding_dim_stats(df, vec_col, scale=scale), "pca_residual"
+    )
     n_rows = int(stats[0]["n"])
-    src = _spread(df).select(_as_double(F.col(vec_col)).alias("_x"))
-    m_arr = F.array(*[F.lit(m) for m in means])
-    c = F.zip_with(F.col("_x"), m_arr, lambda x, mu: x - mu)
-    v_arr = F.array(*[F.lit(x) for x in component])
-    d = dot(c, v_arr)
-    q = F.transform(
-        F.transform(c, lambda x: x * d),
-        lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("long"),
-    )
-    sums = (
-        src.select(F.posexplode(q).alias("dim", "_q"))
-        .groupBy("dim")
-        .agg(F.sum(F.col("_q").cast("decimal(38,0)")).alias("s"))
-        .collect()
-    )
-    cv = [0.0] * dim
-    for r in sums:
-        cv[int(r["dim"])] = float(r["s"]) / float(scale) / n_rows
+    src = _spread(df).select(_centered(vec_col, means).alias("_c"))
+    cv = [x / n_rows for x in _cov_times(src, component, scale)]
     resid = math.sqrt(
         sum((a - eigenvalue * b) ** 2 for a, b in zip(cv, component))
     )
@@ -1331,19 +1254,11 @@ def whiten_embeddings(
 
     if stats is None:
         stats = embedding_dim_stats(df, vec_col)
-    rows = stats.orderBy("dim").collect()  # |dims| rows — bounded
-    if not rows:
-        raise ValueError("whiten_embeddings: empty stats profile")
-    means = [float(r["mean"]) for r in rows]
+    rows, means = _dim_profile(stats, "whiten_embeddings")  # |dims| rows
     sds = [math.sqrt(max(float(r["variance"]), 0.0)) for r in rows]
-    m_arr = F.array(*[F.lit(m) for m in means])
-    s_arr = F.array(*[F.lit(s) for s in sds])
-    centered = F.zip_with(
-        _as_double(F.col(vec_col)), m_arr, lambda x, mu: x - mu
-    )
     z = F.zip_with(
-        centered,
-        s_arr,
+        _centered(vec_col, means),
+        _lit_array(sds),
         lambda c, s: F.when(s > 0.0, c / s).otherwise(F.lit(0.0)),
     )
     return _spread(df).select(
@@ -1607,7 +1522,7 @@ def pq_ann_topk(
     # ONE posexplode fans the per-query distance array out to rows —
     # a per-query union would build n_q plan branches and re-scan the
     # codes n_q times
-    qid_arr = F.array(*[F.lit(q) for q in q_ids])
+    qid_arr = _lit_array(q_ids)
     all_scored = scored.select(
         "match_id", F.posexplode(F.col("_d")).alias("_qi", "adist")
     ).select(
@@ -1615,13 +1530,9 @@ def pq_ann_topk(
         "match_id",
         "adist",
     ).filter(F.col("query_id") != F.col("match_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("match_id").asc()
-    )
-    cand = (
-        all_scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= (topk * rerank if rerank else topk))
-        .drop("rn", "codes")
+    cand = topk_per_group(
+        all_scored, topk * rerank if rerank else topk, ["query_id"], "adist",
+        ascending=True, tiebreak=["match_id"],
     )
     if not rerank:
         return cand
@@ -1650,14 +1561,9 @@ def pq_ann_topk(
         "match_id",
     )
     exact = joined.withColumn("dist", exact_l2(F.col("query_id"), F.col(vec_col)))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("match_id").asc()
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "match_id", "dist")
-    )
+    return topk_per_group(
+        exact, topk, ["query_id"], "dist", ascending=True, tiebreak=["match_id"]
+    ).select("query_id", "match_id", "dist")
 
 
 def rrf_fuse(
@@ -1740,10 +1646,7 @@ def mmr_rerank(
     import pandas as pd
 
     _guard_query_count(queries, max_queries, "mmr_rerank")
-    cand = cosine_topk(
-        queries, corpus, k=pool, id_col=id_col, vec_col=vec_col,
-        max_queries=max_queries,
-    )
+    cand = _top_matches(_exact_scored(queries, corpus, id_col, vec_col), pool)
     withv = cand.join(
         no_broadcast(
             corpus.select(

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from boostdb_spark.operators.common import no_broadcast
+from boostdb_spark.operators.common import no_broadcast, topk_per_group
 from boostdb_spark.operators.common import spread as _spread
 
 #: split pattern shared with the DuckDB oracles (ASCII word tokens)
@@ -550,14 +550,7 @@ def tf_idf_topk(
             6,
         ).alias("tfidf"),
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("token").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return topk_per_group(scored, k, ["doc_id"], "tfidf", tiebreak=["token"])
 
 
 def unigram_logprob(

@@ -21,6 +21,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# re-exported: callers use timeseries.topk_per_group
+from boostdb_spark.operators.common import topk_per_group  # noqa: F401
+
 NS_PER_SEC = 1_000_000_000
 
 
@@ -852,29 +855,6 @@ def ewma_rows(
         return res
 
     return proj.groupBy(*series_cols).applyInPandas(fn, schema)
-
-
-def topk_per_group(
-    df: DataFrame,
-    k: int,
-    group_cols: Sequence[str],
-    order_col: str,
-    ascending: bool = False,
-    tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """Top-k rows per group (e.g. top series per time bucket).
-
-    row_number over a per-group window: single shuffle, no global sort.
-    Deterministic via explicit tiebreak columns.
-    """
-    oc = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    order = [oc, *[F.col(c).asc() for c in tiebreak]]
-    w = Window.partitionBy(*group_cols).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
 
 
 def zscore_anomaly(

@@ -205,6 +205,19 @@ def landing_schema(spark: SparkSession, path: str):
     return _LANDING_SCHEMA[path]
 
 
+def stamp_replay_order(groups: list[list[str]]) -> None:
+    """Give the files of each group one mtime, strictly increasing from
+    group to group and past-dated (never ahead of the clock). A file
+    stream source takes files in modification-time order, so the
+    landing replays its groups in the given order in every run; files
+    written by parallel tasks otherwise land in whatever order the
+    tasks finished."""
+    base = int(time.time()) - 3600
+    for i, group in enumerate(groups):
+        for path in group:
+            os.utime(path, (base + 10 * i, base + 10 * i))
+
+
 def progress_detail(q, wall_s: float | None = None) -> dict:
     """Decompose a finished StreamingQuery's progress events into the
     bench-readable shape: per-batch wall (triggerExecution) and input

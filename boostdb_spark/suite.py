@@ -56,6 +56,7 @@ from boostdb_spark.streaming.drain import (
     drain_conf,
     landing_schema,
     progress_detail,
+    stamp_replay_order,
 )
 
 
@@ -145,30 +146,38 @@ def _q(name: str, oracle: str | None):
 # agg_approx_count_distinct / agg_approx_quantiles are oracle-less
 # (approx by design) with driver-green history — below the fold.
 _WINDOW: tuple[str, ...] = (
-    # CHANGED CODE FIRST — the n-gram pair finders that now share one
-    # shingle table, one banding step and one exact-overlap path
-    # (operators/dedup.py), then the series-family entries whose
-    # writers the one-kind-of-writer check guards, the standing dialect
+    # CHANGED CODE FIRST — the vector operators that now share one pair
+    # scorer, one top-k cut (operators/common.topk_per_group) and one
+    # covariance pass (operators/similarity.py), and the text and dedup
+    # entries whose inline top-k cut became that call; then the dedup
+    # pair finders, the series-family entries, the standing dialect
     # canaries, the streaming-drain cohort, the standing canaries and
     # the LLM-pipeline entries.
+    "emb_cosine_topk",        # exact scorer + cut
+    "emb_range_search",       # exact scorer, once=True
+    "emb_mmr_rerank",         # one query-side guard
+    "emb_knn_graph",          # llm_dedup's k-NN graph
+    "emb_outliers",           # centroid_outliers cut
+    "emb_pca_certified",      # covariance pass + pca_residual
+    "emb_abtt_certified",     # remove_top_component means
+    "emb_whiten",             # whiten_embeddings means
+    "ann_recall_certified",   # IVF/LSH scorer + cut
+    "ann_range_certified",    # IVF scorer, once=True
+    "ann_append_certified",   # IVF seed centroids, PQ cut
+    "dedup_semantic",         # _with_norm, ivf_train_kmeans seed
+    "txt_tfidf_topk",         # tf_idf_topk cut
+    "dedup_incremental",      # best-match cut
+    "dedup_levenshtein",      # per-doc candidate cap
+    "dedup_levenshtein_capped",
     "dedup_minhash_lsh",      # _band_signatures + candidate overlap path
     "dedup_keep_best",        # LSH pairs -> components -> keep policy
-    "dedup_incremental",      # one shingle pass per corpus
-    "dedup_ngram_jaccard_capped",  # all-pairs overlap path, df cap
-    "dedup_containment",      # shingle_containment_pairs
-    "doc_source_overlap",     # shingle table keyed by source
     "flagship_series_scan",   # scan + dialect front + implicit range
     "seriesfamily_roundtrip",  # batch-written family: write + fetch
     "stream_ingest_parity",   # stream-written family: stream_write
-    "dialect_agg_expr", "dialect_arg_minmax", "dialect_bool_agg",
-    "dialect_cte", "dialect_exists", "dialect_filter_agg",
-    "dialect_group_all", "dialect_group_expr", "dialect_grouping_sets",
-    "dialect_join", "dialect_join_full", "dialect_join_left",
-    "dialect_join_multi", "dialect_join_multikey", "dialect_join_right",
-    "dialect_join_theta", "dialect_limit_ties",
-    "dialect_nulls_order", "dialect_pivot_sum", "dialect_select_scalar_sub",
-    "dialect_string_agg", "dialect_subquery", "dialect_unpivot",
-    "dialect_using", "dialect_values",
+    "dialect_agg_expr", "dialect_cte", "dialect_grouping_sets",
+    "dialect_join", "dialect_join_multi", "dialect_join_theta",
+    "dialect_limit_ties", "dialect_pivot_sum", "dialect_select_scalar_sub",
+    "dialect_subquery", "dialect_unpivot", "dialect_using", "dialect_values",
     "dialect_frame_exclude",  # EXCLUDE lowering, now SQL text
     # --- streaming drain / window-helper consolidation ---
     "stream_session_parity", "stream_sliding_parity",
@@ -183,7 +192,14 @@ _WINDOW: tuple[str, ...] = (
     "dedup_exact",            # dedup family
     "dedup_groups",
     "txt_bm25_topk", "pipeline_hybrid_rrf",
-    # ROTATION PREP — queued next: scan_time_sliced, dialect_params,
+    # ROTATION PREP — queued next: the dialect canaries and n-gram pair
+    # finders that made room for the vector operators
+    # (dedup_ngram_jaccard_capped, dedup_containment, doc_source_overlap,
+    # dialect_arg_minmax, dialect_bool_agg, dialect_exists,
+    # dialect_filter_agg, dialect_group_all, dialect_group_expr,
+    # dialect_join_full, dialect_join_left, dialect_join_multikey,
+    # dialect_join_right, dialect_nulls_order, dialect_string_agg),
+    # then scan_time_sliced, dialect_params,
     # dialect_window and dialect_asof_join (left the window for the
     # dedup pair finders), dialect_sample and dialect_lateral_tokenize,
     # stream_retention_parity and stream_dedup_parity,
@@ -194,7 +210,7 @@ _WINDOW: tuple[str, ...] = (
     # dialect_select_star, distinct_series, scan_hive_partition_prune,
     # scan_schema_evolution, scan_snapshot_apply, subquery_exists,
     # time_bucket_agg, ts_histogram_quantile, ts_interp_align,
-    # ts_m4_downsample, txt_redact_pii, txt_tfidf_topk,
+    # ts_m4_downsample, txt_redact_pii,
     # udaf_grouped_range, where_ops, window_moving_avg,
     # window_navigation, window_rank_ntile, window_running_sum; then
     # the ROUND-9 cohort in name order.
@@ -6124,21 +6140,19 @@ _STREAM_LANDING: dict = {}
 
 def _write_landing_slices(parts, landing) -> None:
     """Write each time-slice as one file under its own subdir and stamp
-    strictly-increasing mtimes with ``os.utime`` so the file stream
-    source (which orders files by modification time) replays the slices
-    in order. Replaces the former inter-slice ``sleep(1.1)`` calls —
-    identical replay order, ~2 s cheaper per cold landing build
+    strictly-increasing mtimes (:func:`stamp_replay_order`) so the file
+    stream source (which orders files by modification time) replays the
+    slices in order. Replaces the former inter-slice ``sleep(1.1)``
+    calls — identical replay order, ~2 s cheaper per cold landing build
     (r13-verdict ask #6)."""
     import os
-    import time as _time
 
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.parquet(os.path.join(landing, f"f{i}"))
-    base = int(_time.time()) - 3600  # past-dated: never ahead of clock
-    for i in range(len(parts)):
-        d = os.path.join(landing, f"f{i}")
-        for fn in os.listdir(d):
-            os.utime(os.path.join(d, fn), (base + 10 * i, base + 10 * i))
+    dirs = [os.path.join(landing, f"f{i}") for i in range(len(parts))]
+    for p, d in zip(parts, dirs):
+        p.coalesce(1).write.parquet(d)
+    stamp_replay_order(
+        [[os.path.join(d, fn) for fn in os.listdir(d)] for d in dirs]
+    )
 
 
 def _time_ordered_landing(src: DataFrame, key: tuple) -> str:

@@ -546,3 +546,58 @@ def test_ivf_range_search_subset_and_full_probe(spark):
     full = sim.ivf_range_search(q, emb, tau=tau, n_centroids=8, n_probe=8)
     assert full.exceptAll(exact).count() == 0
     assert exact.exceptAll(full).count() == 0
+
+
+def test_mmr_rerank_probes_query_side_once(spark, monkeypatch):
+    """mmr_rerank guards its query side itself and scores through the
+    unguarded scorer and cut, so one call makes one limit(n+1) probe."""
+    calls = []
+    guard = sim._guard_query_count
+
+    def counting(queries, max_queries, op):
+        calls.append(op)
+        guard(queries, max_queries, op)
+
+    monkeypatch.setattr(sim, "_guard_query_count", counting)
+    rows = [(i, [1.0, float(i), 0.5, 0.0]) for i in range(1, 6)]
+    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    sim.mmr_rerank(df.filter(F.col("vec_id") == 1), df, k=2, pool=3).collect()
+    assert calls == ["mmr_rerank"]
+
+
+def test_topk_cut_breaks_exact_ties_by_smaller_id(spark):
+    """Exact duplicate vectors give exactly tied cos values; every
+    top-k operator keeps exactly k rows per key and the smaller ids win
+    the ties. Rows arrive in descending id order so the input order
+    cannot produce the expected answer by itself."""
+    v, w = [0.3, 0.1, 0.7, 0.2], [0.9, -0.2, 0.1, 0.4]
+    rows = (
+        [(i, 0, v) for i in range(1, 7)]
+        + [(i, 0, w) for i in range(11, 17)]
+        + [(21, 0, [-0.5, 0.5, 0.1, 0.0]), (22, 0, [0.0, 0.1, -0.9, 0.3])]
+    )
+    df = spark.createDataFrame(
+        sorted(rows, reverse=True), "vec_id LONG, label INT, embedding ARRAY<DOUBLE>"
+    )
+    q = df.filter(F.col("vec_id").isin(1, 3, 12))
+    want = {1: [2, 3, 4], 3: [1, 2, 4], 12: [11, 13, 14]}
+
+    def per_key(out, key, val):
+        got: dict = {}
+        for r in out.collect():
+            got.setdefault(r[key], []).append((-r["cos"], r[val]))
+        return {k: [m for _, m in sorted(x)] for k, x in got.items()}
+
+    ops = {
+        "cosine_topk": sim.cosine_topk(q, df, k=3),
+        "ivf_ann_topk": sim.ivf_ann_topk(q, df, k=3, n_centroids=4, n_probe=4),
+        "lsh_ann_topk": sim.lsh_ann_topk(q, df, k=3, dim=4, num_planes=2),
+    }
+    for name, out in ops.items():
+        assert per_key(out, "query_id", "match_id") == want, name
+    graph = per_key(sim.knn_graph(df, k=3, group_col="label"), "src", "dst")
+    assert sorted(graph) == sorted(r[0] for r in rows)
+    assert all(len(x) == 3 for x in graph.values())
+    for group in (range(1, 7), range(11, 17)):
+        for src in group:
+            assert graph[src] == [i for i in group if i != src][:3], src

@@ -2,10 +2,10 @@
 produce in two checkouts.
 
 For every suite entry that calls ``sugar.query`` / ``sugar.plan``,
-``SeriesFamily.fetch``, ``timeseries.asof_join`` or an
-``operators.dedup`` function, and for the seven
-``tsdb_query`` shapes (three dialect queries, four built on ``fetch``),
-each checkout runs the entry's statement once (``collect``) and prints
+``SeriesFamily.fetch``, ``timeseries.asof_join``, an ``operators.dedup``
+or ``operators.similarity`` function or ``text.tf_idf_topk``, for the
+seven ``tsdb_query`` shapes (three dialect queries, four built on
+``fetch``) and for the ``llm_dedup`` k-NN graph shape, each checkout runs the entry's statement once (``collect``) and prints
 its optimized logical plan and its final physical plan: the adaptive
 plan as it ran (``isFinalPlan=true``), so a join that AQE turned into a
 broadcast at run time reads as one. Expression ids, plan ids, RDD and
@@ -51,6 +51,8 @@ _NORMALIZE = [
     # a checkpointed frame's call site, which PySpark may or may not set
     (re.compile(r"(RDD at \w+) at \S+:\d+"), r"\1"),
     (re.compile(r"local-\d{6,}"), "local-app"),  # application ids in paths
+    # temporary directories (tempfile.mkdtemp's 8 random characters)
+    (re.compile(r"(/boost_[a-z_]*?_)[a-z0-9_]{8}(?=/)"), r"\1tmp"),
     # a final adaptive plan numbers its query stages and codegen stages in
     # the order they ran
     (re.compile(r"(QueryStage\nOutput \[\d+\]: \[[^\]]*\]\nArguments: )\d+"), r"\1N"),
@@ -126,6 +128,29 @@ def _tsdb_frames(spark, checkout: Path, work: str) -> dict:
     return out
 
 
+def _llm_dedup_frames(spark, checkout: Path, work: str) -> dict:
+    """The ``llm_dedup`` k-NN graph over the workload's generated
+    embeddings (seed 0), read back from parquet as the workload reads
+    them."""
+    sys.path.insert(0, str(checkout / "perfbench"))
+    import gen
+    import numpy as np
+    import pyarrow.parquet as pq
+    from workloads.llm_dedup import DIM, DUP_FRAC, KNN_K, LABELS, N_VECS
+
+    from boostdb_spark.operators import similarity
+
+    path = f"{work}/vecs.parquet"
+    pq.write_table(
+        gen.embeddings(np.random.default_rng([0, 1]), N_VECS, DIM, LABELS, DUP_FRAC),
+        path,
+    )
+    vecs = spark.read.parquet(path)
+    return {"llm_dedup:knn_graph": lambda: similarity.knn_graph(
+        vecs, k=KNN_K, group_col="label"
+    )}
+
+
 def dump(checkout: Path, sf: str, out_json: str) -> None:
     """Run every compared entry of ``checkout`` and write its plans."""
     sys.path.insert(0, str(checkout))
@@ -138,13 +163,15 @@ def dump(checkout: Path, sf: str, out_json: str) -> None:
         name: (lambda fn=fn: fn(spark, sf))
         for name, fn in sorted(suite.spark_queries().items())
         if re.search(
-            r"sugar\.(query|plan)\(|\.fetch\(|asof_join\(|\bdd\.\w+\(|operators\.dedup import",
+            r"sugar\.(query|plan)\(|\.fetch\(|asof_join\(|\bdd\.\w+\(|operators\.dedup import"
+            r"|\bsim\.\w+\(|\btx\.tf_idf_topk\(",
             inspect.getsource(fn),
         )
     }
     plans = {}
     with tempfile.TemporaryDirectory() as work:
         frames.update(_tsdb_frames(spark, checkout, work))
+        frames.update(_llm_dedup_frames(spark, checkout, work))
         for name, make in frames.items():
             try:
                 df = make()
