@@ -1033,14 +1033,17 @@ def _cov_times(src: DataFrame, v: list[float], scale: int) -> list[float]:
     ``src``: per dimension j, the sum over rows of ``c_j * (c . v)``
     (n times ``C v``). Each contribution quantizes to the 1/scale grid
     and sums as exact decimal integers, so the result is the same under
-    any partitioning. Only the dim-length vector is collected."""
+    any partitioning. Only the dim-length vector is collected. The dot
+    ``c . v`` is its own column ``_d`` below the ``posexplode``, so it
+    is evaluated once per row, not once per element of the lambda."""
     d = dot(F.col("_c"), _lit_array(v))
     q = F.transform(
-        F.transform(F.col("_c"), lambda x: x * d),
+        F.transform(F.col("_c"), lambda x: x * F.col("_d")),
         lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("long"),
     )
     sums = (
-        src.select(F.posexplode(q).alias("dim", "_q"))
+        src.select("_c", d.alias("_d"))
+        .select(F.posexplode(q).alias("dim", "_q"))
         .groupBy("dim")
         .agg(F.sum(F.col("_q").cast("decimal(38,0)")).alias("s"))
         .collect()

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from boostdb_spark.functions.scalar import ts_ns
+
 # re-exported: callers use timeseries.topk_per_group
 from boostdb_spark.operators.common import topk_per_group  # noqa: F401
 
@@ -73,6 +75,108 @@ def bucket_agg(
 
 def _series_window(series_cols: Sequence[str], ts_col: str, order_extra: Sequence[str] = ()):
     return Window.partitionBy(*series_cols).orderBy(ts_col, *order_extra)
+
+
+def _grid6(c):
+    """The integer 1e-6 grid: floor(x*1e6 + 0.5), a whole double."""
+    return F.floor(c * F.lit(1000000.0) + F.lit(0.5))
+
+
+def _q6(c):
+    """Engine-neutral 6dp quantizer: floor(x*1e6 + 0.5)/1e6 — every
+    step is an IEEE op computed identically everywhere, unlike round()
+    (Spark rounds the SHORTEST DECIMAL REPR via BigDecimal, DuckDB the
+    binary value — they disagree exactly at half boundaries, which
+    /count rationals hit routinely)."""
+    return _grid6(c) / F.lit(1000000.0)
+
+
+def _mean(c):
+    """Exact mean of a group: the decimal(18,6) sum as a double over
+    the group's row count."""
+    return F.sum(c.cast("decimal(18,6)")).cast("double") / F.count(F.lit(1))
+
+
+def _bucket_means(
+    df: DataFrame,
+    bucket_seconds: int,
+    keys: Sequence[str],
+    value_col: str,
+    ts_col: str,
+) -> DataFrame:
+    """Per-(bucket, keys) exact mean ``_m`` of the non-NULL values (a
+    bucket whose values are all NULL has no row)."""
+    return bucket_agg(
+        df.filter(F.col(value_col).isNotNull()),
+        bucket_seconds,
+        keys=list(keys),
+        aggs=[_mean(F.col(value_col)).alias("_m")],
+        ts_col=ts_col,
+    )
+
+
+def _bucket_list(df: DataFrame, keys: Sequence[str], *fields: str) -> DataFrame:
+    """Per ``keys``, the bucket-sorted list ``_a`` of
+    struct(bucket, fields...) and its length ``n``."""
+    return df.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(F.struct("bucket", *fields))).alias("_a"),
+        F.count(F.lit(1)).alias("n"),
+    )
+
+
+def _fold(expr):
+    """Left fold of ``expr`` over the list ``_a``, from 0.0."""
+    return F.aggregate(F.col("_a"), F.lit(0.0), expr)
+
+
+def _pearson(pairs: DataFrame, keys: Sequence[str], out_col: str) -> DataFrame:
+    """Pearson correlation of ``_x`` and ``_y`` per ``keys`` over the
+    aligned (bucket, _x, _y) rows of ``pairs``: five bucket-ordered
+    fold sums and one fixed double formula. Returns (keys..., n,
+    out_col)."""
+    agg = _bucket_list(pairs, keys, "_x", "_y")
+    sx = _fold(lambda acc, t: acc + t["_x"])
+    sy = _fold(lambda acc, t: acc + t["_y"])
+    sxy = _fold(lambda acc, t: acc + t["_x"] * t["_y"])
+    sxx = _fold(lambda acc, t: acc + t["_x"] * t["_x"])
+    syy = _fold(lambda acc, t: acc + t["_y"] * t["_y"])
+    nd = F.col("n").cast("double")
+    corr = (nd * sxy - sx * sy) / (
+        F.sqrt(nd * sxx - sx * sx) * F.sqrt(nd * syy - sy * sy)
+    )
+    return agg.select(*keys, "n", corr.alias(out_col))
+
+
+def _bucket_values(
+    df: DataFrame,
+    bucket_seconds: int,
+    keys: Sequence[str],
+    value_col: str,
+    ts_col: str,
+) -> DataFrame:
+    """Per (bucket, keys) the sorted non-NULL values ``_v`` (as
+    doubles) and their count ``n``."""
+    return bucket_agg(
+        df.filter(F.col(value_col).isNotNull()),
+        bucket_seconds,
+        keys=list(keys),
+        aggs=[
+            F.array_sort(F.collect_list(F.col(value_col).cast("double"))).alias("_v"),
+            F.count(F.lit(1)).alias("n"),
+        ],
+        ts_col=ts_col,
+    )
+
+
+def _interp(arr, n, pos):
+    """The value at 0-based fractional position ``pos`` of the sorted
+    array ``arr`` of length ``n``, linearly interpolated between its
+    two neighbours."""
+    lo = F.floor(pos).cast("long")
+    frac = pos - lo.cast("double")
+    v_lo = F.element_at(arr, (lo + 1).cast("int"))
+    v_hi = F.element_at(arr, F.least(lo + 2, n).cast("int"))
+    return v_lo + frac * (v_hi - v_lo)
 
 
 def delta(
@@ -201,26 +305,14 @@ def gap_fill(
         return joined
     if fill == "zero":
         return joined.withColumn(value_col, F.coalesce(F.col(value_col), F.lit(0.0)))
+    wb = _series_window(series_cols, "bucket")
+    wp = wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     if fill == "locf":
-        w = (
-            Window.partitionBy(*series_cols)
-            .orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
         return joined.withColumn(
-            value_col, F.last(F.col(value_col), ignorenulls=True).over(w)
+            value_col, F.last(F.col(value_col), ignorenulls=True).over(wp)
         )
     if fill == "interp":
-        wp = (
-            Window.partitionBy(*series_cols)
-            .orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        wn = (
-            Window.partitionBy(*series_cols)
-            .orderBy("bucket")
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
+        wn = wb.rowsBetween(Window.currentRow, Window.unboundedFollowing)
         v = F.col(value_col)
         known_b = F.when(v.isNotNull(), F.col("bucket"))
         pv = F.last(v, ignorenulls=True).over(wp)
@@ -278,8 +370,6 @@ def asof_join(
     on = list(on)
     rts = right_ts_col or ts_col
     rpayload = [c for c in right.columns if c not in on and c != rts]
-
-    from boostdb_spark.functions.scalar import ts_ns
 
     # Both sides' ordering column goes through the ns conversion — a
     # cast between long and timestamp (epoch-SECONDS semantics) would
@@ -418,15 +508,6 @@ def moving_agg(
     return df.withColumn(out_col or f"moving_{how}", fns[how].over(w))
 
 
-def _q6(c):
-    """Engine-neutral 6dp quantizer: floor(x*1e6 + 0.5)/1e6 — every
-    step is an IEEE op computed identically everywhere, unlike round()
-    (Spark rounds the SHORTEST DECIMAL REPR via BigDecimal, DuckDB the
-    binary value — they disagree exactly at half boundaries, which
-    /count rationals hit routinely)."""
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
-
 def seasonal_decompose(
     df: DataFrame,
     period: int,
@@ -463,40 +544,21 @@ def seasonal_decompose(
     bucket aggregate + one range-frame window + one small per-phase
     aggregate broadcast back; the only full-data shuffle is the
     bucket groupBy."""
-    b = bucket_agg(
-        df.filter(F.col(value_col).isNotNull()),
-        bucket_seconds,
-        keys=list(series_cols),
-        aggs=[
-            _q6(
-                F.sum(F.col(value_col).cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("value")
-        ],
+    b = _bucket_means(df, bucket_seconds, series_cols, value_col, ts_col).select(
+        "bucket", *series_cols, _q6(F.col("_m")).alias("value")
     )
     span = bucket_seconds * NS_PER_SEC
     # integer div — a double route would round above 2^53 (ns epochs)
     b = b.withColumn("_bi", F.expr(f"bucket div {span}"))
     vq = F.col("value").cast("decimal(18,6)")
+    half = period // 2
+    w = _series_window(series_cols, "_bi").rangeBetween(-half, half)
+    n_frame = F.count(F.lit(1)).over(w)
     if period % 2 == 1:
-        half = (period - 1) // 2
-        w = (
-            Window.partitionBy(*series_cols)
-            .orderBy("_bi")
-            .rangeBetween(-half, half)
-        )
-        n_frame = F.count(F.lit(1)).over(w)
         trend = F.when(
             n_frame == period, F.sum(vq).over(w).cast("double") / n_frame
         )
     else:
-        half = period // 2
-        w = (
-            Window.partitionBy(*series_cols)
-            .orderBy("_bi")
-            .rangeBetween(-half, half)
-        )
-        n_frame = F.count(F.lit(1)).over(w)
         # 2xMA: period+1 points, half weight at both frame ends
         wsum = (
             F.sum(vq).over(w).cast("double")
@@ -562,12 +624,8 @@ def sessionize(
     This is the row-labeling complement of the streaming
     ``session_window`` aggregate (streaming/windows.py): that one
     aggregates per session; this one tags rows for downstream joins."""
-    from boostdb_spark.functions.scalar import ts_ns
-
     ord_ns = ts_ns(df, ts_col)
-    w = Window.partitionBy(*series_cols).orderBy(
-        ord_ns, *[F.col(c) for c in order_extra]
-    )
+    w = _series_window(series_cols, ord_ns, order_extra)
     gap_ns = gap_seconds * NS_PER_SEC
     is_start = (
         F.lag(ord_ns).over(w).isNull()
@@ -603,13 +661,9 @@ def moving_time_agg(
 
     Requires INT64-ns ``ts`` (use ``functions.scalar.ts_ns`` first for
     timestamp columns)."""
-    from boostdb_spark.functions.scalar import ts_ns
-
     ord_ns = ts_ns(df, ts_col)
-    w = (
-        Window.partitionBy(*series_cols)
-        .orderBy(ord_ns)
-        .rangeBetween(-(window_seconds * NS_PER_SEC), 0)
+    w = _series_window(series_cols, ord_ns).rangeBetween(
+        -(window_seconds * NS_PER_SEC), 0
     )
     v = F.col(value_col)
     vd = v.cast("decimal(18,6)")
@@ -623,6 +677,53 @@ def moving_time_agg(
     if how not in fns:
         raise ValueError(f"how must be one of {sorted(fns)}")
     return df.withColumn(out_col or f"moving_{how}", fns[how]())
+
+
+def ewma_running(
+    vals: list[float], alpha: float, state: float | None = None
+) -> list[float]:
+    """The running EWMA of ``vals`` (Python floats in time order):
+    s_i = alpha*v_i + (1-alpha)*s_{i-1}, from the incoming ``state``
+    or, when it is None, seeded s_0 = v_0. Each step rounds before it
+    feeds the next, exactly as a left fold of the same doubles does in
+    any engine (a numpy weighted cumsum would re-associate). The one
+    per-row loop of :func:`ewma_rows` and
+    ``streaming.stateful.streaming_ewma``."""
+    out: list[float] = []
+    if state is None:
+        if not vals:
+            return out
+        state = vals[0]
+        out.append(state)
+        vals = vals[1:]
+    b = 1.0 - alpha
+    append = out.append
+    for v in vals:
+        state = alpha * v + b * state
+        append(state)
+    return out
+
+
+def _ewma_step(alpha: float):
+    a, b = F.lit(alpha), F.lit(1.0 - alpha)
+    return lambda acc, v: a * v + b * acc
+
+
+def _ewma_vals(value_col: str, ts_col: str, order_extra: Sequence[str]):
+    """A group's values in (ts, order_extra...) order."""
+    key = F.struct(
+        F.col(ts_col), *[F.col(c) for c in order_extra], F.col(value_col).alias("_v")
+    )
+    return F.transform(F.sort_array(F.collect_list(key)), lambda s: s["_v"])
+
+
+def _ewma_seeded(vals, alpha: float):
+    """The EWMA fold of ``vals`` seeded s_0 = v_0."""
+    return F.aggregate(
+        F.slice(vals, 2, F.greatest(F.size(vals) - 1, F.lit(0))),
+        F.element_at(vals, 1),
+        _ewma_step(alpha),
+    )
 
 
 def _ewma_bucketed(
@@ -644,31 +745,26 @@ def _ewma_bucketed(
     multiply fold) and p = the fold seeded from 0 — the classic
     parallel-scan (Blelloch) treatment of a linear recurrence. Bucket 0
     instead folds with the reference seeding s_0 = v_0, so its summary
-    IS its outgoing state. Returns (summaries, series_cols) where
-    summaries = (series..., _bk, _d, _p).
+    IS its outgoing state. Returns (bdf, summaries, bs): the bucketed
+    rows, summaries = (series..., _bk, _d, _p), and bs = the aggregate
+    of a series' summaries as one bucket-sorted (_bk, _d, _p) list.
     """
-    order = [F.col(ts_col).asc(), *[F.col(c).asc() for c in order_extra]]
-    wrn = Window.partitionBy(*series_cols).orderBy(*order)
+    wrn = _series_window(series_cols, ts_col, order_extra)
     bdf = df.withColumn(
         "_bk", ((F.row_number().over(wrn) - 1) / F.lit(bucket_rows)).cast("long")
     )
-    key = F.struct(
-        F.col(ts_col), *[F.col(c) for c in order_extra], F.col(value_col).alias("_v")
-    )
-    vals = F.transform(F.sort_array(F.collect_list(key)), lambda s: s["_v"])
-    a, b = F.lit(alpha), F.lit(1.0 - alpha)
-    seeded = F.aggregate(
-        F.slice(vals, 2, F.greatest(F.size(vals) - 1, F.lit(0))),
-        F.element_at(vals, 1),
-        lambda acc, v: a * v + b * acc,
-    )
-    from_zero = F.aggregate(vals, F.lit(0.0), lambda acc, v: a * v + b * acc)
-    decay = F.aggregate(vals, F.lit(1.0), lambda acc, _: acc * b)
+    vals = _ewma_vals(value_col, ts_col, order_extra)
+    seeded = _ewma_seeded(vals, alpha)
+    from_zero = F.aggregate(vals, F.lit(0.0), _ewma_step(alpha))
+    decay = F.aggregate(vals, F.lit(1.0), lambda acc, _: acc * F.lit(1.0 - alpha))
     summaries = bdf.groupBy(*series_cols, "_bk").agg(
         F.when(F.col("_bk") == 0, seeded).otherwise(from_zero).alias("_p"),
         F.when(F.col("_bk") == 0, F.lit(0.0)).otherwise(decay).alias("_d"),
     )
-    return bdf, summaries
+    bs = F.sort_array(
+        F.collect_list(F.struct(F.col("_bk"), F.col("_d"), F.col("_p")))
+    )
+    return bdf, summaries, bs
 
 
 def ewma_final(
@@ -701,33 +797,14 @@ def ewma_final(
     last ~2 ulps — use the default path when bit-exact cross-engine
     hashes matter and series are bounded (resample() first at 100 TB).
     """
-    if bucket_rows is not None:
-        _, summaries = _ewma_bucketed(
-            df, alpha, value_col, series_cols, ts_col, order_extra, bucket_rows
-        )
-        bs = F.sort_array(
-            F.collect_list(F.struct(F.col("_bk"), F.col("_d"), F.col("_p")))
-        )
-        compose = F.aggregate(
-            bs,
-            F.lit(0.0),
-            lambda acc, t: t["_d"] * acc + t["_p"],
-        )
-        return summaries.groupBy(*series_cols).agg(compose.alias(out_col))
-    key = F.struct(
-        F.col(ts_col), *[F.col(c) for c in order_extra], F.col(value_col).alias("_v")
+    if bucket_rows is None:
+        fold = _ewma_seeded(_ewma_vals(value_col, ts_col, order_extra), alpha)
+        return df.groupBy(*series_cols).agg(fold.alias(out_col))
+    _, summaries, bs = _ewma_bucketed(
+        df, alpha, value_col, series_cols, ts_col, order_extra, bucket_rows
     )
-    ordered = F.sort_array(F.collect_list(key))
-    vals = F.transform(ordered, lambda s: s["_v"])
-    fold = F.aggregate(
-        F.slice(vals, 2, F.greatest(F.size(vals) - 1, F.lit(0))),
-        F.element_at(vals, 1),
-        lambda acc, v: F.lit(alpha) * v + F.lit(1.0 - alpha) * acc,
-    )
-    return (
-        df.groupBy(*series_cols)
-        .agg(fold.alias(out_col))
-    )
+    compose = F.aggregate(bs, F.lit(0.0), lambda acc, t: t["_d"] * acc + t["_p"])
+    return summaries.groupBy(*series_cols).agg(compose.alias(out_col))
 
 
 def ewma_rows(
@@ -747,8 +824,9 @@ def ewma_rows(
     The recursion is sequential per series, so it runs as an
     Arrow-batched ``applyInPandas`` over the series key — ONE shuffle,
     O(n) per group (vs O(n^2) for the pure-SQL window+fold form). The
-    loop spells out exactly ``alpha*v + (1-alpha)*acc`` so results are
-    bit-identical to a left fold of the same doubles in any engine.
+    loop (:func:`ewma_running`) spells out exactly
+    ``alpha*v + (1-alpha)*acc`` so results are bit-identical to a left
+    fold of the same doubles in any engine.
     Per-group memory is O(series length) on the default path.
 
     ``bucket_rows`` set: the bounded-memory parallel-scan path. Rows
@@ -762,7 +840,6 @@ def ewma_rows(
     the default path for bit-exact cross-engine hashes on bounded
     series.
     """
-    import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     order_cols = [ts_col, *order_extra]
@@ -777,84 +854,59 @@ def ewma_rows(
     a = float(alpha)
     keep = list(keep_cols)
 
-    if bucket_rows is not None:
-        bdf, summaries = _ewma_bucketed(
-            df, alpha, value_col, series_cols, ts_col, order_extra, bucket_rows
-        )
-        # exclusive prefix over bucket summaries: incoming state of
-        # bucket k = composition of buckets < k (null for bucket 0 —
-        # the v_0 seeding happens inside the group loop)
-        bs = F.sort_array(
-            F.collect_list(F.struct(F.col("_bk"), F.col("_d"), F.col("_p")))
-        )
-        init = F.struct(
-            F.lit(0.0).alias("s"),
-            F.array().cast("array<struct<_bk:long,_sin:double>>").alias("arr"),
-        )
-        pre = F.aggregate(
-            bs,
-            init,
-            lambda acc, t: F.struct(
-                (t["_d"] * acc["s"] + t["_p"]).alias("s"),
-                F.concat(
-                    acc["arr"],
-                    F.array(
-                        F.struct(
-                            t["_bk"].alias("_bk"),
-                            F.when(t["_bk"] == 0, F.lit(None).cast("double"))
-                            .otherwise(acc["s"])
-                            .alias("_sin"),
-                        )
-                    ),
-                ).alias("arr"),
-            ),
-        )["arr"]
-        incoming = (
-            summaries.groupBy(*series_cols)
-            .agg(pre.alias("_pre"))
-            .select(*series_cols, F.explode("_pre").alias("_e"))
-            .select(*series_cols, F.col("_e._bk").alias("_bk"),
-                    F.col("_e._sin").alias("_sin"))
-        )
-        need_b = list(dict.fromkeys([*need, "_bk"]))
-        proj = bdf.select(*need_b).join(incoming, [*series_cols, "_bk"])
-
-        def fn_b(pdf):
-            pdf = pdf.sort_values(order_cols, kind="mergesort")
-            vals = pdf[value_col].to_numpy()
-            out = np.empty(len(vals))
-            sin = pdf["_sin"].iloc[0]
-            acc = 0.0
-            seeded = sin is not None and not (isinstance(sin, float) and np.isnan(sin))
-            if seeded:
-                acc = float(sin)
-            for i in range(len(vals)):
-                if i == 0 and not seeded:
-                    acc = vals[0]
-                else:
-                    acc = a * vals[i] + (1.0 - a) * acc
-                out[i] = acc
-            res = pdf[keep].copy()
-            res[out_col] = out
-            return res
-
-        return proj.groupBy(*series_cols, "_bk").applyInPandas(fn_b, schema)
-
-    proj = df.select(*need)
-
     def fn(pdf):
+        # the bucketed path's groups carry their incoming state _sin
+        # (NULL for bucket 0, which seeds with its first value)
         pdf = pdf.sort_values(order_cols, kind="mergesort")
-        vals = pdf[value_col].to_numpy()
-        out = np.empty(len(vals))
-        acc = 0.0
-        for i in range(len(vals)):
-            acc = vals[i] if i == 0 else a * vals[i] + (1.0 - a) * acc
-            out[i] = acc
+        sin = pdf["_sin"].iloc[0] if "_sin" in pdf else None
         res = pdf[keep].copy()
-        res[out_col] = out
+        res[out_col] = ewma_running(
+            pdf[value_col].to_numpy(dtype="float64").tolist(),
+            a,
+            None if pd.isna(sin) else float(sin),
+        )
         return res
 
-    return proj.groupBy(*series_cols).applyInPandas(fn, schema)
+    if bucket_rows is None:
+        return df.select(*need).groupBy(*series_cols).applyInPandas(fn, schema)
+    bdf, summaries, bs = _ewma_bucketed(
+        df, alpha, value_col, series_cols, ts_col, order_extra, bucket_rows
+    )
+    # exclusive prefix over bucket summaries: incoming state of
+    # bucket k = composition of buckets < k (null for bucket 0 —
+    # the v_0 seeding happens inside the group loop)
+    init = F.struct(
+        F.lit(0.0).alias("s"),
+        F.array().cast("array<struct<_bk:long,_sin:double>>").alias("arr"),
+    )
+    pre = F.aggregate(
+        bs,
+        init,
+        lambda acc, t: F.struct(
+            (t["_d"] * acc["s"] + t["_p"]).alias("s"),
+            F.concat(
+                acc["arr"],
+                F.array(
+                    F.struct(
+                        t["_bk"].alias("_bk"),
+                        F.when(t["_bk"] == 0, F.lit(None).cast("double"))
+                        .otherwise(acc["s"])
+                        .alias("_sin"),
+                    )
+                ),
+            ).alias("arr"),
+        ),
+    )["arr"]
+    incoming = (
+        summaries.groupBy(*series_cols)
+        .agg(pre.alias("_pre"))
+        .select(*series_cols, F.explode("_pre").alias("_e"))
+        .select(*series_cols, F.col("_e._bk").alias("_bk"),
+                F.col("_e._sin").alias("_sin"))
+    )
+    need_b = list(dict.fromkeys([*need, "_bk"]))
+    proj = bdf.select(*need_b).join(incoming, [*series_cols, "_bk"])
+    return proj.groupBy(*series_cols, "_bk").applyInPandas(fn, schema)
 
 
 def zscore_anomaly(
@@ -1010,39 +1062,13 @@ def series_correlation(
     single global fold over #buckets rows (bounded: one row per bucket,
     not per datapoint).
     """
-    v = F.col(value_col)
-    hourly = bucket_agg(
+    hourly = _bucket_means(
         df.filter(F.col(series_col).isin([series_a, series_b])),
-        bucket_seconds,
-        keys=[series_col],
-        aggs=[
-            (
-                F.sum(v.cast("decimal(18,6)")).cast("double") / F.count(F.lit(1))
-            ).alias("_m")
-        ],
-        ts_col=ts_col,
+        bucket_seconds, [series_col], value_col, ts_col,
     )
     a = hourly.filter(F.col(series_col) == series_a).select("bucket", F.col("_m").alias("_x"))
     b = hourly.filter(F.col(series_col) == series_b).select("bucket", F.col("_m").alias("_y"))
-    j = a.join(b, "bucket")
-    agg = j.agg(
-        F.array_sort(F.collect_list(F.struct("bucket", "_x", "_y"))).alias("_a"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-    def fold(expr):
-        return F.aggregate(F.col("_a"), F.lit(0.0), expr)
-
-    sx = fold(lambda acc, t: acc + t["_x"])
-    sy = fold(lambda acc, t: acc + t["_y"])
-    sxy = fold(lambda acc, t: acc + t["_x"] * t["_y"])
-    sxx = fold(lambda acc, t: acc + t["_x"] * t["_x"])
-    syy = fold(lambda acc, t: acc + t["_y"] * t["_y"])
-    nd = F.col("n").cast("double")
-    corr = (nd * sxy - sx * sy) / (
-        F.sqrt(nd * sxx - sx * sx) * F.sqrt(nd * syy - sy * sy)
-    )
-    return agg.select("n", corr.alias("corr"))
+    return _pearson(a.join(b, "bucket"), [], "corr")
 
 
 def irate(
@@ -1076,13 +1102,9 @@ def irate(
         F.max(F.when(F.col("_rn") == 2, F.col(ts_col))).alias("_t0"),
         F.max(F.when(F.col("_rn") == 2, F.col(value_col))).alias("_v0"),
     ).filter(F.col("_t0").isNotNull())
-    delta = (
-        F.when(counter and (F.col("_v1") < F.col("_v0")), F.col("_v1")).otherwise(
-            F.col("_v1") - F.col("_v0")
-        )
-        if counter
-        else F.col("_v1") - F.col("_v0")
-    )
+    delta = F.col("_v1") - F.col("_v0")
+    if counter:
+        delta = F.when(F.col("_v1") < F.col("_v0"), F.col("_v1")).otherwise(delta)
     span_s = (F.col("_t1") - F.col("_t0")).cast("double") / F.lit(1e9)
     return g.select(
         *series_cols,
@@ -1114,10 +1136,8 @@ def histogram_quantile(
     value materialization ever; the raw data was already reduced by
     the histogram aggregate.
     """
-    w = (
-        Window.partitionBy(*series_cols)
-        .orderBy("_lo")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = _series_window(series_cols, "_lo").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
     wall = Window.partitionBy(*series_cols)
     x = hist.select(
@@ -1158,18 +1178,7 @@ def autocorrelation(
     self-equi-join on (series, shifted bucket), and a per-series fold
     over #buckets rows.
     """
-    v = F.col(value_col)
-    hourly = bucket_agg(
-        df,
-        bucket_seconds,
-        keys=list(series_cols),
-        aggs=[
-            (
-                F.sum(v.cast("decimal(18,6)")).cast("double") / F.count(F.lit(1))
-            ).alias("_m")
-        ],
-        ts_col=ts_col,
-    )
+    hourly = _bucket_means(df, bucket_seconds, series_cols, value_col, ts_col)
     shift = lag_buckets * bucket_seconds * NS_PER_SEC
     a = hourly.select(*series_cols, "bucket", F.col("_m").alias("_x"))
     b = hourly.select(
@@ -1177,25 +1186,7 @@ def autocorrelation(
         (F.col("bucket") + F.lit(shift)).alias("bucket"),
         F.col("_m").alias("_y"),
     )
-    j = a.join(b, [*series_cols, "bucket"])
-    agg = j.groupBy(*series_cols).agg(
-        F.array_sort(F.collect_list(F.struct("bucket", "_x", "_y"))).alias("_a"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-    def fold(expr):
-        return F.aggregate(F.col("_a"), F.lit(0.0), expr)
-
-    sx = fold(lambda acc, t: acc + t["_x"])
-    sy = fold(lambda acc, t: acc + t["_y"])
-    sxy = fold(lambda acc, t: acc + t["_x"] * t["_y"])
-    sxx = fold(lambda acc, t: acc + t["_x"] * t["_x"])
-    syy = fold(lambda acc, t: acc + t["_y"] * t["_y"])
-    nd = F.col("n").cast("double")
-    corr = (nd * sxy - sx * sy) / (
-        F.sqrt(nd * sxx - sx * sx) * F.sqrt(nd * syy - sy * sy)
-    )
-    return agg.select(*series_cols, "n", corr.alias("autocorr"))
+    return _pearson(a.join(b, [*series_cols, "bucket"]), series_cols, "autocorr")
 
 
 def linear_trend(
@@ -1221,21 +1212,9 @@ def linear_trend(
     skew), then one fold over #buckets rows per series — bounded by
     the time range, never by datapoint count.
     """
-    v = F.col(value_col)
-    means = bucket_agg(
-        df,
-        bucket_seconds,
-        keys=list(series_cols),
-        aggs=[
-            (
-                F.sum(v.cast("decimal(18,6)")).cast("double") / F.count(F.lit(1))
-            ).alias("_m")
-        ],
-        ts_col=ts_col,
-    )
-    agg = means.groupBy(*series_cols).agg(
-        F.array_sort(F.collect_list(F.struct("bucket", "_m"))).alias("_a"),
-        F.count(F.lit(1)).alias("n"),
+    agg = _bucket_list(
+        _bucket_means(df, bucket_seconds, series_cols, value_col, ts_col),
+        series_cols, "_m",
     )
     # bucket is INT64-ns for long ts, a window-start TIMESTAMP otherwise
     # (time_bucket contract) — x must be SECONDS either way, so the
@@ -1251,16 +1230,13 @@ def linear_trend(
     b0 = F.element_at(F.col("_a"), 1)["bucket"].cast("double")
     bN = F.element_at(F.col("_a"), -1)["bucket"].cast("double")
 
-    def fold(expr):
-        return F.aggregate(F.col("_a"), F.lit(0.0), expr)
-
     def x_of(t):
         return to_secs(t["bucket"].cast("double") - b0)
 
-    sx = fold(lambda acc, t: acc + x_of(t))
-    sy = fold(lambda acc, t: acc + t["_m"])
-    sxy = fold(lambda acc, t: acc + x_of(t) * t["_m"])
-    sxx = fold(lambda acc, t: acc + x_of(t) * x_of(t))
+    sx = _fold(lambda acc, t: acc + x_of(t))
+    sy = _fold(lambda acc, t: acc + t["_m"])
+    sxy = _fold(lambda acc, t: acc + x_of(t) * t["_m"])
+    sxx = _fold(lambda acc, t: acc + x_of(t) * x_of(t))
     nd = F.col("n").cast("double")
     slope = (nd * sxy - sx * sy) / (nd * sxx - sx * sx)
     intercept = (sy - slope * sx) / nd
@@ -1294,25 +1270,13 @@ def quantile_over_time(
     (pick bucket_seconds so samples-per-bucket fits a task; this is
     the same contract as any exact per-window quantile).
     """
-    bdf = time_bucket(
-        df.filter(F.col(value_col).isNotNull()), bucket_seconds, ts_col=ts_col
-    )
-    agg = bdf.groupBy("bucket", *series_cols).agg(
-        F.array_sort(F.collect_list(F.col(value_col).cast("double"))).alias("_v"),
-        F.count(F.lit(1)).alias("n"),
-    )
+    agg = _bucket_values(df, bucket_seconds, series_cols, value_col, ts_col)
     pos = F.lit(float(q)) * (F.col("n").cast("double") - F.lit(1.0))
-    lo = F.floor(pos).cast("long")
-    frac = pos - lo.cast("double")
-    v_lo = F.element_at(F.col("_v"), (lo + 1).cast("int"))
-    v_hi = F.element_at(
-        F.col("_v"), F.least(lo + 2, F.col("n")).cast("int")
-    )
     return agg.select(
         "bucket",
         *series_cols,
         "n",
-        (v_lo + frac * (v_hi - v_lo)).alias("quantile"),
+        _interp(F.col("_v"), F.col("n"), pos).alias("quantile"),
     )
 
 
@@ -1330,8 +1294,7 @@ def counter_changes(
     Shape: one window shuffle on the series key (streaming lag frame,
     no per-series materialization), then a grouped count.
     """
-    w = Window.partitionBy(*series_cols).orderBy(ts_col)
-    prev = F.lag(F.col(value_col)).over(w)
+    prev = F.lag(F.col(value_col)).over(_series_window(series_cols, ts_col))
     x = df.select(*series_cols, ts_col, value_col).withColumn(
         "_chg", (prev.isNotNull() & (F.col(value_col) != prev)).cast("long")
     ).withColumn(
@@ -1372,21 +1335,9 @@ def holt_winters(
     ewma_rows-style bucketed scans instead.
     """
     a, b_ = float(alpha), float(beta)
-    v = F.col(value_col)
-    means = bucket_agg(
-        df,
-        bucket_seconds,
-        keys=list(series_cols),
-        aggs=[
-            (
-                F.sum(v.cast("decimal(18,6)")).cast("double") / F.count(F.lit(1))
-            ).alias("_m")
-        ],
-        ts_col=ts_col,
-    )
-    agg = means.groupBy(*series_cols).agg(
-        F.array_sort(F.collect_list(F.struct("bucket", "_m"))).alias("_a"),
-        F.count(F.lit(1)).alias("n"),
+    agg = _bucket_list(
+        _bucket_means(df, bucket_seconds, series_cols, value_col, ts_col),
+        series_cols, "_m",
     )
 
     def step(acc, t):
@@ -1481,24 +1432,10 @@ def cusum_changepoints(
     map-side in the bucket aggregate. One shuffle total."""
     if warmup < 2:
         raise ValueError("warmup needs at least 2 buckets")
-    v = F.col(value_col)
-    means = bucket_agg(
-        df,
-        bucket_seconds,
-        keys=list(series_cols),
-        aggs=[
-            (
-                F.sum(v.cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("_m")
-        ],
-        ts_col=ts_col,
-    )
-    agg = means.groupBy(*series_cols).agg(
-        F.array_sort(F.collect_list(F.struct("bucket", "_m"))).alias("_a"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    agg = agg.filter(F.col("n") > warmup)
+    agg = _bucket_list(
+        _bucket_means(df, bucket_seconds, series_cols, value_col, ts_col),
+        series_cols, "_m",
+    ).filter(F.col("n") > warmup)
     wvals = F.transform(
         F.slice("_a", 1, warmup), lambda s: s.getField("_m")
     )
@@ -1598,30 +1535,17 @@ def mad_over_time(
     data is never re-scanned. Per-task memory = one bucket's samples,
     the same contract as quantile_over_time.
     """
-    bdf = time_bucket(
-        df.filter(F.col(value_col).isNotNull()), bucket_seconds, ts_col=ts_col
-    )
-    agg = bdf.groupBy("bucket", *series_cols).agg(
-        F.array_sort(F.collect_list(F.col(value_col).cast("double"))).alias("_v"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-    def interp(arr, n):
-        pos = (n.cast("double") - F.lit(1.0)) * F.lit(0.5)
-        lo = F.floor(pos).cast("long")
-        frac = pos - lo.cast("double")
-        v_lo = F.element_at(arr, (lo + 1).cast("int"))
-        v_hi = F.element_at(arr, F.least(lo + 2, n).cast("int"))
-        return v_lo + frac * (v_hi - v_lo)
-
-    med = interp(F.col("_v"), F.col("n"))
+    agg = _bucket_values(df, bucket_seconds, series_cols, value_col, ts_col)
+    n = F.col("n")
+    mid = (n.cast("double") - F.lit(1.0)) * F.lit(0.5)
+    med = _interp(F.col("_v"), n, mid)
     devs = F.array_sort(F.transform(F.col("_v"), lambda x: F.abs(x - med)))
     return agg.select(
         "bucket",
         *series_cols,
         "n",
         med.alias("median"),
-        interp(devs, F.col("n")).alias("mad"),
+        _interp(devs, n, mid).alias("mad"),
     )
 
 
@@ -1816,34 +1740,25 @@ def pattern_topk(
     pat_sd = pat_var ** 0.5
     zp = [(x - pat_mean) / pat_sd for x in pattern]
     series_cols = list(series_cols)
-    b = bucket_agg(
-        df, bucket_seconds, series_cols,
-        [
-            (
-                F.sum(F.col(value_col).cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("m_val")
-        ],
-        ts_col=ts_col,
+    arr = _bucket_list(
+        _bucket_means(df, bucket_seconds, series_cols, value_col, ts_col),
+        series_cols, "_m",
     )
-    arr = b.groupBy(*series_cols).agg(
-        F.sort_array(F.collect_list(F.struct("bucket", "m_val"))).alias("pts")
-    )
-    n_starts = F.size("pts") - F.lit(m - 1)
+    n_starts = F.size("_a") - F.lit(m - 1)
     win = (
         arr.filter(n_starts > 0)
         .select(
             *series_cols,
-            "pts",
+            "_a",
             F.explode(F.sequence(F.lit(1), n_starts)).alias("start_i"),
         )
         .select(
             *series_cols,
-            F.element_at("pts", F.col("start_i")).getField("bucket").alias(
+            F.element_at("_a", F.col("start_i")).getField("bucket").alias(
                 "start_bucket"
             ),
             F.transform(
-                F.slice("pts", F.col("start_i"), m), lambda s: s.getField("m_val")
+                F.slice("_a", F.col("start_i"), m), lambda s: s.getField("_m")
             ).alias("w"),
         )
     )
@@ -2252,17 +2167,12 @@ def bollinger_bands(
     clamps at 0 before sqrt (the r7 NaN-guard rule — a constant window
     underflows to a tiny negative, and NaN comparisons silently pass
     breach checks)."""
-    from boostdb_spark.functions.scalar import ts_ns
-
     ord_ns = ts_ns(df, ts_col)
-    w = (
-        Window.partitionBy(*series_cols)
-        .orderBy(ord_ns)
-        .rangeBetween(-(window_seconds * NS_PER_SEC), 0)
+    w = _series_window(series_cols, ord_ns).rangeBetween(
+        -(window_seconds * NS_PER_SEC), 0
     )
-    # integer 1e-6 grid (floor(x*1e6+0.5) as a LONG — not _q6, which
-    # divides back to a double)
-    q = F.floor(F.col(value_col) * F.lit(1000000.0) + F.lit(0.5))
+    # integer 1e-6 grid (not _q6, which divides back to a double)
+    q = _grid6(F.col(value_col))
     # TWO-STAGE select (r14 decomposition): building mid/sd/upper/
     # lower/breach directly over the frame aggregates re-embeds a COPY
     # of each window aggregate in every derived column — the physical
@@ -2347,25 +2257,19 @@ def bollinger_bands_prefix(
     cost contract survives wide windows and 100x scale-up. Identical
     band derivation tree (``_bands_from_sums``), so results hash-match
     ``bollinger_bands`` and the shared oracle SQL exactly."""
-    from boostdb_spark.functions.scalar import ts_ns
-
     ord_ns = ts_ns(df, ts_col)
     w_ns = window_seconds * NS_PER_SEC
     base = df.select(
         *series_cols, ord_ns.alias("_tns"), F.col(value_col)
     )
-    qb = F.floor(
-        F.col(value_col) * F.lit(1000000.0) + F.lit(0.5)
-    )
+    qb = _grid6(F.col(value_col))
     grid = base.groupBy(*series_cols, "_tns").agg(
         F.sum(qb.cast("decimal(38,0)")).alias("_gs1"),
         F.sum(qb.cast("decimal(19,0)") * qb).alias("_gs2"),
         F.count(F.col(value_col)).alias("_gn"),
     )
-    wg = (
-        Window.partitionBy(*series_cols)
-        .orderBy("_tns")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wg = _series_window(series_cols, "_tns").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
     cums = grid.select(
         *series_cols,
@@ -2404,10 +2308,8 @@ def bollinger_bands_prefix(
         F.col("_cs2").alias("_o2"),
         F.col("_cn").alias("_on"),
     )
-    wa = (
-        Window.partitionBy(*series_cols)
-        .orderBy("_k", "_kind")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wa = _series_window(series_cols, "_k", ("_kind",)).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
     zero38 = F.lit(0).cast("decimal(38,0)")
     looked = (
@@ -2540,10 +2442,8 @@ def max_drawdown(
     bounded sliding frames pay the O(rows x frame) re-evaluation).
     """
     v = F.col(value_col)
-    w = (
-        Window.partitionBy(*series_cols)
-        .orderBy(ts_col, value_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    w = _series_window(series_cols, ts_col, (value_col,)).rowsBetween(
+        Window.unboundedPreceding, 0
     )
     run_peak = F.max(v).over(w)
     dd = run_peak - v
@@ -2654,12 +2554,9 @@ def lttb_downsample(
     )
     means = x.groupBy(*series_cols, "_b").agg(
         (F.sum("_rn").cast("double") / F.count(F.lit(1))).alias("_mx"),
-        (
-            F.sum(F.col("_v").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("_my"),
+        _mean(F.col("_v")).alias("_my"),
     )
-    wb = Window.partitionBy(*series_cols).orderBy("_b")
+    wb = _series_window(series_cols, "_b")
     nbr = means.select(
         *series_cols,
         "_b",
@@ -2720,13 +2617,11 @@ def sma_crossover(
     Scale: ONE window shuffle on the series key shared by all four
     analytic columns (same partitioning+ordering), then a filter.
     """
-    q = F.floor(F.col(value_col) * F.lit(1.0e6) + F.lit(0.5))
+    q = _grid6(F.col(value_col))
 
     def sma(rows: int):
-        w = (
-            Window.partitionBy(*series_cols)
-            .orderBy(ts_col, value_col)
-            .rowsBetween(-(rows - 1), 0)
+        w = _series_window(series_cols, ts_col, (value_col,)).rowsBetween(
+            -(rows - 1), 0
         )
         return (
             F.sum(q.cast("decimal(38,0)")).over(w).cast("double")
@@ -2739,17 +2634,14 @@ def sma_crossover(
         sma(fast_rows).alias("_f"),
         sma(slow_rows).alias("_s"),
     )
+    wl = _series_window(series_cols, "ts_ns", ("_f",))
     y = x.select(
         *series_cols,
         "ts_ns",
         "_f",
         "_s",
-        F.lag("_f").over(
-            Window.partitionBy(*series_cols).orderBy("ts_ns", "_f")
-        ).alias("_pf"),
-        F.lag("_s").over(
-            Window.partitionBy(*series_cols).orderBy("ts_ns", "_f")
-        ).alias("_ps"),
+        F.lag("_f").over(wl).alias("_pf"),
+        F.lag("_s").over(wl).alias("_ps"),
     )
     return (
         y.filter(

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from boostdb_spark.operators.timeseries import ewma_running
+
 STATE_SCHEMA = StructType(
     [
         StructField("n", LongType()),
@@ -144,20 +146,11 @@ def streaming_ewma(
             ew, n = None, 0
         batch = pd.concat(list(pdfs), ignore_index=True)
         batch = batch.sort_values(order_cols, kind="mergesort")
-        # the recursion is chained through ROUNDING (each a*v+(1-a)*ew
-        # rounds before feeding the next step), so a numpy weighted
-        # cumsum would re-associate and break the bit-match contract
-        # with the batch fold; the honest speedup is hoisting every
-        # per-element conversion/branch out of the loop — one exact
-        # float64->float materialization, constants bound once
+        # one exact float64 -> float materialization, then the batch
+        # fold's own loop: the state bit-matches ewma_final
         vals = batch[value_col].to_numpy(dtype="float64").tolist()
-        start = 0
-        if n == 0 and vals:
-            ew = vals[0]
-            start = 1
-        om = 1.0 - a
-        for v in vals[start:]:
-            ew = a * v + om * ew
+        if vals:
+            ew = ewma_running(vals, a, ew if n else None)[-1]
         n += len(vals)
         state.update((ew, n))
         row = {k: [str(kv)] for k, kv in zip(key_cols, key)}

@@ -146,54 +146,59 @@ def _q(name: str, oracle: str | None):
 # agg_approx_count_distinct / agg_approx_quantiles are oracle-less
 # (approx by design) with driver-green history — below the fold.
 _WINDOW: tuple[str, ...] = (
-    # CHANGED CODE FIRST — the vector operators that now share one pair
-    # scorer, one top-k cut (operators/common.topk_per_group) and one
-    # covariance pass (operators/similarity.py), and the text and dedup
-    # entries whose inline top-k cut became that call; then the dedup
-    # pair finders, the series-family entries, the standing dialect
-    # canaries, the streaming-drain cohort, the standing canaries and
-    # the LLM-pipeline entries.
-    "emb_cosine_topk",        # exact scorer + cut
-    "emb_range_search",       # exact scorer, once=True
-    "emb_mmr_rerank",         # one query-side guard
-    "emb_knn_graph",          # llm_dedup's k-NN graph
-    "emb_outliers",           # centroid_outliers cut
-    "emb_pca_certified",      # covariance pass + pca_residual
-    "emb_abtt_certified",     # remove_top_component means
-    "emb_whiten",             # whiten_embeddings means
-    "ann_recall_certified",   # IVF/LSH scorer + cut
-    "ann_range_certified",    # IVF scorer, once=True
-    "ann_append_certified",   # IVF seed centroids, PQ cut
-    "dedup_semantic",         # _with_norm, ivf_train_kmeans seed
-    "txt_tfidf_topk",         # tf_idf_topk cut
-    "dedup_incremental",      # best-match cut
-    "dedup_levenshtein",      # per-doc candidate cap
-    "dedup_levenshtein_capped",
-    "dedup_minhash_lsh",      # _band_signatures + candidate overlap path
-    "dedup_keep_best",        # LSH pairs -> components -> keep policy
+    # CHANGED CODE FIRST — the time-series operators that now share one
+    # exact bucket mean (NULL values dropped first), one bucket-sorted
+    # list, one Pearson fold, one interpolated quantile and one EWMA
+    # recursion (operators/timeseries.py), then the entries whose
+    # series window or 1e-6 grid became the shared helper, the PCA
+    # entries whose covariance pass now projects its dot once, the
+    # series-family entries, the dedup and vector canaries, the
+    # standing dialect canaries and the streaming-drain cohort.
+    "ts_series_correlation",  # bucket mean + Pearson fold
+    "ts_autocorr",            # bucket mean + Pearson fold
+    "ts_linear_trend",        # bucket mean + bucket list
+    "ts_holt_winters",        # bucket mean + bucket list
+    "ts_cusum_changepoint",   # bucket mean + bucket list
+    "ts_pattern_topk",        # bucket mean + bucket list
+    "ts_seasonal_decompose",  # quantized bucket mean
+    "ts_quantile_over_time",  # sorted bucket values + interpolation
+    "ts_mad",                 # sorted bucket values + interpolation
+    "ts_ewma",                # seeded EWMA fold
+    "ts_ewma_rows",           # the one Python EWMA loop, bucketed
+    "ts_ewma_bucketed",       # affine bucket summaries
+    "stream_ewma_parity",     # streaming_ewma runs the same loop
+    "ts_irate",               # counter branch
+    "ts_lttb",                # exact mean
+    "gapfill_locf", "gapfill_interp",  # one series window
+    "ts_changes_resets", "ts_drawdown", "ts_sma_crossover",
+    "ts_bollinger", "ts_bollinger_wide",  # 1e-6 grid, series window
+    "ts_sessionize", "ts_moving_time_avg", "ts_histogram_quantile",
+    "emb_pca_certified",      # covariance pass
+    "emb_abtt_certified",
+    "emb_whiten",
+    "stream_locf_parity",
     "flagship_series_scan",   # scan + dialect front + implicit range
     "seriesfamily_roundtrip",  # batch-written family: write + fetch
     "stream_ingest_parity",   # stream-written family: stream_write
-    "dialect_agg_expr", "dialect_cte", "dialect_grouping_sets",
-    "dialect_join", "dialect_join_multi", "dialect_join_theta",
-    "dialect_limit_ties", "dialect_pivot_sum", "dialect_select_scalar_sub",
-    "dialect_subquery", "dialect_unpivot", "dialect_using", "dialect_values",
-    "dialect_frame_exclude",  # EXCLUDE lowering, now SQL text
-    # --- streaming drain / window-helper consolidation ---
-    "stream_session_parity", "stream_sliding_parity",
-    "stream_ewma_parity", "stream_locf_parity",
-    "stream_upsert_parity",
-    "window_sliding_agg",       # windows.py shared _window_agg body
-    "window_session_agg",
-    "stream_batch_parity", "stream_cascade_parity",
-    # --- standing canaries and LLM-pipeline coverage ---
     "agg_groupby_q1",         # grouped aggregation
-    "ts_irate",               # time-series functions
-    "dedup_exact",            # dedup family
-    "dedup_groups",
+    "dedup_exact", "dedup_groups", "dedup_minhash_lsh", "dedup_keep_best",
     "txt_bm25_topk", "pipeline_hybrid_rrf",
-    # ROTATION PREP — queued next: the dialect canaries and n-gram pair
-    # finders that made room for the vector operators
+    "emb_cosine_topk", "emb_knn_graph", "ann_recall_certified",
+    "dedup_semantic",
+    "dialect_agg_expr", "dialect_cte", "dialect_join",
+    "stream_session_parity", "stream_sliding_parity",
+    "stream_upsert_parity", "window_sliding_agg",
+    # ROTATION PREP — queued next: the vector, dedup, dialect and
+    # streaming entries that made room for the time-series operators
+    # (emb_range_search, emb_mmr_rerank, emb_outliers,
+    # ann_range_certified, ann_append_certified, txt_tfidf_topk,
+    # dedup_incremental, dedup_levenshtein, dedup_levenshtein_capped,
+    # dialect_grouping_sets, dialect_join_multi, dialect_join_theta,
+    # dialect_limit_ties, dialect_pivot_sum, dialect_select_scalar_sub,
+    # dialect_subquery, dialect_unpivot, dialect_using, dialect_values,
+    # dialect_frame_exclude, window_session_agg, stream_batch_parity,
+    # stream_cascade_parity), then the dialect canaries and n-gram pair
+    # finders
     # (dedup_ngram_jaccard_capped, dedup_containment, doc_source_overlap,
     # dialect_arg_minmax, dialect_bool_agg, dialect_exists,
     # dialect_filter_agg, dialect_group_all, dialect_group_expr,
@@ -209,7 +214,7 @@ _WINDOW: tuple[str, ...] = (
     # dialect_qualify,
     # dialect_select_star, distinct_series, scan_hive_partition_prune,
     # scan_schema_evolution, scan_snapshot_apply, subquery_exists,
-    # time_bucket_agg, ts_histogram_quantile, ts_interp_align,
+    # time_bucket_agg, ts_interp_align,
     # ts_m4_downsample, txt_redact_pii,
     # udaf_grouped_range, where_ops, window_moving_avg,
     # window_navigation, window_rank_ntile, window_running_sum; then
@@ -3661,7 +3666,7 @@ def _pattern_oracle_sql() -> str:
              epoch_ns(ts) - epoch_ns(ts) % 21600000000000 AS bucket,
              CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*)
                AS m_val
-      FROM events GROUP BY 1, 2),
+      FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
     arr AS (
       SELECT event_type, list(m_val ORDER BY bucket) AS vs,
              list(bucket ORDER BY bucket) AS bs
@@ -4332,7 +4337,8 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type,
              epoch_ns(ts) - epoch_ns(ts) % 3600000000000 AS bucket,
              CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS m
-      FROM events WHERE event_type IN ('click', 'error')
+      FROM events
+      WHERE event_type IN ('click', 'error') AND value IS NOT NULL
       GROUP BY 1, 2),
     j AS (
       SELECT a.bucket, a.m AS x, b.m AS y
@@ -4376,7 +4382,7 @@ def ts_series_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type,
              epoch_ns(ts) - epoch_ns(ts) % 3600000000000 AS bucket,
              CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS m
-      FROM events GROUP BY 1, 2),
+      FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
     j AS (
       SELECT a.event_type, a.bucket, a.m AS x, b.m AS y
       FROM h a JOIN h b
@@ -4421,7 +4427,7 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type,
              epoch_ns(ts) - epoch_ns(ts) % 3600000000000 AS bucket,
              CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS m
-      FROM events GROUP BY 1, 2),
+      FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
     h2 AS (
       SELECT event_type, bucket, m,
              (CAST(bucket AS DOUBLE)
@@ -4576,7 +4582,7 @@ def ts_changes_resets(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type,
              epoch_ns(ts) - epoch_ns(ts) % 3600000000000 AS bucket,
              CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS m
-      FROM events GROUP BY 1, 2),
+      FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
     g AS (
       SELECT event_type, count(*) AS n,
              list_reduce(
@@ -4621,7 +4627,7 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type,
              epoch_ns(ts) - epoch_ns(ts) % 21600000000000 AS bucket,
              CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS m
-      FROM events GROUP BY 1, 2),
+      FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
     g AS (
       SELECT event_type,
              list(m ORDER BY bucket) AS vs,

@@ -601,3 +601,28 @@ def test_topk_cut_breaks_exact_ties_by_smaller_id(spark):
     for group in (range(1, 7), range(11, 17)):
         for src in group:
             assert graph[src] == [i for i in group if i != src][:3], src
+
+
+def test_cov_pass_projects_the_dot_once(spark, monkeypatch):
+    """The power-iteration pass projects ``c . v`` as a column below its
+    ``posexplode``: the per-element lambda multiplies by that column and
+    holds no ``aggregate(`` (a dot inside the lambda is O(dim^2) work
+    per row)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    collect = DataFrame.collect
+
+    def recording(self):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", recording)
+    rows = [(i, [float(i % 3), 1.0 - i, 0.5 * i]) for i in range(8)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    sim.top_principal_component(df, n_iter=1)
+    gens = [
+        ln for p in plans for ln in p.splitlines() if "Generate posexplode(" in ln
+    ]
+    assert gens
+    assert all("aggregate(" not in ln for ln in gens), gens

@@ -957,3 +957,104 @@ def test_bollinger_prefix_matches_frame_exactly(spark):
     assert len(peers) == 2
     assert len({(p.mid, p.sd, p.upper, p.lower) for p in peers}) == 1
     assert peers[0].mid == 2.5  # (1.25 + 3.75) / 2
+
+
+def test_bucket_means_drop_null_values(spark):
+    """Every operator over exact bucket means drops NULL values before
+    the mean: a bucket holding {v, NULL} has mean v (not v/2), so each
+    result equals the result with the NULL rows removed."""
+    NS = 1_000_000_000
+    vals = [1.0, 3.0, 2.0, 6.0, 4.0, 5.0, 9.0, 7.0, 8.0, 2.0, 1.0, 3.0]
+    rows = []
+    for i, x in enumerate(vals):
+        rows.append(("a", i * 10 * NS, x))
+        rows.append(("b", i * 10 * NS + 1, 2.0 * x + (i % 3)))
+    nulls = [("a", 3 * 10 * NS + 5, None), ("b", 7 * 10 * NS + 5, None)]
+    full, clean = _events(spark, rows + nulls), _events(spark, rows)
+    ops = {
+        "series_correlation": lambda d: ts_ops.series_correlation(
+            d, "a", "b", 10, series_col="key"),
+        "autocorrelation": lambda d: ts_ops.autocorrelation(
+            d, 1, 10, series_cols=("key",)),
+        "linear_trend": lambda d: ts_ops.linear_trend(
+            d, 10, series_cols=("key",)),
+        "holt_winters": lambda d: ts_ops.holt_winters(
+            d, 0.5, 0.25, 10, series_cols=("key",)),
+        "cusum_changepoints": lambda d: ts_ops.cusum_changepoints(
+            d, 10, warmup=3, h_mult=1.0, series_cols=("key",)),
+        "pattern_topk": lambda d: ts_ops.pattern_topk(
+            d, [1.0, 3.0, 2.0], 10, 5, series_cols=["key"]),
+    }
+    for name, op in ops.items():
+        got = sorted(op(full).collect())
+        assert got, name
+        assert got == sorted(op(clean).collect()), name
+    # the bucket {6.0, NULL} of series a: its mean is 6.0
+    lt = ts_ops.linear_trend(
+        _events(spark, [("a", 0, 6.0), ("a", 1, None), ("a", 10 * NS, 7.0)]),
+        10, series_cols=("key",),
+    ).collect()[0]
+    assert (lt.n, lt.intercept, lt.slope) == (2, 6.0, 0.1)
+
+
+def test_irate_gauge_ignores_resets(spark):
+    """counter=False takes the plain last-two-sample slope, a drop
+    included; counter=True treats the drop as a reset."""
+    NS = 1_000_000_000
+    df = _events(spark, [("a", 0, 5.0), ("a", NS, 3.0), ("a", 3 * NS, 1.0)])
+    gauge = ts_ops.irate(df, series_cols=("key",), counter=False).collect()
+    counter = ts_ops.irate(df, series_cols=("key",), counter=True).collect()
+    assert [(r.ts_ns, r.irate) for r in gauge] == [(3 * NS, -1.0)]
+    assert [(r.ts_ns, r.irate) for r in counter] == [(3 * NS, 0.5)]
+
+
+def test_autocorrelation_alternating_sequence(spark):
+    """An alternating bucket-mean sequence is perfectly anti-correlated
+    with itself at lag 1 and perfectly correlated at lag 2."""
+    NS = 1_000_000_000
+    rows = [("a", i * 10 * NS, 1.0 if i % 2 == 0 else -1.0) for i in range(7)]
+    rows += [("a", i * 10 * NS + 1, 3.0 if i % 2 == 0 else -3.0) for i in range(7)]
+    df = _events(spark, rows)
+    lag1 = ts_ops.autocorrelation(df, 1, 10, series_cols=("key",)).collect()
+    lag2 = ts_ops.autocorrelation(df, 2, 10, series_cols=("key",)).collect()
+    assert lag1[0].n == 6 and abs(lag1[0].autocorr + 1.0) < 1e-12
+    assert lag2[0].n == 5 and abs(lag2[0].autocorr - 1.0) < 1e-12
+
+
+def test_mad_over_time_hand_cases(spark):
+    """Odd and even bucket sizes, NULL values dropped: median and MAD
+    by the (n-1)/2 interpolation."""
+    NS = 1_000_000_000
+    odd = [1.0, 2.0, 3.0, 4.0, 100.0]
+    even = [1.0, 2.0, 3.0, 4.0]
+    rows = [("a", i * NS, v) for i, v in enumerate(odd)]
+    rows += [("a", (10 + i) * NS, v) for i, v in enumerate(even)]
+    rows += [("a", 15 * NS, None)]
+    out = ts_ops.mad_over_time(_events(spark, rows), 10, series_cols=("key",))
+    got = sorted((r.bucket, r.n, r.median, r.mad) for r in out.collect())
+    # odd: |x - 3| sorted = 0, 1, 1, 2, 97; even: |x - 2.5| = .5, .5, 1.5, 1.5
+    assert got == [(0, 5, 3.0, 1.0), (10 * NS, 4, 2.5, 1.0)]
+
+
+def test_ewma_rows_last_row_equals_ewma_final(spark):
+    """The default per-row loop ends each series on exactly the value
+    of the seeded SQL fold (bitwise, no tolerance)."""
+    import random
+
+    rng = random.Random(7)
+    rows = [
+        (k, i * 1000, rng.uniform(-50.0, 50.0))
+        for k in ("a", "b", "c") for i in range(60)
+    ]
+    df = _events(spark, rows)
+    last = {
+        r.key: r.ewma
+        for r in ts_ops.ewma_rows(df, 0.3, series_cols=("key",))
+        .filter(F.col("ts") == 59_000)
+        .collect()
+    }
+    final = {
+        r.key: r.ewma
+        for r in ts_ops.ewma_final(df, 0.3, series_cols=("key",)).collect()
+    }
+    assert len(final) == 3 and last == final

@@ -2,8 +2,9 @@
 produce in two checkouts.
 
 For every suite entry that calls ``sugar.query`` / ``sugar.plan``,
-``SeriesFamily.fetch``, ``timeseries.asof_join``, an ``operators.dedup``
-or ``operators.similarity`` function or ``text.tf_idf_topk``, for the
+``SeriesFamily.fetch``, an ``operators.timeseries`` (``ts_ops``),
+``operators.dedup`` or ``operators.similarity`` function or
+``text.tf_idf_topk``, for the
 seven ``tsdb_query`` shapes (three dialect queries, four built on
 ``fetch``) and for the ``llm_dedup`` k-NN graph shape, each checkout runs the entry's statement once (``collect``) and prints
 its optimized logical plan and its final physical plan: the adaptive
@@ -164,7 +165,7 @@ def dump(checkout: Path, sf: str, out_json: str) -> None:
         for name, fn in sorted(suite.spark_queries().items())
         if re.search(
             r"sugar\.(query|plan)\(|\.fetch\(|asof_join\(|\bdd\.\w+\(|operators\.dedup import"
-            r"|\bsim\.\w+\(|\btx\.tf_idf_topk\(",
+            r"|\bsim\.\w+\(|\btx\.tf_idf_topk\(|\bts_ops\.\w+\(",
             inspect.getsource(fn),
         )
     }
