@@ -17,6 +17,16 @@ The reference parses its dialect with the TiDB parser into ``QueryOps``
    operations, DISTINCT [ON], ORDER BY (expressions, NULLS FIRST/LAST,
    ALL) and LIMIT/OFFSET/FETCH [WITH TIES].
 
+   The grammar is written once per construct. An operand is one
+   production, :meth:`_Parser.parse_operand`: a parenthesized operand
+   is any expression, boolean or arithmetic, so the comparison, IS
+   [NOT] NULL, [NOT] IN, BETWEEN and [I]LIKE tails of
+   :meth:`_Parser.parse_predicate` follow ``(...)`` as they follow a
+   bare operand. Every comma list (select items, WITH and WINDOW
+   items, group keys, sort keys, VALUES rows, IN lists, PARTITION BY,
+   call arguments) is read by :meth:`_Parser._list`, every bracket by
+   ``expect_op``, and every literal by :meth:`_Parser._literal`.
+
    Every ``name(...)`` call, in every position (select items, ORDER
    BY, GROUP BY, WHERE, HAVING, QUALIFY, CASE, arithmetic, call
    arguments, PIVOT), goes through one method, :meth:`_Parser.parse_call`,
@@ -41,6 +51,16 @@ The reference parses its dialect with the TiDB parser into ``QueryOps``
    - ``round(x[, n])`` is the ENGINE-INDEPENDENT grid
      ``floor(x*10^n + 0.5)/10^n`` (ANSI half-up rounding is not
      bit-stable across engines); ``floor``/``ceil`` return DOUBLE.
+
+   :meth:`_Resolver.locate` is the one place a source name is
+   stripped and a source kind dispatched; ON columns and default
+   output names derive from it. After the projection, each SELECT
+   level has one :class:`_Scope`, built from its output names, group
+   keys and aggregate calls: HAVING, QUALIFY, DISTINCT ON, ORDER BY,
+   WITH TIES and the ORDER BY of a set operation read their names
+   through it. Its hidden columns (aggregates that only HAVING or
+   ORDER BY name, sort expressions) are one list, dropped by one final
+   projection.
 
    Each family source is one piece of SQL text printed in one place,
    ``(SELECT * FROM view WHERE ...)``: the predicate is
@@ -133,6 +153,10 @@ _KEYWORDS = {
     "recursive", "range", "window", "ignore", "respect", "values",
     "exclude", "groups", "within",
 }
+
+#: the comparison operators; ``<>`` parses as ``!=``
+_CMP_OPS = frozenset({"=", "!=", "<>", "<", "<=", ">", ">="})
+_LIT_KWS = (("kw", "true"), ("kw", "false"), ("kw", "null"))
 
 
 def _num(v: str) -> int | float:
@@ -312,8 +336,7 @@ class SampleClause:
 
 @dataclass
 class BoostQuery:
-    """IR #1 — the QueryOps analog (query/base/queryops.go:11-21).
-    Constructed POSITIONALLY in parse_core: new fields go at the END."""
+    """IR #1 — the QueryOps analog (query/base/queryops.go:11-21)."""
 
     fields: list[FieldRef]
     domain: str
@@ -624,10 +647,11 @@ class _Parser:
         self.i += 1
         return t
 
-    def expect_kw(self, kw: str):
+    def expect_kw(self, kw: str, err: str | None = None):
+        """Consume keyword ``kw``, else ValueError(err or a default)."""
         t = self.next()
         if t != ("kw", kw):
-            raise ValueError(f"expected {kw.upper()}, got {t}")
+            raise ValueError(err or f"expected {kw.upper()}, got {t}")
 
     def accept_kw(self, kw: str) -> bool:
         if self.peek() == ("kw", kw):
@@ -635,11 +659,33 @@ class _Parser:
             return True
         return False
 
+    def accept_any(self, *kws: str) -> str | None:
+        """The one of keywords ``kws`` at the cursor, consumed, else None."""
+        return next((k for k in kws if self.accept_kw(k)), None)
+
     def accept_op(self, op: str) -> bool:
         if self.peek() == ("op", op):
             self.i += 1
             return True
         return False
+
+    def expect_op(self, op: str, err: str) -> None:
+        """Consume ``op``, else ValueError(err)."""
+        if not self.accept_op(op):
+            raise ValueError(err)
+
+    def _list(self, item, opened: str | None = None, closed: str | None = None) -> list:
+        """``item {, item}``: the one comma-list reader. With ``opened``
+        and ``closed`` (the errors of a missing '(' and ')') the list is
+        parenthesized."""
+        if opened is not None:
+            self.expect_op("(", opened)
+        out = [item()]
+        while self.accept_op(","):
+            out.append(item())
+        if closed is not None:
+            self.expect_op(")", closed)
+        return out
 
     def peek2(self):
         return self.toks[self.i + 1] if self.i + 1 < len(self.toks) else None
@@ -722,16 +768,15 @@ class _Parser:
         ctes: list[tuple[str, BoostQuery]] = []
         if not sub and self.accept_kw("with"):
             is_recursive = self.accept_kw("recursive")
-            while True:
+
+            def with_item() -> None:
                 name = self._name("WITH requires a plain (unqualified) name, got {!r}")
                 if any(name == n for n, _ in ctes):
                     raise ValueError(f"duplicate WITH name {name!r}")
                 self.expect_kw("as")
-                if not self.accept_op("("):
-                    raise ValueError("WITH name AS ( SELECT ... ) requires '('")
+                self.expect_op("(", "WITH name AS ( SELECT ... ) requires '('")
                 body = self.parse_query(sub=True)
-                if not self.accept_op(")"):
-                    raise ValueError(f"unbalanced WITH subquery for {name!r}")
+                self.expect_op(")", f"unbalanced WITH subquery for {name!r}")
                 if is_recursive and _total_cte_refs(body, name) > 0:
                     self._validate_recursive_cte(name, body)
                     body.recursive = True
@@ -741,21 +786,15 @@ class _Parser:
                         "WITH RECURSIVE for a fixpoint query"
                     )
                 ctes.append((name, body))
-                if not self.accept_op(","):
-                    break
+
+            self._list(with_item)
         q = self.parse_core()
-        while True:  # left-associative set-op chain
-            if self.accept_kw("union"):
-                op = "union_all" if self.accept_kw("all") else "union"
-            elif self.accept_kw("intersect"):
-                # INTERSECT ALL keeps duplicate multiplicity
-                # (min of the two sides' counts, ANSI bag semantics)
-                op = "intersect_all" if self.accept_kw("all") else "intersect"
-            elif self.accept_kw("except"):
-                # EXCEPT ALL subtracts multiplicities (left minus right)
-                op = "except_all" if self.accept_kw("all") else "except"
-            else:
-                break
+        # the left-associative set-op chain: INTERSECT ALL keeps duplicate
+        # multiplicity (min of the two sides' counts, ANSI bag
+        # semantics), EXCEPT ALL subtracts multiplicities (left minus right)
+        while (op := self.accept_any("union", "intersect", "except")) is not None:
+            if self.accept_kw("all"):
+                op += "_all"
             q.set_ops.append((op, self.parse_core()))
         # ORDER BY / LIMIT attach to the WHOLE statement (after set ops)
         (q.order_by, q.limit, q.offset,
@@ -824,7 +863,7 @@ class _Parser:
                     tgt = FieldRef((f.alias,)) if f.alias else FieldRef(f.parts)
                     order_by.append((tgt, False, None))
             else:
-                while True:
+                def key() -> tuple[FieldRef, bool, str | None]:
                     # bare numbers are ordinals, a bare ref or call is a
                     # key, anything else an expression over select-list
                     # OUTPUT columns
@@ -840,15 +879,12 @@ class _Parser:
                         # explicit NULLS FIRST/LAST — the only portable
                         # ordering of nullable keys (Spark ties the default
                         # to ASC/DESC, DuckDB defaults to NULLS LAST)
-                        if self.accept_kw("first"):
-                            nulls = "first"
-                        elif self.accept_kw("last"):
-                            nulls = "last"
-                        else:
+                        nulls = self.accept_any("first", "last")
+                        if nulls is None:
                             raise ValueError("NULLS requires FIRST or LAST")
-                    order_by.append((f2, desc, nulls))
-                    if not self.accept_op(","):
-                        break
+                    return f2, desc, nulls
+
+                order_by = self._list(key)
         limit = offset = None
         ties = False
 
@@ -903,6 +939,12 @@ class _Parser:
         t = self.peek()
         return t[1].lower() if t[0] == "name" else None
 
+    def _table_op(self, *words: str) -> str | None:
+        """The contextual table operator at the cursor: one of ``words``
+        followed by '('."""
+        w = self._peek_name()
+        return w if w in words and self.peek2() == ("op", "(") else None
+
     def _accept_name(self, word: str) -> bool:
         t = self.peek()
         if t[0] == "name" and t[1].lower() == word:
@@ -910,28 +952,13 @@ class _Parser:
             return True
         return False
 
-    def _name_list(self, what: str) -> list[str]:
-        """``(col [, col])`` of plain column names after ``what``."""
-        if not self.accept_op("("):
-            raise ValueError(f"{what} requires a (col [, col]) list")
-        out = []
-        while True:
-            out.append(self._name(f"{what} takes plain column names, got {{!r}}"))
-            if not self.accept_op(","):
-                break
-        if not self.accept_op(")"):
-            raise ValueError(f"unbalanced {what} column list")
-        return out
-
-    def _key_list(self, item, what: str) -> list:
-        """``(k [, k])`` group-key list of ROLLUP/CUBE/a grouping set."""
-        out = [item()]
-        while self.accept_op(","):
-            out.append(item())
-        if not self.accept_op(")"):
-            raise ValueError(f"unbalanced {what} list")
-        return out
-
+    def _name_list(self, what: str, item=None) -> list:
+        """``(col [, col])`` after ``what``: plain column names, or the
+        ``item``s given."""
+        item = item or (lambda: self._name(f"{what} takes plain column names, got {{!r}}"))
+        return self._list(
+            item, f"{what} requires a (col [, col]) list", f"unbalanced {what} column list"
+        )
     def parse_core(self) -> BoostQuery:
         self.expect_kw("select")
         distinct = self.accept_kw("distinct")
@@ -939,9 +966,7 @@ class _Parser:
         if distinct and self.accept_kw("on"):
             # DISTINCT ON (k, ...): one survivor per key group, picked by
             # the residual ORDER BY (postgres semantics)
-            if not self.accept_op("("):
-                raise ValueError("DISTINCT ON requires a (col [, col]) list")
-            distinct_on = self._key_list(self.parse_plain_ref, "DISTINCT ON column")
+            distinct_on = self._name_list("DISTINCT ON", self.parse_plain_ref)
             distinct = False  # ON replaces the plain projection dedup
         star = False
         exclude: list[str] = []
@@ -955,9 +980,7 @@ class _Parser:
             if self.peek() == ("op", ","):
                 raise ValueError("SELECT * cannot be mixed with named fields")
         else:
-            fields = [self.parse_select_item()]
-            while self.accept_op(","):
-                fields.append(self.parse_select_item())
+            fields = self._list(self.parse_select_item)
         self.expect_kw("from")
         domain, family, alias = self.parse_source()
         pivot_c, unpivot_c = self._try_parse_reshape()
@@ -973,10 +996,7 @@ class _Parser:
                     lat = JoinClause(*self.parse_source(), "cross", None)
                 joins.append(lat)
                 continue
-            kind = next(
-                (k for k in ("inner", "left", "right", "full", "asof") if self.accept_kw(k)),
-                None,
-            )
+            kind = self.accept_any("inner", "left", "right", "full", "asof")
             if kind in ("left", "right", "full"):
                 self.accept_kw("outer")
             if kind is not None:
@@ -1068,57 +1088,48 @@ class _Parser:
                     raise ValueError("GROUP BY ALL found no non-aggregate select items to group by")
             elif self.peek() in (("kw", "rollup"), ("kw", "cube")):
                 _, group_mode = self.next()
-                if not self.accept_op("("):
-                    raise ValueError(f"{group_mode.upper()} requires (cols)")
-                group_by = self._key_list(_gitem, group_mode.upper())
-            elif (
-                self._peek_name() == "grouping"
-                and self.peek2() is not None
-                and self.peek2()[0] == "name"
-                and self.peek2()[1].lower() == "sets"
-            ):
+                mode = group_mode.upper()
+                group_by = self._list(_gitem, f"{mode} requires (cols)", f"unbalanced {mode} list")
+            elif self._peek_name() == "grouping" and self.peek2()[1].lower() == "sets":
                 # GROUP BY GROUPING SETS ((a,b),(a),()) — one Expand pass;
                 # 'grouping'/'sets' stay plain names everywhere else
                 self.next()
                 self.next()
                 group_mode = "grouping_sets"
-                if not self.accept_op("("):
-                    raise ValueError("GROUPING SETS requires ((cols), (cols), ...)")
-                grouping_sets = []
-                while True:
-                    if not self.accept_op("("):
-                        raise ValueError(
-                            "each grouping set must be a parenthesized (possibly empty) column list"
-                        )
-                    grouping_sets.append(
-                        [] if self.accept_op(")") else self._key_list(_gitem, "grouping-set column")
+
+                def grouping_set() -> list[FieldRef]:
+                    self.expect_op(
+                        "(", "each grouping set must be a parenthesized (possibly empty) column list"
                     )
-                    if not self.accept_op(","):
-                        break
-                if not self.accept_op(")"):
-                    raise ValueError("unbalanced GROUPING SETS list")
+                    if self.accept_op(")"):
+                        return []
+                    return self._list(_gitem, closed="unbalanced grouping-set column list")
+
+                grouping_sets = self._list(
+                    grouping_set, "GROUPING SETS requires ((cols), (cols), ...)",
+                    "unbalanced GROUPING SETS list",
+                )
                 for s in grouping_sets:
                     group_by += [item for item in s if item not in group_by]
                 if not group_by:
                     raise ValueError("GROUPING SETS needs at least one non-empty set")
             else:
-                group_by = [_gitem()]
-                while self.accept_op(","):
-                    group_by.append(_gitem())
+                group_by = self._list(_gitem)
             if self.accept_kw("having"):
                 having = self.parse_or()
         # WINDOW w AS (spec) [, ...] — named windows shared by every
         # OVER w (forward references resolve after the clause parses)
         named: dict[str, WindowSpec] = {}
+
+        def window_item() -> None:
+            wname = self._name("WINDOW requires: WINDOW name AS (spec)")
+            if wname in named:
+                raise ValueError(f"duplicate WINDOW name {wname!r}")
+            self.expect_kw("as")
+            named[wname] = self.parse_window()
+
         if self.accept_kw("window"):
-            while True:
-                wname = self._name("WINDOW requires: WINDOW name AS (spec)")
-                if wname in named:
-                    raise ValueError(f"duplicate WINDOW name {wname!r}")
-                self.expect_kw("as")
-                named[wname] = self.parse_window()
-                if not self.accept_op(","):
-                    break
+            self._list(window_item)
         for f in fields:
             w = f.window
             if w is not None and w.pending_name is not None:
@@ -1135,18 +1146,11 @@ class _Parser:
         if star and (group_by or joins):
             raise ValueError("SELECT * supports single-source, non-grouped queries")
         q = BoostQuery(
-            fields, domain, family, alias, where, group_by, having, [],
-            None, None, joins, star,
+            fields, domain, family, alias, where, group_by, having, joins=joins, star=star,
+            distinct=distinct, distinct_on=distinct_on, exclude=exclude, group_mode=group_mode,
+            grouping_sets=grouping_sets, qualify=qualify, pivot=pivot_c, unpivot=unpivot_c,
+            sample=sample_c,
         )
-        q.distinct = distinct
-        q.distinct_on = distinct_on
-        q.exclude = exclude
-        q.group_mode = group_mode
-        q.grouping_sets = grouping_sets
-        q.qualify = qualify
-        q.pivot = pivot_c
-        q.unpivot = unpivot_c
-        q.sample = sample_c
         if (pivot_c or unpivot_c) and joins:
             raise ValueError(
                 "PIVOT/UNPIVOT on a joined query is not supported — "
@@ -1166,14 +1170,11 @@ class _Parser:
         anchor. 'pivot'/'unpivot' are contextual names (only recognized
         here, followed by '('), so columns/aliases with those names
         keep parsing."""
-        t = self.peek()
-        if t[0] != "name" or t[1].lower() not in ("pivot", "unpivot"):
+        which = self._table_op("pivot", "unpivot")
+        if which is None:
             return None, None
-        if self.peek2() != ("op", "("):
-            return None, None
-        which = self.next()[1].lower()
-        if not self.accept_op("("):
-            raise ValueError(f"{which.upper()} requires (...)")
+        self.next()
+        self.expect_op("(", f"{which.upper()} requires (...)")
         if which == "pivot":
             e = self.parse_operand()
             c = e.value if e.kind == "ref" else None
@@ -1185,27 +1186,24 @@ class _Parser:
                 raise ValueError("PIVOT aggregate takes one plain column name or *")
             self._expect_name("for", "PIVOT requires FOR <col> IN (...)")
             keycol = self._name("PIVOT FOR takes a plain column name")
-            if not self.accept_kw("in"):
-                raise ValueError("PIVOT requires FOR <col> IN (...)")
-            if not self.accept_op("("):
-                raise ValueError("PIVOT IN requires a (literal, ...) list")
-            values = self._key_list(self._reshape_lit, "PIVOT IN value")
-            if not self.accept_op(")"):
-                raise ValueError("unbalanced PIVOT clause parenthesis")
+            self.expect_kw("in", "PIVOT requires FOR <col> IN (...)")
+            values = self._list(
+                self._reshape_lit, "PIVOT IN requires a (literal, ...) list",
+                "unbalanced PIVOT IN value list",
+            )
+            self.expect_op(")", "unbalanced PIVOT clause parenthesis")
             return PivotClause(c.func, c.parts[0] if c.parts else None, keycol, values), None
         # UNPIVOT (val FOR key IN (c1, c2, ...))
         valcol = self._name("UNPIVOT requires: UNPIVOT (val FOR key IN (col, ...))")
         self._expect_name("for", "UNPIVOT requires FOR <key> IN (col, ...)")
         keycol = self._name("UNPIVOT FOR takes a plain name")
-        if not self.accept_kw("in"):
-            raise ValueError("UNPIVOT requires FOR <key> IN (col, ...)")
+        self.expect_kw("in", "UNPIVOT requires FOR <key> IN (col, ...)")
         cols = self._name_list("UNPIVOT IN")
-        if not self.accept_op(")"):
-            raise ValueError("unbalanced UNPIVOT clause parenthesis")
+        self.expect_op(")", "unbalanced UNPIVOT clause parenthesis")
         return None, UnpivotClause(valcol, keycol, cols)
 
     def _reshape_lit(self):
-        v = self._values_literal("PIVOT IN values")
+        v = self._literal("PIVOT IN values are literals (number/string/true/false/null), got {!r}")
         if v is None or isinstance(v, bool):
             raise ValueError(f"PIVOT IN list takes string/number literals, got {v!r}")
         return v
@@ -1214,10 +1212,7 @@ class _Parser:
         """Optional ``TABLESAMPLE (p PERCENT ON key)`` after the FROM
         anchor (and after any PIVOT/UNPIVOT). 'tablesample' is a
         contextual name — only recognized here, followed by '('."""
-        t = self.peek()
-        if t[0] != "name" or t[1].lower() != "tablesample":
-            return None
-        if self.peek2() != ("op", "("):
+        if self._table_op("tablesample") is None:
             return None
         self.next()
         self.accept_op("(")
@@ -1232,16 +1227,13 @@ class _Parser:
             "TABLESAMPLE requires PERCENT (rows-count sampling is not deterministic "
             "under distribution; use LIMIT over an ORDER for top-n)",
         )
-        k3, onkw = self.next()
-        if (k3, onkw) != ("kw", "on"):
-            raise ValueError(
-                "TABLESAMPLE requires ON <key column> — the hash key "
-                "that makes the sample reproducible (Bernoulli RNG "
-                "sampling cannot be certified against an oracle)"
-            )
+        self.expect_kw("on", (
+            "TABLESAMPLE requires ON <key column> — the hash key "
+            "that makes the sample reproducible (Bernoulli RNG "
+            "sampling cannot be certified against an oracle)"
+        ))
         keycol = self._name("TABLESAMPLE ON takes a plain column name")
-        if not self.accept_op(")"):
-            raise ValueError("unbalanced TABLESAMPLE clause")
+        self.expect_op(")", "unbalanced TABLESAMPLE clause")
         return SampleClause(pct, keycol)
 
     def _try_parse_lateral(self) -> "JoinClause | None":
@@ -1250,10 +1242,8 @@ class _Parser:
         grammar gap: the reference's TiDB parser accepts LATERAL before
         dropping it). 'lateral' is contextual: only recognized right
         after JOIN, so columns/aliases named lateral keep parsing."""
-        t = self.peek()
-        if not (t[0] == "name" and t[1].lower() == "lateral"):
+        if not self._accept_name("lateral"):
             return None
-        self.next()
         fn = self._name("LATERAL requires a table-function call fn(...)").lower()
         if fn not in _LATERAL_FNS:
             raise ValueError(
@@ -1261,46 +1251,42 @@ class _Parser:
                 f"supports {sorted(_LATERAL_FNS)} (arbitrary Python "
                 "UDTFs stay on the DataFrame/SQL API)"
             )
-        if not self.accept_op("("):
-            raise ValueError("LATERAL table function requires (argument)")
+        self.expect_op("(", "LATERAL table function requires (argument)")
         arg = self.parse_arith()
-        if not self.accept_op(")"):
-            raise ValueError("unbalanced LATERAL argument list")
+        self.expect_op(")", "unbalanced LATERAL argument list")
         alias = self._name("LATERAL table function requires a row alias: JOIN LATERAL fn(arg) t")
         return JoinClause(
             "", fn, alias, "lateral", None, lateral_arg=arg
         )
 
-    def _values_literal(self, what: str = "VALUES cells"):
-        """One literal: number (optionally signed), string,
-        TRUE/FALSE/NULL."""
+    def _literal(self, err: str):
+        """One literal: a number (optionally signed), a string, TRUE,
+        FALSE or NULL, else ValueError(err); a ``{!r}`` in err shows the
+        token."""
         neg = self.accept_op("-")
         kind, v = self.next()
         if kind == "num":
             return -_num(v) if neg else _num(v)
         if not neg and kind == "str":
             return v
-        if not neg and kind == "kw" and v in ("true", "false", "null"):
+        if not neg and (kind, v) in _LIT_KWS:
             return None if v == "null" else v == "true"
-        raise ValueError(f"{what} are literals (number/string/true/false/null), got {v!r}")
+        raise ValueError(err.format(v))
 
     def _parse_values_table(self) -> tuple[str, str, str | None]:
         """``(VALUES (...), (...)) [AS] t(a, b)`` after the opening
         paren+VALUES have been consumed."""
-        rows: list[list] = []
-        while True:
-            if not self.accept_op("("):
-                raise ValueError("VALUES requires parenthesized row tuples")
-            row = [self._values_literal()]
-            while self.accept_op(","):
-                row.append(self._values_literal())
-            if not self.accept_op(")"):
-                raise ValueError("unbalanced VALUES row tuple")
-            rows.append(row)
-            if not self.accept_op(","):
-                break
-        if not self.accept_op(")"):
-            raise ValueError("unbalanced (VALUES ...) parenthesis")
+
+        def row() -> list:
+            return self._list(
+                lambda: self._literal(
+                    "VALUES cells are literals (number/string/true/false/null), got {!r}"
+                ),
+                "VALUES requires parenthesized row tuples", "unbalanced VALUES row tuple",
+            )
+
+        rows = self._list(row)
+        self.expect_op(")", "unbalanced (VALUES ...) parenthesis")
         self.accept_kw("as")
         alias = self._name("VALUES requires a table alias: (VALUES ...) t(a, b)")
         if self.peek() != ("op", "("):
@@ -1326,8 +1312,7 @@ class _Parser:
                 return self._parse_values_table()
             # derived table ``( SELECT ... ) alias`` — an anonymous CTE
             body = self.parse_query(sub=True)
-            if not self.accept_op(")"):
-                raise ValueError("unbalanced derived-table parenthesis")
+            self.expect_op(")", "unbalanced derived-table parenthesis")
             if self.peek()[0] != "name":
                 raise ValueError("derived table requires an alias: ( SELECT ... ) name")
             alias = self.next()[1]
@@ -1346,10 +1331,7 @@ class _Parser:
         else:
             raise ValueError("FROM requires qualified domain.family")
         alias = None
-        if self.peek()[0] == "name" and not (
-            self.peek()[1].lower() in ("pivot", "unpivot", "tablesample")
-            and self.peek2() == ("op", "(")
-        ):
+        if self.peek()[0] == "name" and not self._table_op("pivot", "unpivot", "tablesample"):
             # 'pivot'/'unpivot'/'tablesample' followed by '(' is a
             # table operator, not a source alias (contextual, like
             # LATERAL)
@@ -1381,15 +1363,15 @@ class _Parser:
 
     def _sort_keys(self) -> list[tuple[FieldRef, bool]]:
         """``ref [ASC|DESC] {, ref [ASC|DESC]}`` -> [(ref, desc)]."""
-        keys = []
-        while True:
+
+        def key() -> tuple[FieldRef, bool]:
             r = self.parse_plain_ref()
             d = self.accept_kw("desc")
             if not d:
                 self.accept_kw("asc")
-            keys.append((r, d))
-            if not self.accept_op(","):
-                return keys
+            return r, d
+
+        return self._list(key)
 
     def parse_call(self, name: str) -> Expr:
         """``name(args)`` and the modifiers its :data:`_FUNCS` row admits
@@ -1401,29 +1383,24 @@ class _Parser:
             raise ValueError(f"unknown function {name}()")
         fn = _FUNCS[func]
         self.next()  # '('
-
-        def close() -> None:
-            if not self.accept_op(")"):
-                raise ValueError(f"unbalanced parenthesis in {func}(...)")
+        unbalanced = f"unbalanced parenthesis in {func}(...)"
 
         if fn.form == "cast":  # CAST(expr AS type), whitelisted targets
             inner = self.parse_arith()
-            if self.next() != ("kw", "as"):
-                raise ValueError("CAST requires 'AS <type>'")
+            self.expect_kw("as", "CAST requires 'AS <type>'")
             k3, ty = self.name_next()
             if k3 != "name" or ty.lower() not in _CAST_TYPES:
                 raise ValueError(f"unsupported CAST target {ty!r}; one of {sorted(_CAST_TYPES)}")
-            close()
+            self.expect_op(")", unbalanced)
             return Expr("cast", op=_CAST_TYPES[ty.lower()], children=[inner])
         if fn.form == "extract":  # EXTRACT(part FROM expr): the date-part call
             ku, unit = self.name_next()
             if ku != "name" or not getattr(_FUNCS.get(unit.lower()), "part", False):
                 parts = "/".join(n for n, f in _FUNCS.items() if f.part)
                 raise ValueError(f"EXTRACT unit must be one of {parts}, got {unit!r}")
-            if self.next() != ("kw", "from"):
-                raise ValueError("EXTRACT requires 'unit FROM expr'")
+            self.expect_kw("from", "EXTRACT requires 'unit FROM expr'")
             inner = self.parse_arith()
-            close()
+            self.expect_op(")", unbalanced)
             return Expr("fn", op=unit.lower(), children=[inner])
         distinct = self.accept_kw("distinct")
         if distinct and fn.distinct is None:
@@ -1434,11 +1411,8 @@ class _Parser:
             stars = "/".join(f"{n}(*)" for n, f in _FUNCS.items() if f.star)
             raise ValueError(f"{func}({'DISTINCT ' * distinct}*) is not valid; only {stars}")
         if not star and self.peek() != ("op", ")"):
-            arg = self.parse_or if fn.pred else self.parse_arith
-            args.append(arg())
-            while self.accept_op(","):
-                args.append(arg())
-        close()
+            args = self._list(self.parse_or if fn.pred else self.parse_arith)
+        self.expect_op(")", unbalanced)
         n = len(args) + star
         if n < fn.lo or (fn.hi is not None and n > fn.hi):
             want = (
@@ -1451,13 +1425,11 @@ class _Parser:
             if not fn.within:
                 raise ValueError(f"{func} does not take WITHIN GROUP")
             self.expect_kw("group")
-            if not self.accept_op("("):
-                raise ValueError("WITHIN GROUP requires (ORDER BY ...)")
+            self.expect_op("(", "WITHIN GROUP requires (ORDER BY ...)")
             self.expect_kw("order")
             self.expect_kw("by")
             within = self._sort_keys()
-            if not self.accept_op(")"):
-                raise ValueError("unbalanced WITHIN GROUP (ORDER BY ...)")
+            self.expect_op(")", "unbalanced WITHIN GROUP (ORDER BY ...)")
             if fn.within == 1 and len(within) > 1:
                 raise ValueError(
                     f"{func} takes exactly one WITHIN GROUP sort key (ANSI "
@@ -1469,8 +1441,8 @@ class _Parser:
                 "aggregate has no deterministic meaning without an ordering"
             )
         ignore_nulls = False
-        if self.peek() in (("kw", "ignore"), ("kw", "respect")):
-            mode = self.next()[1]
+        mode = self.accept_any("ignore", "respect")
+        if mode is not None:
             self.expect_kw("nulls")
             if not fn.nulls:
                 names = "/".join(n for n, f in _FUNCS.items() if f.nulls)
@@ -1483,12 +1455,10 @@ class _Parser:
         if self.accept_kw("filter"):  # ANSI aggregate FILTER (WHERE pred)
             if not fn.filter:
                 raise ValueError(f"{func} does not take FILTER (WHERE ...)")
-            if not self.accept_op("("):
-                raise ValueError("FILTER requires (WHERE <predicate>)")
+            self.expect_op("(", "FILTER requires (WHERE <predicate>)")
             self.expect_kw("where")
             filter_expr = self.parse_or()
-            if not self.accept_op(")"):
-                raise ValueError("unbalanced FILTER (WHERE ...) clause")
+            self.expect_op(")", "unbalanced FILTER (WHERE ...) clause")
         window = None
         if self.accept_kw("over"):
             if fn.over == "forbidden":
@@ -1526,14 +1496,11 @@ class _Parser:
         return Expr("ref", value=c)
 
     def parse_window(self) -> WindowSpec:
-        if not self.accept_op("("):
-            raise ValueError("OVER requires a parenthesized window spec")
+        self.expect_op("(", "OVER requires a parenthesized window spec")
         spec = WindowSpec()
         if self.accept_kw("partition"):
             self.expect_kw("by")
-            spec.partition_by.append(self.parse_plain_ref())
-            while self.accept_op(","):
-                spec.partition_by.append(self.parse_plain_ref())
+            spec.partition_by = self._list(self.parse_plain_ref)
         if self.accept_kw("order"):
             self.expect_kw("by")
             spec.order_by = self._sort_keys()
@@ -1541,9 +1508,7 @@ class _Parser:
         # ns deltas on the one time column (bare numeric RANGE offsets are
         # refused: their unit would depend on the column's representation);
         # GROUPS counts peer groups (distinct ORDER BY values)
-        frame_type = next(
-            (k for k in ("rows", "range", "groups") if self.accept_kw(k)), None
-        )
+        frame_type = self.accept_any("rows", "range", "groups")
         if frame_type is not None:
             self.expect_kw("between")
             bound = self.parse_range_bound if frame_type == "range" else self.parse_frame_bound
@@ -1567,8 +1532,7 @@ class _Parser:
                     self._expect_name("others", "expected OTHERS after EXCLUDE NO, got {!r}")
                 else:
                     raise ValueError("EXCLUDE takes CURRENT ROW, GROUP, TIES, or NO OTHERS")
-        if not self.accept_op(")"):
-            raise ValueError("unbalanced parenthesis in OVER (...)")
+        self.expect_op(")", "unbalanced parenthesis in OVER (...)")
         return spec
 
     #: ns per RANGE-frame INTERVAL unit (singular or plural spelling)
@@ -1599,26 +1563,22 @@ class _Parser:
             raise ValueError(
                 f"INTERVAL unit must be one of {sorted(self._INTERVAL_NS)} (got {unit!r})"
             )
-        ns = int(num) * self._INTERVAL_NS[u]
-        if self.accept_kw("preceding"):
-            return -ns
-        self.expect_kw("following")
-        return ns
+        return self._direction(int(num) * self._INTERVAL_NS[u])
 
     def parse_frame_bound(self) -> int:
-        UNB = (1 << 63) - 1  # Spark's unboundedPreceding/Following magnitude
         if self.accept_kw("unbounded"):
-            if self.accept_kw("preceding"):
-                return -UNB
-            self.expect_kw("following")
-            return UNB
+            # Spark's unboundedPreceding/Following magnitude
+            return self._direction((1 << 63) - 1)
         if self.accept_kw("current"):
             self.expect_kw("row")
             return 0
         kind, v = self.next()
         if kind != "num":
             raise ValueError(f"expected frame offset, got {v!r}")
-        n = int(v)
+        return self._direction(int(v))
+
+    def _direction(self, n: int) -> int:
+        """``n`` PRECEDING (-n) or FOLLOWING (n)."""
         if self.accept_kw("preceding"):
             return -n
         self.expect_kw("following")
@@ -1651,34 +1611,20 @@ class _Parser:
         return self.parse_predicate()
 
     def parse_predicate(self) -> Expr:
-        if self.peek() == ("kw", "exists"):
+        if self.accept_kw("exists"):
             # [NOT] EXISTS (SELECT ...) — planned as a decorrelated
             # semi/anti join (NOT comes in via parse_not)
-            self.next()
-            if not self.accept_op("("):
-                raise ValueError("EXISTS requires (SELECT ...)")
+            self.expect_op("(", "EXISTS requires (SELECT ...)")
             if self.peek() != ("kw", "select"):
                 raise ValueError("EXISTS requires a subquery")
             subq = self.parse_query(sub=True)
-            if not self.accept_op(")"):
-                raise ValueError("unbalanced subquery parenthesis")
+            self.expect_op(")", "unbalanced subquery parenthesis")
             return Expr("exists", children=[Expr("subquery", value=subq)])
-        if self.peek() == ("op", "(") and self.peek2() != ("kw", "select"):
-            self.next()
-            e = self.parse_or()
-            if not self.accept_op(")"):
-                raise ValueError("unbalanced parenthesis")
-            # '(' is boolean or arithmetic grouping: an operator after
-            # it continues the arithmetic and optional comparison
-            t = self.peek()
-            if t[0] == "op" and t[1] in (
-                "*", "/", "+", "-", "=", "!=", "<>", "<", "<=", ">", ">=",
-            ):
-                return self.parse_predicate_from(e)
-            return e
+        # a parenthesized operand may be boolean or arithmetic grouping:
+        # parse_operand reads it, and the tail below applies to both
         operand = self.parse_arith()
         t = self.peek()
-        if t[0] == "op" and t[1] in ("=", "!=", "<>", "<", "<=", ">", ">="):
+        if t[0] == "op" and t[1] in _CMP_OPS:
             self.next()
             op = "!=" if t[1] == "<>" else t[1]
             return Expr("cmp", op=op, children=[operand, self.parse_arith()])
@@ -1695,21 +1641,15 @@ class _Parser:
             t = self.peek()
         if t == ("kw", "in"):
             self.next()
-            if not self.accept_op("("):
-                raise ValueError("IN requires a list")
+            self.expect_op("(", "IN requires a list")
             if self.peek() == ("kw", "select"):
                 # IN (SELECT ...) — declared but never planned by the
                 # reference (query/base/expression.go:16-18)
                 subq = self.parse_query(sub=True)
-                if not self.accept_op(")"):
-                    raise ValueError("unbalanced subquery parenthesis")
+                self.expect_op(")", "unbalanced subquery parenthesis")
                 e = Expr("in", children=[operand, Expr("subquery", value=subq)])
             else:
-                items = [self.parse_operand()]
-                while self.accept_op(","):
-                    items.append(self.parse_operand())
-                if not self.accept_op(")"):
-                    raise ValueError("unbalanced IN list")
+                items = self._list(self.parse_operand, closed="unbalanced IN list")
                 e = Expr("in", children=[operand, *items])
         elif t == ("kw", "between"):
             self.next()
@@ -1755,23 +1695,6 @@ class _Parser:
         self.expect_kw("end")
         return Expr("case", op=form, children=children)
 
-    def parse_predicate_from(self, left: Expr) -> Expr:
-        """Continue term -> arith -> optional comparison from an
-        already-parsed left operand (the parenthesized-arithmetic
-        case)."""
-        while self.peek()[0] == "op" and self.peek()[1] in ("*", "/", "%"):
-            _, op = self.next()
-            left = Expr("arith", op=op, children=[left, self.parse_operand()])
-        while self.peek()[0] == "op" and self.peek()[1] in ("+", "-"):
-            _, op = self.next()
-            left = Expr("arith", op=op, children=[left, self.parse_term()])
-        t = self.peek()
-        if t[0] == "op" and t[1] in ("=", "!=", "<>", "<", "<=", ">", ">="):
-            self.next()
-            op = "!=" if t[1] == "<>" else t[1]
-            return Expr("cmp", op=op, children=[left, self.parse_arith()])
-        return left
-
     # expr := term (('+'|'-') term)*, term := factor (('*'|'/'|'%') factor)*
     # — computed expressions the reference rejects (selectfieldparser.go:90-99)
     def parse_arith(self) -> Expr:
@@ -1791,37 +1714,28 @@ class _Parser:
     def parse_operand(self) -> Expr:
         if self.peek() == ("kw", "case"):
             return self.parse_case()
-        if self.peek() == ("op", "("):
-            self.next()
-            # scalar subquery operand (SELECT agg(...) FROM ...) or a
-            # parenthesized arithmetic expression
+        if self.accept_op("("):
+            # scalar subquery operand (SELECT agg(...) FROM ...), or
+            # boolean or arithmetic grouping
             if self.peek() == ("kw", "select"):
                 e = Expr("subquery", value=self.parse_query(sub=True))
             else:
-                e = self.parse_arith()
-            if not self.accept_op(")"):
-                raise ValueError(
-                    "unbalanced subquery parenthesis" if e.kind == "subquery"
-                    else "unbalanced parenthesis in expression"
-                )
+                e = self.parse_or()
+            self.expect_op(")", (
+                "unbalanced subquery parenthesis" if e.kind == "subquery"
+                else "unbalanced parenthesis in expression"
+            ))
             return e
+        t = self.peek()
+        if t[0] in ("num", "str") or t == ("op", "-") or t in _LIT_KWS:
+            # unary minus applies to a numeric literal only
+            return Expr("lit", value=self._literal("expected number after '-', got {!r}"))
         kind, v = self.name_next()
         if kind == "param":
             # named-placeholder literal (query/base/literalintexpression.go:
             # 9-113): bound from the params dict at plan time, so one
             # parsed query re-executes with new bindings
             return Expr("param", value=v)
-        if kind == "op" and v == "-":  # unary minus on a numeric literal
-            k2, v2 = self.next()
-            if k2 != "num":
-                raise ValueError(f"expected number after '-', got {v2!r}")
-            return Expr("lit", value=-_num(v2))
-        if kind == "num":
-            return Expr("lit", value=_num(v))
-        if kind == "str":
-            return Expr("lit", value=v)
-        if kind == "kw" and v in ("true", "false", "null"):
-            return Expr("lit", value={"true": True, "false": False}.get(v))
         if kind != "name":
             raise ValueError(f"unexpected operand {v!r}")
         if self.peek() != ("op", "("):
@@ -1917,12 +1831,12 @@ class _Resolver:
     def _qual(self, src: _Src, col: str) -> str:
         return f"{_ident(src.qual)}.{_ident(src.prefix + col)}"
 
-    def _family(self, src: _Src, parts, ref: FieldRef) -> tuple[str, str]:
+    def _family(self, src: _Src, rest, ref: FieldRef) -> tuple[str, str]:
         b = src.binding
-        if len(parts) == 1:
-            series, col = parts[0], b.value_col  # value sugar
-        elif len(parts) == 2:
-            series, col = parts[0], (b.value_col if parts[1] == "value" else parts[1])
+        if len(rest) == 1:
+            series, col = rest[0], b.value_col  # value sugar
+        elif len(rest) == 2:
+            series, col = rest[0], (b.value_col if rest[1] == "value" else rest[1])
         else:
             raise ValueError(f"cannot resolve field {'.'.join(ref.parts)}")
         if src.cols and col not in src.cols:
@@ -1936,42 +1850,36 @@ class _Resolver:
             src.series.add(series)
         return series, col
 
-    def _cte_col(self, key: str, src: _Src, col: str) -> str:
-        if col not in src.cols:
-            raise ValueError(
-                f"{key}.{col}: WITH source {key!r} has no column {col!r} (columns: {src.cols})"
-            )
-        return col
-
-    def locate(self, ref: FieldRef) -> tuple[_Src, str | None, str]:
-        """-> (source, series, physical column)."""
+    def _source(self, ref: FieldRef) -> tuple[_Src, tuple[str, ...]]:
+        """-> (the source ``ref`` reads, its parts after the source name);
+        a single-source level's alias is optional."""
         parts = ref.parts
         if not self.joined:
-            src = self.single()
             if self.q.source_alias and len(parts) > 1 and parts[0] == self.q.source_alias:
                 parts = parts[1:]
-            if src.kind == "table":
-                if len(parts) == 1 and parts[0] in src.cols:
-                    return src, None, parts[0]
-                raise ValueError(
-                    f"{'.'.join(ref.parts)} is not a column of WITH source "
-                    f"{self.q.family!r} (columns: {sorted(src.cols)})"
-                )
-            return (src, *self._family(src, parts, ref))
+            return self.single(), parts
         if len(parts) < 2 or parts[0] not in self.srcs:
             raise ValueError(f"field {'.'.join(parts)} must be source-qualified in a join query")
-        src, rest = self.srcs[parts[0]], parts[1:]
-        if src.kind == "lateral":  # table-function output columns
-            if len(rest) != 1 or rest[0] not in src.cols:
-                raise ValueError(
-                    f"{'.'.join(parts)}: LATERAL source {parts[0]!r} has columns {list(src.cols)}"
-                )
-            return src, None, rest[0]
-        if src.kind == "table":  # plain-column semantics, no sugar
-            if len(rest) != 1:
-                raise ValueError(f"{'.'.join(parts)}: WITH sources take alias.column refs")
-            return src, None, self._cte_col(parts[0], src, rest[0])
-        return (src, *self._family(src, rest, ref))
+        return self.srcs[parts[0]], parts[1:]
+
+    def locate(self, ref: FieldRef, plain: bool = False) -> tuple[_Src, str | None, str]:
+        """-> (source, series, physical column). WITH, derived and
+        LATERAL sources have plain columns; so has a family for a
+        ``plain`` ref (an ON ref: no series implied, ``value`` names
+        the value column)."""
+        src, rest = self._source(ref)
+        if src.kind == "family" and plain:
+            return src, None, (src.binding.value_col if rest == ("value",) else rest[0])
+        if src.kind == "family":
+            return (src, *self._family(src, rest, ref))
+        if len(rest) != 1 or rest[0] not in src.cols:
+            kind = "LATERAL" if src.kind == "lateral" else "WITH"
+            key = ref.parts[0] if self.joined else self.q.family
+            raise ValueError(
+                f"{'.'.join(ref.parts)}: {kind} source {key!r} has no column "
+                f"{'.'.join(rest)!r} (columns: {sorted(src.cols)})"
+            )
+        return src, None, rest[0]
 
     def resolve(self, ref: FieldRef) -> tuple[str | None, str]:
         """-> (series, column key): the bare column on a single-source
@@ -1992,40 +1900,24 @@ class _Resolver:
 
     def on_col(self, ref: FieldRef) -> tuple[_Src, str]:
         """ON refs are plain ``source.column`` (the reference's JoinInfo
-        LeftSource/LeftColumn shape) — no series implied."""
+        LeftSource/LeftColumn shape)."""
         if len(ref.parts) != 2 or ref.parts[0] not in self.srcs:
             raise ValueError(f"ON ref {'.'.join(ref.parts)} must be source.column")
-        key, col = ref.parts
-        src = self.srcs[key]
-        if src.kind == "lateral":
-            if col not in src.cols:
-                raise ValueError(
-                    f"LATERAL source {key!r} has columns {list(src.cols)}, not {col!r}"
-                )
-        elif src.kind == "table":
-            col = self._cte_col(key, src, col)
-        elif col == "value":
-            col = src.binding.value_col
+        src, _, col = self.locate(ref, plain=True)
         return src, col
 
     def resolve_on(self, ref: FieldRef) -> str:
         return self._qual(*self.on_col(ref))
 
     def default_name(self, ref: FieldRef) -> str:
+        """A select item's output name without AS: an attribute ref's
+        attribute, value sugar's value column, a call's ``func_<name>``."""
         if ref.alias:
             return ref.alias
         if ref.func is not None and not ref.parts:
             return ref.func  # count(*)
-        parts = ref.parts
-        if not self.joined:
-            if self.q.source_alias and len(parts) > 1 and parts[0] == self.q.source_alias:
-                parts = parts[1:]
-            family = self.single().kind == "family"
-            base = parts[-1] if len(parts) > 1 or not family else self.single().binding.value_col
-        else:
-            src = self.srcs.get(parts[0])
-            family = src is not None and src.kind == "family"
-            base = src.binding.value_col if family and len(parts) == 2 else parts[-1]
+        rest = self._source(ref)[1]
+        base = rest[-1] if len(rest) > 1 else self.locate(ref)[2]
         return f"{ref.func}_{base}" if ref.func else base
 
 
@@ -2067,9 +1959,6 @@ def _param_value(name: str, params: dict | None):
     if params is None or name not in params:
         raise ValueError(f"unbound placeholder :{name} — pass params={{{name!r}: ...}}")
     return params[name]
-
-
-_CMP_SQL = {"=": "=", "!=": "!=", "<": "<", "<=": "<=", ">": ">", ">=": ">="}
 
 
 def _compile_expr(e: Expr, res: _Resolver, name_of=None, params: dict | None = None,
@@ -2126,7 +2015,7 @@ def _compile_expr(e: Expr, res: _Resolver, name_of=None, params: dict | None = N
         )
         return f"CASE{whens}{f' ELSE {other}' if other is not None else ''} END"
     if k == "cmp":
-        return f"({c(e.children[0])} {_CMP_SQL[e.op]} {c(e.children[1])})"
+        return f"({c(e.children[0])} {e.op} {c(e.children[1])})"
     if k in ("and", "or"):
         return f"({c(e.children[0])} {k.upper()} {c(e.children[1])})"
     if k == "not":
@@ -2414,6 +2303,70 @@ def _window_exclude(func: str, xc: str | None, wref: WindowSpec, w: str, wnofram
     return f"try_divide({rest}, {excl_cnt})"
 
 
+class _Scope:
+    """The names the clauses after one SELECT level's projection read:
+    HAVING, QUALIFY, DISTINCT ON, ORDER BY and WITH TIES, and the ORDER
+    BY after a set operation. ``out`` are the level's output columns. A
+    grouped level also reads its group keys (``keys``: column -> (SQL,
+    name)) and aggregate calls (``calls``: call SQL -> output name); a
+    call the select list lacks becomes a hidden aggregate of the same
+    pass (Spark resolves no ORDER BY aggregate through a HAVING). An
+    ORDER BY expression becomes a hidden sort column. One final
+    projection drops every hidden column."""
+
+    def __init__(self, out: list[str], res: "_Resolver | None" = None, em=None,
+                 keys: dict | None = None, calls: dict | None = None):
+        self.out, self.res, self.em = out, res, em
+        self.keys, self.calls = keys, calls
+        self.aggs: dict[str, str] = {}  # hidden aggregate SQL -> name
+        self.hidden: list[str] = []  # every hidden column, in order
+
+    @property
+    def cols(self) -> list[str]:
+        """The columns of the projection: outputs, then hidden aggregates."""
+        return self.out + list(self.aggs.values())
+
+    def output(self, ref: FieldRef, what: str) -> str:
+        """The output column ``ref`` names; ``what`` is the clause."""
+        if ref.func is None and len(ref.parts) == 1 and ref.parts[0] in self.cols:
+            return ref.parts[0]
+        got = f"a {ref.func}() call — alias it" if ref.func else ".".join(ref.parts)
+        raise ValueError(f"{what} must name an output column (one of {self.cols}), got {got}")
+
+    def name(self, ref: FieldRef, direct: bool = False) -> str:
+        """A HAVING or ORDER BY key as SQL. An output name passes through.
+        On a grouped level a group-key column reads its key's name, and an
+        aggregate call the select item printing the same SQL, else a
+        hidden aggregate. On an ungrouped level a ref reads the output its
+        default name names, else the source column if the ORDER BY sorts
+        the projection itself (``direct``)."""
+        if ref.func is None and len(ref.parts) == 1 and ref.parts[0] in self.cols:
+            return _ident(ref.parts[0])
+        res = self.res
+        if self.keys is None:
+            name = res.default_name(ref)
+            if name in self.cols:
+                return _ident(name)
+            return res.ref_sql(ref) if direct else _ident(self.output(ref, "ORDER BY"))
+        if ref.func is None:
+            col = res.resolve(ref)[1]
+            if col in self.keys:
+                return _ident(self.keys[col][1])
+            raise ValueError(f"{'.'.join(ref.parts)} is neither grouped nor aggregated")
+        sql = self.em.call(ref, res)  # the same call prints the same SQL
+        if sql in self.calls:
+            return _ident(self.calls[sql])
+        if sql not in self.aggs:
+            if any((ref.arg_expr, ref.arg2_expr, ref.filter_expr, ref.within_group)):
+                name = f"_h{len(self.aggs)}_{ref.func}"
+            else:
+                col = res.resolve(ref)[1] if ref.parts else "star"
+                name = f"_h_{ref.func}_{col.replace('`.`', '__').strip('`')}"
+            self.aggs[sql] = name
+            self.hidden.append(name)
+        return _ident(self.aggs[sql])
+
+
 _SETOP_SQL = {
     "union_all": "UNION ALL", "union": "UNION", "intersect": "INTERSECT",
     "intersect_all": "INTERSECT ALL", "except": "EXCEPT",
@@ -2556,13 +2509,11 @@ class _Emitter:
             if len(rcols) != len(cols):
                 raise ValueError(f"set-operation sides have {len(cols)} vs {len(rcols)} columns")
             text = f"({text}) {_SETOP_SQL[op]} ({rtext})"
-        order = []
-        for ref, desc, nulls in q.order_by:
-            if ref.func or len(ref.parts) != 1 or ref.parts[0] not in cols:
-                raise ValueError(
-                    f"ORDER BY after a set operation must name an output column (one of {cols})"
-                )
-            order.append(_order_sql(_ident(ref.parts[0]), desc, nulls))
+        scope = _Scope(cols)
+        order = [
+            _order_sql(_ident(scope.output(ref, "ORDER BY after a set operation")), desc, nulls)
+            for ref, desc, nulls in q.order_by
+        ]
         if q.limit_ties:
             raise ValueError(
                 "LIMIT ... WITH TIES after a set operation is not "
@@ -2949,12 +2900,13 @@ class _Emitter:
             # (window): a joined FROM becomes one relation first
             text, qual = self.flatten(from_, res, list(res.srcs))
             from_ = f"({text}) AS {_ident(qual)}"
-        sel: list[tuple[str, str | None, str | None, FieldRef]] = []
+        #: (output name, plain column or None, item)
+        sel: list[tuple[str, str | None, FieldRef]] = []
         for f in q.fields:  # resolve every select ref: the series to fetch
             for r in _reads(f):
                 res.resolve(r)
             col = res.resolve(f)[1] if f.parts and f.func is None else None
-            sel.append((res.default_name(f), col, f.func, f))
+            sel.append((res.default_name(f), col, f))
         # a computed select item may serve as a GROUP BY key via its
         # alias (SELECT floor(x/50) AS bin ... GROUP BY bin); one whose
         # refs are ALL aggregate calls is a POST-AGGREGATION expression
@@ -2981,7 +2933,10 @@ class _Emitter:
             f.alias for f in q.fields
             if f.expr is not None and f.alias not in group_computed and f not in post_agg
         ]
-        if stray and (q.group_by or post_agg or any(f.func for f in q.fields)):
+        grouped = bool(
+            q.group_by or post_agg or any(f.func and f.window is None for f in q.fields)
+        )
+        if stray and (grouped or windowed):
             raise ValueError(
                 "computed select expressions must be GROUP BY keys (by their "
                 "AS alias) or expressions over aggregate calls when mixed "
@@ -3011,7 +2966,7 @@ class _Emitter:
         for g in q.group_by:  # register group-by series
             if g.parts and not (len(g.parts) == 1 and g.parts[0] in group_computed):
                 res.resolve(g)
-        if windowed and (q.group_by or any(f.func and f.window is None for f in q.fields)):
+        if windowed and grouped:
             raise ValueError("window functions cannot mix with GROUP BY/aggregates")
         if q.qualify is not None and not windowed:
             raise ValueError(
@@ -3024,17 +2979,13 @@ class _Emitter:
                     res.resolve(r)
         res.frozen = True
 
-        post_name = None
-        hidden: dict[str, str] = {}  # call SQL -> hidden aggregate name
         group = having = ""
         distinct = "DISTINCT " if q.distinct else ""
-        if q.group_by or post_agg or any(f.func and f.window is None for f in q.fields):
-            # a group key keeps the SELECT item's alias when one names
-            # the same column (SELECT a.x AS k ... GROUP BY a.x outputs k)
-            sel_alias_of: dict[str, str] = {}
-            for alias, scol, fn2, _r in sel:
-                if fn2 is None and scol is not None and alias:
-                    sel_alias_of.setdefault(scol, alias)
+        if grouped:
+            # a group key keeps the name of the first SELECT item that
+            # names the same column (SELECT a.x AS k ... GROUP BY a.x
+            # outputs k)
+            sel_alias_of = {col: name for name, col, _ in reversed(sel) if col is not None}
             gkeys: dict[str, tuple[str, str]] = {}  # column -> (sql, name)
             for g in q.group_by:
                 if len(g.parts) == 1 and g.parts[0] in group_computed:
@@ -3052,51 +3003,23 @@ class _Emitter:
                     continue
                 col = res.resolve(g)[1]
                 gkeys[col] = (res.sql(col), sel_alias_of.get(col, res.default_name(g)))
-            gnames = {n for _, n in gkeys.values()}
-            out_names = {alias for alias, _, _, _ in sel}
-            calls = [(self.call(ref, res), alias) for alias, _, func, ref in sel if func]
+            calls = [(self.call(ref, res), alias) for alias, _, ref in sel if ref.func]
             # plain non-grouped select fields default to AVG (GROUP BY
             # is a declared-only stub in the reference,
             # query/base/expression.go:22-25)
             calls += [
                 (_call_sql("avg", [res.sql(col)]), alias)
-                for alias, col, func, _ in sel
-                if not func and col is not None and col not in gkeys
+                for alias, col, _ in sel if col is not None and col not in gkeys
             ]
-            call_name: dict[str, str] = {}
-            for sql, alias in calls:
-                call_name.setdefault(sql, alias)
-
-            def post_name(ref: FieldRef) -> str:
-                """HAVING / ORDER BY scope: select aliases and group
-                names pass through; aggregate calls match a select item
-                or become a hidden aggregate of the same pass (Spark
-                resolves no ORDER BY aggregate through a HAVING)."""
-                if ref.func is None:
-                    if len(ref.parts) == 1 and (
-                        ref.parts[0] in out_names or ref.parts[0] in gnames
-                    ):
-                        return ref.parts[0]
-                    col = res.resolve(ref)[1]
-                    if col in gkeys:
-                        return gkeys[col][1]
-                    raise ValueError(f"{'.'.join(ref.parts)} is neither grouped nor aggregated")
-                sql = self.call(ref, res)  # the same call prints the same SQL
-                if sql in call_name:
-                    return call_name[sql]
-                if any((ref.arg_expr, ref.arg2_expr, ref.filter_expr, ref.within_group)):
-                    return hidden.setdefault(sql, f"_h{len(hidden)}_{ref.func}")
-                col = res.resolve(ref)[1] if ref.parts else "star"
-                return hidden.setdefault(
-                    sql, f"_h_{ref.func}_{col.replace('`.`', '__').strip('`')}"
-                )
-
+            out = [n for _, n in [*gkeys.values(), *calls]] + [f.alias for f in post_agg]
+            # the first select item printing a call names it
+            scope = _Scope(out, res, self, gkeys, dict(reversed(calls)))
             for r in _expr_refs(q.having) if q.having is not None else ():
-                post_name(r)
+                scope.name(r)
             for r, _, _ in q.order_by:
                 if r.expr is None:
-                    post_name(r)
-            if hidden and (q.distinct or q.distinct_on):
+                    scope.name(r)
+            if scope.aggs and (q.distinct or q.distinct_on):
                 raise ValueError(
                     "SELECT DISTINCT cannot combine with HAVING/ORDER BY "
                     "aggregates that are not in the select list"
@@ -3107,9 +3030,7 @@ class _Emitter:
                 f"{self.expr(f.expr, res, name_of=lambda r: self.call(r, res))} AS {_ident(f.alias)}"
                 for f in post_agg
             ]
-            items += [f"{s} AS {_ident(h)}" for s, h in hidden.items()]
-            out = [n for _, n in [*gkeys.values(), *calls]]
-            out += [f.alias for f in post_agg]
+            items += [f"{s} AS {_ident(h)}" for s, h in scope.aggs.items()]
             keys = [s for s, _ in gkeys.values()]
             if q.group_mode == "grouping_sets":
                 def set_sql(g: FieldRef) -> str:
@@ -3126,10 +3047,10 @@ class _Emitter:
             elif keys:
                 group = f" GROUP BY {', '.join(keys)}"
             if q.having is not None:
-                having = f" HAVING {self.expr(q.having, res, name_of=lambda r: _ident(post_name(r)))}"
+                having = f" HAVING {self.expr(q.having, res, name_of=scope.name)}"
         elif windowed:
             items, pre = [], []
-            for alias, col, func, ref in sel:
+            for alias, col, ref in sel:
                 if ref.window is None:
                     s = self.expr(ref.expr, res) if ref.expr is not None else res.sql(col)
                 else:
@@ -3139,7 +3060,7 @@ class _Emitter:
                 inner = f"SELECT *, {', '.join(pre)} FROM {from_}"
                 from_ = f"({inner}{f' WHERE {where}' if where else ''}) AS {_ident(res.single().qual)}"
                 where = None
-            out = [alias for alias, _, _, _ in sel]
+            scope = _Scope([alias for alias, _, _ in sel], res)
         elif q.star:
             # SELECT *: the source's full column set; EXCLUDE drops
             # named columns before the scan, so Catalyst's column
@@ -3152,88 +3073,64 @@ class _Emitter:
                 )
             ex = ", ".join(_ident(c) for c in q.exclude)
             items = [f"* EXCEPT ({ex})" if ex else "*"]
-            out = [c for c in cols if c not in q.exclude]
+            scope = _Scope([c for c in cols if c not in q.exclude], res)
         else:  # plain projection; scalar subqueries only here
             items = [
                 f"{self.expr(ref.expr, res, sub=True) if ref.expr is not None else res.sql(col)}"
                 f" AS {_ident(alias)}"
-                for alias, col, _, ref in sel
+                for alias, col, ref in sel
             ]
-            out = [alias for alias, _, _, _ in sel]
+            scope = _Scope([alias for alias, _, _ in sel], res)
         core = (
             f"SELECT {distinct}{', '.join(items)} FROM {from_}"
             + (f" WHERE {where}" if where else "") + group + having
         )
-        text = self.tail(q, res, core, out + list(hidden.values()), post_name)
-        if hidden:
-            text = f"SELECT {', '.join(_ident(c) for c in out)} FROM ({text}) AS _h"
-        return text, out
+        text = self.tail(q, scope, core)
+        if scope.hidden:
+            text = f"SELECT {', '.join(_ident(c) for c in scope.out)} FROM ({text}) AS _h"
+        return text, scope.out
 
-    def tail(self, q, res, core, out, post_name) -> str:
-        """QUALIFY, DISTINCT ON, ORDER BY, LIMIT [WITH TIES] / OFFSET."""
+    def tail(self, q: BoostQuery, scope: _Scope, core: str) -> str:
+        """QUALIFY, DISTINCT ON, ORDER BY, LIMIT [WITH TIES] / OFFSET,
+        each reading its names through the level's scope."""
         if any(ref.window is not None for ref, _, _ in q.order_by):
             raise ValueError(
                 "ORDER BY cannot take a window call — alias the select item "
                 "and order by the alias"
             )
-        if not (
+        # with no wrapper before it, ORDER BY sorts the projection itself
+        direct = not (
             q.qualify is not None or q.distinct_on or q.limit_ties
             or any(r.expr is not None for r, _, _ in q.order_by)
-        ):
-            order = []
-            for ref, desc, nulls in q.order_by:
-                if post_name is not None:
-                    target = _ident(post_name(ref))
-                elif ref.func is None and len(ref.parts) == 1 and ref.parts[0] in out:
-                    # a select alias / output column name wins over value
-                    # sugar (ORDER BY eid must not resolve to the value col)
-                    target = _ident(ref.parts[0])
-                else:
-                    name = res.default_name(ref)
-                    target = _ident(name) if name in out else res.ref_sql(ref)
-                order.append(_order_sql(target, desc, nulls))
-            return core + _tail_sql(order, q.limit, q.offset)
-
-        def out_name(ref: FieldRef, what: str) -> str:
-            if ref.func is not None or len(ref.parts) != 1 or ref.parts[0] not in out:
-                raise ValueError(
-                    f"{what} must name an output column (one of {out}), got {'.'.join(ref.parts)}"
-                )
-            return ref.parts[0]
-
+        )
         text = core
         if q.qualify is not None:
             # QUALIFY filters the analytic projection by its OUTPUT names,
             # after the window functions, before DISTINCT/ORDER/LIMIT
-            def qual_name(ref: FieldRef) -> str:
-                if ref.func is not None or ref.window is not None:
-                    raise ValueError(
-                        "QUALIFY references select-list output names — "
-                        "alias the window item and filter on the alias"
-                    )
-                return _ident(out_name(ref, "QUALIFY"))
-
-            text = f"SELECT * FROM ({text}) AS _q WHERE {self.expr(q.qualify, res, name_of=qual_name)}"
+            pred = self.expr(q.qualify, scope.res, name_of=lambda r: _ident(
+                scope.output(r, "QUALIFY")
+            ))
+            text = f"SELECT * FROM ({text}) AS _q WHERE {pred}"
         if q.distinct_on:
             # one survivor per key group, chosen by the residual ORDER BY
             # keys (postgres semantics): ONE row_number window partitioned
             # by the keys — never a self-join; Spark's WindowGroupLimit
             # keeps only the top row per group
-            keys = [out_name(r, "DISTINCT ON/ORDER BY") for r in q.distinct_on]
+            keys = [scope.output(r, "DISTINCT ON/ORDER BY") for r in q.distinct_on]
             if len(q.order_by) <= len(keys):
                 raise ValueError(
                     "DISTINCT ON requires ORDER BY to lead with the ON "
                     "columns and add at least one tiebreak key (which row "
                     "survives is undefined otherwise)"
                 )
-            lead = [out_name(r, "DISTINCT ON/ORDER BY") for r, _, _ in q.order_by[: len(keys)]]
+            lead = [scope.output(r, "DISTINCT ON/ORDER BY") for r, _, _ in q.order_by[: len(keys)]]
             if lead != keys:
                 raise ValueError(
                     f"ORDER BY must lead with the DISTINCT ON columns "
                     f"{keys} (postgres rule), got {lead}"
                 )
             rest = ", ".join(
-                _order_sql(_ident(out_name(r, "DISTINCT ON/ORDER BY")), d, n)
+                _order_sql(_ident(scope.output(r, "DISTINCT ON/ORDER BY")), d, n)
                 for r, d, n in q.order_by[len(keys):]
             )
             text = (
@@ -3241,34 +3138,25 @@ class _Emitter:
                 f"(PARTITION BY {', '.join(_ident(k) for k in keys)} ORDER BY {rest}) "
                 f"AS _don FROM ({text}) AS _d) AS _d WHERE _don = 1"
             )
-        hidden, targets, order = [], [], []
-        for i, (ref, desc, nulls) in enumerate(q.order_by):
-            if ref.expr is not None:
-                # ORDER BY <expression> over select-list OUTPUT columns:
-                # a hidden sort column, dropped after the sort
-                def _ord_ref(r: FieldRef) -> str:
-                    if r.func is not None or len(r.parts) != 1 or r.parts[0] not in out:
-                        raise ValueError(
-                            "ORDER BY expressions may reference "
-                            "select-list output columns only "
-                            f"(got {'.'.join(r.parts)!r}; columns: {sorted(out)})"
-                        )
-                    return _ident(r.parts[0])
-
-                name = f"__ord_{i}"
-                hidden.append(f"{self.expr(ref.expr, res, name_of=_ord_ref)} AS {_ident(name)}")
-            elif post_name is not None:
-                name = post_name(ref)
-            elif ref.func is None and len(ref.parts) == 1 and ref.parts[0] in out:
-                name = ref.parts[0]
-            else:
-                name = res.default_name(ref)
-                if name not in out:
-                    out_name(ref, "ORDER BY")
-            targets.append(name)
-            order.append(_order_sql(_ident(name), desc, nulls))
-        if hidden:
-            text = f"SELECT *, {', '.join(hidden)} FROM ({text}) AS _o"
+        sort, targets = [], []
+        for i, (ref, _, _) in enumerate(q.order_by):
+            if ref.expr is None:
+                targets.append(scope.name(ref, direct))
+                continue
+            # ORDER BY <expression> over select-list OUTPUT columns: a
+            # hidden sort column
+            name = f"__ord_{i}"
+            e = self.expr(ref.expr, scope.res, name_of=lambda r: _ident(scope.output(
+                r, "a reference in an ORDER BY expression (select-list output columns only)"
+            )))
+            sort.append(f"{e} AS {_ident(name)}")
+            scope.hidden.append(name)
+            targets.append(_ident(name))
+        order = [_order_sql(t, d, n) for t, (_, d, n) in zip(targets, q.order_by)]
+        if direct:
+            return core + _tail_sql(order, q.limit, q.offset)
+        if sort:
+            text = f"SELECT *, {', '.join(sort)} FROM ({text}) AS _o"
         if q.limit is not None and q.limit_ties:
             # LIMIT n WITH TIES: every row whose FULL sort-key tuple is
             # in the top-n page — a broadcast left-semi join against the
@@ -3277,22 +3165,18 @@ class _Emitter:
             tkeys = list(dict.fromkeys(targets))
             page = (
                 "SELECT DISTINCT "
-                + ", ".join(f"{_ident(k)} AS `__tie_{j}`" for j, k in enumerate(tkeys))
+                + ", ".join(f"{k} AS `__tie_{j}`" for j, k in enumerate(tkeys))
                 + f" FROM (SELECT * FROM ({text}) AS _w ORDER BY {', '.join(order)} "
                 f"LIMIT {q.limit}) AS _pg"
             )
             cond = " AND ".join(
-                f"(_t.{_ident(k)} <=> _p.`__tie_{j}`)" for j, k in enumerate(tkeys)
+                f"(_t.{k} <=> _p.`__tie_{j}`)" for j, k in enumerate(tkeys)
             )
-            text = (
+            return (
                 f"SELECT /*+ BROADCAST(_p) */ _t.* FROM ({text}) AS _t LEFT SEMI JOIN "
                 f"({page}) AS _p ON {cond} ORDER BY {', '.join(order)}"
             )
-        else:
-            text = f"SELECT * FROM ({text}) AS _o" + _tail_sql(order, q.limit, q.offset)
-        if hidden:
-            text = f"SELECT {', '.join(_ident(c) for c in out)} FROM ({text}) AS _f"
-        return text
+        return f"SELECT * FROM ({text}) AS _o" + _tail_sql(order, q.limit, q.offset)
 
 
 def plan(

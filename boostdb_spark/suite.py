@@ -146,72 +146,73 @@ def _q(name: str, oracle: str | None):
 # agg_approx_count_distinct / agg_approx_quantiles are oracle-less
 # (approx by design) with driver-green history — below the fold.
 _WINDOW: tuple[str, ...] = (
-    # CHANGED CODE FIRST — the time-series operators that now share one
-    # exact bucket mean (NULL values dropped first), one bucket-sorted
-    # list, one Pearson fold, one interpolated quantile and one EWMA
-    # recursion (operators/timeseries.py), then the entries whose
-    # series window or 1e-6 grid became the shared helper, the PCA
-    # entries whose covariance pass now projects its dot once, the
-    # series-family entries, the dedup and vector canaries, the
-    # standing dialect canaries and the streaming-drain cohort.
-    "ts_series_correlation",  # bucket mean + Pearson fold
-    "ts_autocorr",            # bucket mean + Pearson fold
-    "ts_linear_trend",        # bucket mean + bucket list
-    "ts_holt_winters",        # bucket mean + bucket list
-    "ts_cusum_changepoint",   # bucket mean + bucket list
-    "ts_pattern_topk",        # bucket mean + bucket list
-    "ts_seasonal_decompose",  # quantized bucket mean
-    "ts_quantile_over_time",  # sorted bucket values + interpolation
-    "ts_mad",                 # sorted bucket values + interpolation
-    "ts_ewma",                # seeded EWMA fold
-    "ts_ewma_rows",           # the one Python EWMA loop, bucketed
-    "ts_ewma_bucketed",       # affine bucket summaries
-    "stream_ewma_parity",     # streaming_ewma runs the same loop
-    "ts_irate",               # counter branch
-    "ts_lttb",                # exact mean
-    "gapfill_locf", "gapfill_interp",  # one series window
-    "ts_changes_resets", "ts_drawdown", "ts_sma_crossover",
-    "ts_bollinger", "ts_bollinger_wide",  # 1e-6 grid, series window
-    "ts_sessionize", "ts_moving_time_avg", "ts_histogram_quantile",
-    "emb_pca_certified",      # covariance pass
-    "emb_abtt_certified",
-    "emb_whiten",
-    "stream_locf_parity",
+    # CHANGED CODE FIRST — the dialect entries whose clauses now read
+    # their names through one output scope per SELECT level, or parse
+    # through the one operand grammar and comma-list reader
+    # (plans/sugar.py): ORDER BY, QUALIFY, DISTINCT ON, WITH TIES and
+    # HAVING, set operations, PIVOT/VALUES, window frames and named
+    # windows, grouping lists, ON/USING/LATERAL columns; then the ANN
+    # stream entry whose landing is now written in fixed vec_id slices,
+    # the series-family entries and the standing canaries.
+    "dialect_order_expr",     # hidden sort column, one final projection
+    "dialect_orderby_limit",
+    "dialect_nulls_order",
+    "dialect_qualify",
+    "dialect_distinct_on",
+    "dialect_limit_ties",
+    "dialect_having",         # hidden aggregates, one final projection
+    "dialect_setops", "dialect_setops_all",
+    "dialect_pivot", "dialect_pivot_sum", "dialect_unpivot", "dialect_values",
+    "dialect_window_frame", "dialect_window_range_frame",
+    "dialect_groups_frame", "dialect_frame_exclude", "dialect_named_window",
+    "dialect_grouping_sets", "dialect_rollup", "dialect_group_all",
+    "dialect_string_agg", "dialect_percentile_cont",
+    "dialect_join", "dialect_using", "dialect_lateral_tokenize",
+    "dialect_asof_join",
+    "dialect_exists", "dialect_subquery", "dialect_arith", "dialect_params",
+    "dialect_recursive_components",
+    "stream_ann_ingest_parity",  # fixed vec_id landing slices
     "flagship_series_scan",   # scan + dialect front + implicit range
     "seriesfamily_roundtrip",  # batch-written family: write + fetch
     "stream_ingest_parity",   # stream-written family: stream_write
     "agg_groupby_q1",         # grouped aggregation
-    "dedup_exact", "dedup_groups", "dedup_minhash_lsh", "dedup_keep_best",
+    "dedup_exact", "dedup_minhash_lsh", "dedup_keep_best",
     "txt_bm25_topk", "pipeline_hybrid_rrf",
-    "emb_cosine_topk", "emb_knn_graph", "ann_recall_certified",
-    "dedup_semantic",
-    "dialect_agg_expr", "dialect_cte", "dialect_join",
-    "stream_session_parity", "stream_sliding_parity",
-    "stream_upsert_parity", "window_sliding_agg",
-    # ROTATION PREP — queued next: the vector, dedup, dialect and
-    # streaming entries that made room for the time-series operators
+    "emb_cosine_topk", "ann_recall_certified",
+    "dialect_cte", "dialect_agg_expr",
+    "stream_ewma_parity", "stream_session_parity", "stream_sliding_parity",
+    "window_sliding_agg",
+    # ROTATION PREP — queued next: the time-series cohort certified in
+    # the previous window (ts_series_correlation, ts_autocorr,
+    # ts_linear_trend, ts_holt_winters, ts_cusum_changepoint,
+    # ts_pattern_topk, ts_seasonal_decompose, ts_quantile_over_time,
+    # ts_mad, ts_ewma, ts_ewma_rows, ts_ewma_bucketed, ts_irate, ts_lttb,
+    # gapfill_locf, gapfill_interp, ts_changes_resets, ts_drawdown,
+    # ts_sma_crossover, ts_bollinger, ts_bollinger_wide, ts_sessionize,
+    # ts_moving_time_avg, ts_histogram_quantile, emb_pca_certified,
+    # emb_abtt_certified, emb_whiten, stream_locf_parity,
+    # dedup_groups, emb_knn_graph, dedup_semantic, stream_upsert_parity),
+    # then the vector, dedup, dialect and streaming entries that made room for the time-series operators
     # (emb_range_search, emb_mmr_rerank, emb_outliers,
     # ann_range_certified, ann_append_certified, txt_tfidf_topk,
     # dedup_incremental, dedup_levenshtein, dedup_levenshtein_capped,
-    # dialect_grouping_sets, dialect_join_multi, dialect_join_theta,
-    # dialect_limit_ties, dialect_pivot_sum, dialect_select_scalar_sub,
-    # dialect_subquery, dialect_unpivot, dialect_using, dialect_values,
-    # dialect_frame_exclude, window_session_agg, stream_batch_parity,
+    # dialect_join_multi, dialect_join_theta,
+    # dialect_select_scalar_sub,
+    # window_session_agg, stream_batch_parity,
     # stream_cascade_parity), then the dialect canaries and n-gram pair
     # finders
     # (dedup_ngram_jaccard_capped, dedup_containment, doc_source_overlap,
-    # dialect_arg_minmax, dialect_bool_agg, dialect_exists,
-    # dialect_filter_agg, dialect_group_all, dialect_group_expr,
+    # dialect_arg_minmax, dialect_bool_agg,
+    # dialect_filter_agg, dialect_group_expr,
     # dialect_join_full, dialect_join_left, dialect_join_multikey,
-    # dialect_join_right, dialect_nulls_order, dialect_string_agg),
-    # then scan_time_sliced, dialect_params,
-    # dialect_window and dialect_asof_join (left the window for the
-    # dedup pair finders), dialect_sample and dialect_lateral_tokenize,
+    # dialect_join_right),
+    # then scan_time_sliced,
+    # dialect_window (left the window for the
+    # dedup pair finders), dialect_sample,
     # stream_retention_parity and stream_dedup_parity,
     # the r15 cohort (stream_rollup_parity,
     # stream_join_parity, stream_outer_join_parity), then the ROUND-8
     # remainder: agg_unpivot, dedup_decontaminate, dedup_ngram_jaccard,
-    # dialect_qualify,
     # dialect_select_star, distinct_series, scan_hive_partition_prune,
     # scan_schema_evolution, scan_snapshot_apply, subquery_exists,
     # time_bucket_agg, ts_interp_align,

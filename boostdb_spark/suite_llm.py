@@ -3430,7 +3430,7 @@ def stream_ann_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
       rows are immediately searchable, not just stored."""
     import os
 
-    from boostdb_spark.suite import _STREAM_LANDING, session_tmpdir
+    from boostdb_spark.suite import _STREAM_LANDING, _write_landing_slices, session_tmpdir
 
     lay = _ann_append_layout(spark, sf_dir)
     t = load_tables(spark, sf_dir)
@@ -3442,10 +3442,12 @@ def stream_ann_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (app_id, sf_dir, "annstream")
     if key not in _STREAM_LANDING:
         landing = session_tmpdir(prefix="boost_suite_annstream_")
-        new.repartition(4).write.mode("overwrite").parquet(landing)
+        # four vec_id slices (vec_id mod 4), one file each, replayed in
+        # slice order: which vectors share a file, and so a micro-batch,
+        # is the same in every run
+        _write_landing_slices([new.filter(F.col("vec_id") % 4 == k) for k in range(4)], landing)
         _STREAM_LANDING[key] = landing
     landing = _STREAM_LANDING[key]
-    schema = spark.read.parquet(landing).schema
 
     work = session_tmpdir(prefix="boost_annstream_sink_")
     sink = os.path.join(work, "ivf")
@@ -3460,8 +3462,9 @@ def stream_ann_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(sink)
 
     q = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(new.schema)
         .option("maxFilesPerTrigger", 2)
+        .option("recursiveFileLookup", "true")
         .parquet(landing)
         .writeStream.foreachBatch(_apply)
         .option("checkpointLocation", os.path.join(work, "ckpt"))

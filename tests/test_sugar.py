@@ -36,6 +36,21 @@ def test_parse_extended_predicates():
         "OR a.tag LIKE 'h%' OR a IS NOT NULL OR NOT a = 3"
     )
     assert q.where is not None
+    # a parenthesized operand is one operand: every predicate tail
+    # follows it (the first four once raised "trailing tokens")
+    for pred, kind in [
+        ("(cpu + 1) BETWEEN 2 AND 3", "between"),
+        ("(cpu) IN (1, 2)", "in"),
+        ("(cpu + 1) IS NULL", "isnull"),
+        ("(cpu.host) LIKE 'a%'", "like"),
+        ("(cpu.host) NOT ILIKE 'a%'", "not"),
+        ("(cpu > 1) = true", "cmp"),
+    ]:
+        assert parse(f"SELECT cpu FROM d.f WHERE {pred}").where.kind == kind, pred
+    w = parse("SELECT cpu FROM d.f WHERE (cpu + 1) BETWEEN 2 AND 3").where
+    assert [c.kind for c in w.children] == ["arith", "lit", "lit"]
+    w = parse("SELECT cpu FROM d.f WHERE (cpu < 1 OR cpu > 5) AND cpu.host = 'h'").where
+    assert w.kind == "and" and w.children[0].kind == "or"
 
 
 def test_parse_group_order_limit():
@@ -2442,6 +2457,20 @@ def test_order_by_expression_rules(spark):
             "ORDER BY floor(click.user_id * 1.0)",
             b,
         )
+    # on a grouped level beside a hidden aggregate (an ORDER BY call the
+    # select list lacks): one final projection drops both hidden columns
+    got = sugar.query(
+        spark,
+        "SELECT click.user_id AS u, count(*) AS n FROM boost.events "
+        "GROUP BY click.user_id ORDER BY max(click) DESC, (n * 2 + u), u LIMIT 7",
+        b,
+    )
+    want = spark.sql(
+        "SELECT user_id AS u, count(*) AS n FROM events WHERE event_type = 'click' "
+        "GROUP BY user_id ORDER BY max(value) DESC, (n * 2 + u), u LIMIT 7"
+    )
+    assert got.columns == ["u", "n"]
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
 
 
 def test_having_distinct_aggregate(spark):
@@ -3128,3 +3157,4 @@ def test_stat_aggregates_rules(spark):
         assert rows[r.user_id] == (
             r.sd, r.vp, r.c, r.cvp, r.sd_even, r.sd6
         )
+

@@ -183,9 +183,11 @@ def arith_exprs(draw, depth=0):
 
 
 def test_dialect_arithmetic_matches_spark_sql(spark):
-    """Any generated arithmetic comparison must produce the same rows
-    as the equivalent spark.sql query — parser precedence, grouping
-    and compilation all under one property."""
+    """Any generated arithmetic predicate (a comparison, BETWEEN, an IN
+    list, IS [NOT] NULL) must produce the same rows as the equivalent
+    spark.sql query — parser precedence, grouping and compilation all
+    under one property. A parenthesized left operand takes every
+    predicate tail a bare one takes."""
     from tests.conftest import SF_DIR
 
     spark.read.parquet(f"{SF_DIR}/events.parquet").createOrReplaceTempView(
@@ -195,18 +197,32 @@ def test_dialect_arithmetic_matches_spark_sql(spark):
         view="events", series_col="event_type", value_col="value", ts_col="ts"
     )
 
-    @settings(max_examples=25, deadline=None)
+    def pred(lhs: str, op: str, rhs: str) -> str:
+        # BETWEEN bounds and IN items are operands: parenthesize them
+        if op == "between":
+            return f"{lhs} BETWEEN ({rhs}) AND ({rhs} + 5)"
+        if op == "in":
+            return f"{lhs} IN (({rhs}), 1, 2)"
+        if op in ("is null", "is not null"):
+            return f"{lhs} {op.upper()}"
+        return f"{lhs} {op} {rhs}"
+
+    @settings(max_examples=40, deadline=None)
     @given(lhs=arith_exprs(), rhs=arith_exprs(),
-           op=st.sampled_from(["<", "<=", ">", ">=", "=", "!="]))
+           op=st.sampled_from(["<", "<=", ">", ">=", "=", "!=",
+                               "between", "in", "is null", "is not null"]))
     # a DOUBLE/DECIMAL boundary: with the reference literal spelled
     # 1.50, spark.sql returned one row more than the dialect at sf0.001
     @example(lhs=("5 / 1.50", "5 / 1.50D"),
              rhs=("click / 1.50 + 1.50", "value / 1.50D + 1.50D"), op="<")
+    # a parenthesized operand before BETWEEN once failed to parse
+    # ("trailing tokens at ('kw', 'between')")
+    @example(lhs=("(click.user_id + 1)", "(user_id + 1)"), rhs=("3", "3"), op="between")
     def check(lhs, rhs, op):
         d = (f"SELECT click.event_id FROM boost.events "
-             f"WHERE {lhs[0]} {op} {rhs[0]}")
+             f"WHERE {pred(lhs[0], op, rhs[0])}")
         q = (f"SELECT event_id FROM events WHERE event_type = 'click' "
-             f"AND {lhs[1]} {op} {rhs[1]}")
+             f"AND {pred(lhs[1], op, rhs[1])}")
         got = sorted(r[0] for r in sugar.query(spark, d, b).collect())
         want = sorted(r[0] for r in spark.sql(q).collect())
         assert got == want, (d, q)
